@@ -17,19 +17,30 @@ object SparkEntry {
     * REFERENCE (profiled: q4 alone ran five of them per execution). A
     * catalog table carries its schema as metadata; this memo is that
     * metadata for the driver's bare-path tables. Data is always re-read
-    * from parquet — only the immutable schema (not results) is cached.
+    * from parquet — only the immutable schema (not results) is cached,
+    * one entry per path, tagged with the modification time it was read at.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // the table's modification time is part of the key, so a regenerated
-    // table in a long-lived driver re-infers its schema instead of being
-    // read with a stale one
-    val schema = schemaCache.computeIfAbsent(
-      (path, new java.io.File(path).lastModified),
-      _ => s.read.parquet(path).schema)
+    // a regenerated table in a long-lived application re-infers its schema
+    // instead of being read with a stale one. The mtime comes from the
+    // Hadoop FileSystem, which resolves every URI scheme (java.io.File
+    // reads 0 for a non-local one).
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val mtime = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp).getModificationTime
+    val schema = schemaCache.get(path) match {
+      case (`mtime`, cached) => cached
+      case _ =>
+        // inferred outside the map: the footer read is a Spark job, too
+        // long to hold a map lock for, and a rare duplicate is harmless
+        val inferred = s.read.parquet(path).schema
+        schemaCache.put(path, (mtime, inferred))
+        inferred
+    }
     s.read.schema(schema).parquet(path)
   }
 
@@ -130,6 +141,54 @@ object SparkEntry {
     KgEngine.enrichAll(canon, registry,
       supportedFields = Seq("Version"), maxCertainty = 1,
       fetched = fetched, probes = probes).toDF()
+  }
+
+  /** The churn fixture of the `kg_incremental*` queries, keyed by
+    * doc_id % 10 (`m`):
+    *   %10 == 0 → absent from `base`, arrives in `delta` (new subject)
+    *   %10 == 5 → `base` holds a week-old corrupted capture; `delta` wins
+    *   %10 == 1 → `delta` carries an even staler corrupted recapture (no-op)
+    *   rest     → untouched; served from the base store
+    * `reChanged` is `delta` plus %10==7 changing in BOTH of its batches: a
+    * NEWER corrupted version in batch 1, then the live content 3 days
+    * ahead (beating batch 1's +2d) in batch 2. Every winner converges to
+    * the live capture. The store lives under `name` in the temp dir.
+    */
+  private final class Churn(s: SparkSession, dir: String, name: String) {
+    val live: DataFrame = SynthPages.fromDocuments(t(s, dir, "documents"))
+    val m: org.apache.spark.sql.Column = F.pmod(
+      F.regexp_extract(F.col("url"), "proj(\\d+)/", 1).cast("long"), F.lit(10))
+    def corrupt(p: DataFrame, days: Int): DataFrame = p
+      .withColumn("warc_ts", F.col("warc_ts") - F.expr(s"INTERVAL $days DAYS"))
+      .withColumn("text", F.concat(F.col("text"), F.lit("\nSTALE RECRAWL GARBAGE")))
+    val base: DataFrame = live.where(m =!= 0 && m =!= 5)
+      .unionByName(corrupt(live.where(m === 5), 7))
+    val delta: DataFrame = live.where(m === 0 || m === 5)
+      .unionByName(corrupt(live.where(m === 1), 14))
+    def reChanged: Seq[DataFrame] = Seq(
+      delta.unionByName(corrupt(live.where(m === 7), -2)),
+      live.where(m === 7).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 3 DAYS")))
+
+    val path: String = new java.io.File(sys.props("java.io.tmpdir"), name).getAbsolutePath
+    val (caps, tri) = (s"${name}_caps", s"${name}_tri")
+    val (clog, tlog) = (s"$path/clog", s"$path/tlog")
+
+    /** Initialize the store from `base` and append `batches` as log
+      * batches 1, 2, …
+      */
+    def maintain(batches: DataFrame*): Unit = {
+      graft.spark.Incremental.initStore(s, base, caps, tri, path, buckets = 8)
+      graft.spark.Incremental.initLogs(s, clog, tlog)
+      for ((pages, i) <- batches.zipWithIndex)
+        graft.spark.Incremental.appendDelta(s, pages, caps, clog, tlog, batch = i + 1)
+    }
+
+    /** The base ⊕ log triple view in the oracle's column order. */
+    def view(baseTriples: String = tri, tlogPath: String = tlog): DataFrame =
+      graft.spark.Incremental.currentTriples(
+        BucketedStore.read(s, baseTriples), graft.spark.Incremental.readLog(s, tlogPath))
+        .select("subj", "pred", "obj")
+        .orderBy("subj", "pred")
   }
 
   /** Flagship: full KG construction (synth pages → canonical triples). */
@@ -472,106 +531,34 @@ object SparkEntry {
         .orderBy("subj", "pred")
     }),
     "kg_incremental" -> ((s, dir) => {
-      // incremental maintenance of the subj-bucketed store pair: a base
-      // crawl initializes captures+triples; a delta recrawl folds in with
-      // ONE store-anchored merge join and re-extracts ONLY subjects whose
-      // winning captures changed. Decomposition by doc_id:
-      //   %10 == 0 → absent from base, arrives in the delta (new subject)
-      //   %10 == 5 → base holds a week-old corrupted capture; delta wins
-      //   %10 == 1 → delta carries an even staler corrupted recapture (no-op)
-      //   rest     → untouched; triples pass through from the store
-      // Every winner converges to the live capture, so the maintained table
-      // must equal the one-shot kg_canonical — same oracle.
-      val live = SynthPages.fromDocuments(t(s, dir, "documents"))
-      val m = F.pmod(
-        F.regexp_extract(F.col("url"), "proj(\\d+)/", 1).cast("long"), F.lit(10))
-      def corrupt(p: org.apache.spark.sql.DataFrame, days: Int) = p
-        .withColumn("warc_ts", F.col("warc_ts") - F.expr(s"INTERVAL $days DAYS"))
-        .withColumn("text", F.concat(F.col("text"), F.lit("\nSTALE RECRAWL GARBAGE")))
-      val base = live.where(m =!= 0 && m =!= 5)
-        .unionByName(corrupt(live.where(m === 5), 7))
-      val delta = live.where(m === 0 || m === 5)
-        .unionByName(corrupt(live.where(m === 1), 14))
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_incremental").getAbsolutePath
-      graft.spark.Incremental.initStore(s, base,
-        "graft_inc_caps", "graft_inc_tri", path, buckets = 8)
-      graft.spark.Incremental.updateStore(s, delta,
-        "graft_inc_caps", "graft_inc_tri", path, buckets = 8)
-        .select("subj", "pred", "obj")
-        .orderBy("subj", "pred")
+      // incremental maintenance of the subj-bucketed store: a base crawl
+      // initializes captures+triples, today's recrawl appends ONE log batch
+      // that re-extracts ONLY subjects whose winning captures changed, and
+      // the graph is the base ⊕ log view. Every winner converges to the
+      // live capture, so the view must equal the one-shot kg_canonical —
+      // same oracle.
+      val c = new Churn(s, dir, "graft_inc")
+      c.maintain(c.delta)
+      c.view()
     }),
     "kg_incremental_log" -> ((s, dir) => {
-      // merge-on-read maintenance (the per-batch O(churn) path): base store +
-      // TWO appended delta batches, read through the base ⊕ log view. Same
-      // churn decomposition as kg_incremental, plus %10==7 changing in BOTH
-      // batches (a NEWER corrupted version in batch 1, the live content — 3
-      // days ahead, beating batch 1's +2d — in batch 2): the latest batch's
-      // re-extraction must win the view. Every winner converges to the live
-      // capture, so the view equals the one-shot kg_canonical.
-      val live = SynthPages.fromDocuments(t(s, dir, "documents"))
-      val m = F.pmod(
-        F.regexp_extract(F.col("url"), "proj(\\d+)/", 1).cast("long"), F.lit(10))
-      def corrupt(p: org.apache.spark.sql.DataFrame, days: Int) = p
-        .withColumn("warc_ts", F.col("warc_ts") - F.expr(s"INTERVAL $days DAYS"))
-        .withColumn("text", F.concat(F.col("text"), F.lit("\nSTALE RECRAWL GARBAGE")))
-      val base = live.where(m =!= 0 && m =!= 5)
-        .unionByName(corrupt(live.where(m === 5), 7))
-      val batch1 = live.where(m === 0 || m === 5)
-        .unionByName(corrupt(live.where(m === 1), 14))
-        .unionByName(corrupt(live.where(m === 7), -2))
-      val batch2 = live.where(m === 7)
-        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 3 DAYS"))
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_incremental_log").getAbsolutePath
-      graft.spark.Incremental.initStore(s, base,
-        "graft_incl_caps", "graft_incl_tri", path, buckets = 8)
-      graft.spark.Incremental.initLogs(s, s"$path/clog", s"$path/tlog")
-      graft.spark.Incremental.appendDelta(s, batch1, "graft_incl_caps",
-        s"$path/clog", s"$path/tlog", batch = 1)
-      graft.spark.Incremental.appendDelta(s, batch2, "graft_incl_caps",
-        s"$path/clog", s"$path/tlog", batch = 2)
-      graft.spark.Incremental.currentTriples(
-        graft.spark.BucketedStore.read(s, "graft_incl_tri"),
-        graft.spark.Incremental.readLog(s, s"$path/tlog"))
-        .select("subj", "pred", "obj")
-        .orderBy("subj", "pred")
+      // TWO appended batches read through the base ⊕ log view, with a
+      // subject re-changed in the second: the latest batch's re-extraction
+      // must win the view. Same live-corpus closed form as kg_incremental.
+      val c = new Churn(s, dir, "graft_incl")
+      c.maintain(c.reChanged: _*)
+      c.view()
     }),
     "kg_incremental_compact" -> ((s, dir) => {
       // the amortized O(store) pass: fold the two-batch log into fresh
       // bucketed base tables; the compacted triple table (with its fresh
       // empty logs) must equal the pre-compaction view — i.e. the same
       // live-corpus closed form as kg_incremental_log
-      val live = SynthPages.fromDocuments(t(s, dir, "documents"))
-      val m = F.pmod(
-        F.regexp_extract(F.col("url"), "proj(\\d+)/", 1).cast("long"), F.lit(10))
-      def corrupt(p: org.apache.spark.sql.DataFrame, days: Int) = p
-        .withColumn("warc_ts", F.col("warc_ts") - F.expr(s"INTERVAL $days DAYS"))
-        .withColumn("text", F.concat(F.col("text"), F.lit("\nSTALE RECRAWL GARBAGE")))
-      val base = live.where(m =!= 0 && m =!= 5)
-        .unionByName(corrupt(live.where(m === 5), 7))
-      val batch1 = live.where(m === 0 || m === 5)
-        .unionByName(corrupt(live.where(m === 1), 14))
-        .unionByName(corrupt(live.where(m === 7), -2))
-      val batch2 = live.where(m === 7)
-        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 3 DAYS"))
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_incremental_compact").getAbsolutePath
-      graft.spark.Incremental.initStore(s, base,
-        "graft_incc_caps", "graft_incc_tri", path, buckets = 8)
-      graft.spark.Incremental.initLogs(s, s"$path/clog", s"$path/tlog")
-      graft.spark.Incremental.appendDelta(s, batch1, "graft_incc_caps",
-        s"$path/clog", s"$path/tlog", batch = 1)
-      graft.spark.Incremental.appendDelta(s, batch2, "graft_incc_caps",
-        s"$path/clog", s"$path/tlog", batch = 2)
-      graft.spark.Incremental.compact(s, "graft_incc_caps", "graft_incc_tri",
-        s"$path/clog", s"$path/tlog",
-        "graft_incc_caps_c", "graft_incc_tri_c", s"$path/c", buckets = 8)
-      graft.spark.Incremental.currentTriples(
-        graft.spark.BucketedStore.read(s, "graft_incc_tri_c"),
-        graft.spark.Incremental.readLog(s, s"$path/c/tlog"))
-        .select("subj", "pred", "obj")
-        .orderBy("subj", "pred")
+      val c = new Churn(s, dir, "graft_incc")
+      c.maintain(c.reChanged: _*)
+      graft.spark.Incremental.compact(s, c.caps, c.tri, c.clog, c.tlog,
+        s"${c.caps}_c", s"${c.tri}_c", s"${c.path}/c", buckets = 8)
+      c.view(s"${c.tri}_c", s"${c.path}/c/tlog")
     }),
     "kg_incremental_stats" -> ((s, dir) => {
       // per-batch maintenance lineage from the logs alone: batch 1 changes
@@ -580,31 +567,15 @@ object SparkEntry {
       // of %10==2 (captures replaced, nothing changed, nothing re-extracted)
       // plus an inert stale recapture of %10==1. Counts are closed-form:
       // files per subject = 2 + 3·[flavor=4], triples from the expected CTE.
-      val live = SynthPages.fromDocuments(t(s, dir, "documents"))
-      val m = F.pmod(
-        F.regexp_extract(F.col("url"), "proj(\\d+)/", 1).cast("long"), F.lit(10))
-      def corrupt(p: org.apache.spark.sql.DataFrame, days: Int) = p
-        .withColumn("warc_ts", F.col("warc_ts") - F.expr(s"INTERVAL $days DAYS"))
-        .withColumn("text", F.concat(F.col("text"), F.lit("\nSTALE RECRAWL GARBAGE")))
-      val base = live.where(m =!= 0 && m =!= 5)
-        .unionByName(corrupt(live.where(m === 5), 7))
-      val batch1 = live.where(m === 0 || m === 5)
-        .unionByName(corrupt(live.where(m === 1), 14))
-      val batch2 = live.where(m === 2)
-        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAYS"))
-        .unionByName(corrupt(live.where(m === 1), 14))
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_incremental_stats").getAbsolutePath
-      graft.spark.Incremental.initStore(s, base,
-        "graft_incs_caps", "graft_incs_tri", path, buckets = 8)
-      graft.spark.Incremental.initLogs(s, s"$path/clog", s"$path/tlog")
-      graft.spark.Incremental.appendDelta(s, batch1, "graft_incs_caps",
-        s"$path/clog", s"$path/tlog", batch = 1)
-      graft.spark.Incremental.appendDelta(s, batch2, "graft_incs_caps",
-        s"$path/clog", s"$path/tlog", batch = 2)
+      val c = new Churn(s, dir, "graft_incs")
+      import c.{live, m}
+      c.maintain(c.delta,
+        live.where(m === 2)
+          .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAYS"))
+          .unionByName(c.corrupt(live.where(m === 1), 14)))
       graft.spark.Incremental.batchStats(
-        graft.spark.Incremental.readLog(s, s"$path/clog"),
-        graft.spark.Incremental.readLog(s, s"$path/tlog"))
+        graft.spark.Incremental.readLog(s, c.clog),
+        graft.spark.Incremental.readLog(s, c.tlog))
         .orderBy("batch")
     }),
     "kg_edges" -> ((s, dir) => {

@@ -7,41 +7,34 @@ import Model.CanonTriple
 
 /** Incremental KG maintenance — the delta-crawl path a 100 TB deployment
   * actually runs. The reference is a per-project CLI that recomputes one
-  * checkout per invocation (/root/reference/src/lib.rs:3871-3920); at crawl
-  * scale a weekly recrawl re-delivers every page but only ~1% CHANGE, and
-  * re-extracting the other 99% is the dominant (and avoidable) CPU cost.
+  * checkout per invocation (lib.rs:3871-3920); at crawl scale a weekly
+  * recrawl re-delivers every page but only ~1% CHANGE, and re-extracting
+  * the other 99% is the dominant (and avoidable) CPU cost.
   *
-  * State = two subj-bucketed tables (BucketedStore):
-  *   - `captures(subj, relpath, ts, md5, text, changed)` — the winning
-  *     capture per (subj, relpath) under the engine's duplicate-capture
-  *     rule (max (warc_ts, md5(content)); KgEngine.dedupCaptures). This IS
-  *     the extraction input: canonical triples are a pure per-subject
-  *     function of it, so it is the exact state needed for incremental
-  *     equivalence. `changed` records whether the LAST batch replaced the
-  *     row's content (batch lineage; every row starts true on init).
-  *   - `triples(subj, pred, obj, obj_json, certainty, origin)` — the
+  * The store is a merge-on-read log over a subj-bucketed base
+  * (BucketedStore): a table is the fold of its change log.
+  *   - base `captures(subj, relpath, ts, md5, text)` — the winning capture
+  *     per (subj, relpath) under the engine's duplicate-capture rule (max
+  *     (warc_ts, md5(content)); KgEngine.dedupCaptures). This IS the
+  *     extraction input: canonical triples are a pure per-subject function
+  *     of it, so it is the exact state needed for incremental equivalence.
+  *   - base `triples(subj, pred, obj, obj_json, certainty, origin)` — the
   *     canonical output for those captures.
+  *   - the capture log and the triple log, one `batch=N` directory per
+  *     delta batch (`appendDelta`, directly or per microbatch through
+  *     `KgStreaming.pageDeltaStream`). A capture-log row carries `changed`:
+  *     it replaced the content, not just the ts of its key's winner.
   *
-  * A delta batch folds in with:
-  *   1. delta pages → per-(subj, relpath) winners (`captureWinners`, one
-  *      delta-sized aggregate);
-  *   2. ONE full-outer merge join against the capture store on
-  *      (subj, relpath). The store side is bucketed by subj, whose
-  *      HashPartitioning satisfies the (subj, relpath) clustering, so the
-  *      join shuffles ONLY the delta (plan-asserted in IncrementalSpec) —
-  *      at 100 TB the store is read, never reshuffled;
-  *   3. a delta row replaces the stored winner iff the store has no row or
-  *      (ts, md5) orders above it — the same total order dedupCaptures
-  *      applies within a batch, so fold order is unobservable;
-  *   4. subjects with at least one CONTENT change (new relpath or new md5;
-  *      a newer capture with identical bytes refreshes ts without marking
-  *      the subject) re-extract from their merged capture set — work
-  *      proportional to the churn, not the corpus. Everything else passes
-  *      its stored triples through untouched via a changed-subject
-  *      anti-join.
+  * A batch APPENDS the capture rows that replaced a current winner and the
+  * re-extracted triples of its content-changed subjects — O(churn), the base
+  * tables are only scanned. The current graph is a VIEW (`currentTriples`):
+  * base rows whose subject never appears in the log plus each logged
+  * subject's latest batch. `compact` folds the logs back into fresh bucketed
+  * base tables at the caller's cadence, amortizing the O(store) rewrite
+  * over many batches.
   *
-  * The result is provably the full rebuild: merged winners == the winners
-  * of (all pages ever seen), extraction is per-subject pure, and untouched
+  * The view is provably the full rebuild: current winners == the winners of
+  * (all pages ever seen), extraction is per-subject pure, and untouched
   * subjects' winners are untouched. `kg_incremental` pins that equivalence
   * against the same DuckDB oracle as `kg_canonical`.
   */
@@ -88,38 +81,6 @@ object Incremental {
       }
   }
 
-  /** Merge a delta's winners into the capture store: the ONE join of the
-    * incremental path. Output schema = store schema + `changed` (this
-    * batch replaced the row's content). Join keys (subj, relpath) are
-    * satisfied by the store's HashPartitioning(subj) — only `deltaWinners`
-    * shuffles.
-    */
-  def mergeCaptures(storeCaptures: DataFrame, deltaWinners: DataFrame): DataFrame = {
-    val s = storeCaptures.select(
-      F.col("subj"), F.col("relpath"),
-      F.col("ts").as("s_ts"), F.col("md5").as("s_md5"), F.col("text").as("s_text"))
-    val d = deltaWinners.select(
-      F.col("subj"), F.col("relpath"),
-      F.col("ts").as("d_ts"), F.col("md5").as("d_md5"), F.col("text").as("d_text"))
-    // the delta capture replaces the stored winner iff the store has none
-    // or the delta orders strictly above it under (ts, md5) — the same
-    // total order dedupCaptures uses, so merge(merge(a,b),c) == winners(a∪b∪c)
-    val replaces = F.col("s_ts").isNull ||
-      (F.col("d_ts").isNotNull &&
-        F.struct(F.col("d_ts"), F.col("d_md5")) >
-          F.struct(F.col("s_ts"), F.col("s_md5")))
-    s.join(d, Seq("subj", "relpath"), "full_outer")
-      .select(
-        F.col("subj"), F.col("relpath"),
-        F.when(replaces, F.col("d_ts")).otherwise(F.col("s_ts")).as("ts"),
-        F.when(replaces, F.col("d_md5")).otherwise(F.col("s_md5")).as("md5"),
-        F.when(replaces, F.col("d_text")).otherwise(F.col("s_text")).as("text"),
-        // a newer capture with IDENTICAL bytes refreshes ts but is not a
-        // content change — the subject must not re-extract for it
-        (replaces && (F.col("s_md5").isNull || F.col("d_md5") =!= F.col("s_md5")))
-          .as("changed"))
-  }
-
   /** Initialize the store pair from a first crawl batch and publish both
     * tables subj-bucketed. Triples derive from the SAME winners table that
     * is stored, so the pair cannot be inconsistent by construction.
@@ -128,77 +89,12 @@ object Incremental {
       spark: SparkSession, pages: DataFrame,
       capturesTable: String, triplesTable: String,
       path: String, buckets: Int = KgJob.DefaultBuckets): Unit = {
-    val winners = captureWinners(spark, pages)
-      .withColumn("changed", F.lit(true))
-    BucketedStore.publishBySubj(winners, capturesTable, s"$path/captures", buckets)
+    BucketedStore.publishBySubj(
+      captureWinners(spark, pages), capturesTable, s"$path/captures", buckets)
     val caps = BucketedStore.read(spark, capturesTable)
     BucketedStore.publishBySubj(
       extractFromCaptures(caps).toDF(), triplesTable, s"$path/triples", buckets)
   }
-
-  /** Fold one delta batch into the store pair EAGERLY: merge-and-publish the
-    * new capture table first — re-reading it makes the re-extraction branch
-    * consume the bucketed scan instead of recomputing the merge join per
-    * downstream branch — then re-extract ONLY changed subjects and publish
-    * the new triple table as stored-passthrough ∪ re-extraction. Returns the
-    * new triple table's bucketed scan.
-    *
-    * Eager mode rewrites O(store) per batch — the rebuild's cost class.
-    * With the store sized right (buckets ≥ shuffle partitions, one file
-    * per bucket — see BucketedStore) IncrementalBench measures it modestly
-    * ahead of a full rebuild (9.98 vs 11.80 s at 1.19M pages / 1% churn:
-    * extraction is churn-only but both tables still rewrite); per-batch
-    * production maintenance should use `appendDelta` + `currentTriples`
-    * (O(churn), 2.9-5.5× vs the rebuild) with `compact` on a slow cadence.
-    * This eager form is the one-shot/compaction-grade fold.
-    *
-    * The changed-subject set is delta-bounded; its semi/anti joins are left
-    * to Catalyst/AQE (broadcast when small — the 1%-churn common case —
-    * shuffle-hash when a delta is genuinely huge), same policy as the
-    * probe-table guard in `KgEngine.applyUrlProbes`.
-    */
-  def updateStore(
-      spark: SparkSession, deltaPages: DataFrame,
-      capturesTable: String, triplesTable: String,
-      path: String, buckets: Int = KgJob.DefaultBuckets): DataFrame = {
-    val storeCaps = BucketedStore.read(spark, capturesTable)
-    val storeTriples = BucketedStore.read(spark, triplesTable)
-    // the new tables publish under *_next names/paths (snapshot rotation,
-    // not in-place overwrite): the lazy passthrough plan still reads the
-    // CURRENT triple table while the new one writes, so a killed batch
-    // leaves the current snapshot intact — same crash story as KgJob's
-    // bucket manifest
-    val merged = mergeCaptures(storeCaps, captureWinners(spark, deltaPages))
-    val nextCaps = s"${capturesTable}_next"
-    BucketedStore.publishBySubj(merged, nextCaps, s"$path/captures_next", buckets)
-    val caps2 = BucketedStore.read(spark, nextCaps)
-
-    val changedSubjects = caps2.where(F.col("changed")).select("subj").distinct()
-    val reextracted = extractFromCaptures(
-      caps2.join(changedSubjects, Seq("subj"), "left_semi"))
-    val passthrough = storeTriples.join(changedSubjects, Seq("subj"), "left_anti")
-    val nextTriples = s"${triplesTable}_next"
-    BucketedStore.publishBySubj(
-      passthrough.unionByName(reextracted.toDF()), nextTriples,
-      s"$path/triples_next", buckets)
-    BucketedStore.read(spark, nextTriples)
-  }
-
-  // ---------- merge-on-read delta log (the per-batch O(churn) path) ----------
-  //
-  // `updateStore` rewrites both stores per batch — correct, but measurement
-  // (IncrementalBench) shows the rewrite I/O swamps the extraction savings
-  // when churn is low: the thing incremental maintenance must NOT do per
-  // batch is touch O(store). The log mode is the LSM answer: a batch
-  // APPENDS (a) the capture rows that replaced a current winner and (b) the
-  // re-extracted triples of content-changed subjects, each under
-  // `<log>/batch=N` (per-batch directory overwrite → idempotent retry, the
-  // same crash story as KgJob's bucket commit). The current graph is a VIEW:
-  // base rows whose key never appears in the log, plus the latest-batch log
-  // rows — base tables are scanned, never rewritten or shuffled
-  // (broadcast anti-joins against the small log; plan-asserted). `compact`
-  // folds the log back into fresh bucketed base tables at the caller's
-  // cadence, amortizing the O(store) rewrite over many batches.
 
   /** Marker predicate for a changed subject whose re-extraction produced no
     * triples: without it the subject's latest batch would be invisible to
@@ -372,7 +268,7 @@ object Incremental {
       outCapturesTable: String, outTriplesTable: String, outPath: String,
       buckets: Int = KgJob.DefaultBuckets): Unit = {
     val caps = currentCaptures(BucketedStore.read(spark, capturesTable),
-      readLog(spark, clogPath)).withColumn("changed", F.lit(false))
+      readLog(spark, clogPath))
     BucketedStore.publishBySubj(caps, outCapturesTable,
       s"$outPath/captures", buckets)
     val tri = currentTriples(BucketedStore.read(spark, triplesTable),

@@ -1,43 +1,21 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Structured Streaming variant of the KG pipeline. The reference is batch
-  * (SURVEY §2.9: its async streams are concurrency, not event time), but the
-  * pipeline is streaming-friendly by construction: extraction is stateless
-  * per subject once a subject's files co-arrive, and the merge is an
-  * associative argmax. A crawl stream delivers whole WARC captures, so
-  * subjects arrive complete within a microbatch; `foreachBatch` runs the
-  * batch pipeline per trigger and appends triples, with exactly-once
-  * bookkeeping from the streaming checkpoint. Cross-batch re-canonicalization
-  * (a subject recrawled later) is the associative `KgEngine.canonicalize`
-  * aggregate over the appended log — an Iceberg MERGE in production.
+/** Structured Streaming entry points onto the incremental store. The
+  * reference is batch (SURVEY §2.9: its async streams are concurrency, not
+  * event time), but maintenance is a log by construction: a microbatch is
+  * one more appended batch, `foreachBatch` runs the batch operator per
+  * trigger, and the streaming checkpoint does the exactly-once bookkeeping.
+  *   - `pageDeltaStream`: arriving page files append to the capture/triple
+  *     logs through `Incremental.appendDelta`; the graph is the
+  *     `Incremental.currentTriples` view, folded by `Incremental.compact`.
+  *   - `enrichLogStream` + `compactEnrichment`: arriving registry rows
+  *     append to a gated enrichment log that compacts onto the canonical
+  *     table.
   */
 object KgStreaming {
-
-  def start(
-      spark: SparkSession,
-      inputDir: String,
-      outputDir: String,
-      checkpointDir: String,
-      pageSchema: org.apache.spark.sql.types.StructType
-  ): StreamingQuery = {
-    val pages = spark.readStream
-      .schema(pageSchema)
-      .option("maxFilesPerTrigger", 4)
-      .parquet(inputDir)
-
-    pages.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        KgEngine.extractCanonical(batch.sparkSession, batch.toDF()).toDF()
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(outputDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Delta-crawl ingestion as a stream: arriving page files fold into the
     * incremental capture/triple logs per microbatch through
@@ -159,28 +137,5 @@ object KgStreaming {
     val merged = KgEngine.canonicalize(
       existing.unionByName(log).as[Model.RawTriple]).as[Model.CanonTriple]
     KgEngine.extrapolatePost(merged, Seq("external-registry"))
-  }
-
-  /** Cross-crawl re-canonicalization: the appended triple log holds one
-    * observation per (subj, pred) per microbatch that saw the subject; a
-    * recrawl appends fresh observations. Compaction reduces the log to one
-    * row per key — highest certainty wins, ties go to the NEWEST batch (a
-    * recrawl refreshes equal-confidence facts). Same associative argmax as
-    * `KgEngine.canonicalize`; over an Iceberg table this is a MERGE INTO.
-    */
-  def compactLog(spark: SparkSession, logDir: String): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    spark.read.parquet(logDir)
-      .groupBy("subj", "pred")
-      .agg(F.max_by(
-        F.struct("obj", "obj_json", "certainty", "origin", "batch_id"),
-        F.struct(F.col("certainty"), F.col("batch_id"))).as("best"))
-      .select(
-        F.col("subj"), F.col("pred"),
-        F.col("best.obj").as("obj"),
-        F.col("best.obj_json").as("obj_json"),
-        F.col("best.certainty").as("certainty"),
-        F.col("best.origin").as("origin"),
-        F.col("best.batch_id").as("batch_id"))
   }
 }

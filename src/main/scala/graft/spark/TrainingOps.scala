@@ -839,20 +839,6 @@ object TrainingOps {
 
   final case class SampledFrame(doc_id: Long, frame_idx: Int, width: Int, height: Int)
 
-  /** Synthetic video clip for doc `id`: a 4-byte LE frame count followed by
-    * 1+id%6 concatenated BMP frames — the length-prefixed container the
-    * frame sampler walks.
-    */
-  def syntheticClip(id: Long): Array[Byte] = {
-    val nFrames = (1 + id % 6).toInt
-    val frame = syntheticBmp(id)
-    val b = java.nio.ByteBuffer.allocate(4 + nFrames * frame.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.putInt(nFrames)
-    (0 until nFrames).foreach(_ => b.put(frame))
-    b.array()
-  }
-
   /** Multimodal frame sampling: walk a length-prefixed frame container and
     * decode every `stride`-th frame's header — the batched binary-in /
     * typed-rows-out plumbing of a video sampler (a production build swaps

@@ -9,22 +9,20 @@ import graft.spark.{Incremental, SynthPages}
   *   full_rebuild      — what the non-incremental pipeline does: extract the
   *                       entire new crawl and publish a fresh store pair
   *                       (Incremental.initStore over the full recrawl);
-  *   inc_full_recrawl  — fold the SAME full recrawl into the existing store
-  *                       (updateStore): the capture merge still scans
-  *                       everything once, but only changed subjects
-  *                       re-extract;
-  *   inc_changed_only  — the pre-filtered delta (just the changed pages), the
-  *                       shape a diffing crawler hands the pipeline.
-  *
-  * plus the merge-on-read log legs (appendDelta on both delta shapes).
+  *   log_full_recrawl  — append the SAME full recrawl to the existing
+  *                       store's logs (appendDelta): every page is looked
+  *                       up once, but only changed subjects re-extract;
+  *   log_changed_only  — append the pre-filtered delta (just the changed
+  *                       pages), the shape a diffing crawler hands the
+  *                       pipeline.
   *
   * Corpus = SPARK_GRAFT_SCALE × the sf documents table through SynthPages
   * (same family as ScalingBench); churn = subjects with
   * doc_id % SPARK_GRAFT_CHURN_MOD == 0 (default 100 → 1%). Buckets default
   * to 256 = the session's shuffle partitioning — below that the bucketed
-  * anchoring turns off and every incremental leg silently pays a full
-  * store shuffle (see BucketedStore). Emits one JSON line; wall numbers
-  * need a quiet window like every bench on this VM.
+  * anchoring turns off and every log leg silently pays a full store
+  * shuffle (see BucketedStore). Emits one JSON line; wall numbers need a
+  * quiet window like every bench on this VM.
   */
 object IncrementalBench {
   def main(args: Array[String]): Unit = {
@@ -75,32 +73,27 @@ object IncrementalBench {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
 
-    // existing store (untimed setup for the incremental legs). Buckets must
-    // be ≥ spark.sql.shuffle.partitions or EnsureRequirements prefers the
-    // larger partitioning and reshuffles BOTH join sides — the bucketed
-    // anchoring silently turns off (DisableUnnecessaryBucketedScan) and the
-    // append pays a full store shuffle it exists to avoid.
+    // existing store (untimed setup for the log legs). Buckets must be ≥
+    // spark.sql.shuffle.partitions or EnsureRequirements prefers the larger
+    // partitioning and reshuffles BOTH join sides — the bucketed anchoring
+    // silently turns off (DisableUnnecessaryBucketedScan) and the append
+    // pays a full store shuffle it exists to avoid.
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "256").toInt
     Incremental.initStore(spark, baseCrawl, "ib_caps", "ib_tri", s"$base/store",
       buckets)
     val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUPS", "1").toInt
-    for (_ <- 0 until warm) { // JIT the extract + merge paths once
-      Incremental.updateStore(spark, changedOnly, "ib_caps", "ib_tri", s"$base/store", buckets)
+    for (_ <- 0 until warm) { // JIT the extract + append paths once
       Incremental.initStore(spark, changedOnly, "ib_w_caps", "ib_w_tri", s"$base/w", buckets)
+      Incremental.initLogs(spark, s"$base/clog", s"$base/tlog")
+      Incremental.appendDelta(spark, changedOnly, "ib_caps",
+        s"$base/clog", s"$base/tlog", batch = 1)
     }
 
     val tFull = time(Incremental.initStore(
       spark, fullRecrawl, "ib_full_caps", "ib_full_tri", s"$base/full", buckets))
-    val tIncFull = time(Incremental.updateStore(
-      spark, fullRecrawl, "ib_caps", "ib_tri", s"$base/store", buckets))
-    val tIncChanged = time(Incremental.updateStore(
-      spark, changedOnly, "ib_caps", "ib_tri", s"$base/store", buckets))
 
-    // merge-on-read log mode: per-batch cost O(churn) — base tables are
-    // scanned by the lookup join, never rewritten
-    Incremental.initLogs(spark, s"$base/clog", s"$base/tlog")
-    Incremental.appendDelta(spark, changedOnly, "ib_caps",
-      s"$base/clog", s"$base/tlog", batch = 1) // JIT/warm the append path
+    // per-batch cost O(churn): base tables are scanned by the lookup join,
+    // never rewritten
     Incremental.initLogs(spark, s"$base/clog", s"$base/tlog")
     val tLogFull = time(Incremental.appendDelta(spark, fullRecrawl, "ib_caps",
       s"$base/clog", s"$base/tlog", batch = 1))
@@ -108,19 +101,16 @@ object IncrementalBench {
     val tLogChanged = time(Incremental.appendDelta(spark, changedOnly, "ib_caps",
       s"$base/clog2", s"$base/tlog2", batch = 1))
 
-    // all four maintenance paths must agree with the rebuild (untimed sanity)
+    // the log view must agree with the rebuild (untimed sanity)
     val nFull = spark.table("ib_full_tri").count()
-    val nInc = spark.table("ib_tri_next").count()
     val nLog = Incremental.currentTriples(
       spark.table("ib_tri"), Incremental.readLog(spark, s"$base/tlog")).count()
-    require(nFull == nInc && nFull == nLog,
-      s"triple counts diverged: rebuild=$nFull eager=$nInc log=$nLog")
+    require(nFull == nLog, s"triple counts diverged: rebuild=$nFull log=$nLog")
 
     println(
       f"""{"metric":"incremental_update","pages":$pages,""" +
       f""""churn_pct":${100.0 / churnMod}%.1f,""" +
-      f""""full_rebuild_sec":$tFull%.2f,"inc_full_recrawl_sec":$tIncFull%.2f,""" +
-      f""""inc_changed_only_sec":$tIncChanged%.2f,""" +
+      f""""full_rebuild_sec":$tFull%.2f,""" +
       f""""log_full_recrawl_sec":$tLogFull%.2f,""" +
       f""""log_changed_only_sec":$tLogChanged%.2f,""" +
       f""""speedup_log_full_recrawl":${tFull / tLogFull}%.2f,""" +

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
 /** The CLI surface end-to-end: GuessMain's YAML over every reference fixture
@@ -13,7 +12,7 @@ class CliParitySpec extends AnyFunSuite {
 
   test("GuessMain YAML round-trips to expected.yaml on all reference fixtures") {
     var checked = 0
-    for (dir <- FixtureReplay.fixtureDirs(Paths.get("/root/reference/testdata"))) {
+    for (dir <- FixtureReplay.fixtureDirs(ReferenceDir("testdata"))) {
       val yaml = GuessMain.run(dir)
       val actual = FixtureReplay.parseExpected(yaml)
       val expected = FixtureReplay.parseExpected(new String(

@@ -3,20 +3,19 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
-/** Golden-fixture replay: every directory under /root/reference/testdata is
+/** Golden-fixture replay: every directory under the reference's testdata is
   * one subject; its files become artifact rows; the pipeline's canonical
   * metadata must match expected.yaml (structural compare). Reports
   * triple-level precision/recall (BASELINE.md target ≥0.95/≥0.95).
   */
 class FixtureSpec extends AnyFunSuite {
 
-  private val testdataDir = Paths.get("/root/reference/testdata")
 
   private val PrecisionFloor = 0.95
   private val RecallFloor = 0.95
 
   test("golden fixture replay: triple P/R vs reference expected.yaml") {
-    val tallies = FixtureReplay.fixtureDirs(testdataDir).map { dir =>
+    val tallies = FixtureReplay.fixtureDirs(ReferenceDir("testdata")).map { dir =>
       val t = FixtureReplay.replay(dir)
       if (t.failures.isEmpty) info(s"PASS ${dir.getFileName}")
       t

@@ -6,10 +6,10 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.spark.{BucketedStore, Incremental, KgEngine, SynthPages}
 
-/** Incremental KG maintenance: fold a delta crawl into the subj-bucketed
-  * capture/triple store pair, re-extracting ONLY subjects whose winning
-  * captures changed — result provably equal to the full rebuild, with the
-  * merge join never reshuffling the store side.
+/** Incremental KG maintenance: append a delta crawl to the merge-on-read
+  * logs over the subj-bucketed capture/triple store, re-extracting ONLY
+  * subjects whose winning captures changed — the base ⊕ log view provably
+  * equals the full rebuild, and the base tables are never reshuffled.
   */
 class IncrementalSpec extends AnyFunSuite {
 
@@ -101,58 +101,55 @@ class IncrementalSpec extends AnyFunSuite {
       "the newest capture must win per (subj, relpath)")
   }
 
-  test("incremental update == full rebuild over everything ever crawled") {
-    Incremental.initStore(spark, basePages, "inc_caps", "inc_tri",
-      "/tmp/graft_inc_spec/s1", buckets = 8)
-    // the stored triples ARE the base-crawl extraction
-    assertSame(BucketedStore.read(spark, "inc_tri"),
-      KgEngine.extractCanonical(spark, basePages).toDF(),
-      "initStore triples == extractCanonical(base)")
-
-    val updated = Incremental.updateStore(spark, deltaPages,
-      "inc_caps", "inc_tri", "/tmp/graft_inc_spec/s1", buckets = 8)
-    // full rebuild over base ∪ delta — and because every winner converges to
-    // the live capture, also == the clean-corpus extraction
-    assertSame(updated,
-      KgEngine.extractCanonical(spark, basePages.unionByName(deltaPages)).toDF(),
-      "incremental must equal the full rebuild")
-    assertSame(updated, KgEngine.extractCanonical(spark, live).toDF(),
-      "merged winners must converge to the live corpus")
-  }
-
   test("only genuinely changed subjects re-extract; ts refreshes and stale recaptures do not") {
-    Incremental.initStore(spark, basePages, "inc_caps2", "inc_tri2",
-      "/tmp/graft_inc_spec/s2", buckets = 8)
-    Incremental.updateStore(spark, deltaPages,
-      "inc_caps2", "inc_tri2", "/tmp/graft_inc_spec/s2", buckets = 8)
-    val changed = BucketedStore.read(spark, "inc_caps2_next")
-      .where(F.col("changed"))
-      .select(subjMod(10).as("m")).distinct()
-      .collect().map(_.getLong(0)).toSet
+    val root = "/tmp/graft_inc_spec/s2"
+    Incremental.initStore(spark, basePages, "inc_caps2", "inc_tri2", root, buckets = 8)
+    Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
+    Incremental.appendDelta(spark, deltaPages, "inc_caps2",
+      s"$root/clog", s"$root/tlog", batch = 1)
+    def mods(df: DataFrame): Set[Long] =
+      df.select(subjMod(10)).distinct().collect().map(_.getLong(0)).toSet
+    val logged = Incremental.readLog(spark, s"$root/clog").where(F.col("batch") === 1)
+    val changed = mods(logged.where(F.col("changed")))
     assert(changed == Set(0L, 5L),
       s"changed subjects must be exactly the new (%10==0) and content-changed " +
       s"(%10==5) ones — stale recaptures (1) and same-content ts refreshes (2) " +
       s"must not re-extract; got $changed")
-    // the ts refresh IS recorded in the store (a later capture between the
-    // two timestamps must keep losing)
-    val m2ts = BucketedStore.read(spark, "inc_caps2_next")
-      .where(subjMod(10) === 2).agg(F.min("ts"), F.min("changed")).collect()(0)
-    val baseTs = BucketedStore.read(spark, "inc_caps2")
-      .where(subjMod(10) === 2).agg(F.max("ts")).collect()(0).getLong(0)
-    assert(m2ts.getLong(0) == baseTs + 86400L * 1000,
-      "a same-content newer capture must refresh the stored winner's ts")
-    assert(!m2ts.getBoolean(1), "…without marking the subject changed")
+    assert(logged.where(subjMod(10) === 1).isEmpty, "a stale recapture is not logged")
+    val reextracted = mods(Incremental.readLog(spark, s"$root/tlog")
+      .where(F.col("batch") === 1))
+    assert(reextracted == Set(0L, 5L), s"re-extracted subjects: $reextracted")
+    // the ts refresh IS logged (a later capture between the two timestamps
+    // must keep losing)
+    val m2 = logged.where(subjMod(10) === 2)
+      .agg(F.count(F.lit(1)), F.min("ts"), F.max("ts"), F.max(F.col("changed").cast("int")))
+      .collect()(0)
+    val base2 = BucketedStore.read(spark, "inc_caps2").where(subjMod(10) === 2)
+      .agg(F.count(F.lit(1)), F.max("ts")).collect()(0)
+    assert(m2.getLong(0) == base2.getLong(0) &&
+      m2.getLong(1) == base2.getLong(1) + 86400L * 1000 &&
+      m2.getLong(2) == base2.getLong(1) + 86400L * 1000,
+      "a same-content newer capture must log every key's winner at ts + 1 day")
+    assert(m2.getInt(3) == 0, "…without marking the subject changed")
   }
 
   test("a no-op delta changes nothing and re-extracts nothing") {
-    Incremental.initStore(spark, live, "inc_caps3", "inc_tri3",
-      "/tmp/graft_inc_spec/s3", buckets = 8)
-    val updated = Incremental.updateStore(spark, corrupt(live, days = 30),
-      "inc_caps3", "inc_tri3", "/tmp/graft_inc_spec/s3", buckets = 8)
-    assert(BucketedStore.read(spark, "inc_caps3_next")
-      .where(F.col("changed")).isEmpty, "all-stale delta → zero changed rows")
-    assertSame(updated, BucketedStore.read(spark, "inc_tri3"),
-      "all-stale delta → triples pass through unchanged")
+    val root = "/tmp/graft_inc_spec/s3"
+    Incremental.initStore(spark, live, "inc_caps3", "inc_tri3", root, buckets = 8)
+    Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
+    Incremental.appendDelta(spark, corrupt(live, days = 30), "inc_caps3",
+      s"$root/clog", s"$root/tlog", batch = 1)
+    for (log <- Seq("clog", "tlog")) {
+      assert(new java.io.File(s"$root/$log/batch=1").isDirectory,
+        s"the no-op batch still writes its $log directory")
+      assert(Incremental.readLog(spark, s"$root/$log").where(F.col("batch") === 1).isEmpty,
+        s"all-stale delta → an empty $log batch (no rows, no tombstones)")
+    }
+    assertSame(
+      Incremental.currentTriples(BucketedStore.read(spark, "inc_tri3"),
+        Incremental.readLog(spark, s"$root/tlog")),
+      BucketedStore.read(spark, "inc_tri3"),
+      "all-stale delta → the view is the base triples")
   }
 
   test("log mode: two appended batches ⊕ base == full rebuild (incl. a re-changed subject)") {
@@ -221,25 +218,6 @@ class IncrementalSpec extends AnyFunSuite {
       "post-compaction appends must keep matching the full rebuild")
   }
 
-  test("merging is associative: sequential folds == one-shot winners") {
-    // three crawl generations of the same corpus with distinct (ts, text)
-    val gen1 = corrupt(live, days = 14)
-    val gen2 = corrupt(live, days = 7).where(docMod(3) =!= 0) // partial recrawl
-    val gen3 = live.where(docMod(2) === 0)                    // another partial
-    val all = gen1.unionByName(gen2).unionByName(gen3)
-    val sequential = Incremental.mergeCaptures(
-      Incremental.mergeCaptures(
-        Incremental.captureWinners(spark, gen1),
-        Incremental.captureWinners(spark, gen2)).drop("changed"),
-      Incremental.captureWinners(spark, gen3)).drop("changed")
-    val oneShot = Incremental.captureWinners(spark, all)
-    val k = Seq("subj", "relpath", "ts", "md5")
-    assert(sequential.select(k.map(F.col): _*)
-      .except(oneShot.select(k.map(F.col): _*)).isEmpty &&
-      sequential.count() == oneShot.count(),
-      "fold order must be unobservable")
-  }
-
   test("log mode: re-running a failed batch with the same id is lossless") {
     val root = "/tmp/graft_inc_spec/retry"
     Incremental.initStore(spark, basePages, "rt_caps", "rt_tri", root, buckets = 8)
@@ -279,38 +257,56 @@ class IncrementalSpec extends AnyFunSuite {
     val root = "/tmp/graft_inc_spec/stream"
     Incremental.initStore(spark, basePages, "st_caps", "st_tri", root, buckets = 8)
     Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
-    // the delta crawl arrives as TWO files → two microbatches (1 file each)
-    deltaPages.where(docMod(2) === 0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/in/d0")
-    deltaPages.where(docMod(2) === 1).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/in/d1")
-    // one flat stream dir of page files
+    // one flat stream dir of page files; each written file is one
+    // microbatch (maxFilesPerTrigger = 1)
     val in = s"$root/stream_in"
     new java.io.File(in).mkdirs()
-    for (d <- Seq("d0", "d1");
-         f <- new java.io.File(s"$root/in/$d").listFiles()
-           if f.getName.endsWith(".parquet")) {
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(in, s"${d}_${f.getName}").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    def deliver(name: String, pages: DataFrame): Unit = {
+      pages.coalesce(1).write.mode("overwrite").parquet(s"$root/in/$name")
+      for (f <- new java.io.File(s"$root/in/$name").listFiles()
+           if f.getName.endsWith(".parquet"))
+        java.nio.file.Files.copy(f.toPath,
+          new java.io.File(in, s"${name}_${f.getName}").toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val q = graft.spark.KgStreaming.pageDeltaStream(spark, in,
+    def stream(): Unit = graft.spark.KgStreaming.pageDeltaStream(spark, in,
       "st_caps", s"$root/clog", s"$root/tlog", s"$root/ckpt",
       spark.read.parquet(s"$root/in/d0").schema, maxFilesPerTrigger = 1)
-    q.awaitTermination()
+      .awaitTermination()
+    def batches(): Set[Int] = Incremental.readLog(spark, s"$root/clog")
+      .select("batch").distinct().collect().map(_.getInt(0)).toSet
+    def view = Incremental.currentTriples(
+      BucketedStore.read(spark, "st_tri"), Incremental.readLog(spark, s"$root/tlog"))
+
+    // the delta crawl arrives as TWO files → two microbatches
+    deliver("d0", deltaPages.where(docMod(2) === 0))
+    deliver("d1", deltaPages.where(docMod(2) === 1))
+    stream()
     // batch 0 is the rowless init marker; both microbatches must have
     // appended their own rows (the delta split puts live captures in each)
-    val batches = Incremental.readLog(spark, s"$root/clog")
-      .select("batch").distinct().collect().map(_.getInt(0)).toSet
-    assert(batches == Set(1, 2),
-      s"each microbatch must append under its own id, got $batches")
-    assertSame(
-      Incremental.currentTriples(
-        BucketedStore.read(spark, "st_tri"),
-        Incremental.readLog(spark, s"$root/tlog")),
+    assert(batches() == Set(1, 2),
+      s"each microbatch must append under its own id, got ${batches()}")
+    assertSame(view,
       KgEngine.extractCanonical(spark,
         basePages.unionByName(deltaPages)).toDF(),
       "streamed ingestion must equal the full rebuild")
+
+    // a later recrawl re-delivers proj0's README with new text; the stream
+    // resumes from its checkpoint and processes only the new file
+    import spark.implicits._
+    deliver("d2", Seq(("https://replay.invalid/proj0/README", "recrawled body"))
+      .toDF("url", "text")
+      .select(F.col("url"), F.to_timestamp(F.lit("2026-08-01 00:00:00")).as("warc_ts"),
+        F.col("text").cast("binary").as("html"), F.col("text"), F.lit("en").as("lang")))
+    stream()
+    assert(batches() == Set(1, 2, 3),
+      s"a resumed stream must process only the new file, got ${batches()}")
+    val proj0 = view.where(F.col("subj") === "https://replay.invalid/proj0/")
+      .select("pred", "obj", "certainty").as[(String, String, Int)]
+      .collect().map { case (p, o, c) => p -> (o, c) }.toMap
+    assert(proj0("Description")._1 == "recrawled body\n",
+      "the recrawled README re-extracts its subject")
+    assert(proj0("Name") == ("proj0", 3), "manifest-derived facts keep their certainty")
   }
 
   test("log mode: a tombstoned subject's base rows do not resurrect") {
@@ -331,15 +327,22 @@ class IncrementalSpec extends AnyFunSuite {
       "tombstones never surface in the view")
   }
 
+  /** No exchange above the base scan; with `anchored`, the base side IS
+    * the bucketed scan (the join really consumes its partitioning).
+    */
   private def assertBaseNotShuffled(df: org.apache.spark.sql.DataFrame,
-                                    path: String, what: String): Unit = {
+                                    path: String, what: String,
+                                    anchored: Boolean = false): Unit = {
     val plan = df.queryExecution.executedPlan
-    val underShuffle = plan.collect { case e: ShuffleExchangeExec => e }
-      .flatMap(_.collect {
-        case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s
-      })
+    def baseScans(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s
+    }
+    val underShuffle = plan.collect { case e: ShuffleExchangeExec => e }.flatMap(baseScans)
     assert(underShuffle.isEmpty, s"$what must not shuffle the base side:\n$plan")
+    if (anchored)
+      assert(baseScans(plan).nonEmpty && baseScans(plan).forall(_.bucketedScan),
+        s"$what must read the base side as the bucketed scan:\n$plan")
   }
 
   test("log mode: base tables are scanned, never shuffled") {
@@ -357,7 +360,7 @@ class IncrementalSpec extends AnyFunSuite {
           BucketedStore.read(spark, "lg2_caps"),
           Incremental.readLog(spark, s"$root/clog"),
           Incremental.captureWinners(spark, deltaPages)),
-        "log2/captures", "replacingRows")
+        "log2/captures", "replacingRows", anchored = true)
     }
     // the read views anti-join the SMALL log key sets — those broadcast
     // (default threshold), leaving the base scan exchange-free
@@ -373,31 +376,5 @@ class IncrementalSpec extends AnyFunSuite {
           Incremental.readLog(spark, s"$root/clog")),
         "log2/captures", "currentCaptures")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
-  test("the capture-merge join never reshuffles the store side") {
-    withStablePlans {
-      Incremental.initStore(spark, basePages, "inc_caps4", "inc_tri4",
-        "/tmp/graft_inc_spec/s4", buckets = 8)
-      val merged = Incremental.mergeCaptures(
-        BucketedStore.read(spark, "inc_caps4"),
-        Incremental.captureWinners(spark, deltaPages))
-      val plan = merged.queryExecution.executedPlan
-      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffles.nonEmpty, "the delta side must still shuffle to the store's buckets")
-      val storeScansUnderShuffles = shuffles.flatMap(_.collect {
-        case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toString.contains("s4/captures")) => s
-      })
-      assert(storeScansUnderShuffles.isEmpty,
-        s"the bucketed store must anchor the join — no exchange above its scan:\n$plan")
-      // and the bucketed scan IS in the plan (the join really consumes it)
-      val storeScans = plan.collect {
-        case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toString.contains("s4/captures")) => s
-      }
-      assert(storeScans.nonEmpty && storeScans.forall(_.bucketedScan),
-        s"store side must be the bucketed scan:\n$plan")
-    }
   }
 }

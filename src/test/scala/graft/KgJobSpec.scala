@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.spark.{KgJob, KgStreaming, SynthPages}
 
-/** End-to-end job semantics: bucket-manifest resume and the streaming
-  * variant.
+/** End-to-end job semantics: bucket-manifest resume, streamed page
+  * ingestion and the streaming enrichment log.
   */
 class KgJobSpec extends AnyFunSuite {
 
@@ -157,56 +157,35 @@ class KgJobSpec extends AnyFunSuite {
   }
 
   test("streaming variant produces the same triples as batch") {
+    import org.apache.spark.sql.{functions => F}
+    import graft.spark.{BucketedStore, Incremental, KgEngine}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 48")
     val pages = SynthPages.fromDocuments(docs)
-    val in = freshDir("kgstream_in")
-    val outDir = freshDir("kgstream_out")
-    val ckpt = freshDir("kgstream_ckpt")
-    // the streaming contract (KgStreaming doc): a subject's pages co-arrive
-    // within a capture — deliver them co-located, as a crawl stream would
-    pages.repartition(4, org.apache.spark.sql.functions.expr(
-        "substring_index(url, '/', 4)"))
-      .write.mode("overwrite").parquet(in)
+    val root = freshDir("kgstream")
+    // an empty store: the whole crawl arrives through the stream
+    Incremental.initStore(spark, pages.limit(0), "kgs_caps", "kgs_tri", root, buckets = 4)
+    Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
+    // hash by url, not by subject: a subject's pages land in different
+    // files, so its captures are spread over several microbatches
+    val in = s"$root/in"
+    pages.repartition(4, F.col("url")).write.mode("overwrite").parquet(in)
+    val nFiles = new java.io.File(in).listFiles().count(_.getName.endsWith(".parquet"))
 
-    val schema = spark.read.parquet(in).schema
-    val q = KgStreaming.start(spark, in, outDir, ckpt, schema)
-    q.awaitTermination(120000)
+    KgStreaming.pageDeltaStream(spark, in, "kgs_caps", s"$root/clog", s"$root/tlog",
+      s"$root/ckpt", spark.read.parquet(in).schema, maxFilesPerTrigger = 1)
+      .awaitTermination(120000)
+    val batches = Incremental.readLog(spark, s"$root/clog")
+      .where(F.col("batch") > 0).select("batch").distinct().count()
+    assert(batches == nFiles, "each page file must be its own microbatch")
 
-    val streamed = spark.read.parquet(outDir)
-      .select("subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    val batch = graft.spark.KgEngine.extractCanonical(spark, pages).toDF()
-      .select("subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("subj", "pred", "obj").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val streamed = triples(Incremental.currentTriples(
+      BucketedStore.read(spark, "kgs_tri"), Incremental.readLog(spark, s"$root/tlog")))
+    val batch = triples(KgEngine.extractCanonical(spark, pages).toDF())
     assert(streamed == batch)
     assert(streamed.size == 6 * (11 + 11 + 11 + 10 + 10 + 9 + 6 + 10))
-
-    // --- recrawl: a later capture re-delivers proj0's README with new text.
-    // The checkpoint resumes (only the new file is processed), the new
-    // observations append, and compaction keeps: the recrawled Description
-    // (equal certainty -> newest batch wins) but the original manifest-
-    // derived facts (higher certainty than the recrawl's path-Name).
-    import spark.implicits._
-    Seq(("https://replay.invalid/proj0/README", "recrawled body"))
-      .toDF("url", "text")
-      .withColumn("warc_ts", org.apache.spark.sql.functions
-        .to_timestamp(org.apache.spark.sql.functions.lit("2026-08-01 00:00:00")))
-      .withColumn("html", org.apache.spark.sql.functions.col("text").cast("binary"))
-      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-      .select("url", "warc_ts", "html", "text", "lang")
-      .write.mode("append").parquet(in)
-    val q2 = KgStreaming.start(spark, in, outDir, ckpt, schema)
-    q2.awaitTermination(120000)
-
-    val compacted = KgStreaming.compactLog(spark, outDir)
-      .where("subj = 'https://replay.invalid/proj0/'")
-      .collect().map(r => r.getString(1) -> (r.getString(2), r.getInt(4))).toMap
-    assert(compacted("Description")._1 == "recrawled body\n") // newest batch won the tie
-    assert(compacted("Name") == ("proj0", 3))                 // manifest certainty retained
-    // one row per (subj, pred) after compaction
-    val dupes = KgStreaming.compactLog(spark, outDir)
-      .groupBy("subj", "pred").count().where("count > 1").count()
-    assert(dupes == 0)
   }
 
   test("streaming enrichment log compacts to the one-shot enrichAll result") {

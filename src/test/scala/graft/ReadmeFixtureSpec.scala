@@ -6,20 +6,19 @@ import graft.extract.Readme
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** README byte-identity fixtures (/root/reference/readme_tests): the
+/** README byte-identity fixtures (the reference's readme_tests): the
   * extracted description must equal the golden `description` file
   * byte-for-byte (build.rs:62-160). Dispatch: README.md, else README.rst,
   * else README (plain).
   */
 class ReadmeFixtureSpec extends AnyFunSuite {
 
-  private val dir = Paths.get("/root/reference/readme_tests")
 
   // ratcheted: number of fixtures that must pass byte-identically
   private val PassFloor = 26
 
   test("readme description byte-identity") {
-    val dirs = Files.list(dir).iterator().asScala
+    val dirs = Files.list(ReferenceDir("readme_tests")).iterator().asScala
       .filter(Files.isDirectory(_)).toList.sortBy(_.getFileName.toString)
 
     var pass = 0

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.Readme
 
 /** README-walk internals against the reference's inline vectors
-  * (/root/reference/src/readme.rs:1096-1341), including the real-HTML
+  * (src/readme.rs:1096-1341), including the real-HTML
   * swh.html DOM fixture.
   */
 class ReadmeInternalsSpec extends AnyFunSuite {
@@ -17,7 +17,7 @@ class ReadmeInternalsSpec extends AnyFunSuite {
 
   test("swh.html walk (readme.rs:1310-1340)") {
     val html = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/src/testdata/swh.html")), "UTF-8")
+      ReferenceDir("src/testdata/swh.html")), "UTF-8")
     val (description, metadata) = Readme.descriptionFromReadmeHtml(html)
     val expected =
       """The Software Heritage Git Loader is a tool and a library to walk a local

@@ -5,14 +5,14 @@ import graft.core._
 import graft.registry.RegistryParsers
 
 /** Registry payload parsers replayed against the reference's own canned API
-  * payloads (/root/reference/src/testdata/) — the same vectors its provider
+  * payloads (src/testdata/) — the same vectors its provider
   * unit tests assert on.
   */
 class RegistrySpec extends AnyFunSuite {
 
   private def td(name: String): String = {
-    val p = java.nio.file.Paths.get("/root/reference/src/testdata", name)
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    new String(java.nio.file.Files.readAllBytes(
+      ReferenceDir(s"src/testdata/$name")), "UTF-8")
   }
 
   private def field(ds: List[Datum], f: String): Option[UValue] =

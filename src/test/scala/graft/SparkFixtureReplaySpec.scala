@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{SparkSession, functions => F}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** Replays ALL 43 reference fixtures as page rows through the Spark engine
@@ -13,6 +13,7 @@ import scala.jdk.CollectionConverters._
 class SparkFixtureReplaySpec extends AnyFunSuite {
 
   test("spark engine == local pipeline on all reference fixtures") {
+    val testdata = ReferenceDir("testdata")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
@@ -20,7 +21,6 @@ class SparkFixtureReplaySpec extends AnyFunSuite {
       .getOrCreate()
     import spark.implicits._
 
-    val testdata = Paths.get("/root/reference/testdata")
     val dirs = Files.list(testdata).iterator().asScala
       .filter(Files.isDirectory(_)).toList.sortBy(_.getFileName.toString)
 
