@@ -12,6 +12,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Layout under `outDir`:
   *   triples/bucket=N/…parquet     nodes/…  edges/…  lineage/…
   *   _manifest/bucket_N            (one marker file per committed bucket)
+  *   _manifest/buckets             (the bucket count, written by the first run)
   */
 object KgJob {
 
@@ -39,6 +40,25 @@ object KgJob {
       .sorted
   }
 
+  /** Records the bucket count in `_manifest/buckets` on the first run and
+    * rejects a run with another count: the subject hash depends on it, so
+    * the commit markers would name other subjects' buckets.
+    */
+  private def checkBucketCount(f: FileSystem, outDir: String, buckets: Int): Unit = {
+    val p = new Path(manifestDir(outDir), "buckets")
+    if (f.exists(p)) {
+      val in = f.open(p)
+      val recorded =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+        finally in.close()
+      require(recorded == buckets,
+        s"$outDir was written with $recorded buckets; a run with buckets = $buckets cannot resume it")
+    } else {
+      val out = f.create(p, false)
+      try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
   /** Runs (or resumes) the KG construction job. Returns the number of
     * buckets processed in this invocation.
     *
@@ -49,6 +69,18 @@ object KgJob {
     * re-run buckets' directories are replaced — committed buckets are never
     * touched, so a resume never re-emits). Lineage and metrics follow the
     * same per-bucket protocol, so a resumed run cannot duplicate their rows.
+    *
+    * Before the first write, every todo bucket's `bucket=N` directory is
+    * deleted in all five tables: todo buckets are uncommitted by definition,
+    * so a partition a crashed attempt left behind cannot survive even when
+    * this run emits no rows for it in some table.
+    *
+    * `buckets` also sets the sink's write parallelism: the extracted
+    * triples are hash-partitioned by bucket into `buckets` tasks, so each
+    * table writes each bucket from one task as one file (the hash may put
+    * two buckets in one task). Size it at or above the core count.
+    * The count is recorded in `_manifest/` on the first run; resuming with
+    * a different count fails rather than mixing two subject hashes.
     *
     * Durability granularity is the INVOCATION: commit markers land after the
     * invocation's writes finish, so a mid-run crash redoes this invocation's
@@ -68,6 +100,7 @@ object KgJob {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(outDir, conf)
     f.mkdirs(manifestDir(outDir))
+    checkBucketCount(f, outDir, buckets)
     val done = committedBuckets(outDir, conf).toSet
     val todo = (0 until buckets).filterNot(done).take(maxBucketsPerRun)
     if (todo.isEmpty) return 0
@@ -76,6 +109,10 @@ object KgJob {
       if (todo.size == buckets) pages
       else KgEngine.resumeFilter(pages, ((0 until buckets).toSet -- todo).toSeq, buckets)
 
+    // todo buckets are uncommitted: clear what a crashed attempt left of them
+    for (table <- Seq("triples", "edges", "nodes", "lineage", "metrics"); b <- todo)
+      f.delete(new Path(s"$outDir/$table/bucket=$b"), true)
+
     def write(df: DataFrame, table: String): Unit =
       df.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -83,9 +120,12 @@ object KgJob {
         .parquet(s"$outDir/$table")
 
     // triples: the heavy pass — extracted once (with the per-subject error
-    // channel riding as marker rows), bucketed by subject hash
+    // channel riding as marker rows), bucketed by subject hash and clustered
+    // by bucket, so every table writes one file per bucket and the per-bucket
+    // aggregates below need no further exchange
     val all = KgEngine.extractCanonicalWithStats(spark, remaining, iterationLimit).toDF()
       .withColumn("bucket", KgEngine.bucketOf(F.col("subj"), buckets))
+      .repartition(buckets, F.col("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val canon = all.where(F.col("pred") =!= KgEngine.StatsPred)
     try {
@@ -125,26 +165,6 @@ object KgJob {
           F.countDistinct("subj").as("n_subjects"),
           F.max("certainty").as("max_certainty"))
       write(met, "metrics")
-
-      // dynamic partition overwrite only replaces partitions PRESENT in this
-      // run's output: a todo bucket that produced zero rows for some table
-      // this time would silently keep that table's stale partition files
-      // from a crashed earlier attempt whose input differed. Delete the
-      // absent todo partitions explicitly before committing. Presence is
-      // per table family: edges/nodes can be empty for a bucket whose
-      // triples aren't (no URL-typed preds); all three derive from the
-      // cached canon, so these are cheap re-aggregations, not input scans.
-      def bucketsOf(df: DataFrame): Set[Int] =
-        df.select("bucket").distinct().collect().map(_.getInt(0)).toSet
-      val stale: Seq[(String, Set[Int])] = {
-        val canonPresent = bucketsOf(canon)
-        val ePresent = bucketsOf(e)
-        Seq("triples" -> canonPresent, "metrics" -> canonPresent,
-          "edges" -> ePresent, "nodes" -> ePresent,
-          "lineage" -> bucketsOf(lin))
-      }
-      for ((table, present) <- stale; b <- todo.filterNot(present))
-        f.delete(new Path(s"$outDir/$table/bucket=$b"), true)
     } finally all.unpersist()
 
     // commit markers: a bucket is durable once all five tables landed

@@ -21,6 +21,24 @@ class KgJobSpec extends AnyFunSuite {
     d.toString
   }
 
+  private val Tables = Seq("triples", "edges", "nodes", "lineage", "metrics")
+
+  /** Page rows (url, text) in the crawl schema, captured at SynthPages.FixedTs. */
+  private def pagesOf(rows: (String, String)*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.{functions => F}
+    import spark.implicits._
+    rows.toDF("url", "text")
+      .withColumn("warc_ts", F.to_timestamp(F.lit(SynthPages.FixedTs)))
+      .withColumn("html", F.col("text").cast("binary"))
+      .withColumn("lang", F.lit("en"))
+      .select("url", "warc_ts", "html", "text", "lang")
+  }
+
+  /** n package.json projects, each with a name and a homepage (one edge). */
+  private def projects(n: Int): org.apache.spark.sql.DataFrame = pagesOf((0 until n).map(i =>
+    (s"https://replay.invalid/p$i/package.json",
+      s"""{"name": "p$i", "homepage": "https://p$i.example.com/"}""")): _*)
+
   test("KgJob resumes from the bucket manifest without re-emitting") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 100")
     val pages = SynthPages.fromDocuments(docs)
@@ -66,16 +84,10 @@ class KgJobSpec extends AnyFunSuite {
     val base = SynthPages.fromDocuments(docs)
     // give doc 7 a meson.build (provider error offline) and a known-bad
     // .git/config upstream remote (dropped pre-merge)
-    import spark.implicits._
-    val extra = Seq(
+    val extra = pagesOf(
       ("https://replay.invalid/proj7/meson.build", "project('x', 'c')\n"),
       ("https://replay.invalid/proj7/.git/config",
        "[remote \"upstream\"]\n\turl = https://anongit.kde.org/proj7.git\n"))
-      .toDF("url", "text")
-      .withColumn("warc_ts", F.to_timestamp(F.lit(SynthPages.FixedTs)))
-      .withColumn("html", F.col("text").cast("binary"))
-      .withColumn("lang", F.lit("en"))
-      .select("url", "warc_ts", "html", "text", "lang")
     val out = freshDir("kgjob_errs")
     KgJob.run(spark, base.unionByName(extra), out, buckets = 4)
     val lin = spark.read.parquet(s"$out/lineage")
@@ -90,20 +102,14 @@ class KgJobSpec extends AnyFunSuite {
 
   test("extrapolation limit overruns surface on the lineage error channel") {
     import org.apache.spark.sql.{functions => F}
-    import spark.implicits._
     // a subject whose extrapolation chain (Homepage → Repository →
     // Repository-Browse) needs a confirming second sweep: converges under
     // the default limit, exceeds iterationLimit = 1 — the synthetic
     // non-convergent vector for ProviderError::ExtrapolationLimitExceeded
     // (extrapolate.rs:524-528)
-    val pages = Seq(
+    val pages = pagesOf(
       ("https://replay.invalid/cyclic/package.json",
        """{"name": "cyclic", "homepage": "https://github.com/o/cyclic"}"""))
-      .toDF("url", "text")
-      .withColumn("warc_ts", F.to_timestamp(F.lit(SynthPages.FixedTs)))
-      .withColumn("html", F.col("text").cast("binary"))
-      .withColumn("lang", F.lit("en"))
-      .select("url", "warc_ts", "html", "text", "lang")
     val clean = freshDir("kgjob_xlim_ok")
     KgJob.run(spark, pages, clean, buckets = 2)
     assert(spark.read.parquet(s"$clean/lineage")
@@ -147,13 +153,74 @@ class KgJobSpec extends AnyFunSuite {
     assert(KgJob.committedBuckets(out).size == 8)
     // dynamic overwrite alone would have kept the crashed attempt's files;
     // the explicit cleanup must have removed every table's stale partition
-    for (table <- Seq("triples", "edges", "nodes", "lineage", "metrics"))
+    for (table <- Tables)
       assert(!new java.io.File(s"$out/$table/bucket=$b").exists(),
         s"stale $table partition for bucket=$b survived")
     // and the remaining data is intact (no other bucket was touched)
     val remaining = spark.read.parquet(s"$out/triples")
       .select("bucket").distinct().collect().map(_.getInt(0)).toSet
     assert(!remaining.contains(b) && remaining.nonEmpty)
+  }
+
+  test("every table writes exactly one file per bucket") {
+    val out = freshDir("kgjob_files")
+    KgJob.run(spark, projects(200), out, buckets = 8)
+    for (table <- Tables) {
+      val parts = new java.io.File(s"$out/$table").listFiles().filter(_.getName.startsWith("bucket="))
+      assert(parts.nonEmpty, s"$table has no bucket partitions")
+      for (p <- parts) {
+        val files = p.listFiles().map(_.getName)
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        assert(files.length == 1, s"$table/${p.getName} holds ${files.length} data files")
+      }
+    }
+    assert(new java.io.File(s"$out/triples").listFiles().count(_.getName.startsWith("bucket=")) == 8)
+  }
+
+  test("a re-run bucket with triples but no edges drops its stale edges and nodes") {
+    import org.apache.spark.sql.{functions => F}
+    import graft.spark.KgEngine
+    import spark.implicits._
+    val pages = projects(64)
+    // a subject with a name and a version but no URL-typed field: triples,
+    // no edges
+    val plain = pagesOf(("https://replay.invalid/plain/package.json",
+      """{"name": "plain", "version": "1.0.0"}"""))
+    val b = plain.select(KgEngine.bucketOf(KgEngine.subjCol(F.col("url")), 8)).first.getInt(0)
+    val out = freshDir("kgjob_stale_edges")
+    // the "crashed" attempt: bucket b holds edges and nodes of the
+    // projects that hash there
+    KgJob.run(spark, pages.unionByName(plain), out, buckets = 8)
+    for (table <- Seq("edges", "nodes"))
+      assert(new java.io.File(s"$out/$table/bucket=$b").exists(), s"no $table/bucket=$b to plant")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out, "_manifest", s"bucket_$b"))
+
+    // the rerun's bucket b holds only the plain subject
+    KgJob.run(spark, KgEngine.resumeFilter(pages, Seq(b), 8).unionByName(plain), out, buckets = 8)
+    assert(KgJob.committedBuckets(out).size == 8)
+    for (table <- Seq("edges", "nodes"))
+      assert(!new java.io.File(s"$out/$table/bucket=$b").exists(),
+        s"stale $table partition for bucket=$b survived")
+    val triples = spark.read.parquet(s"$out/triples").where(F.col("bucket") === b)
+    assert(triples.select("subj").distinct().as[String].collect().toSeq ==
+      Seq("https://replay.invalid/plain/"))
+    val n = triples.count()
+    assert(n > 0)
+    val met = spark.read.parquet(s"$out/metrics").where(F.col("bucket") === b).collect()
+    assert(met.length == 1)
+    assert(met.head.getAs[Long]("n_triples") == n && met.head.getAs[Long]("n_subjects") == 1L)
+  }
+
+  test("a resume with a different bucket count is rejected") {
+    val pages = projects(16)
+    for ((first, second) <- Seq(8 -> 4, 4 -> 8)) {
+      val out = freshDir(s"kgjob_buckets_$first")
+      KgJob.run(spark, pages, out, buckets = first)
+      val e = intercept[IllegalArgumentException](KgJob.run(spark, pages, out, buckets = second))
+      assert(e.getMessage.contains(s"written with $first buckets") &&
+        e.getMessage.contains(s"buckets = $second"), e.getMessage)
+      assert(KgJob.committedBuckets(out) == (0 until first))
+    }
   }
 
   test("streaming variant produces the same triples as batch") {
