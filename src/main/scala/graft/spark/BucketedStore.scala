@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Subject-bucketed publication of the canonical triple table — the storage
@@ -69,4 +70,15 @@ object BucketedStore {
     * as long as `spark.sql.sources.bucketing.enabled` stays at its default.
     */
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
+
+  /** The same rows as a plain parquet scan of the table's directory, for a
+    * consumer that reshuffles them anyway: Spark keeps a bucketed scan (one
+    * task per bucket) below a union even when nothing above uses its
+    * partitioning.
+    */
+  def readUnbucketed(spark: SparkSession, table: String): DataFrame = {
+    val t = read(spark, table)
+    val dirs = t.inputFiles.map(f => new Path(f).getParent.toString).distinct
+    spark.read.schema(t.schema).parquet(dirs.toIndexedSeq: _*)
+  }
 }

@@ -1,8 +1,9 @@
 package graft.spark
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
 
-import graft.pipeline.Summarize
 import Model.CanonTriple
 
 /** Incremental KG maintenance — the delta-crawl path a 100 TB deployment
@@ -26,12 +27,15 @@ import Model.CanonTriple
   *     it replaced the content, not just the ts of its key's winner.
   *
   * A batch APPENDS the capture rows that replaced a current winner and the
-  * re-extracted triples of its content-changed subjects — O(churn), the base
-  * tables are only scanned. The current graph is a VIEW (`currentTriples`):
-  * base rows whose subject never appears in the log plus each logged
-  * subject's latest batch. `compact` folds the logs back into fresh bucketed
-  * base tables at the caller's cadence, amortizing the O(store) rewrite
-  * over many batches.
+  * re-extracted triples of its content-changed subjects, both from one
+  * pass grouped by subject (`appendDelta`). The pass shuffles the batch's
+  * candidate pages and only the stored captures of the batch's subjects
+  * (a full recrawl shuffles the capture table once), and re-extracts only
+  * changed subjects; the base tables are read, never rewritten. The
+  * current graph is a VIEW (`currentTriples`): base rows whose subject
+  * never appears in the log plus each logged subject's latest batch.
+  * `compact` folds the logs back into fresh bucketed base tables at the
+  * caller's cadence, amortizing the O(store) rewrite over many batches.
   *
   * The view is provably the full rebuild: current winners == the winners of
   * (all pages ever seen), extraction is per-subject pure, and untouched
@@ -75,9 +79,8 @@ object Incremental {
       .as[(String, String, String)]
       .groupByKey(_._1)
       .flatMapGroups { (subj, it) =>
-        val files = it.map { case (_, relpath, text) => relpath -> text }.toMap
-        val (metadata, _) = Summarize.summarize(files, KgEngine.subjBasename(subj))
-        metadata.iterator.map(KgEngine.datumToTriple(subj))
+        KgEngine.summarizeSubject(subj,
+          it.map { case (_, relpath, text) => relpath -> text }.toMap)
       }
   }
 
@@ -169,77 +172,117 @@ object Incremental {
       .unionByName(latest)
   }
 
-  /** Append one delta batch to the logs — per-batch cost O(churn):
-    *   1. delta winners look up their current stored winner with TWO
-    *      delta-anchored joins (base captures: bucketed scan, no store-side
-    *      exchange; capture log: broadcast) — never the unioned view, whose
-    *      union would break the store's partitioning;
-    *   2. rows ordering above the current winner under (ts, md5) append to
-    *      the capture log (content changes flagged, ts refreshes logged
-    *      unflagged — future merges must see them);
-    *   3. content-changed subjects re-extract from their CURRENT merged
-    *      capture set (base semi-join + log semi-join + this batch's rows,
-    *      per-key argmax) and append to the triple log, with a tombstone row
-    *      per changed subject so an extraction that yields nothing still
-    *      shadows the subject's base rows.
+  /** Append one delta batch to the logs in ONE subject-grouped pass. The
+    * pass groups by subject the batch's candidate captures together with
+    * the STORED captures of the batch's subjects only: base and earlier
+    * log batches, each behind a broadcast left-semi join on the batch's
+    * subject set (a full recrawl therefore shuffles the capture table
+    * once). Per (subj, relpath):
+    *   - the current winner is the max (ts, md5) of the stored rows (logged
+    *     rows are monotone, so this is base ⊕ log), the batch winner the max
+    *     (ts, md5) of the incoming ones (`captureWinners`' rule);
+    *   - a batch winner that orders above the current winner is a
+    *     capture-log row, flagged `changed` when its md5 differs (ts
+    *     refreshes are logged unflagged — future batches must see them);
+    *   - a subject with any changed row re-extracts from its merged winners
+    *     into the triple log, plus a tombstone row so an extraction that
+    *     yields nothing still shadows the subject's base rows.
     *
-    * Base tables are only scanned. The batch id must exceed all previous
-    * ones (the caller's crawl counter); re-running a failed batch with the
-    * same id overwrites its own directories and nothing else.
+    * Both logs are written from one local checkpoint of the pass (taken
+    * after AQE coalesces its partitions), so an executor loss fails the
+    * batch; re-running it with the same id is lossless. Base tables are
+    * only read, the captures as a plain scan (`readUnbucketed`: the pass
+    * reshuffles them anyway). The batch id must exceed all previous ones
+    * (the caller's crawl counter); a re-run overwrites its own directories
+    * and nothing else.
     */
   def appendDelta(
       spark: SparkSession, deltaPages: DataFrame,
       capturesTable: String, clogPath: String, tlogPath: String,
       batch: Int): Unit = {
     require(batch > 0, "batch 0 is the empty init batch")
-    val baseCaps = BucketedStore.read(spark, capturesTable)
     // STRICTLY earlier batches only: a crashed batch leaves its own
     // directories behind, and a retry that read its own half-written rows
     // would see the delta as already-current, overwrite batch=N as empty,
     // and lose the batch. Filtering to batch < N makes the retry recompute
     // the identical rows no matter what the failed attempt persisted.
     val clog = readLog(spark, clogPath).where(F.col("batch") < batch)
-    replacingRows(baseCaps, clog, captureWinners(spark, deltaPages))
+    val pass = batchPass(spark, deltaPages,
+      BucketedStore.readUnbucketed(spark, capturesTable), clog)
+      .toDF().localCheckpoint(false)
+    pass.where(F.col("capture").isNotNull).select("capture.*")
       .write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
-
-    val clog2 = readLog(spark, clogPath) // now includes this batch
-      .where(F.col("batch") <= batch)    // and never anything later
-    val changedSubjs = clog2
-      .where(F.col("batch") === batch && F.col("changed"))
-      .select("subj").distinct()
-    val changedCaps = currentCaptures(baseCaps, clog2)
-      .join(changedSubjs, Seq("subj"), "left_semi")
-    val triples = extractFromCaptures(changedCaps).toDF()
-    val tombstones = changedSubjs.select(
-      F.col("subj"), F.lit(TombstonePred).as("pred"), F.lit("").as("obj"),
-      F.lit("").as("obj_json"), F.lit(-1).as("certainty"), F.lit("").as("origin"))
-    triples.unionByName(tombstones)
+    pass.where(F.col("triple").isNotNull).select("triple.*")
       .write.mode("overwrite").parquet(s"$tlogPath/batch=$batch")
   }
 
-  /** The delta winners that replace the CURRENT winner of their key — the
-    * batch's capture-log rows. Two delta-anchored lookups, not one against
-    * the unioned view: the base join consumes the bucketed scan directly
-    * (no store-side exchange, plan-asserted) and the log join broadcasts.
+  /** A capture of one of a batch's subjects: an incoming candidate of the
+    * batch, or (`stored`) a winner from the base or an earlier log batch.
     */
-  private[graft] def replacingRows(
-      baseCaps: DataFrame, clog: DataFrame, dw: DataFrame): DataFrame = {
-    val b = baseCaps.select(F.col("subj"), F.col("relpath"),
-      F.col("ts").as("b_ts"), F.col("md5").as("b_md5"))
-    val l = latestLogCaptures(clog).select(F.col("subj"), F.col("relpath"),
-      F.col("ts").as("l_ts"), F.col("md5").as("l_md5"))
-    val cur = dw.join(b, Seq("subj", "relpath"), "left_outer")
-      .join(l, Seq("subj", "relpath"), "left_outer")
-      // the log row, when present, IS the current winner (each logged row
-      // replaced the then-current one, so log entries are monotone)
-      .withColumn("c_ts", F.coalesce(F.col("l_ts"), F.col("b_ts")))
-      .withColumn("c_md5", F.coalesce(F.col("l_md5"), F.col("b_md5")))
-    val replaces = F.col("c_ts").isNull ||
-      F.struct(F.col("ts"), F.col("md5")) > F.struct(F.col("c_ts"), F.col("c_md5"))
-    cur.where(replaces)
-      .select(F.col("subj"), F.col("relpath"), F.col("ts"), F.col("md5"),
-        F.col("text"),
-        (F.col("c_md5").isNull || F.col("md5") =!= F.col("c_md5")).as("changed"))
+  private[graft] final case class BatchCapture(
+      subj: String, relpath: String, ts: Long, md5: String, text: String, stored: Boolean)
+
+  /** A capture-log row: a batch winner that replaced its key's current winner. */
+  private[graft] final case class LoggedCapture(
+      subj: String, relpath: String, ts: Long, md5: String, text: String, changed: Boolean)
+
+  /** One output row of the batch pass: a capture-log row or a triple-log row. */
+  private[graft] final case class BatchRow(
+      capture: Option[LoggedCapture], triple: Option[CanonTriple])
+
+  /** `appendDelta`'s grouped pass, unmaterialized. */
+  private[graft] def batchPass(
+      spark: SparkSession, deltaPages: DataFrame,
+      baseCaps: DataFrame, clog: DataFrame): Dataset[BatchRow] = {
+    import spark.implicits._
+    val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
+    val incoming = KgEngine.candidateRows(spark, deltaPages)
+      .toDF("subj", "relpath", "ts", "text")
+      .withColumn("md5", F.md5(F.col("text")))
+    // no distinct: a semi-join only probes the key, and an aggregate would
+    // cost its own shuffle and job per batch; the broadcast holds one row
+    // per candidate page instead of one per subject
+    val subjs = F.broadcast(incoming.select("subj"))
+    def stored(caps: DataFrame): DataFrame = caps.select(cols: _*)
+      .join(subjs, Seq("subj"), "left_semi")
+      .withColumn("stored", F.lit(true))
+    incoming.select(cols: _*).withColumn("stored", F.lit(false))
+      .unionByName(stored(baseCaps))
+      .unionByName(stored(clog))
+      .as[BatchCapture]
+      .groupByKey(_.subj)
+      .flatMapGroups(batchRows)
+  }
+
+  /** max (ts, md5) order, the duplicate-capture rule. */
+  private def above(a: BatchCapture, b: BatchCapture): Boolean =
+    a.ts > b.ts || (a.ts == b.ts && a.md5 > b.md5)
+
+  /** One subject's capture-log rows and, if any of them changed content,
+    * its re-extracted triples plus a tombstone.
+    */
+  private def batchRows(subj: String, caps: Iterator[BatchCapture]): Iterator[BatchRow] = {
+    val current = mutable.HashMap[String, BatchCapture]()
+    val incoming = mutable.HashMap[String, BatchCapture]()
+    caps.foreach { c =>
+      val best = if (c.stored) current else incoming
+      if (best.get(c.relpath).forall(above(c, _))) best(c.relpath) = c
+    }
+    val logged = incoming.values.toList.flatMap { w =>
+      val cur = current.get(w.relpath)
+      if (cur.forall(above(w, _)))
+        Some(LoggedCapture(subj, w.relpath, w.ts, w.md5, w.text, cur.forall(_.md5 != w.md5)))
+      else None
+    }
+    val rows = logged.iterator.map(c => BatchRow(Some(c), None))
+    if (!logged.exists(_.changed)) rows
+    else {
+      val files = current.map { case (r, c) => r -> c.text } ++
+        logged.map(c => c.relpath -> c.text)
+      val tombstone = CanonTriple(subj, TombstonePred, "", "", -1, "")
+      rows ++ (KgEngine.summarizeSubject(subj, files) ++ Iterator.single(tombstone))
+        .map(t => BatchRow(None, Some(t)))
+    }
   }
 
   /** Per-batch maintenance lineage from the logs alone (no base scan):

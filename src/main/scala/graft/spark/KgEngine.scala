@@ -166,20 +166,23 @@ object KgEngine {
     best.map { case (relpath, b) => (relpath, b.text) }
   }
 
+  /** One subject's canonical triples from its winning files (relpath →
+    * text): the per-subject emit every grouped canonical extraction shares
+    * (`extractCanonical`, `Incremental.extractFromCaptures`, the
+    * `Incremental.appendDelta` batch pass).
+    */
+  private[spark] def summarizeSubject(
+      subj: String, files: scala.collection.Map[String, String]): Iterator[CanonTriple] = {
+    val (metadata, _) = Summarize.summarize(files, subjBasename(subj))
+    metadata.iterator.map(datumToTriple(subj))
+  }
+
   /** pages → canonical triples: the flagship KG construction job. */
   def extractCanonical(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
     candidateRows(spark, pages)
       .groupByKey(_._1)
-      .flatMapGroups { (subj, it) =>
-        val files = dedupCaptures(it)
-        val (metadata, _) = Summarize.summarize(files, subjBasename(subj))
-        metadata.iterator.map { dt =>
-          val (obj, objJson) = objForms(dt.value)
-          CanonTriple(subj, dt.field, obj, objJson,
-            dt.certainty.getOrElse(-1), dt.origin.getOrElse(""))
-        }
-      }
+      .flatMapGroups((subj, it) => summarizeSubject(subj, dedupCaptures(it)))
   }
 
   /** Marker predicate for per-subject extraction-stats rows (same

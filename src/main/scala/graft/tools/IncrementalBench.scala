@@ -10,8 +10,9 @@ import graft.spark.{Incremental, SynthPages}
   *                       entire new crawl and publish a fresh store pair
   *                       (Incremental.initStore over the full recrawl);
   *   log_full_recrawl  — append the SAME full recrawl to the existing
-  *                       store's logs (appendDelta): every page is looked
-  *                       up once, but only changed subjects re-extract;
+  *                       store's logs (appendDelta): every page and the
+  *                       whole capture table shuffle once into the batch
+  *                       pass, but only changed subjects re-extract;
   *   log_changed_only  — append the pre-filtered delta (just the changed
   *                       pages), the shape a diffing crawler hands the
   *                       pipeline.
@@ -19,10 +20,11 @@ import graft.spark.{Incremental, SynthPages}
   * Corpus = SPARK_GRAFT_SCALE × the sf documents table through SynthPages
   * (same family as ScalingBench); churn = subjects with
   * doc_id % SPARK_GRAFT_CHURN_MOD == 0 (default 100 → 1%). Buckets default
-  * to 256 = the session's shuffle partitioning — below that the bucketed
-  * anchoring turns off and every log leg silently pays a full store
-  * shuffle (see BucketedStore). Emits one JSON line; wall numbers need a
-  * quiet window like every bench on this VM.
+  * to 256 = the session's shuffle partitioning, the layout subj-keyed
+  * store consumers need (see BucketedStore); the log legs read the base
+  * captures as a plain scan, so for them the count only sets the store's
+  * file count. Emits one JSON line; wall numbers need a quiet window like
+  * every bench on this VM.
   */
 object IncrementalBench {
   def main(args: Array[String]): Unit = {
@@ -73,11 +75,7 @@ object IncrementalBench {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
 
-    // existing store (untimed setup for the log legs). Buckets must be ≥
-    // spark.sql.shuffle.partitions or EnsureRequirements prefers the larger
-    // partitioning and reshuffles BOTH join sides — the bucketed anchoring
-    // silently turns off (DisableUnnecessaryBucketedScan) and the append
-    // pays a full store shuffle it exists to avoid.
+    // existing store (untimed setup for the log legs)
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "256").toInt
     Incremental.initStore(spark, baseCrawl, "ib_caps", "ib_tri", s"$base/store",
       buckets)
@@ -92,8 +90,8 @@ object IncrementalBench {
     val tFull = time(Incremental.initStore(
       spark, fullRecrawl, "ib_full_caps", "ib_full_tri", s"$base/full", buckets))
 
-    // per-batch cost O(churn): base tables are scanned by the lookup join,
-    // never rewritten
+    // one grouped pass per batch: it shuffles the batch's pages and only the
+    // stored captures of the batch's subjects; base tables are never rewritten
     Incremental.initLogs(spark, s"$base/clog", s"$base/tlog")
     val tLogFull = time(Incremental.appendDelta(spark, fullRecrawl, "ib_caps",
       s"$base/clog", s"$base/tlog", batch = 1))

@@ -2,14 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.spark.{BucketedStore, Incremental, KgEngine, SynthPages}
 
 /** Incremental KG maintenance: append a delta crawl to the merge-on-read
   * logs over the subj-bucketed capture/triple store, re-extracting ONLY
   * subjects whose winning captures changed — the base ⊕ log view provably
-  * equals the full rebuild, and the base tables are never reshuffled.
+  * equals the full rebuild, and the base tables are never rewritten (a
+  * batch shuffles only its own subjects' stored captures).
   */
 class IncrementalSpec extends AnyFunSuite {
 
@@ -150,6 +154,31 @@ class IncrementalSpec extends AnyFunSuite {
         Incremental.readLog(spark, s"$root/tlog")),
       BucketedStore.read(spark, "inc_tri3"),
       "all-stale delta → the view is the base triples")
+  }
+
+  test("log mode: equal-ts duplicate captures in one batch log the larger-md5 row") {
+    val root = "/tmp/graft_inc_spec/dup"
+    Incremental.initStore(spark, basePages, "dup_caps", "dup_tri", root, buckets = 8)
+    Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
+    // every page of half the subjects recrawled twice at the SAME newer ts
+    // with different text: only the (ts, md5) tie-break picks the winner
+    def variant(tag: String): DataFrame = live.where(docMod(2) === 0)
+      .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAYS"))
+      .withColumn("text", F.concat(F.col("text"), F.lit(s"\nrecrawl $tag")))
+    val batch = variant("A").unionByName(variant("B"))
+    Incremental.appendDelta(spark, batch, "dup_caps",
+      s"$root/clog", s"$root/tlog", batch = 1)
+    val cols = Seq("subj", "relpath", "ts", "md5").map(F.col)
+    val logged = Incremental.readLog(spark, s"$root/clog")
+      .where(F.col("batch") === 1).select(cols: _*)
+    val winners = Incremental.captureWinners(spark, batch).select(cols: _*)
+    assert(logged.count() == winners.count() && logged.except(winners).isEmpty,
+      "the capture log must hold each key's max (ts, md5) row")
+    assertSame(
+      Incremental.currentTriples(BucketedStore.read(spark, "dup_tri"),
+        Incremental.readLog(spark, s"$root/tlog")),
+      KgEngine.extractCanonical(spark, basePages.unionByName(batch)).toDF(),
+      "the view must equal the full rebuild over base ∪ batch")
   }
 
   test("log mode: two appended batches ⊕ base == full rebuild (incl. a re-changed subject)") {
@@ -327,22 +356,17 @@ class IncrementalSpec extends AnyFunSuite {
       "tombstones never surface in the view")
   }
 
-  /** No exchange above the base scan; with `anchored`, the base side IS
-    * the bucketed scan (the join really consumes its partitioning).
-    */
-  private def assertBaseNotShuffled(df: org.apache.spark.sql.DataFrame,
-                                    path: String, what: String,
-                                    anchored: Boolean = false): Unit = {
+  private def baseScans(p: SparkPlan, path: String): Seq[FileSourceScanExec] = p.collect {
+    case s: FileSourceScanExec
+      if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s
+  }
+
+  /** No exchange above the base scan. */
+  private def assertBaseNotShuffled(df: DataFrame, path: String, what: String): Unit = {
     val plan = df.queryExecution.executedPlan
-    def baseScans(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
-      case s: FileSourceScanExec
-        if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s
-    }
-    val underShuffle = plan.collect { case e: ShuffleExchangeExec => e }.flatMap(baseScans)
+    val underShuffle = plan.collect { case e: ShuffleExchangeExec => e }
+      .flatMap(baseScans(_, path))
     assert(underShuffle.isEmpty, s"$what must not shuffle the base side:\n$plan")
-    if (anchored)
-      assert(baseScans(plan).nonEmpty && baseScans(plan).forall(_.bucketedScan),
-        s"$what must read the base side as the bucketed scan:\n$plan")
   }
 
   test("log mode: base tables are scanned, never shuffled") {
@@ -352,15 +376,29 @@ class IncrementalSpec extends AnyFunSuite {
     Incremental.appendDelta(spark, deltaPages, "lg2_caps",
       s"$root/clog", s"$root/tlog", batch = 1)
 
-    // the batch's replacing-rows lookup: with broadcast off the join is
-    // forced to sort-merge — the bucketed base scan must anchor it
+    // the batch pass scans the base captures once and shuffles only the
+    // batch's subjects' rows of it: every exchange above the scan sits above
+    // a broadcast left-semi join on subj (the hint holds with broadcast off)
     withStablePlans {
-      assertBaseNotShuffled(
-        Incremental.replacingRows(
-          BucketedStore.read(spark, "lg2_caps"),
-          Incremental.readLog(spark, s"$root/clog"),
-          Incremental.captureWinners(spark, deltaPages)),
-        "log2/captures", "replacingRows", anchored = true)
+      val plan = Incremental.batchPass(spark, deltaPages,
+        BucketedStore.readUnbucketed(spark, "lg2_caps"),
+        Incremental.readLog(spark, s"$root/clog").where(F.col("batch") < 2))
+        .queryExecution.executedPlan
+      assert(baseScans(plan, "log2/captures").size == 1,
+        s"the batch pass must scan the base captures once:\n$plan")
+      def semiJoinedScans(p: SparkPlan) = p.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftSemi &&
+          j.leftKeys.collect { case a: AttributeReference => a.name } == Seq("subj") =>
+          baseScans(j.left, "log2/captures")
+      }.flatten
+      val shuffled = plan.collect { case e: ShuffleExchangeExec => e }
+        .filter(baseScans(_, "log2/captures").nonEmpty)
+      assert(shuffled.nonEmpty, s"the batch pass groups by subject:\n$plan")
+      shuffled.foreach { e =>
+        assert(semiJoinedScans(e).size == baseScans(e, "log2/captures").size,
+          s"the base captures must reach every exchange through the subject " +
+          s"semi-join:\n$e")
+      }
     }
     // the read views anti-join the SMALL log key sets — those broadcast
     // (default threshold), leaving the base scan exchange-free
