@@ -10,9 +10,9 @@ import scala.collection.mutable.ArrayBuffer
   * (trust=true, net=false, external=false, check=false).
   *
   * A subject is a project: a bag of (relpath, content) artifacts. This whole
-  * function is pure and runs inside a Dataset groupByKey(subj).mapGroups —
-  * per-key state is ≤39 fields, so the extrapolation fixpoint never crosses
-  * subjects and needs no driver-side loop.
+  * function is pure and runs as the emit of `KgEngine.bySubject`, the one
+  * per-subject pass — per-key state is ≤39 fields, so the extrapolation
+  * fixpoint never crosses subjects and needs no driver-side loop.
   */
 object Summarize {
   import Certainty._
@@ -291,10 +291,20 @@ object Summarize {
       subjectBasename: String,
       envRepositoryUrl: Option[String] = None,
       iterationLimit: Int = DefaultIterationLimit
+  ): (List[Datum], List[String], Long) =
+    run(guessers(files, files.keySet, subjectBasename, envRepositoryUrl, None), iterationLimit)
+
+  /** The per-subject chain behind `summarizeWithStats` and `assemble`: run
+    * the guessers, drop known-bad datums, merge, then extend → extrapolate →
+    * fix → sort. Returns (metadata, errors, droppedBad).
+    */
+  private def run(
+      gs: List[() => Either[String, List[Datum]]],
+      iterationLimit: Int
   ): (List[Datum], List[String], Long) = {
     val errors = List.newBuilder[String]
     val raw = ArrayBuffer.empty[Datum]
-    for (g <- guessers(files, files.keySet, subjectBasename, envRepositoryUrl, None)) {
+    for (g <- gs) {
       g() match {
         case Right(ds) => raw ++= ds
         case Left(e)   => errors += e
@@ -323,22 +333,15 @@ object Summarize {
       files: scala.collection.Map[String, String],
       subjectBasename: String,
       envRepositoryUrl: Option[String] = None
-  ): List[Datum] = {
-    val raw = ArrayBuffer.empty[Datum]
-    for (g <- guessers(files, files.keySet, subjectBasename, envRepositoryUrl, None)) {
-      g() match {
-        case Right(ds) => raw ++= ds
-        case Left(_)   =>
-      }
-    }
-    raw.toList
-  }
+  ): List[Datum] =
+    guessers(files, files.keySet, subjectBasename, envRepositoryUrl, None)
+      .flatMap(g => g().getOrElse(Nil))
 
   /** Per-subject assembly from PRE-EXTRACTED datums (the Spark two-phase
     * path): `pre` maps (relpath, guesserId) → datums produced in the narrow
     * per-row stage; `deferredFiles` carries raw content only for debian
     * artifacts. Semantically identical to `summarize` (tested on every
-    * fixture).
+    * fixture); this path drops the errors too.
     */
   def assemble(
       deferredFiles: Map[String, String],
@@ -347,21 +350,9 @@ object Summarize {
       subjectBasename: String,
       envRepositoryUrl: Option[String] = None
   ): List[Datum] = {
-    val raw = ArrayBuffer.empty[Datum]
     val lookup = (relpath: String, id: String) => pre.getOrElse((relpath, id), Nil)
-    for (g <- guessers(deferredFiles, relpathUniverse, subjectBasename,
-                       envRepositoryUrl, Some(lookup))) {
-      g() match {
-        case Right(ds) => raw ++= ds
-        case Left(_)   =>
-      }
-    }
-    val metadata = ArrayBuffer.empty[Datum]
-    Merge.updateFromGuesses(metadata, raw.iterator.filterNot(KnownBad.isBad))
-    extendSfArchive(metadata)
-    extrapolate(metadata): Unit // this path drops guesser errors too
-    fixMetadata(metadata)
-    metadata.sortBy(_.field).toList
+    run(guessers(deferredFiles, relpathUniverse, subjectBasename,
+      envRepositoryUrl, Some(lookup)), DefaultIterationLimit)._1
   }
 
   /** The offline head of `extend_upstream_metadata`

@@ -51,11 +51,8 @@ object Incremental {
     * map-side, and partial aggregation collapses recrawl floods before the
     * exchange.
     */
-  def captureWinners(spark: SparkSession, pages: DataFrame): DataFrame = {
-    import spark.implicits._
-    KgEngine.candidateRows(spark, pages)
-      .toDF("subj", "relpath", "ts", "text")
-      .withColumn("md5", F.md5(F.col("text")))
+  def captureWinners(spark: SparkSession, pages: DataFrame): DataFrame =
+    candidateCaptures(spark, pages)
       .groupBy("subj", "relpath")
       .agg(F.max_by(
         F.struct(F.col("ts"), F.col("md5"), F.col("text")),
@@ -64,24 +61,26 @@ object Incremental {
         F.col("subj"), F.col("relpath"),
         F.col("w.ts").as("ts"), F.col("w.md5").as("md5"),
         F.col("w.text").as("text"))
+
+  /** A page batch's candidate captures as (subj, relpath, ts, text, md5). */
+  private def candidateCaptures(spark: SparkSession, pages: DataFrame): DataFrame = {
+    import spark.implicits._
+    KgEngine.candidateRows(spark, pages)
+      .toDF("subj", "relpath", "ts", "text")
+      .withColumn("md5", F.md5(F.col("text")))
   }
 
   /** Canonical triples from a winners table — `KgEngine.extractCanonical`
     * with the duplicate-capture pick already done (winners hold exactly one
-    * row per (subj, relpath), so the group pass is a straight fill).
+    * row per (subj, relpath), so the kernel's pick is a straight fill).
     * Identical output to extractCanonical over the originating pages
     * (asserted on every golden fixture corpus in IncrementalSpec).
     */
   def extractFromCaptures(captures: DataFrame): Dataset[CanonTriple] = {
     val spark = captures.sparkSession
     import spark.implicits._
-    captures.select("subj", "relpath", "text")
-      .as[(String, String, String)]
-      .groupByKey(_._1)
-      .flatMapGroups { (subj, it) =>
-        KgEngine.summarizeSubject(subj,
-          it.map { case (_, relpath, text) => relpath -> text }.toMap)
-      }
+    KgEngine.bySubject(captures.select("subj", "relpath", "ts", "text")
+      .as[(String, String, Long, String)])(KgEngine.summarizeSubject)
   }
 
   /** Initialize the store pair from a first crawl batch and publish both
@@ -236,9 +235,7 @@ object Incremental {
       baseCaps: DataFrame, clog: DataFrame): Dataset[BatchRow] = {
     import spark.implicits._
     val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
-    val incoming = KgEngine.candidateRows(spark, deltaPages)
-      .toDF("subj", "relpath", "ts", "text")
-      .withColumn("md5", F.md5(F.col("text")))
+    val incoming = candidateCaptures(spark, deltaPages)
     // no distinct: a semi-join only probes the key, and an aggregate would
     // cost its own shuffle and job per batch; the broadcast holds one row
     // per candidate page instead of one per subject

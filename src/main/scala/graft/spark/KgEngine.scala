@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession, functions => F}
 import graft.core._
 import graft.pipeline.Summarize
 import Model._
@@ -15,7 +15,7 @@ import Model._
   *  └─ project (subj, relpath, text)                -- column pruning: html
   *                                                      and non-candidate text
   *                                                      never shuffle
-  *  └─ groupByKey(subj) . flatMapGroups(summarize)  -- SHUFFLE #1 (small):
+  *  └─ bySubject: groupByKey(subj) . emit           -- SHUFFLE #1 (small):
   *        extract → certainty merge → extrapolation  -- fixpoint is per-key
   *        fixpoint → URL fixes                       -- local state, no driver
   *                                                      loop, no re-shuffles
@@ -122,14 +122,6 @@ object KgEngine {
       }
   }
 
-  /** Deterministic duplicate-capture pick: a real crawl recrawls pages, so
-    * one batch can hold several captures of the same (subj, relpath). The
-    * winner per relpath is the capture with max (warc_ts, md5(content)) — the
-    * newest capture, content-hash tie-broken — independent of shuffle
-    * iteration order. The reference never faces this (it reads a checkout),
-    * so the rule is this engine's own, applied identically in every variant.
-    * The hash is only computed on an actual timestamp collision.
-    */
   /** Mutable per-relpath best capture. A small class (not a tuple) so the
     * timestamp stays an unboxed primitive field and the winner updates in
     * place — the boxed (Long, String)-valued map variant measured ~12%
@@ -143,6 +135,14 @@ object KgEngine {
     }
   }
 
+  /** Deterministic duplicate-capture pick: a real crawl recrawls pages, so
+    * one batch can hold several captures of the same (subj, relpath). The
+    * winner per relpath is the capture with max (warc_ts, md5(content)) — the
+    * newest capture, content-hash tie-broken — independent of shuffle
+    * iteration order. The reference never faces this (it reads a checkout),
+    * so the rule is this engine's own, applied identically in every variant.
+    * The hash is only computed on an actual timestamp collision.
+    */
   private def dedupCaptures(it: Iterator[(String, String, Long, String)])
       : scala.collection.Map[String, String] = {
     // ONE incremental fold, never materializing the capture stream: task
@@ -166,10 +166,21 @@ object KgEngine {
     best.map { case (relpath, b) => (relpath, b.text) }
   }
 
+  /** The per-subject extraction kernel: ONE groupByKey(subj) pass over
+    * candidate captures (subj, relpath, warc_ts_millis, text), the
+    * duplicate-capture pick, then `emit(subj, winning files)`. Every grouped
+    * extraction is this pass with its own emit: `extractCanonical`,
+    * `extractCanonicalWithStats`, `extractAndRender`, `extractRaw` and
+    * `Incremental.extractFromCaptures`.
+    */
+  private[spark] def bySubject[T: Encoder](caps: Dataset[(String, String, Long, String)])(
+      emit: (String, scala.collection.Map[String, String]) => Iterator[T]): Dataset[T] =
+    caps.groupByKey(_._1)(Encoders.STRING)
+      .flatMapGroups((subj, it) => emit(subj, dedupCaptures(it)))
+
   /** One subject's canonical triples from its winning files (relpath →
-    * text): the per-subject emit every grouped canonical extraction shares
-    * (`extractCanonical`, `Incremental.extractFromCaptures`, the
-    * `Incremental.appendDelta` batch pass).
+    * text): the emit of the canonical extractions and of the
+    * `Incremental.appendDelta` batch pass.
     */
   private[spark] def summarizeSubject(
       subj: String, files: scala.collection.Map[String, String]): Iterator[CanonTriple] = {
@@ -180,9 +191,7 @@ object KgEngine {
   /** pages → canonical triples: the flagship KG construction job. */
   def extractCanonical(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
-    candidateRows(spark, pages)
-      .groupByKey(_._1)
-      .flatMapGroups((subj, it) => summarizeSubject(subj, dedupCaptures(it)))
+    bySubject(candidateRows(spark, pages))(summarizeSubject)
   }
 
   /** Marker predicate for per-subject extraction-stats rows (same
@@ -208,22 +217,15 @@ object KgEngine {
       spark: SparkSession, pages: DataFrame,
       iterationLimit: Int = Summarize.DefaultIterationLimit): Dataset[CanonTriple] = {
     import spark.implicits._
-    candidateRows(spark, pages)
-      .groupByKey(_._1)
-      .flatMapGroups { (subj, it) =>
-        val files = dedupCaptures(it)
-        val (metadata, errors, droppedBad) =
-          Summarize.summarizeWithStats(files, subjBasename(subj),
-            iterationLimit = iterationLimit)
-        val triples = metadata.iterator.map { dt =>
-          val (obj, objJson) = objForms(dt.value)
-          CanonTriple(subj, dt.field, obj, objJson,
-            dt.certainty.getOrElse(-1), dt.origin.getOrElse(""))
-        }
-        if (errors.isEmpty && droppedBad == 0L) triples
-        else triples ++ Iterator.single(CanonTriple(
-          subj, StatsPred, errors.size.toString, droppedBad.toString, -1, ""))
-      }
+    bySubject(candidateRows(spark, pages)) { (subj, files) =>
+      val (metadata, errors, droppedBad) =
+        Summarize.summarizeWithStats(files, subjBasename(subj),
+          iterationLimit = iterationLimit)
+      val triples = metadata.iterator.map(datumToTriple(subj))
+      if (errors.isEmpty && droppedBad == 0L) triples
+      else triples ++ Iterator.single(CanonTriple(
+        subj, StatsPred, errors.size.toString, droppedBad.toString, -1, ""))
+    }
   }
 
   /** Splits an `extractCanonicalWithStats` stream into the real triples and
@@ -252,13 +254,9 @@ object KgEngine {
       render: List[graft.core.Datum] => String
   ): Dataset[(String, String)] = {
     import spark.implicits._
-    candidateRows(spark, pages)
-      .groupByKey(_._1)
-      .mapGroups { (subj, it) =>
-        val files = dedupCaptures(it)
-        val (metadata, _) = Summarize.summarize(files, subjBasename(subj))
-        (subj, render(metadata))
-      }
+    bySubject(candidateRows(spark, pages)) { (subj, files) =>
+      Iterator.single(subj -> render(Summarize.summarize(files, subjBasename(subj))._1))
+    }
   }
 
   /** Two-phase variant: per-row pre-extraction in the narrow stage, so the
@@ -278,30 +276,21 @@ object KgEngine {
     */
   def extractCanonicalPreExtract(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
-    pages
-      .select(F.col("url"),
-        F.coalesce(F.unix_millis(F.col("warc_ts")), F.lit(Long.MinValue)),
-        F.col("text"))
-      .as[(String, Long, String)]
-      .flatMap { case (url, ts, text) =>
-        if (text == null) Iterator.empty
-        else splitSubject(url) match {
-          case Some((subj, relpath)) if isCandidate(relpath) =>
-            // the duplicate-capture winner must match the grouped variant's
-            // (max warc_ts, md5 tie-break), so the content hash is computed
-            // here — post-shuffle only the extracted datums remain
-            val chash = md5Hex(text)
-            if (relpath.startsWith("debian/"))
-              Iterator.single(ExtractRow(subj, relpath, "x", text, ts, chash))
-            else {
-              val gs = graft.pipeline.Summarize.fileGuessers(relpath)
-              if (gs.isEmpty) Iterator.single(ExtractRow(subj, relpath, "m", "", ts, chash))
-              else gs.iterator.map { case (id, fn) =>
-                val datums = fn(text).getOrElse(Nil)
-                ExtractRow(subj, relpath, s"d:$id", datumsToJson(datums), ts, chash)
-              }
-            }
-          case _ => Iterator.empty
+    candidateRows(spark, pages)
+      .flatMap { case (subj, relpath, ts, text) =>
+        // the duplicate-capture winner must match the grouped variant's
+        // (max warc_ts, md5 tie-break), so the content hash is computed
+        // here — post-shuffle only the extracted datums remain
+        val chash = md5Hex(text)
+        if (relpath.startsWith("debian/"))
+          Iterator.single(ExtractRow(subj, relpath, "x", text, ts, chash))
+        else {
+          val gs = Summarize.fileGuessers(relpath)
+          if (gs.isEmpty) Iterator.single(ExtractRow(subj, relpath, "m", "", ts, chash))
+          else gs.iterator.map { case (id, fn) =>
+            val datums = fn(text).getOrElse(Nil)
+            ExtractRow(subj, relpath, s"d:$id", datumsToJson(datums), ts, chash)
+          }
         }
       }
       .groupByKey(_.subj)
@@ -340,13 +329,8 @@ object KgEngine {
             }
           }
         }
-        val metadata = graft.pipeline.Summarize.assemble(
-          deferred.result(), relpaths.result(), pre.result(), subjBasename(subj))
-        metadata.iterator.map { dt =>
-          val (obj, objJson) = objForms(dt.value)
-          CanonTriple(subj, dt.field, obj, objJson,
-            dt.certainty.getOrElse(-1), dt.origin.getOrElse(""))
-        }
+        Summarize.assemble(deferred.result(), relpaths.result(), pre.result(),
+          subjBasename(subj)).iterator.map(datumToTriple(subj))
       }
   }
 
@@ -356,17 +340,13 @@ object KgEngine {
     */
   def extractRaw(spark: SparkSession, pages: DataFrame): Dataset[RawTriple] = {
     import spark.implicits._
-    candidateRows(spark, pages)
-      .groupByKey(_._1)
-      .flatMapGroups { (subj, it) =>
-        val files = dedupCaptures(it)
-        val raw = Summarize.extractRaw(files, subjBasename(subj))
-        raw.iterator.zipWithIndex.map { case (dt, i) =>
-          val (obj, objJson) = objForms(dt.value)
-          RawTriple(subj, dt.field, obj, objJson,
-            dt.certainty.getOrElse(-1), dt.origin.getOrElse(""), 0, i)
-        }
+    bySubject(candidateRows(spark, pages)) { (subj, files) =>
+      Summarize.extractRaw(files, subjBasename(subj)).iterator.zipWithIndex.map { case (dt, i) =>
+        val (obj, objJson) = objForms(dt.value)
+        RawTriple(subj, dt.field, obj, objJson,
+          dt.certainty.getOrElse(-1), dt.origin.getOrElse(""), 0, i)
       }
+    }
   }
 
   /** The certainty-lattice canonicalization as a pure Catalyst aggregate:

@@ -430,12 +430,12 @@ object TrainingOps {
         (0 until tables).iterator.map(t => (id, t, signature(v, t)))
       }
     val bucketed = sigRows(ds).toDF("vec_id", "table", "sig")
-    // query signatures from the FILTERED vectors (pushed-down vec_id
-    // predicate), not a filter of the corpus signature table: the corpus
-    // pass then has a single consumer and runs once, and at scale the
-    // query side touches nQueries vectors instead of re-bucketing the
-    // corpus (the same shape annIvf already uses)
-    val queries = sigRows(ds.filter(_._1 < nQueries))
+    // query signatures from the FILTERED vectors (a column predicate, so
+    // the scan pushes it down), not a filter of the corpus signature table:
+    // the corpus pass then has a single consumer and runs once, and at
+    // scale the query side reads nQueries vectors instead of re-bucketing
+    // the corpus (the same shape annIvf already uses)
+    val queries = sigRows(ds.where(F.col("vec_id") < nQueries))
       .toDF("query_id", "table", "sig")
     val cand = queries.join(bucketed, Seq("table", "sig"))
       .where(F.col("query_id") =!= F.col("vec_id"))

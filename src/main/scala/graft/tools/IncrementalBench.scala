@@ -44,7 +44,6 @@ object IncrementalBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/tmp"))
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

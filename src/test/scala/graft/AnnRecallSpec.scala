@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
 import graft.spark.TrainingOps
 
 /** Retrieval-QUALITY gate for the bucketed ANN paths: the determinism
@@ -65,6 +66,22 @@ class AnnRecallSpec extends AnyFunSuite {
     assert(trained >= ivf - 1e-9,
       f"k-means training must not LOSE recall: trained=$trained%.3f seed=$ivf%.3f")
     assert(trained >= 0.8, f"annIvf trained recall@10 $trained%.3f below 0.8")
+  }
+
+  test("annLsh pushes the query-side vec_id predicate into the scan") {
+    val dir = java.nio.file.Files.createTempDirectory("annlsh").toString
+    try {
+      clusteredCorpus().write.mode("overwrite").parquet(dir)
+      val plan = TrainingOps.annLsh(spark.read.parquet(dir)).queryExecution.sparkPlan
+      // the two signature passes (corpus and queries) each sit on their own
+      // scan; only the query side's may carry the vec_id bound
+      val sigScans = plan.collect { case m: MapPartitionsExec =>
+        m.collect { case s: FileSourceScanExec => s }
+      }.flatten
+      assert(sigScans.size == 2, plan.treeString)
+      val pushed = sigScans.map(_.metadata.getOrElse("PushedFilters", ""))
+      assert(pushed.count(_.contains("LessThan(vec_id,10)")) == 1, pushed.mkString("; "))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("recall@10 on the near-uniform testdata embeddings (reported, loose floor)") {

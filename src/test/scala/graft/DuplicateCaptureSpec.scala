@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{SparkSession, functions => F}
-import graft.spark.{KgEngine, SynthPages}
+import graft.pipeline.{Sinks, Summarize}
+import graft.spark.{Incremental, KgEngine, SynthPages}
 
 /** Duplicate page captures (recrawls inside one batch) must collapse
   * DETERMINISTICALLY: the newest warc_ts wins per (subj, relpath), ties
@@ -41,13 +42,38 @@ class DuplicateCaptureSpec extends AnyFunSuite {
   }
 
   test("both engine variants agree byte-identically on duplicated input, repeatedly") {
-    val pages = withDuplicates(SynthPages.fromDocuments(docs.where("doc_id < 48")))
-    val runs = (1 to 2).map { _ =>
-      KgEngine.extractCanonical(spark, pages).collect().map(key).toSet
+    val live = SynthPages.fromDocuments(docs.where("doc_id < 48"))
+    // the live captures are the winners: render each subject locally
+    val clean = live.where("text IS NOT NULL").select("url", "text").collect()
+      .flatMap(r => KgEngine.splitSubject(r.getString(0)).map(sr => (sr, r.getString(1))))
+      .filter { case ((_, relpath), _) => KgEngine.isCandidate(relpath) }
+      .groupBy(_._1._1)
+    // the union delivers each stale capture between two live ones; sorting
+    // by warc_ts delivers it first or last, so an emit that keeps the first
+    // or the last capture instead of the newest fails one of the inputs
+    val dup = withDuplicates(live)
+    Seq(dup, dup.orderBy("warc_ts"), dup.orderBy(F.desc("warc_ts"))).foreach { pages =>
+      val runs = (1 to 2).map { _ =>
+        KgEngine.extractCanonical(spark, pages).collect().map(key).toSet
+      }
+      val pre = KgEngine.extractCanonicalPreExtract(spark, pages).collect().map(key).toSet
+      assert(runs(0) == runs(1))
+      assert(pre == runs(0))
+      // every emit of the per-subject kernel sees the same deduplicated files
+      val withStats = KgEngine.splitStats(KgEngine.extractCanonicalWithStats(spark, pages))._1
+        .collect().map(key).toSet
+      assert(withStats == runs(0))
+      val fromCaptures = Incremental.extractFromCaptures(Incremental.captureWinners(spark, pages))
+        .collect().map(key).toSet
+      assert(fromCaptures == runs(0))
+      val rendered = KgEngine.extractAndRender(spark, pages, Sinks.toYaml).collect().toMap
+      assert(rendered.keySet == clean.keySet)
+      clean.foreach { case (subj, rows) =>
+        val files = rows.map { case ((_, relpath), text) => relpath -> text }.toMap
+        assert(rendered(subj) ==
+          Sinks.toYaml(Summarize.summarize(files, KgEngine.subjBasename(subj))._1), subj)
+      }
     }
-    val pre = KgEngine.extractCanonicalPreExtract(spark, pages).collect().map(key).toSet
-    assert(runs(0) == runs(1))
-    assert(pre == runs(0))
   }
 
   test("same-ts different-content captures pick the max-md5 content on every run") {
