@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.spark.{BucketedStore, KgEngine, SynthPages, TrainingOps}
+import graft.spark.{BucketedStore, KgEngine, SparkRuntime, SynthPages, TrainingOps}
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops). EVERY query has DuckDB oracle
@@ -44,20 +44,20 @@ object SparkEntry {
     s.read.schema(schema).parquet(path)
   }
 
-  /** A LIVE extraction materialized once (lazy localCheckpoint, guide
-    * §3.3) for queries that feed it into a multi-consumer operator
-    * (enrichment gates, graph views): the operators' scaladoc contract is a
-    * STORED canon table whose re-reads are pruned scans; composing them
-    * over a live pipeline re-executes the extraction once per consumer.
-    * The subj repartition keeps hashpartitioning(subj) on the checkpointed
-    * partitions so subject-keyed aggregates plan exchange-free.
+  /** A LIVE extraction materialized once for queries that feed it into a
+    * multi-consumer operator (enrichment gates, graph views): the
+    * operators' scaladoc contract is a STORED canon table whose re-reads
+    * are pruned scans; composing them over a live pipeline re-executes the
+    * extraction once per consumer. The subj repartition keeps
+    * hashpartitioning(subj) on the materialized partitions so
+    * subject-keyed aggregates plan exchange-free.
     */
   private def canonOnce(
       s: SparkSession, pages: DataFrame): org.apache.spark.sql.Dataset[graft.spark.Model.CanonTriple] = {
     import s.implicits._
-    KgEngine.extractCanonical(s, pages).toDF()
-      .repartition(F.col("subj"))
-      .localCheckpoint(false).as[graft.spark.Model.CanonTriple]
+    SparkRuntime.materialize(
+      KgEngine.extractCanonical(s, pages).toDF().repartition(F.col("subj")))
+      .as[graft.spark.Model.CanonTriple]
   }
 
   /** Empty side tables with the operator-contract schemas, for queries that
@@ -101,19 +101,11 @@ object SparkEntry {
     import s.implicits._
     // composing enrichAll over a LIVE extraction: the enrichment references
     // canon three times (existing stream, completeness gate, homepage
-    // argmax). The round-6 subj repartition shared only the groupByKey
-    // exchange BELOW the summarize pass — per-consumer column pruning
-    // specialized the repartition exchange itself, so the flatMapGroups
-    // extraction re-executed once per consumer (profiled: three ~equal-CPU
-    // reduce stages under AQE). A lazy localCheckpoint truncates the plan
-    // after the extraction (guide §3.3: materialize a reused intermediate),
-    // so summarize runs exactly once per invocation and every consumer reads
-    // the materialized partitions; the checkpoint is created inside the
-    // timed query and is not shared across invocations. The repartition
-    // before it keeps hashpartitioning(subj) on the checkpointed partitions,
-    // so the gate's subj aggregate still plans exchange-free. In production
-    // (stored canon table) the same role is played by the table itself:
-    // every reference is a pruned scan.
+    // argmax). A subj repartition alone shares nothing — per-consumer
+    // column pruning specializes the exchange, so the extraction re-ran
+    // once per consumer (profiled: three ~equal-CPU reduce stages under
+    // AQE). canonOnce materializes it inside the timed query, once per
+    // invocation; in production the stored canon table plays that role.
     val canon = canonOnce(s, pages)
     val registry = t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
       .flatMap { id =>
@@ -361,10 +353,10 @@ object SparkEntry {
       // canonical (band, key) exchange, so the banding flatMap runs once
       // (lineage intact). The hash table feeds two differently-aliased
       // joins (a/b endpoints) that cannot share an exchange — materialize
-      // it once instead (driver-glue stand-in for a persisted hash table).
+      // it once instead.
       val cand = TrainingOps.minhashBands(doubled).toDF()
-      val withHash = doubled.withColumn("h", F.md5(F.col("text")))
-        .localCheckpoint(false)
+      val withHash = SparkRuntime.materialize(
+        doubled.withColumn("h", F.md5(F.col("text"))))
       val pairs = cand.as("l").join(cand.as("r").hint("shuffle_hash"),
           F.col("l.band") === F.col("r.band") && F.col("l.key") === F.col("r.key") &&
           F.col("l.doc_id") < F.col("r.doc_id"))

@@ -1,13 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, functions => F}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Structured Streaming operators over the `events` stream (event-time
-  * semantics): a watermarked tumbling-window aggregation, Catalyst-native
-  * session windows, and a custom-state sessionizer. Each transform works on
-  * both a batch DataFrame and a `readStream` DataFrame — the streaming specs
-  * assert stream == batch on the same input.
+  * semantics): a watermarked tumbling-window aggregation. It works on both
+  * a batch DataFrame and a `readStream` DataFrame — EventStreamingSpec
+  * asserts stream == batch on the same input.
   */
 object EventStreaming {
 
@@ -26,80 +24,4 @@ object EventStreaming {
       .select(
         F.col("window.start").as("day"), F.col("event_type"),
         F.col("n"), F.col("total_value_centi"))
-
-  /** Catalyst-native session windows (gap-based), the built-in form of the
-    * sessionizer — preferred where its semantics suffice.
-    */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withColumn("ts", F.col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(F.session_window(F.col("ts"), gap), F.col("user_id"))
-      .agg(F.count(F.lit(1)).as("n_events"))
-      .select(
-        F.col("session_window.start").as("session_start"),
-        F.col("user_id"), F.col("n_events"))
-
-  /** Accumulated event times for one user (epoch millis). */
-  final case class SessionAcc(times: List[Long])
-
-  final case class ClosedSession(
-      user_id: Long, session_start: Long, session_end: Long, n_events: Long)
-
-  /** Custom-state sessionizer: flatMapGroupsWithState with an event-time
-    * timeout. Events accumulate per user; once the watermark passes the
-    * user's last event + gap, the group times out and its gap-split sessions
-    * emit (epoch-second bounds). This is the (d)-tier custom-state form for
-    * semantics session_window can't express (e.g. per-session payload
-    * reductions); kept deliberately equivalent here so the spec can check it
-    * against the batch gap logic.
-    */
-  def sessionizeWithState(
-      events: DataFrame,
-      gapSec: Long = 1800
-  ): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // the events table carries TIMESTAMP_NTZ; treat wall-clock as UTC epoch
-    // (cast before the watermark so the tag rides the column into the
-    // stateful operator)
-    events
-      .select(F.col("user_id").cast("long"),
-        F.col("ts").cast("timestamp").as("ts"))
-      .withWatermark("ts", "1 minute")
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionAcc, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[SessionAcc]) =>
-          if (state.hasTimedOut) {
-            val times = state.get.times.sorted
-            state.remove()
-            val sessions = List.newBuilder[ClosedSession]
-            var start = times.head
-            var last = times.head
-            var n = 0L
-            for (t <- times) {
-              if (t - last > gapSec * 1000) {
-                sessions += ClosedSession(user, start / 1000, last / 1000, n)
-                start = t
-                n = 0L
-              }
-              last = t
-              n += 1
-            }
-            sessions += ClosedSession(user, start / 1000, last / 1000, n)
-            sessions.result().iterator
-          } else {
-            val incoming = it.map(_._2.getTime).toList
-            val acc = SessionAcc(
-              state.getOption.map(_.times).getOrElse(Nil) ++ incoming)
-            state.update(acc)
-            // time out once the watermark passes the newest event + gap
-            state.setTimeoutTimestamp(acc.times.max + gapSec * 1000)
-            Iterator.empty
-          }
-      }
-  }
 }

@@ -187,9 +187,8 @@ object Incremental {
     *     into the triple log, plus a tombstone row so an extraction that
     *     yields nothing still shadows the subject's base rows.
     *
-    * Both logs are written from one local checkpoint of the pass (taken
-    * after AQE coalesces its partitions), so an executor loss fails the
-    * batch; re-running it with the same id is lossless. Base tables are
+    * Both logs are written from one `SparkRuntime.materialize` of the pass;
+    * re-running a failed batch with the same id is lossless. Base tables are
     * only read, the captures as a plain scan (`readUnbucketed`: the pass
     * reshuffles them anyway). The batch id must exceed all previous ones
     * (the caller's crawl counter); a re-run overwrites its own directories
@@ -206,9 +205,8 @@ object Incremental {
     // and lose the batch. Filtering to batch < N makes the retry recompute
     // the identical rows no matter what the failed attempt persisted.
     val clog = readLog(spark, clogPath).where(F.col("batch") < batch)
-    val pass = batchPass(spark, deltaPages,
-      BucketedStore.readUnbucketed(spark, capturesTable), clog)
-      .toDF().localCheckpoint(false)
+    val pass = SparkRuntime.materialize(batchPass(spark, deltaPages,
+      BucketedStore.readUnbucketed(spark, capturesTable), clog).toDF())
     pass.where(F.col("capture").isNotNull).select("capture.*")
       .write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
     pass.where(F.col("triple").isNotNull).select("triple.*")

@@ -507,19 +507,18 @@ object KgEngine {
   }
 
   /** The completeness gate + registry projection shared by
-    * `enrichFromRegistry`, `enrichAll`, and `KgStreaming.enrichLogStream` —
-    * ONE definition, so batch and streamed enrichment can never fork
-    * semantics: registry rows survive only for subjects where some supported
-    * field is still below Certain (the anti-join that keeps the work
-    * proportional to the incomplete subjects); structured payloads keep
-    * their obj_json when the registry table carries the column.
+    * `enrichFromRegistry` and `enrichAll` — ONE definition, so the staged
+    * and fused enrichment can never fork semantics: registry rows survive
+    * only for subjects where some supported field is still below Certain
+    * (the anti-join that keeps the work proportional to the incomplete
+    * subjects); structured payloads keep their obj_json when the registry
+    * table carries the column.
     */
   private[spark] def gatedRegistryRaw(
       cd: DataFrame,
       registry: DataFrame,
       supportedFields: Seq[String],
-      maxCertainty: Int,
-      seq: org.apache.spark.sql.Column = F.lit(0)
+      maxCertainty: Int
   ): DataFrame = {
     val fieldList = supportedFields.map(x => x: Any)
     val complete = cd
@@ -538,7 +537,7 @@ object KgEngine {
         F.col("subj"), F.col("pred"), F.col("obj"), regJson.as("obj_json"),
         F.lit(maxCertainty).as("certainty"),
         F.lit("external-registry").as("origin"),
-        F.lit(1).as("guesser_rank"), seq.as("seq"))
+        F.lit(1).as("guesser_rank"), F.lit(0).as("seq"))
   }
 
   /** A provider branch of the extend stage's archive dispatch
@@ -912,6 +911,10 @@ object KgEngine {
       F.col("certainty"), F.col("origin"),
       F.lit(0).as("guesser_rank"), F.lit(0).as("seq"))
 
+  /** The staged form of `enrichAll`'s in-group extrapolation: the extend
+    * tail on every subject that carries one of `enrichedOrigins`. It is the
+    * reference EnrichPlanSpec checks the fused pass against.
+    */
   def extrapolatePost(
       canon: Dataset[CanonTriple],
       enrichedOrigins: Seq[String]
@@ -933,8 +936,9 @@ object KgEngine {
     * applyUrlProbes` chain shuffles the full table three times; at crawl
     * scale that triples the heaviest exchange). Stage precedence at equal
     * certainty is preserved through `guesser_rank` (existing 0 < registry 1 <
-    * scrape 2) — the same tie order the staged chain produces, so the two
-    * forms are result-identical.
+    * scrape 2) — the same tie order the staged chain produces, so the fused
+    * form equals the staged chain with `extrapolatePost` before
+    * `applyUrlProbes`.
     *
     * The scrape side joins the POST-REGISTRY-MERGE canonical homepage per
     * subject (existing rows vs gated registry rows through the same lattice
@@ -970,8 +974,7 @@ object KgEngine {
       maxCertainty: Int,
       fetched: DataFrame,              // (url, html) crawled homepage corpus
       probes: DataFrame,               // (url, status, canonical_url)
-      screenshotProbes: Option[DataFrame] = None,
-      extrapolateEnriched: Boolean = true
+      screenshotProbes: Option[DataFrame] = None
   ): Dataset[CanonTriple] = {
     val spark = canon.sparkSession
     import spark.implicits._
@@ -989,11 +992,6 @@ object KgEngine {
         F.negate(F.col("guesser_rank")),
         F.negate(F.col("seq")))).as("url"))
     val scrapeRaw = scrapeAsRaw(scrapedDatums(spark, homepages, fetched), rank = 2)
-    val rawAll0 = canonAsRaw(cd).unionByName(regRaw).unionByName(scrapeRaw)
-    if (!extrapolateEnriched)
-      return applyUrlProbes(
-        canonicalize(rawAll0.as[RawTriple]).as[CanonTriple],
-        probes, screenshotProbes)
     // the union feeds BOTH the lattice argmax and the candidate-url branch;
     // an explicit repartition on the aggregate's own keys REPLACES the
     // aggregate's shuffle (the requirement is already satisfied, so no
@@ -1001,7 +999,8 @@ object KgEngine {
     // the candidate branch reads the reused exchange instead of re-running
     // the union's upstream (registry gate, homepage argmax, scrape parse,
     // and the caller's canon pipeline when it is not a stored table)
-    val rawAll = rawAll0.repartition(F.col("subj"), F.col("pred"))
+    val rawAll = canonAsRaw(cd).unionByName(regRaw).unionByName(scrapeRaw)
+      .repartition(F.col("subj"), F.col("pred"))
     val merged = canonicalize(rawAll.as[RawTriple]).as[CanonTriple]
     // extrapolate + check FUSED into one subject-grouped pass over the merged
     // table: the relational applyUrlProbes' browse-sync branch consumes its

@@ -173,16 +173,16 @@ object KgJob {
     todo.size
   }
 
+  /** Runs the job over `$SPARK_GRAFT_SF_DIR/documents.parquet` into
+    * `$SPARK_GRAFT_OUT` in a `SparkRuntime.builder` session on
+    * `SPARK_GRAFT_CPUS` cores (so 8 × cores shuffle partitions), and prints
+    * one JSON line.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", "/tmp/graft_kg_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = SparkRuntime.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val pages = SynthPages.fromDocuments(
       spark.read.parquet(s"$sfDir/documents.parquet"))

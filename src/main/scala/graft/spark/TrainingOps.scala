@@ -153,16 +153,12 @@ object TrainingOps {
     // the shingle-set table verifies both endpoints of every candidate pair
     // (two joins with different column aliases — aliased consumers do not
     // share an exchange, measured): materialize it once instead of
-    // recomputing the O(words) transform per side. A lazy localCheckpoint
-    // is the sandbox stand-in for the persisted fingerprint table a
-    // production dedup pipeline writes out (guide §8.4); its blocks are
-    // executor-local, so a cluster deployment persists to storage instead.
-    val docs = documents
+    // recomputing the O(words) transform per side
+    val docs = SparkRuntime.materialize(documents
       .select(F.col("doc_id").cast("long"), F.col("text"),
         F.split(F.col("text"), " ").as("ws"))
       .select(F.col("doc_id"),
-        F.array_distinct(shingleSet("text", "ws")).as("toks"))
-      .localCheckpoint(false)
+        F.array_distinct(shingleSet("text", "ws")).as("toks")))
     cand
       .join(docs.withColumnRenamed("doc_id", "a").withColumnRenamed("toks", "ta"), "a")
       .join(docs.withColumnRenamed("doc_id", "b").withColumnRenamed("toks", "tb"), "b")
@@ -272,20 +268,15 @@ object TrainingOps {
     val members = docs.withColumn("h", F.md5(F.col("text")))
     // one aggregate produces both the membership map and the representative
     // corpus (text is functionally determined by h, so min(text) IS the
-    // text). Both tables are materialized (lazy localCheckpoint): groups
-    // feeds the near-dup operator AND the membership join, membership feeds
-    // three differently-aliased joins — without the barrier each consumer
-    // re-runs the md5 aggregate over the full corpus. This is the
-    // "persist the membership map" step the scaladoc above already names
-    // as the production contract; localCheckpoint is its sandbox stand-in
-    // (executor-local blocks — a cluster run persists to storage).
-    val groups = members.groupBy("h")
-      .agg(F.min("doc_id").as("rep_id"), F.min("text").as("text"))
-      .localCheckpoint(false)
-    val membership = members.select("doc_id", "h")
+    // text). Both tables are materialized: groups feeds the near-dup
+    // operator AND the membership join, membership feeds three
+    // differently-aliased joins — without the barrier each consumer re-runs
+    // the md5 aggregate over the full corpus
+    val groups = SparkRuntime.materialize(members.groupBy("h")
+      .agg(F.min("doc_id").as("rep_id"), F.min("text").as("text")))
+    val membership = SparkRuntime.materialize(members.select("doc_id", "h")
       .join(groups.select("h", "rep_id"), "h")
-      .select("doc_id", "rep_id")
-      .localCheckpoint(false)
+      .select("doc_id", "rep_id"))
     val repPairs = nearOnReps(
       groups.select(F.col("rep_id").as("doc_id"), F.col("text")))
     // cross-group pairs: expand each representative pair over both groups'

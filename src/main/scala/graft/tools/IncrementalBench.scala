@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import graft.spark.{Incremental, SynthPages}
+import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.spark.{Incremental, SparkRuntime, SynthPages}
 
 /** Measures the incremental-maintenance advantage: after a recrawl in which
   * only ~1% of subjects changed content, compare
@@ -19,12 +19,12 @@ import graft.spark.{Incremental, SynthPages}
   *
   * Corpus = SPARK_GRAFT_SCALE × the sf documents table through SynthPages
   * (same family as ScalingBench); churn = subjects with
-  * doc_id % SPARK_GRAFT_CHURN_MOD == 0 (default 100 → 1%). Buckets default
-  * to 256 = the session's shuffle partitioning, the layout subj-keyed
-  * store consumers need (see BucketedStore); the log legs read the base
-  * captures as a plain scan, so for them the count only sets the store's
-  * file count. Emits one JSON line; wall numbers need a quiet window like
-  * every bench on this VM.
+  * doc_id % SPARK_GRAFT_CHURN_MOD == 0 (default 100 → 1%). The store's
+  * bucket count is the session's shuffle partitioning (8 × cores, 256 at the
+  * default 32), the layout subj-keyed store consumers need (see
+  * BucketedStore); the log legs read the base captures as a plain scan, so
+  * for them the count only sets the store's file count. Emits one JSON
+  * line; wall numbers need a quiet window like every bench on this VM.
   */
 object IncrementalBench {
   def main(args: Array[String]): Unit = {
@@ -34,15 +34,8 @@ object IncrementalBench {
     val churnMod = sys.env.getOrElse("SPARK_GRAFT_CHURN_MOD", "100").toInt
     val base = sys.env.getOrElse("SPARK_GRAFT_CORPUS_DIR", "/tmp") +
       s"/graft_incbench_m$churnMod"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 256)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    val spark = SparkRuntime.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -75,7 +68,7 @@ object IncrementalBench {
     }
 
     // existing store (untimed setup for the log legs)
-    val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "256").toInt
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
     Incremental.initStore(spark, baseCrawl, "ib_caps", "ib_tri", s"$base/store",
       buckets)
     val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUPS", "1").toInt

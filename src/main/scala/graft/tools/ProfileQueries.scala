@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.spark.SparkRuntime
 
 /** Dev profiling harness (not part of the driver contract): runs the
-  * headline queries under EXACTLY the Bench session config, with a stage
-  * listener attributing wall/cpu/tasks per query, and optionally dumps each
-  * query's `.explain("formatted")` to a plans directory.
+  * headline queries in the Bench session config (`SparkRuntime.builder`),
+  * with a stage listener attributing wall/cpu/tasks per query, and
+  * optionally dumps each query's `.explain("formatted")` to a plans
+  * directory.
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
@@ -17,20 +18,8 @@ import org.apache.spark.sql.SparkSession
 object ProfileQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // this block mirrors graft.Bench's session config line for line; it
-    // cannot be shared because Bench.scala is frozen for measurement — if
-    // Bench's config ever changes, update this copy to match
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 8)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkRuntime.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val stages =

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
 import graft.spark.TrainingOps
 
@@ -13,13 +13,10 @@ import graft.spark.TrainingOps
   * neighbors) — and asserts a floor, so a change that degrades bucket
   * quality fails loudly. Measured values are recorded in BASELINE.md.
   */
-class AnnRecallSpec extends AnyFunSuite {
+class AnnRecallSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   /** 20 tight clusters × 50 members, dim 64. vec_id = member*20 + cluster,
     * so query ids 0..9 are member 0 of ten DIFFERENT clusters and each

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.spark.KgEngine
 import graft.spark.Model.CanonTriple
 
@@ -11,14 +11,7 @@ import graft.spark.Model.CanonTriple
   * Certain for the ThirdPartyRepository providers, the Archive datum's
   * certainty for SourceForge.
   */
-class ArchiveDispatchSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArchiveDispatchSpec extends AnyFunSuite with SparkSuite {
 
   import graft.core.Certainty
 
@@ -146,9 +139,7 @@ class ArchiveDispatchSpec extends AnyFunSuite {
 
   test("plan: the four provider gates share ONE certain-set aggregate exchange") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       // every provider branch must survive optimization (ConvertToLocal-
       // Relation + PropagateEmptyRelation prune branches whose payload or
       // subject subset folds to empty), so seed one routed subject per
@@ -191,6 +182,6 @@ class ArchiveDispatchSpec extends AnyFunSuite {
       assert(reused.size >= 3,
         s"the other three gates must reuse it (found ${reused.size} ReusedExchange):\n" +
           plan.toString.take(4000))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.spark.{BucketedStore, KgEngine, SynthPages}
 
@@ -10,14 +10,7 @@ import graft.spark.{BucketedStore, KgEngine, SynthPages}
   * scan's own HashPartitioning — no exchange. The content itself must be
   * byte-identical to the unbucketed table.
   */
-class BucketedStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_spec")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketedStoreSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val canon = {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -33,17 +26,9 @@ class BucketedStoreSpec extends AnyFunSuite {
   private def shuffles(df: org.apache.spark.sql.DataFrame): Seq[ShuffleExchangeExec] =
     df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
 
-  private def withStablePlans[A](body: => A): A = {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
-  }
+  private def withStablePlans[A](body: => A): A = withConf(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("the publish writes exactly one data file per bucket") {
     // the V1 bucketed write emits a file per (task, bucket-present) pair;

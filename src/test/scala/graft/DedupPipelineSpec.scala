@@ -11,13 +11,10 @@ import graft.spark.TrainingOps
   * of one boilerplate page share every LSH band; naively that is ~5·10¹¹
   * intra-bucket candidate pairs from a single bucket).
   */
-class DedupPipelineSpec extends AnyFunSuite {
+class DedupPipelineSpec extends AnyFunSuite with SparkSuite {
 
-  private def spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   /** Mixed corpus: an exact-duplicate triple, a near-duplicate of it, an
     * exact pair of unrelated text, and a singleton.

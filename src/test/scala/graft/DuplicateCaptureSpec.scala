@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.pipeline.{Sinks, Summarize}
 import graft.spark.{Incremental, KgEngine, SynthPages}
 
@@ -10,14 +10,7 @@ import graft.spark.{Incremental, KgEngine, SynthPages}
   * break on content hash, and the rule is identical in the grouped and
   * pre-extract engine variants — independent of shuffle iteration order.
   */
-class DuplicateCaptureSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DuplicateCaptureSpec extends AnyFunSuite with SparkSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

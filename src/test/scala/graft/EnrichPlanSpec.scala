@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.spark.{KgEngine, SynthPages}
 
 /** Physical-plan shape of the enrichment operators — the properties that
@@ -13,14 +13,7 @@ import graft.spark.{KgEngine, SynthPages}
   *   - both must canonicalize through partial+final aggregation (max_by),
   *     not a window-sort.
   */
-class EnrichPlanSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     .where("doc_id < 64")
@@ -58,9 +51,7 @@ class EnrichPlanSpec extends AnyFunSuite {
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),
       F.lit("valid").as("status"),
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("canonical_url"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = KgEngine.applyUrlProbes(canon, probes)
         .queryExecution.executedPlan.toString
       // the url-keyed probe join must shuffle (the per-subject sync
@@ -84,7 +75,7 @@ class EnrichPlanSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(!fleet.contains("BroadcastHashJoin"),
         s"broadcastProbes=Some(false) still broadcasts a fleet-scaled side:\n$fleet")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
     // results are join-strategy-invariant
     val broadcastRows = KgEngine.applyUrlProbes(canon, probes,
       broadcastProbes = Some(true)).collect().toSet
@@ -118,9 +109,7 @@ class EnrichPlanSpec extends AnyFunSuite {
     // ONE consumer (the in-group-gated extrapolation pass) so nothing
     // re-executes it. AQE is disabled so the final plan is inspectable
     // pre-execution.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val registry = docs.select(
         F.concat(F.lit("https://replay.invalid/proj"), F.col("doc_id"), F.lit("/")).as("subj"),
         F.lit("Version").as("pred"), F.lit("9.9.9").as("obj"))
@@ -163,7 +152,7 @@ class EnrichPlanSpec extends AnyFunSuite {
       }
       assert(reused.nonEmpty,
         "candidate branch must reuse the union exchange (found no ReusedExchange)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("enrichAll never materializes the probe tables on the driver") {
@@ -300,10 +289,14 @@ class EnrichPlanSpec extends AnyFunSuite {
       .toDF("url", "html")
     val probes = Seq.empty[(String, String, String)].toDF("url", "status", "canonical_url")
     val fused = KgEngine.enrichAll(canonRows, registry, Seq("Homepage"), 1,
-      fetched, probes, extrapolateEnriched = false).collect()
-    val staged = KgEngine.enrichFromHomepages(
-      KgEngine.enrichFromRegistry(canonRows, registry, Seq("Homepage"), 1),
-      fetched).collect()
+      fetched, probes).collect()
+    val staged = KgEngine.applyUrlProbes(
+      KgEngine.extrapolatePost(
+        KgEngine.enrichFromHomepages(
+          KgEngine.enrichFromRegistry(canonRows, registry, Seq("Homepage"), 1),
+          fetched),
+        Seq("external-registry", "homepage-scrape")),
+      probes).collect()
     assert(fused.exists(t => t.pred == "Repository" &&
       t.obj == "https://github.com/sorg/srepo" && t.origin == "homepage-scrape"),
       s"registry-gained homepage not scraped same-batch: ${fused.toList}")
@@ -337,14 +330,17 @@ class EnrichPlanSpec extends AnyFunSuite {
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),
       F.lit("invalid").as("status"),
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("canonical_url"))
-    // extrapolation off: the staged chain has no post-enrichment fixpoint
     val single = KgEngine.enrichAll(canon, registry, Seq("Version"), 1,
-        fetched, probes, extrapolateEnriched = false)
+        fetched, probes)
       .collect().map(t => (t.subj, t.pred, t.obj, t.obj_json, t.certainty)).sorted
+    // the staged chain extrapolates the enriched subjects before the check,
+    // as the fused pass does in-group
     val staged = KgEngine.applyUrlProbes(
-        KgEngine.enrichFromHomepages(
-          KgEngine.enrichFromRegistry(canon, registry, Seq("Version"), 1),
-          fetched),
+        KgEngine.extrapolatePost(
+          KgEngine.enrichFromHomepages(
+            KgEngine.enrichFromRegistry(canon, registry, Seq("Version"), 1),
+            fetched),
+          Seq("external-registry", "homepage-scrape")),
         probes)
       .collect().map(t => (t.subj, t.pred, t.obj, t.obj_json, t.certainty)).sorted
     assert(single.length == staged.length)

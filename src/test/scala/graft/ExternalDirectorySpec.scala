@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.spark.{KgEngine, SynthRegistry}
 import graft.spark.Model.CanonTriple
 import graft.core.Certainty
@@ -11,13 +10,7 @@ import graft.core.Certainty
   * Repology IN ORDER, each capped at its max certainty and skipped when the
   * cap cannot meet `minimum_certainty`.
   */
-class ExternalDirectorySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExternalDirectorySpec extends AnyFunSuite with SparkSuite {
 
   private def triple(subj: String, pred: String, obj: String, cert: Int) =
     CanonTriple(subj, pred, obj, "", cert, "fixture")
@@ -133,9 +126,7 @@ class ExternalDirectorySpec extends AnyFunSuite {
 
   test("plan: the four directory gates share ONE certain-set aggregate exchange") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       // a Certain union-field keeps the gate's filtered scan non-empty, or
       // ConvertToLocalRelation + PropagateEmptyRelation prune the aggregate
       val canon = Seq(
@@ -163,6 +154,6 @@ class ExternalDirectorySpec extends AnyFunSuite {
       assert(reused.size >= 3,
         s"the other three gates must reuse it (found ${reused.size} ReusedExchange):\n" +
           plan.toString.take(4000))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }

@@ -7,7 +7,7 @@ import graft.urls.Vcs
 /** Unit vectors for the round-2 additions: DOAP sink, version_in_tags,
   * external-guesser gating, BMP decode.
   */
-class ExtrasSpec extends AnyFunSuite {
+class ExtrasSpec extends AnyFunSuite with SparkSuite {
 
   test("toDoap renders project fields with repository block last") {
     val md = List(
@@ -72,8 +72,6 @@ class ExtrasSpec extends AnyFunSuite {
   }
 
   test("CosineSimilarity expression: codegen matches interpreted and the plan has no UDF") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.{functions => F}
     graft.functions.CosineSimilarity.register(spark)
     val df = spark.createDataFrame(Seq(
@@ -106,8 +104,6 @@ class ExtrasSpec extends AnyFunSuite {
   }
 
   test("minhash near-dup pairs: one edited word is found, unrelated text is not") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val words = (0 until 100).map(i => s"w$i")
     val base = words.mkString(" ")
     val edited = words.updated(50, "CHANGED").mkString(" ")   // 3 of 98 shingles differ
@@ -121,8 +117,6 @@ class ExtrasSpec extends AnyFunSuite {
   }
 
   test("BMP decode reads header dimensions; non-BMP falls back") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import graft.spark.TrainingOps
     val bmp = TrainingOps.syntheticBmp(37) // w = 1+37%16 = 6, h = 1+37%12 = 2
     assert(bmp(0) == 'B'.toByte && bmp(1) == 'M'.toByte)

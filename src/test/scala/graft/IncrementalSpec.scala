@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -15,45 +15,25 @@ import graft.spark.{BucketedStore, Incremental, KgEngine, SynthPages}
   * equals the full rebuild, and the base tables are never rewritten (a
   * batch shuffles only its own subjects' stored captures).
   */
-class IncrementalSpec extends AnyFunSuite {
+class IncrementalSpec extends AnyFunSuite with SparkSuite {
 
-  private lazy val spark: SparkSession = {
-    // stale stores/logs from an earlier run would leak into this one
+  // stale stores/logs from an earlier run would leak into this one
+  locally {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
     }
     rm(new java.io.File("/tmp/graft_inc_spec"))
-    // in the full-suite JVM getOrCreate returns another suite's session, so
-    // every conf this spec depends on is (re)set per test scope, not here
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_spec_inc")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
   }
 
   /** Plan-shape scope: AQE off, broadcast off (forces the real SMJ paths on
     * this tiny corpus), subset co-partitioning on (the production setting —
-    * Verify/Bench sessions set it; the shared suite JVM may not have).
+    * Verify/Bench sessions set it; the shared test session does not).
     */
-  private def withStablePlans[A](body: => A): A = {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevCp = spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try body
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", prevCp)
-    }
-  }
+  private def withStablePlans[A](body: => A): A = withConf(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false")(body)
 
   private lazy val docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 60")
@@ -402,9 +382,7 @@ class IncrementalSpec extends AnyFunSuite {
     }
     // the read views anti-join the SMALL log key sets — those broadcast
     // (default threshold), leaving the base scan exchange-free
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       assertBaseNotShuffled(
         Incremental.currentTriples(BucketedStore.read(spark, "lg2_tri"),
           Incremental.readLog(spark, s"$root/tlog")),
@@ -413,6 +391,6 @@ class IncrementalSpec extends AnyFunSuite {
         Incremental.currentCaptures(BucketedStore.read(spark, "lg2_caps"),
           Incremental.readLog(spark, s"$root/clog")),
         "log2/captures", "currentCaptures")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 }

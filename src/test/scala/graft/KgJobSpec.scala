@@ -1,19 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.spark.{KgJob, KgStreaming, SynthPages}
 
-/** End-to-end job semantics: bucket-manifest resume, streamed page
-  * ingestion and the streaming enrichment log.
+/** End-to-end job semantics: bucket-manifest resume and streamed page
+  * ingestion.
   */
-class KgJobSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KgJobSpec extends AnyFunSuite with SparkSuite {
 
   private def freshDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
@@ -253,55 +246,5 @@ class KgJobSpec extends AnyFunSuite {
     val batch = triples(KgEngine.extractCanonical(spark, pages).toDF())
     assert(streamed == batch)
     assert(streamed.size == 6 * (11 + 11 + 11 + 10 + 10 + 9 + 6 + 10))
-  }
-
-  test("streaming enrichment log compacts to the one-shot enrichAll result") {
-    import spark.implicits._
-    import org.apache.spark.sql.{functions => F}
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .where("doc_id < 48")
-    val pages = SynthPages.fromDocuments(docs)
-    val canonDir = freshDir("enrich_canon")
-    val regDir = freshDir("enrich_reg")
-    val logDir = freshDir("enrich_log")
-    val ckpt = freshDir("enrich_ckpt")
-    graft.spark.KgEngine.extractCanonical(spark, pages).toDF()
-      .write.mode("overwrite").parquet(canonDir)
-
-    // the registry arrives in two microbatches (disjoint subject halves);
-    // maxFilesPerTrigger=1 forces one batch per file
-    def regRows(lo: Int, hi: Int) = docs
-      .where(F.col("doc_id") >= lo && F.col("doc_id") < hi)
-      .select(
-        F.concat(F.lit("https://replay.invalid/proj"), F.col("doc_id"), F.lit("/")).as("subj"),
-        F.lit("Version").as("pred"), F.lit("9.9.9").as("obj"),
-        F.lit("").as("obj_json"))
-    regRows(0, 24).coalesce(1).write.mode("append").parquet(regDir)
-    regRows(24, 48).coalesce(1).write.mode("append").parquet(regDir)
-
-    val q = KgStreaming.enrichLogStream(spark, canonDir, regDir, logDir, ckpt,
-      supportedFields = Seq("Version"), maxCertainty = 1)
-    q.awaitTermination(120000)
-
-    val compacted = KgStreaming.compactEnrichment(spark, canonDir, logDir)
-      .collect().map(t => (t.subj, t.pred, t.obj, t.certainty)).toSet
-    val emptyFetched = docs.where(F.lit(false)).select(
-      F.lit("").as("url"), F.lit("").as("html"))
-    val emptyProbes = docs.where(F.lit(false)).select(
-      F.lit("").as("url"), F.lit("").as("status"), F.lit("").as("canonical_url"))
-    val oneShot = graft.spark.KgEngine.enrichAll(
-        spark.read.parquet(canonDir).as[graft.spark.Model.CanonTriple],
-        regRows(0, 48).drop("obj_json"),
-        supportedFields = Seq("Version"), maxCertainty = 1,
-        fetched = emptyFetched, probes = emptyProbes)
-      .collect().map(t => (t.subj, t.pred, t.obj, t.certainty)).toSet
-    assert(compacted == oneShot)
-    // the gate held: only the version-less cabal flavor gained the registry
-    // value, and the stream saw it arrive incrementally
-    val gained = compacted.collect {
-      case (s, "Version", "9.9.9", c) => (s, c)
-    }
-    assert(gained.nonEmpty && gained.forall(_._2 == 1))
-    assert(gained.size == (0 until 48).count(_ % 8 == 5))
   }
 }

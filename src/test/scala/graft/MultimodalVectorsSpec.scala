@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.spark.TrainingOps
 
 /** Non-degenerate multimodal vectors: the all-black oracle payloads keep
@@ -12,12 +11,7 @@ import graft.spark.TrainingOps
   * tools-side), and the variable-size clip pins the by-declared-size frame
   * walk.
   */
-class MultimodalVectorsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalVectorsSpec extends AnyFunSuite with SparkSuite {
 
   test("patterned-BMP resize matches independently computed fingerprints") {
     import spark.implicits._

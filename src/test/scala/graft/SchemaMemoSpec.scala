@@ -1,17 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
 /** `SparkEntry.t`'s parquet schema memo must notice a
   * regenerated table on any filesystem URI, not only on bare local paths.
   */
-class SchemaMemoSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SchemaMemoSpec extends AnyFunSuite with SparkSuite {
 
   test("a table rewritten under a file: URI is read with its new schema") {
     val local = java.nio.file.Files.createTempDirectory("graft_schema_memo").toFile

@@ -1,31 +1,27 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
 /** Skew handling evidence: AQE splits the hot partition of a skewed shuffle
   * join at runtime (the complement of the explicit salting in
   * KgEngine.linkEntitiesShuffleSalted — salting is for engines/paths where
   * AQE can't see the skew, AQE covers the rest).
   */
-class SkewJoinSpec extends AnyFunSuite {
+class SkewJoinSpec extends AnyFunSuite with SparkSuite {
 
   test("AQE splits the skewed partition of a hot-key shuffle join") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // thresholds scaled down so a unit-test-sized hot key counts as skew
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB") {
       import spark.implicits._
       // 200k mentions, 90% on one hot term — the head-domain shape
       val mentions = spark.range(200000).select(
@@ -46,6 +42,6 @@ class SkewJoinSpec extends AnyFunSuite {
       // the finalized adaptive plan must mark the hot partition as skew-split
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"), finalPlan.take(2000))
-    } finally spark.stop()
+    }
   }
 }

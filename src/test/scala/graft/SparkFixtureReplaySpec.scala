@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -10,15 +10,10 @@ import scala.jdk.CollectionConverters._
   * identical to the local per-subject pipeline. Guards the scan-side
   * candidate filter and url→(subj, relpath) splitting against drift.
   */
-class SparkFixtureReplaySpec extends AnyFunSuite {
+class SparkFixtureReplaySpec extends AnyFunSuite with SparkSuite {
 
   test("spark engine == local pipeline on all reference fixtures") {
     val testdata = ReferenceDir("testdata")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     val dirs = Files.list(testdata).iterator().asScala
@@ -69,6 +64,5 @@ class SparkFixtureReplaySpec extends AnyFunSuite {
       info(s"[$variant] subjects compared: ${localExpected.size}")
       assert(mismatches == 0, s"variant $variant")
     }
-    spark.stop()
   }
 }

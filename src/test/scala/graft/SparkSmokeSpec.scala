@@ -1,18 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.spark.{KgEngine, SynthPages, TrainingOps}
 
 /** Spark-side smoke and equivalence tests on a local session. */
-class SparkSmokeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SparkSmokeSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import graft.spark.{KgEngine, SynthPages}
 
 /** The Catalyst expression forms of splitSubject / isCandidate
@@ -11,13 +11,7 @@ import graft.spark.{KgEngine, SynthPages}
   * differential test sweeps the candidate-pattern space plus adversarial
   * edges (trailing slashes, empty segments, missing schemes, case, '~').
   */
-class SubjectExprSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubjectExprSpec extends AnyFunSuite with SparkSuite {
 
   private val relpaths: Seq[String] = Seq(
     // static registry names + near-misses
