@@ -199,6 +199,16 @@ object SparkEntry {
   private def centi(col: String): org.apache.spark.sql.Column =
     F.round(F.col(col) * 100).cast("long")
 
+  /** The doubled corpus of the dedup queries: every (`id`, `payload`) row
+    * becomes rows 2·id and 2·id+1, so each item has one exact duplicate and
+    * no eager count() pass is needed to mint the new ids.
+    */
+  private def doubled(df: DataFrame, id: String, payload: String): DataFrame = {
+    val in = df.select(id, payload)
+    in.select((F.col(id) * 2).as(id), F.col(payload))
+      .unionByName(in.select((F.col(id) * 2 + 1).as(id), F.col(payload)))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---------- relational core ----------
     "q1_agg" -> ((s, dir) => {
@@ -342,26 +352,13 @@ object SparkEntry {
     "dedup_exact" -> ((s, dir) =>
       TrainingOps.dedupExact(t(s, dir, "documents")).orderBy("content_hash")),
     "dedup_minhash" -> ((s, dir) => {
-      // double the corpus so every doc has one exact duplicate; MinHash+LSH
-      // generates candidates, exact-hash verification confirms. Ids map to
-      // 2*doc_id / 2*doc_id+1 so no eager count() pass is needed.
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val doubled = docs.select((F.col("doc_id") * 2).as("doc_id"), F.col("text"))
-        .unionByName(
-          docs.select((F.col("doc_id") * 2 + 1).as("doc_id"), F.col("text")))
-      // bands self-join: a shuffle-hash hint makes both sides share ONE
-      // canonical (band, key) exchange, so the banding flatMap runs once
-      // (lineage intact). The hash table feeds two differently-aliased
-      // joins (a/b endpoints) that cannot share an exchange — materialize
-      // it once instead.
-      val cand = TrainingOps.minhashBands(doubled).toDF()
-      val withHash = SparkRuntime.materialize(
-        doubled.withColumn("h", F.md5(F.col("text"))))
-      val pairs = cand.as("l").join(cand.as("r").hint("shuffle_hash"),
-          F.col("l.band") === F.col("r.band") && F.col("l.key") === F.col("r.key") &&
-          F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").as("a"), F.col("r.doc_id").as("b")).distinct()
-      pairs
+      // MinHash+LSH generates candidates over the doubled corpus,
+      // exact-hash verification confirms. The hash table feeds two
+      // differently-aliased joins (a/b endpoints) that cannot share an
+      // exchange — materialize it once instead.
+      val docs = doubled(t(s, dir, "documents"), "doc_id", "text")
+      val withHash = SparkRuntime.materialize(docs.withColumn("h", F.md5(F.col("text"))))
+      TrainingOps.minhashCandidatePairs(docs)
         .join(withHash.select(F.col("doc_id").as("a"), F.col("h").as("ha")), "a")
         .join(withHash.select(F.col("doc_id").as("b"), F.col("h").as("hb")), "b")
         .where(F.col("ha") === F.col("hb"))
@@ -371,19 +368,12 @@ object SparkEntry {
     "dedup_ngram" -> ((s, dir) => {
       // w-shingling Jaccard dedup at threshold 1.0 (identical shingle sets —
       // the oracle-exact operating point; banding recall is 1 there)
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val doubled = docs.select((F.col("doc_id") * 2).as("doc_id"), F.col("text"))
-        .unionByName(
-          docs.select((F.col("doc_id") * 2 + 1).as("doc_id"), F.col("text")))
-      TrainingOps.minhashDedupPairs(doubled, threshold = 1.0).orderBy("a", "b")
+      TrainingOps.minhashDedupPairs(doubled(t(s, dir, "documents"), "doc_id", "text"),
+        threshold = 1.0).orderBy("a", "b")
     }),
-    "dedup_simhash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val doubled = docs.select((F.col("doc_id") * 2).as("doc_id"), F.col("text"))
-        .unionByName(
-          docs.select((F.col("doc_id") * 2 + 1).as("doc_id"), F.col("text")))
-      TrainingOps.simhashPairs(doubled, maxDist = 0).orderBy("a", "b")
-    }),
+    "dedup_simhash" -> ((s, dir) =>
+      TrainingOps.simhashPairs(doubled(t(s, dir, "documents"), "doc_id", "text"),
+        maxDist = 0).orderBy("a", "b")),
     "dedup_pipeline" -> ((s, dir) => {
       // exact-first composed dedup over a corpus with a 10,000-copy
       // duplicate flood of doc 0's text (ids 1_000_000+i): the flood
@@ -421,18 +411,15 @@ object SparkEntry {
       // summation orders agree), then retrieval probes the TRAINED cells;
       // the oracle unrolls the same two assignment/mean steps in SQL
       val emb = t(s, dir, "embeddings")
-      val trained = TrainingOps.trainIvfCentroids(emb, nlist = 16, iters = 2)
+      val trained = TrainingOps.trainIvfCentroids(emb)
       TrainingOps.annIvf(emb, cents = trained).orderBy("query_id", "rank")
     }),
     "dedup_embedding" -> ((s, dir) => {
       // embedding-cosine near-dup over the doubled corpus: LSH-bucketed
       // candidates, exact cosine >= 0.95 (only the injected duplicates reach
       // it — the max non-duplicate pairwise cosine in this corpus is ~0.51)
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val doubled = emb.select((F.col("vec_id") * 2).as("vec_id"), F.col("embedding"))
-        .unionByName(
-          emb.select((F.col("vec_id") * 2 + 1).as("vec_id"), F.col("embedding")))
-      TrainingOps.dedupEmbedding(doubled).orderBy("a", "b")
+      TrainingOps.dedupEmbedding(doubled(t(s, dir, "embeddings"), "vec_id", "embedding"))
+        .orderBy("a", "b")
     }),
 
     // ---------- multimodal decode ----------

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -41,15 +42,19 @@ case class BrowseUrlFromRepo(child: Expression)
 
 object BrowseUrlFromRepo {
   /** Registers `browse_url_from_repo(url)` with a session so it is usable
-    * from `F.expr` and SQL text (same binding pattern as `cosine_sim`).
+    * from `F.expr` and SQL text, once per session (same binding pattern as
+    * `cosine_sim`).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "browse_url_from_repo",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1,
-          s"browse_url_from_repo expects exactly 1 argument, got ${exprs.length}")
-        BrowseUrlFromRepo(exprs.head)
-      },
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("browse_url_from_repo")))
+      registry.createOrReplaceTempFunction(
+        "browse_url_from_repo",
+        { exprs: Seq[Expression] =>
+          require(exprs.length == 1,
+            s"browse_url_from_repo expects exactly 1 argument, got ${exprs.length}")
+          BrowseUrlFromRepo(exprs.head)
+        },
+        "built-in")
+  }
 }

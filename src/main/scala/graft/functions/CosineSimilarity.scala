@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -71,15 +72,19 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   /** Registers `cosine_sim(a, b)` with a session so it is usable from
-    * `F.expr` and SQL text.
+    * `F.expr` and SQL text. Once per session: a later call finds the name
+    * and leaves it (a replacement would log a WARN on every operator call).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2,
-          s"cosine_sim expects exactly 2 arguments, got ${exprs.length}")
-        CosineSimilarity(exprs(0), exprs(1))
-      },
-      "built-in")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("cosine_sim")))
+      registry.createOrReplaceTempFunction(
+        "cosine_sim",
+        { exprs: Seq[Expression] =>
+          require(exprs.length == 2,
+            s"cosine_sim expects exactly 2 arguments, got ${exprs.length}")
+          CosineSimilarity(exprs(0), exprs(1))
+        },
+        "built-in")
+  }
 }

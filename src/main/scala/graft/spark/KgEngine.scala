@@ -1179,8 +1179,7 @@ object KgEngine {
   def applyUrlProbes(
       canon: Dataset[CanonTriple],
       probes: DataFrame,
-      screenshotProbes: Option[DataFrame] = None,
-      broadcastProbes: Option[Boolean] = None
+      screenshotProbes: Option[DataFrame] = None
   ): Dataset[CanonTriple] = {
     import canon.sparkSession.implicits._
     val checked = Seq("Repository", "Homepage", "Repository-Browse",
@@ -1189,19 +1188,14 @@ object KgEngine {
     val probes1 = collapseProbes(probes)
     // size-guarded dissemination: probe fleets usually emit compact tables
     // (→ broadcast), but a fleet-scale verdict table must shuffle-join on
-    // url instead of being replicated to every executor. Default None
-    // leaves the choice to Catalyst/AQE's autoBroadcastJoinThreshold —
-    // the engine's own size statistics, not a hard-coded hint — so the
-    // operator cannot be misused by handing it a huge probe table.
-    val p = broadcastProbes match {
-      case Some(true)  => F.broadcast(probes1)
-      case Some(false) => probes1.hint("shuffle_hash")
-      case None        => probes1
-    }
+    // url instead of being replicated to every executor. No hint: the
+    // choice is Catalyst/AQE's autoBroadcastJoinThreshold — the engine's
+    // own size statistics — so the operator cannot be misused by handing
+    // it a huge probe table.
     // pre-replacement rows (original obj kept — the sync comparison below
     // must see the ORIGINAL browse object, exactly like the pure twin which
     // syncs before the browse field's own probe is applied)
-    val joined = cd.join(p,
+    val joined = cd.join(probes1,
         cd("obj") === probes1("url") &&
         cd("pred").isin(checked.map(x => x: Any): _*), "left")
       .where(F.col("status").isNull || F.col("status") =!= "invalid")
@@ -1227,17 +1221,10 @@ object KgEngine {
         F.col("obj") === F.col("_derived"), F.col("_repo_cert"))
       .otherwise(F.col("certainty"))
     // the sync table is one row per valid-probed Repository SUBJECT — it
-    // scales with the probe fleet, the same axis the broadcastProbes guard
-    // exists for, so it follows the same choice: forced broadcast only for
-    // the explicitly-small fleet, shuffle_hash for the explicitly-large
-    // one, and Catalyst/AQE's own size statistics by default (a hard-coded
-    // F.broadcast here was the round-6 escape-hatch scale hazard)
-    val syncSized = broadcastProbes match {
-      case Some(true)  => F.broadcast(sync)
-      case Some(false) => sync.hint("shuffle_hash")
-      case None        => sync
-    }
-    val synced = joined.join(syncSized, Seq("subj"), "left")
+    // scales with the probe fleet, so like the probe join it carries no
+    // hint and Catalyst/AQE's own size statistics pick the strategy (a
+    // hard-coded F.broadcast here was the round-6 escape-hatch scale hazard)
+    val synced = joined.join(sync, Seq("subj"), "left")
       .select(
         F.col("subj"), F.col("pred"),
         F.when(F.col("status") === "valid", F.col("canonical_url"))

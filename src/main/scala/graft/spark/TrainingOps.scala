@@ -11,6 +11,21 @@ import org.apache.spark.sql.expressions.Window
   */
 object TrainingOps {
 
+  // The operators' fixed geometry. The relational oracles embed these values
+  // as literals, so a different value would only break the oracle.
+  private final val MinHashes = 16   // minhash values per document
+  private final val Bands = 4        // LSH bands, MinHashes / Bands values each
+  private final val ShingleN = 3     // words per shingle
+  private final val Dim = 64         // embedding width
+  private final val Planes = 8       // hyperplanes per LSH table
+  private final val Tables = 4       // hyperplane LSH tables
+  private final val NList = 16       // IVF cells
+  private final val NProbe = 4       // IVF cells a query probes
+  private final val Iters = 2        // Lloyd's iterations of the IVF trainer
+  private final val Queries = 10     // ANN queries: the vectors with vec_id < Queries
+  private final val K = 10           // ANN neighbors per query
+  private final val DupCosine = 0.95 // dedupEmbedding's cosine threshold
+
   // ---------- deduplication ----------
 
   /** Exact dedup via content hash: one row per distinct text with its
@@ -59,43 +74,37 @@ object TrainingOps {
     h
   }
 
-  private def shingles(text: String, n: Int): Iterator[Long] = {
+  private def shingles(text: String): Iterator[Long] = {
     val words = tokens(text)
-    if (words.length < n) Iterator.single(mix64(text.hashCode.toLong))
-    else (0 to words.length - n).iterator
-      .map(i => mix64(joinedHashCode(words, i, n).toLong))
+    if (words.length < ShingleN) Iterator.single(mix64(text.hashCode.toLong))
+    else (0 to words.length - ShingleN).iterator
+      .map(i => mix64(joinedHashCode(words, i, ShingleN).toLong))
   }
 
   final case class MinHashSig(doc_id: Long, band: Int, key: Long)
 
-  /** MinHash+LSH candidate generation: word `n`-gram shingles → `k` minhash
-    * values → `bands` bands hashed to bucket keys. A join on (band, key)
-    * yields candidate pairs without a cross product; verification computes
-    * true Jaccard on the candidates only.
+  /** MinHash+LSH candidate generation: word `ShingleN`-gram shingles →
+    * `MinHashes` minhash values → `Bands` bands hashed to bucket keys. A
+    * join on (band, key) yields candidate pairs without a cross product;
+    * verification computes true Jaccard on the candidates only.
     */
-  def minhashBands(
-      documents: DataFrame,
-      k: Int = 16,
-      bands: Int = 4,
-      shingleN: Int = 3
-  ): Dataset[MinHashSig] = {
+  def minhashBands(documents: DataFrame): Dataset[MinHashSig] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val rows = bands
-    val perBand = k / bands
+    val perBand = MinHashes / Bands
     documents.select(F.col("doc_id").cast("long"), F.col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val sig = Array.fill(k)(Long.MaxValue)
-        shingles(text, shingleN).foreach { sh =>
+        val sig = Array.fill(MinHashes)(Long.MaxValue)
+        shingles(text).foreach { sh =>
           var i = 0
-          while (i < k) {
+          while (i < MinHashes) {
             val h = mix64(sh ^ (0x1234567890ABCDEFL * (i + 1)))
             if (h < sig(i)) sig(i) = h
             i += 1
           }
         }
-        (0 until rows).iterator.map { b =>
+        (0 until Bands).iterator.map { b =>
           var key = 0L
           var i = 0
           while (i < perBand) { key = mix64(key ^ sig(b * perBand + i)); i += 1 }
@@ -104,18 +113,57 @@ object TrainingOps {
       }
   }
 
-  /** The word-3-gram shingle set from a pre-split token-array column — SAME
-    * granularity the MinHash signatures hash, so candidate verification
-    * measures the quantity the LSH approximates (texts of <3 words degrade
-    * to the whole text, mirroring `shingles`). Takes the split as a bound
-    * column: re-splitting inside the transform lambda would make each row
-    * O(words²).
+  /** The word-`ShingleN`-gram shingle set from a pre-split token-array
+    * column — SAME granularity the MinHash signatures hash, so candidate
+    * verification measures the quantity the LSH approximates (texts of
+    * fewer words degrade to the whole text, mirroring `shingles`). Takes
+    * the split as a bound column: re-splitting inside the transform lambda
+    * would make each row O(words²).
     */
-  private def shingleSet(textCol: String, wsCol: String): org.apache.spark.sql.Column =
-    F.when(F.size(F.col(wsCol)) < 3, F.array(F.col(textCol)))
+  private def shingleSet(textCol: String, wsCol: String): org.apache.spark.sql.Column = {
+    val words = (0 until ShingleN).map(j => if (j == 0) s"$wsCol[i]" else s"$wsCol[i+$j]")
+    F.when(F.size(F.col(wsCol)) < ShingleN, F.array(F.col(textCol)))
       .otherwise(F.expr(
-        s"transform(sequence(0, size($wsCol) - 3), " +
-        s"i -> concat_ws(' ', $wsCol[i], $wsCol[i+1], $wsCol[i+2]))"))
+        s"transform(sequence(0, size($wsCol) - $ShingleN), " +
+        s"i -> concat_ws(' ', ${words.mkString(", ")}))"))
+  }
+
+  /** LSH candidate pairs: the rows of `sigs` that share every `keys` value
+    * (a band, chunk or table bucket), as (a, b) with a < b on `id`, each
+    * pair once, plus `<c>_a` and `<c>_b` for every `carry` column. This is
+    * the one place bucket pairs are built, so a heavy bucket is split here
+    * or nowhere.
+    *
+    * The shuffle-hash hint on the build side: without it the planner
+    * broadcasts one side, whose plan shape differs from the streamed side,
+    * and the signature pass executes once PER SIDE (profiled as 2× the
+    * operator's CPU). With both sides shuffled on `keys` the two exchange
+    * subtrees are canonically identical and AQE's runtime stage cache
+    * executes the signature pass ONCE — single execution with lineage
+    * intact (no checkpoint, no storage residency), and the shuffled
+    * self-join is the only shape that works at corpus scale anyway (a
+    * signature table never broadcasts at 100 TB).
+    */
+  private def bucketPairs(
+      sigs: DataFrame, id: String, keys: Seq[String], carry: Seq[String] = Nil
+  ): DataFrame = {
+    def side(s: String, c: String) = F.col(s"$s.$c")
+    val sameBucket = keys.map(k => side("l", k) === side("r", k)).reduce(_ && _)
+    sigs.as("l").join(sigs.as("r").hint("shuffle_hash"),
+        sameBucket && side("l", id) < side("r", id))
+      .select(Seq(side("l", id).as("a"), side("r", id).as("b")) ++
+        carry.flatMap(c => Seq(side("l", c).as(s"${c}_a"), side("r", c).as(s"${c}_b"))): _*)
+      .distinct()
+  }
+
+  /** The LSH candidate set alone: doc pairs sharing at least one band
+    * bucket, (a, b) with a < b. Split out of `minhashDedupPairs` so the
+    * composed `dedupPipeline` (and its scale tests) can measure candidate
+    * volume directly — candidate count is the quantity the exact-first
+    * composition bounds.
+    */
+  def minhashCandidatePairs(documents: DataFrame): DataFrame =
+    bucketPairs(minhashBands(documents).toDF(), "doc_id", Seq("band", "key"))
 
   /** Candidate pairs from LSH buckets, verified with exact shingle-set
     * Jaccard ≥ `threshold` (w-shingling). Output: (a, b, jaccard), a < b.
@@ -123,31 +171,6 @@ object TrainingOps {
     * for which banding recall is 1 (identical signatures collide in every
     * band) — that is the oracle-checkable operating point.
     */
-  /** The LSH candidate set alone: doc pairs sharing at least one band
-    * bucket, (a, b) with a < b. Split out of `minhashDedupPairs` so the
-    * composed `dedupPipeline` (and its scale tests) can measure candidate
-    * volume directly — candidate count is the quantity the exact-first
-    * composition bounds.
-    */
-  def minhashCandidatePairs(documents: DataFrame): DataFrame = {
-    // shuffle-hash hint on the build side: without it the planner
-    // broadcasts one side, whose plan shape differs from the streamed
-    // side, and the banding flatMap executes once PER SIDE (profiled as 2×
-    // the operator's CPU). With both sides shuffled on (band, key) the two
-    // exchange subtrees are canonically identical and AQE's runtime stage
-    // cache executes the signature pass ONCE — single execution with
-    // lineage intact (no checkpoint, no storage residency), and the
-    // shuffled self-join is the only shape that works at corpus scale
-    // anyway (a signature table never broadcasts at 100 TB).
-    val sigs = minhashBands(documents).toDF()
-    sigs.as("l").join(sigs.as("r").hint("shuffle_hash"),
-        F.col("l.band") === F.col("r.band") &&
-        F.col("l.key") === F.col("r.key") &&
-        F.col("l.doc_id") < F.col("r.doc_id"))
-      .select(F.col("l.doc_id").as("a"), F.col("r.doc_id").as("b"))
-      .distinct()
-  }
-
   def minhashDedupPairs(documents: DataFrame, threshold: Double = 0.9): DataFrame = {
     val cand = minhashCandidatePairs(documents)
     // the shingle-set table verifies both endpoints of every candidate pair
@@ -218,20 +241,11 @@ object TrainingOps {
     val spark = documents.sparkSession
     import spark.implicits._
     val sh = simhash(documents).as[(Long, Long)]
-    // shuffle-hash hint for the same reason as minhashCandidatePairs: both
-    // sides shuffled on (chunk, key) share one canonical exchange, so the
-    // signature pass executes once with lineage intact
     val chunked = sh.flatMap { case (id, h) =>
       (0 until 4).iterator.map(c => (id, h, c, (h >>> (c * 16)) & 0xFFFFL))
     }.toDF("doc_id", "simhash", "chunk", "key")
-    val cand = chunked.as("l").join(chunked.as("r").hint("shuffle_hash"),
-        F.col("l.chunk") === F.col("r.chunk") && F.col("l.key") === F.col("r.key") &&
-        F.col("l.doc_id") < F.col("r.doc_id"))
-      .select(
-        F.col("l.doc_id").as("a"), F.col("r.doc_id").as("b"),
-        F.col("l.simhash").as("ha"), F.col("r.simhash").as("hb"))
-      .distinct()
-    cand.withColumn("dist", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
+    bucketPairs(chunked, "doc_id", Seq("chunk", "key"), carry = Seq("simhash"))
+      .withColumn("dist", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
       .where(F.col("dist") <= maxDist)
       .select("a", "b", "dist")
   }
@@ -330,22 +344,28 @@ object TrainingOps {
     if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
   }
 
-  /** Brute-force cosine top-k for the query vectors with vec_id < nQueries.
-    * Query selection is a pushed-down column filter; queries broadcast; one
-    * pass over the corpus per partition keeps a bounded k-heap per query, so
-    * at most partitions × queries × k rows (not N×Q) reach the final
-    * per-query top-k merge.
+  /** The (vec_id, embedding) pairs every embedding operator reads. */
+  private def vectors(embeddings: DataFrame): Dataset[(Long, Array[Float])] = {
+    import embeddings.sparkSession.implicits._
+    embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
+      .as[(Long, Array[Float])]
+  }
+
+  /** Brute-force cosine top-`K` for the query vectors with vec_id <
+    * `Queries`. Query selection is a pushed-down column filter; queries
+    * broadcast; one pass over the corpus per partition keeps a bounded
+    * k-heap per query, so at most partitions × queries × K rows (not N×Q)
+    * reach the final per-query top-k merge.
     */
-  def annBruteForce(embeddings: DataFrame, nQueries: Int = 10, k: Int = 10): DataFrame = {
+  def annBruteForce(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val proj = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-    val queries = proj.where(F.col("vec_id") < nQueries)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val proj = vectors(embeddings)
+    val queries = proj.where(F.col("vec_id") < Queries).collect().sortBy(_._1)
     val bq = spark.sparkContext.broadcast(queries)
     // worst-first ordering: lowest cosine (then highest vec_id) at the top
     val worstFirst = Ordering.by((x: (Double, Long)) => (-x._1, x._2))
-    val partialTopK = proj.as[(Long, Array[Float])].mapPartitions { it =>
+    val partialTopK = proj.mapPartitions { it =>
       val qs = bq.value
       val heaps = Array.fill(qs.length)(
         new scala.collection.mutable.PriorityQueue[(Double, Long)]()(worstFirst))
@@ -356,7 +376,7 @@ object TrainingOps {
           if (qid != id) {
             val c = cosine(qv, v)
             val h = heaps(qi)
-            if (h.size < k) h.enqueue((c, id))
+            if (h.size < K) h.enqueue((c, id))
             else {
               val (wc, wid) = h.head
               if (c > wc || (c == wc && id < wid)) { h.dequeue(); h.enqueue((c, id)) }
@@ -369,10 +389,10 @@ object TrainingOps {
         h.iterator.map { case (c, id) => (qs(qi)._1, id, c) }
       }
     }.toDF("query_id", "vec_id", "cosine")
-    // tiny merge: ≤ partitions × |queries| × k rows
+    // tiny merge: ≤ partitions × |queries| × K rows
     val w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     partialTopK.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
+      .where(F.col("rank") <= K)
       .select("query_id", "rank", "vec_id")
   }
 
@@ -385,65 +405,70 @@ object TrainingOps {
       (h.toDouble / Long.MaxValue.toDouble).toFloat.toDouble
     }
 
+  /** Random-hyperplane LSH signatures: one (id, table, sig) row per vector
+    * and table, where bit p of `sig` is set when the vector lies on the
+    * positive side of the table's hyperplane p. The one signature pass of
+    * `annLsh` (corpus and query sides) and `dedupEmbedding`.
+    */
+  private def hyperplaneSigs(vecs: Dataset[(Long, Array[Float])]): Dataset[(Long, Int, Int)] = {
+    import vecs.sparkSession.implicits._
+    val hp = hyperplanes(Tables, Planes, Dim)
+    vecs.flatMap { case (id, v) =>
+      (0 until Tables).iterator.map { t =>
+        var sig = 0
+        var p = 0
+        while (p < Planes) {
+          var dot = 0.0
+          var d = 0
+          // double multiply element-wise — reproducible by engines computing
+          // on DOUBLE lists (the relational oracle)
+          while (d < Dim) { dot += v(d).toDouble * hp(t)(p)(d); d += 1 }
+          if (dot > 0) sig |= (1 << p)
+          p += 1
+        }
+        (id, t, sig)
+      }
+    }
+  }
+
+  /** The top-`K` candidates of each query by exact cosine: `cand` holds
+    * (query_id, vec_id) pairs, each scored against the query vector (the
+    * `Queries` query vectors broadcast) and ranked within its query, ties
+    * to the lower vec_id. The scoring tail of `annLsh` and `annIvf`.
+    */
+  private def topKByCosine(vecs: Dataset[(Long, Array[Float])], cand: DataFrame): DataFrame = {
+    // native codegen'd expression, not a UDF — keeps the scoring inside the
+    // whole-stage span and reads ArrayData in place
+    graft.functions.CosineSimilarity.register(vecs.sparkSession)
+    val qvecs = vecs.toDF("query_id", "qembedding").where(F.col("query_id") < Queries)
+    val w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    cand
+      .join(F.broadcast(qvecs), "query_id")
+      .join(vecs.toDF("vec_id", "embedding"), "vec_id")
+      .withColumn("cosine", F.expr("cosine_sim(qembedding, embedding)"))
+      .withColumn("rank", F.row_number().over(w))
+      .where(F.col("rank") <= K)
+      .select("query_id", "rank", "vec_id")
+  }
+
   /** LSH-bucketed ANN (the scale path): random-hyperplane signatures from a
     * deterministic seed bucket the corpus; candidates = same bucket in any
-    * of `tables` hash tables; top-k among candidates.
+    * of the `Tables` hash tables; top-k among candidates.
     */
-  def annLsh(
-      embeddings: DataFrame,
-      nQueries: Int = 10,
-      k: Int = 10,
-      planes: Int = 8,
-      tables: Int = 4
-  ): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val dim = 64
-    val hp = hyperplanes(tables, planes, dim)
-    def signature(v: Array[Float], t: Int): Int = {
-      var sig = 0
-      var p = 0
-      while (p < planes) {
-        var dot = 0.0
-        var d = 0
-        // double multiply element-wise — reproducible by engines computing
-        // on DOUBLE lists (the relational oracle)
-        while (d < dim) { dot += v(d).toDouble * hp(t)(p)(d); d += 1 }
-        if (dot > 0) sig |= (1 << p)
-        p += 1
-      }
-      sig
-    }
-    val ds = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-      .as[(Long, Array[Float])]
-    def sigRows(in: org.apache.spark.sql.Dataset[(Long, Array[Float])]) =
-      in.flatMap { case (id, v) =>
-        (0 until tables).iterator.map(t => (id, t, signature(v, t)))
-      }
-    val bucketed = sigRows(ds).toDF("vec_id", "table", "sig")
+  def annLsh(embeddings: DataFrame): DataFrame = {
+    val ds = vectors(embeddings)
+    val bucketed = hyperplaneSigs(ds).toDF("vec_id", "table", "sig")
     // query signatures from the FILTERED vectors (a column predicate, so
     // the scan pushes it down), not a filter of the corpus signature table:
     // the corpus pass then has a single consumer and runs once, and at
-    // scale the query side reads nQueries vectors instead of re-bucketing
-    // the corpus (the same shape annIvf already uses)
-    val queries = sigRows(ds.where(F.col("vec_id") < nQueries))
+    // scale the query side reads `Queries` vectors instead of re-bucketing
+    // the corpus (the same shape annIvf uses)
+    val queries = hyperplaneSigs(ds.where(F.col("vec_id") < Queries))
       .toDF("query_id", "table", "sig")
     val cand = queries.join(bucketed, Seq("table", "sig"))
       .where(F.col("query_id") =!= F.col("vec_id"))
       .select("query_id", "vec_id").distinct()
-    val vecs = ds.toDF("vec_id", "embedding")
-    val qvecs = ds.toDF("query_id", "qembedding")
-    // native codegen'd expression, not a UDF — keeps the scoring inside the
-    // whole-stage span and reads ArrayData in place
-    graft.functions.CosineSimilarity.register(spark)
-    val scored = cand
-      .join(F.broadcast(qvecs.where(F.col("query_id") < nQueries)), "query_id")
-      .join(vecs, "vec_id")
-      .withColumn("cosine", F.expr("cosine_sim(qembedding, embedding)"))
-    val w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    scored.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
+    topKByCosine(ds, cand)
   }
 
   /** Deterministic IVF centroids — the same splitmix64 family as
@@ -478,17 +503,17 @@ object TrainingOps {
   }
 
   /** Lloyd's trainer for the IVF coarse quantizer — the offline job the
-    * deterministic seed matrix stood in for. Seeds = `centroids(nlist,
-    * dim)`; each iteration assigns every vector to its nearest cell under
+    * deterministic seed matrix stood in for. Seeds = `centroids(NList,
+    * Dim)`; each iteration assigns every vector to its nearest cell under
     * the SAME argmax-dot rule retrieval uses, then recomputes each cell as
     * the element-wise mean of its members (an empty cell keeps its previous
     * position).
     *
     * Scale shape: one narrow scan per iteration. The mean is a columnar
     * `posexplode` + partial-aggregated `avg` per (cell, dimension) — rows
-    * crossing the shuffle are capped at partitions × nlist × dim partials,
-    * never the corpus — and the driver collect is exactly nlist × dim
-    * means. No vector ever crosses an exchange. `iters` is FIXED (not
+    * crossing the shuffle are capped at partitions × NList × Dim partials,
+    * never the corpus — and the driver collect is exactly NList × Dim
+    * means. No vector ever crosses an exchange. `Iters` is FIXED (not
     * convergence-tested) so the run is deterministic and the relational
     * oracle can unroll the same number of steps.
     *
@@ -497,18 +522,12 @@ object TrainingOps {
     * 1e-6 makes the (engine-dependent) summation order unobservable while
     * leaving the quantizer's geometry intact.
     */
-  def trainIvfCentroids(
-      embeddings: DataFrame,
-      nlist: Int = 16,
-      iters: Int = 2,
-      dim: Int = 64
-  ): Array[Array[Double]] = {
+  def trainIvfCentroids(embeddings: DataFrame): Array[Array[Double]] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val ds = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-      .as[(Long, Array[Float])]
-    var cs = centroids(nlist, dim)
-    for (_ <- 0 until iters) {
+    val ds = vectors(embeddings)
+    var cs = centroids(NList, Dim)
+    for (_ <- 0 until Iters) {
       val cur = cs
       val means = ds.map { case (_, v) => (nearestCells(cur, v, 1)(0), v) }
         .toDF("cell", "emb")
@@ -516,7 +535,7 @@ object TrainingOps {
         .groupBy("cell", "pos")
         .agg(F.round(F.avg(F.col("x").cast("double")), 6).as("m"))
         .collect()
-      val next = Array.tabulate(nlist, dim)((c, d) => cur(c)(d))
+      val next = Array.tabulate(NList, Dim)((c, d) => cur(c)(d))
       means.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
       cs = next
     }
@@ -524,95 +543,47 @@ object TrainingOps {
   }
 
   /** IVF (inverted-file) ANN — the other classic scale path beside LSH:
-    * every corpus vector is assigned to its single nearest centroid cell
-    * (argmax dot product, ties to the lowest cell id — one narrow pass,
-    * centroids in the task closure); a query probes its `nprobe` nearest
-    * cells and exact cosine runs only against those cells' vectors. The
-    * candidate step is a cell-id equijoin (the probe side is nQueries ×
-    * nprobe rows — broadcast), so the scored set is ~|corpus|·nprobe/nlist
+    * every corpus vector is assigned to its single nearest centroid cell of
+    * `cents` (argmax dot product, ties to the lowest cell id — one narrow
+    * pass, centroids in the task closure); a query probes its `NProbe`
+    * nearest cells and exact cosine runs only against those cells' vectors.
+    * The candidate step is a cell-id equijoin (the probe side is Queries ×
+    * NProbe rows — broadcast), so the scored set is ~|corpus|·NProbe/NList
     * instead of N×Q; a skewed cell is ordinary join skew, handled by AQE.
     */
-  def annIvf(
-      embeddings: DataFrame,
-      nQueries: Int = 10,
-      k: Int = 10,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      cents: Array[Array[Double]] = null  // null → the deterministic seeds
-  ): DataFrame = {
+  def annIvf(embeddings: DataFrame, cents: Array[Array[Double]] = centroids(NList, Dim)): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dim = 64
-    val cs = Option(cents).getOrElse(centroids(nlist, dim))
-    val ds = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-      .as[(Long, Array[Float])]
-    val assigned = ds.map { case (id, v) => (id, nearestCells(cs, v, 1)(0)) }
+    val ds = vectors(embeddings)
+    val assigned = ds.map { case (id, v) => (id, nearestCells(cents, v, 1)(0)) }
       .toDF("vec_id", "cell")
-    val probed = ds.filter(_._1 < nQueries)
-      .flatMap { case (id, v) => nearestCells(cs, v, nprobe).iterator.map(c => (id, c)) }
+    // a column predicate, so the scan pushes it down
+    val probed = ds.where(F.col("vec_id") < Queries)
+      .flatMap { case (id, v) => nearestCells(cents, v, NProbe).iterator.map(c => (id, c)) }
       .toDF("query_id", "cell")
     val cand = F.broadcast(probed).join(assigned, Seq("cell"))
       .where(F.col("query_id") =!= F.col("vec_id"))
       .select("query_id", "vec_id")
-    val vecs = ds.toDF("vec_id", "embedding")
-    val qvecs = ds.toDF("query_id", "qembedding")
-    graft.functions.CosineSimilarity.register(spark)
-    val scored = cand
-      .join(F.broadcast(qvecs.where(F.col("query_id") < nQueries)), "query_id")
-      .join(vecs, "vec_id")
-      .withColumn("cosine", F.expr("cosine_sim(qembedding, embedding)"))
-    val w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    scored.withColumn("rank", F.row_number().over(w))
-      .where(F.col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
+    topKByCosine(ds, cand)
   }
 
   /** Embedding-cosine near-dup: candidate pairs share a hyperplane-LSH
     * bucket in any table (the same signatures annLsh uses), then exact
-    * cosine ≥ threshold on candidates only — never the N² cross product.
+    * cosine ≥ `DupCosine` on candidates only — never the N² cross product.
     * Identical vectors always share every bucket, so recall for exact
     * duplicates is 1.
     */
-  def dedupEmbedding(
-      embeddings: DataFrame,
-      threshold: Double = 0.95,
-      planes: Int = 8,
-      tables: Int = 4
-  ): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val dim = 64
-    val hp = hyperplanes(tables, planes, dim)
-    val ds = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-      .as[(Long, Array[Float])]
-    val bucketed = ds.flatMap { case (id, v) =>
-      (0 until tables).iterator.map { t =>
-        var sig = 0
-        var p = 0
-        while (p < planes) {
-          var dot = 0.0
-          var d = 0
-          while (d < dim) { dot += v(d).toDouble * hp(t)(p)(d); d += 1 }
-          if (dot > 0) sig |= (1 << p)
-          p += 1
-        }
-        (id, t, sig)
-      }
-    }.toDF("vec_id", "table", "sig")
-    // shuffle-hash hint: one canonical (table, sig) exchange feeds both
-    // sides — the bucketing flatMap executes once, lineage intact
-    val cand = bucketed.as("l").join(bucketed.as("r").hint("shuffle_hash"),
-        F.col("l.table") === F.col("r.table") && F.col("l.sig") === F.col("r.sig") &&
-        F.col("l.vec_id") < F.col("r.vec_id"))
-      .select(F.col("l.vec_id").as("a"), F.col("r.vec_id").as("b"))
-      .distinct()
-    val vecs = embeddings.select(F.col("vec_id").cast("long"), F.col("embedding"))
-    graft.functions.CosineSimilarity.register(spark)
+  def dedupEmbedding(embeddings: DataFrame): DataFrame = {
+    val ds = vectors(embeddings)
+    val cand = bucketPairs(hyperplaneSigs(ds).toDF("vec_id", "table", "sig"),
+      "vec_id", Seq("table", "sig"))
+    val vecs = ds.toDF()
+    graft.functions.CosineSimilarity.register(embeddings.sparkSession)
     cand
       .join(vecs.withColumnRenamed("vec_id", "a").withColumnRenamed("embedding", "ea"), "a")
       .join(vecs.withColumnRenamed("vec_id", "b").withColumnRenamed("embedding", "eb"), "b")
       .withColumn("cosine", F.expr("cosine_sim(ea, eb)"))
-      .where(F.col("cosine") >= threshold)
+      .where(F.col("cosine") >= DupCosine)
       .select("a", "b", "cosine")
   }
 

@@ -54,7 +54,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
     // 16 cells settle onto cluster mass, so a query's probe set covers its
     // own cluster
     val trained = recall(topk(TrainingOps.annIvf(corpus,
-      cents = TrainingOps.trainIvfCentroids(corpus, nlist = 16, iters = 2))))
+      cents = TrainingOps.trainIvfCentroids(corpus))))
     info(f"recall@10 vs brute: annLsh=$lsh%.3f annIvf=$ivf%.3f annIvfTrained=$trained%.3f")
     // floors the deterministic buckets actually meet, with headroom for
     // future parameter tweaks but not for a broken bucketing scheme
@@ -65,20 +65,32 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
     assert(trained >= 0.8, f"annIvf trained recall@10 $trained%.3f below 0.8")
   }
 
-  test("annLsh pushes the query-side vec_id predicate into the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("annlsh").toString
+  /** The query-side predicate of `op` reaches the scan: of the scans under
+    * its `passes` mapPartitions passes, exactly one carries vec_id < 10.
+    */
+  private def assertQueryBoundPushed(op: DataFrame => DataFrame, passes: Int): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("annpush").toString
     try {
       clusteredCorpus().write.mode("overwrite").parquet(dir)
-      val plan = TrainingOps.annLsh(spark.read.parquet(dir)).queryExecution.sparkPlan
-      // the two signature passes (corpus and queries) each sit on their own
-      // scan; only the query side's may carry the vec_id bound
+      val plan = op(spark.read.parquet(dir)).queryExecution.sparkPlan
       val sigScans = plan.collect { case m: MapPartitionsExec =>
         m.collect { case s: FileSourceScanExec => s }
       }.flatten
-      assert(sigScans.size == 2, plan.treeString)
+      assert(sigScans.size == passes, plan.treeString)
       val pushed = sigScans.map(_.metadata.getOrElse("PushedFilters", ""))
       assert(pushed.count(_.contains("LessThan(vec_id,10)")) == 1, pushed.mkString("; "))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("annLsh pushes the query-side vec_id predicate into the scan") {
+    // the two signature passes (corpus and queries) each sit on their own
+    // scan; only the query side's may carry the vec_id bound
+    assertQueryBoundPushed(TrainingOps.annLsh(_), passes = 2)
+  }
+
+  test("annIvf pushes the query-side vec_id predicate into the scan") {
+    // the probe pass is the one mapPartitions (cell assignment is a map)
+    assertQueryBoundPushed(TrainingOps.annIvf(_), passes = 1)
   }
 
   test("recall@10 on the near-uniform testdata embeddings (reported, loose floor)") {
@@ -96,7 +108,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
     val lsh = recall(topk(TrainingOps.annLsh(corpus)))
     val ivf = recall(topk(TrainingOps.annIvf(corpus)))
     val trained = recall(topk(TrainingOps.annIvf(corpus,
-      cents = TrainingOps.trainIvfCentroids(corpus, nlist = 16, iters = 2))))
+      cents = TrainingOps.trainIvfCentroids(corpus))))
     info(f"uniform-corpus recall@10 vs brute: annLsh=$lsh%.3f annIvf=$ivf%.3f " +
       f"annIvfTrained=$trained%.3f")
     // measured on this corpus: annLsh 0.040 (≈16 candidates/query out of

@@ -61,26 +61,12 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
         s"no shuffled probe join on obj=url in plan:\n$plan")
       assert(!plan.contains("BroadcastHashJoin [obj"),
         s"probe join still broadcast with threshold disabled:\n$plan")
-      // explicit small-fleet escape hatch still forces the broadcast
-      val hinted = KgEngine.applyUrlProbes(canon, probes,
-          broadcastProbes = Some(true))
-        .queryExecution.executedPlan.toString
-      assert(hinted.contains("BroadcastHashJoin [obj"),
-        s"broadcastProbes=Some(true) did not force broadcast:\n$hinted")
-      // the fleet-scale choice governs the browse-sync side too: under
-      // Some(false) NO join in the operator may broadcast (the sync table
-      // is one row per valid-probed subject — it scales with the fleet)
-      val fleet = KgEngine.applyUrlProbes(canon, probes,
-          broadcastProbes = Some(false))
-        .queryExecution.executedPlan.toString
-      assert(!fleet.contains("BroadcastHashJoin"),
-        s"broadcastProbes=Some(false) still broadcasts a fleet-scaled side:\n$fleet")
     }
     // results are join-strategy-invariant
-    val broadcastRows = KgEngine.applyUrlProbes(canon, probes,
-      broadcastProbes = Some(true)).collect().toSet
-    val shuffledRows = KgEngine.applyUrlProbes(canon, probes,
-      broadcastProbes = Some(false)).collect().toSet
+    val broadcastRows = KgEngine.applyUrlProbes(canon, probes).collect().toSet
+    val shuffledRows = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      KgEngine.applyUrlProbes(canon, probes).collect().toSet
+    }
     assert(broadcastRows == shuffledRows)
   }
 

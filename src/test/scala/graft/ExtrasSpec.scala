@@ -103,6 +103,24 @@ class ExtrasSpec extends AnyFunSuite with SparkSuite {
     assert(!plan.contains("ScalaUDF"), "UDF found in ANN plan")
   }
 
+  test("cosine_sim and browse_url_from_repo register once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    for ((name, register) <- Seq[(String, org.apache.spark.sql.SparkSession => Unit)](
+        "cosine_sim" -> graft.functions.CosineSimilarity.register,
+        "browse_url_from_repo" -> graft.functions.BrowseUrlFromRepo.register)) {
+      val id = FunctionIdentifier(name)
+      register(spark)
+      val (builder, info) = (registry.lookupFunctionBuilder(id), registry.lookupFunction(id))
+      register(spark)
+      // a re-registration stores a fresh entry and logs a WARN per call.
+      // The builder is a non-capturing lambda, one instance either way; the
+      // ExpressionInfo is built per registration, so it shows the repeat
+      assert(registry.lookupFunctionBuilder(id).get eq builder.get, name)
+      assert(registry.lookupFunction(id).get eq info.get, name)
+    }
+  }
+
   test("minhash near-dup pairs: one edited word is found, unrelated text is not") {
     val words = (0 until 100).map(i => s"w$i")
     val base = words.mkString(" ")
