@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
-import graft.spark.{BucketedStore, KgEngine, SparkRuntime, SynthPages, TrainingOps}
+import graft.spark.{BucketedStore, KgEngine, KgJob, SparkRuntime, SynthPages, TrainingOps}
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops). EVERY query has DuckDB oracle
@@ -98,7 +98,6 @@ object SparkEntry {
     */
   private def fullEnrich(s: SparkSession, dir: String): DataFrame = {
     val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
-    import s.implicits._
     // composing enrichAll over a LIVE extraction: the enrichment references
     // canon three times (existing stream, completeness gate, homepage
     // argmax). A subj repartition alone shares nothing — per-consumer
@@ -107,7 +106,17 @@ object SparkEntry {
     // AQE). canonOnce materializes it inside the timed query, once per
     // invocation; in production the stored canon table plays that role.
     val canon = canonOnce(s, pages)
-    val registry = t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
+    KgEngine.enrichAll(canon, pypiRegistry(s, dir),
+      supportedFields = Seq("Version"), maxCertainty = 1,
+      fetched = fetchedHomepages(s, dir), probes = homepageProbes(s, dir)).toDF()
+  }
+
+  /** The parsed pypi registry of the enrichment queries as (subj, pred,
+    * obj): every subject's registry payload claims Version 9.9.9.
+    */
+  private def pypiRegistry(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
       .flatMap { id =>
         val subj = "https://replay.invalid/proj" + id + "/"
         graft.registry.RegistryParsers
@@ -116,24 +125,42 @@ object SparkEntry {
           .map(d => (subj, d.field, graft.spark.Model.objForms(d.value)._1))
       }
       .toDF("subj", "pred", "obj")
-    val fetched = t(s, dir, "documents").select(
+  }
+
+  /** The crawled homepage corpus (url, html): one page per doc at
+    * https://proj<id>.example.com/, linking a GitHub repository.
+    */
+  private def fetchedHomepages(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),
       F.concat(
         F.lit("<html><body><p>Project page.</p><a href=\"https://github.com/org"),
         F.pmod(F.col("doc_id"), F.lit(97)), F.lit("/proj"), F.col("doc_id"),
         F.lit("\">GitHub</a></body></html>")).as("html"))
+
+  /** Homepage probes (url, status, canonical_url): flavor-0 homepages probe
+    * invalid, flavor-6 homepages probe valid, every other url is unprobed.
+    */
+  private def homepageProbes(s: SparkSession, dir: String): DataFrame = {
     val hp = F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/"))
-    val probes = t(s, dir, "documents")
+    t(s, dir, "documents")
       .where(F.pmod(F.col("doc_id"), F.lit(8)).isin(0, 6))
       .select(
         hp.as("url"),
         F.when(F.pmod(F.col("doc_id"), F.lit(8)) === 0, "invalid")
           .otherwise("valid").as("status"),
         hp.as("canonical_url"))
-    KgEngine.enrichAll(canon, registry,
-      supportedFields = Seq("Version"), maxCertainty = 1,
-      fetched = fetched, probes = probes).toDF()
   }
+
+  /** The canon-row builder of the dispatch queries: one fixture-origin row
+    * (subj, pred, obj, cert) per doc that matches `filter`.
+    */
+  private def fixtureRow(docs: DataFrame, subj: org.apache.spark.sql.Column)(
+      pred: String, obj: org.apache.spark.sql.Column,
+      cert: Int, filter: org.apache.spark.sql.Column): DataFrame =
+    docs.where(filter).select(subj.as("subj"), F.lit(pred).as("pred"),
+      obj.as("obj"), F.lit("").as("obj_json"),
+      F.lit(cert).as("certainty"), F.lit("fixture").as("origin"))
 
   /** The churn fixture of the `kg_incremental*` queries, keyed by
     * doc_id % 10 (`m`):
@@ -671,17 +698,7 @@ object SparkEntry {
       // Likely; everything else keeps its extracted Version
       val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
       val canon = canonOnce(s, pages)
-      import s.implicits._
-      val registry = t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          val subj = "https://replay.invalid/proj" + id + "/"
-          graft.registry.RegistryParsers
-            .parsePypi(graft.spark.SynthRegistry.pypi(id, "9.9.9"))
-            .getOrElse(Nil)
-            .map(d => (subj, d.field, graft.spark.Model.objForms(d.value)._1))
-        }
-        .toDF("subj", "pred", "obj")
-      KgEngine.enrichFromRegistry(canon, registry,
+      KgEngine.enrichFromRegistry(canon, pypiRegistry(s, dir),
           supportedFields = Seq("Version"), maxCertainty = 1)
         .toDF()
         .where(F.col("pred") === "Version")
@@ -701,13 +718,7 @@ object SparkEntry {
       // higher-certainty extraction wins the re-argmax
       val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
       val canon = canonOnce(s, pages)
-      val fetched = t(s, dir, "documents").select(
-        F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),
-        F.concat(
-          F.lit("<html><body><p>Project page.</p><a href=\"https://github.com/org"),
-          F.pmod(F.col("doc_id"), F.lit(97)), F.lit("/proj"), F.col("doc_id"),
-          F.lit("\">GitHub</a></body></html>")).as("html"))
-      KgEngine.enrichFromHomepages(canon, fetched).toDF()
+      KgEngine.enrichFromHomepages(canon, fetchedHomepages(s, dir)).toDF()
         .where(F.col("pred") === "Repository")
         .select("subj", "obj", "certainty")
         .orderBy("subj")
@@ -718,15 +729,7 @@ object SparkEntry {
       // (promoted Likely → Certain), everything else goes unprobed
       val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
       val canon = canonOnce(s, pages)
-      val docs = t(s, dir, "documents")
-      val hp = F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/"))
-      val probes = docs.where(F.pmod(F.col("doc_id"), F.lit(8)).isin(0, 6))
-        .select(
-          hp.as("url"),
-          F.when(F.pmod(F.col("doc_id"), F.lit(8)) === 0, "invalid")
-            .otherwise("valid").as("status"),
-          hp.as("canonical_url"))
-      KgEngine.applyUrlProbes(canon, probes).toDF()
+      KgEngine.applyUrlProbes(canon, homepageProbes(s, dir)).toDF()
         .where(F.col("pred") === "Homepage")
         .select("subj", "obj", "certainty")
         .orderBy("subj")
@@ -872,11 +875,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val m = F.pmod(F.col("doc_id"), F.lit(4))
       val subj = F.concat(F.lit("arch:proj"), F.col("doc_id"))
-      def row(pred: String, obj: org.apache.spark.sql.Column,
-              cert: Int, filter: org.apache.spark.sql.Column) =
-        docs.where(filter).select(subj.as("subj"), F.lit(pred).as("pred"),
-          obj.as("obj"), F.lit("").as("obj_json"),
-          F.lit(cert).as("certainty"), F.lit("fixture").as("origin"))
+      val row = fixtureRow(docs, subj) _
       val T = F.lit(true)
       val pn = F.concat(F.lit("proj"), F.col("doc_id"))
       val canon = row("Archive", F.lit("SourceForge"), 1, T)
@@ -921,11 +920,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val m = F.pmod(F.col("doc_id"), F.lit(4))
       val subj = F.concat(F.lit("ext:proj"), F.col("doc_id"))
-      def row(pred: String, obj: org.apache.spark.sql.Column,
-              cert: Int, filter: org.apache.spark.sql.Column) =
-        docs.where(filter).select(subj.as("subj"), F.lit(pred).as("pred"),
-          obj.as("obj"), F.lit("").as("obj_json"),
-          F.lit(cert).as("certainty"), F.lit("fixture").as("origin"))
+      val row = fixtureRow(docs, subj) _
       val pn = F.concat(F.lit("proj"), F.col("doc_id"))
       def keep(tag: String) =
         F.concat(F.lit(s"https://keep.example.com/$tag"), F.col("doc_id"))
@@ -986,7 +981,7 @@ object SparkEntry {
         .unionByName(extra(".git/config", F.concat(
           F.lit("[remote \"upstream\"]\n\turl = https://anongit.kde.org/proj"),
           F.col("doc_id"), F.lit(".git\n"))))
-      val lin = KgEngine.lineage(s, pages).toDF()
+      val lin = KgEngine.lineage(pages, KgJob.DefaultBuckets)
         .groupBy()
         .agg(F.sum("input_rows").as("input_rows"), F.sum("emitted").as("emitted"))
       val stats = KgEngine

@@ -400,23 +400,6 @@ object KgEngine {
 
   def nodes(canon: Dataset[CanonTriple]): DataFrame = nodesDf(edges(canon))
 
-  /** Per-partition lineage row: (partition_id, input_rows, emitted). */
-  final case class LineageRow(partition_id: Int, input_rows: Long, emitted: Long)
-
-  def lineage(spark: SparkSession, pages: DataFrame): Dataset[LineageRow] = {
-    import spark.implicits._
-    pages.select(F.col("url")).as[String].mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var n = 0L
-      var emitted = 0L
-      it.foreach { url =>
-        n += 1
-        if (splitSubject(url).exists(sr => isCandidate(sr._2))) emitted += 1
-      }
-      Iterator.single(LineageRow(pid, n, emitted))
-    }
-  }
-
   /** Entity linking against a registry that fits in executor memory: a plain
     * broadcast hash join. A broadcast join has no key-based shuffle, so it is
     * skew-immune by construction — no salting needed (or possible).
@@ -483,14 +466,23 @@ object KgEngine {
       .select("term", "entity_id", "jaccard")
   }
 
-  /** Distributed `extend_from_external_guesser` (src/lib.rs:2299-2324): the
-    * per-subject "possible_fields_missing" gate becomes an ANTI-JOIN — the
-    * registry's datums are kept only for subjects where some supported field
-    * is still absent or below Certain, then merged through the usual lattice
-    * (existing data of equal or higher certainty wins, so `maxCertainty`-
-    * capped registry rows can only fill gaps). At crawl scale the gate is
-    * what keeps the enrichment join proportional to the incomplete subjects
-    * rather than the whole graph.
+  // ---------- extend stage: external sources ----------
+  // The reference runs every external source through one rule
+  // (`possible_fields_missing` + `extend_from_external_guesser`,
+  // src/lib.rs:2284-2324): a source is consulted for a subject only while
+  // some field it supports is absent or below Certain, and its datums enter
+  // the lattice at the source's certainty cap. Relationally the gate is an
+  // ANTI-JOIN against the subjects complete for the source's fields
+  // (`completeFor`), so the enrichment work stays proportional to the
+  // incomplete subjects rather than the whole graph. The subject-keyed
+  // registry (`gatedRegistryRaw`) and the payload providers of the archive
+  // and external-directory dispatches (`consult`) all gate this way, and
+  // every staged operator ends in `merge`: one lattice argmax in which
+  // existing data of equal or higher certainty wins, so capped rows can
+  // only fill gaps.
+
+  /** Subject-keyed registry enrichment: registry rows for `supportedFields`
+    * enter the lattice at `maxCertainty`, behind the completeness gate.
     */
   def enrichFromRegistry(
       canon: Dataset[CanonTriple],
@@ -498,21 +490,43 @@ object KgEngine {
       supportedFields: Seq[String],
       maxCertainty: Int
   ): Dataset[CanonTriple] = {
-    import canon.sparkSession.implicits._
     val cd = canon.toDF()
-    canonicalize(canonAsRaw(cd)
-        .unionByName(gatedRegistryRaw(cd, registry, supportedFields, maxCertainty))
-        .as[RawTriple])
+    merge(cd, Seq(gatedRegistryRaw(cd, registry, supportedFields, maxCertainty)))
+  }
+
+  /** The staged operators' common end: the canon as existing data (rank 0)
+    * unions the enrichment `streams` into the one lattice argmax.
+    */
+  private def merge(cd: DataFrame, streams: Seq[DataFrame]): Dataset[CanonTriple] = {
+    import cd.sparkSession.implicits._
+    canonicalize(streams.foldLeft(canonAsRaw(cd))(_.unionByName(_)).as[RawTriple])
       .as[CanonTriple]
   }
 
-  /** The completeness gate + registry projection shared by
-    * `enrichFromRegistry` and `enrichAll` — ONE definition, so the staged
-    * and fused enrichment can never fork semantics: registry rows survive
-    * only for subjects where some supported field is still below Certain
-    * (the anti-join that keeps the work proportional to the incomplete
-    * subjects); structured payloads keep their obj_json when the registry
-    * table carries the column.
+  /** The `possible_fields_missing` gate: ONE aggregate of each subject's set
+    * of `unionFields` held at Certain, and per field list the subjects that
+    * hold all of it at Certain. Each field list filters ABOVE the one (subj)
+    * exchange, so the gates of one dispatch canonicalize to identical
+    * exchange subtrees and ReuseExchange runs the canon scan and shuffle
+    * once for all of them (plan-asserted in ArchiveDispatchSpec and
+    * ExternalDirectorySpec).
+    */
+  private def completeFor(cd: DataFrame, unionFields: Seq[String]): Seq[String] => DataFrame = {
+    val certainSets = cd
+      .where(F.col("pred").isin(unionFields.map(x => x: Any): _*) &&
+             F.col("certainty") === Certainty.Certain)
+      .groupBy("subj").agg(F.collect_set("pred").as("certain_preds"))
+    fields => certainSets
+      .where(F.size(F.array_intersect(F.col("certain_preds"),
+        F.lit(fields.toArray))) === fields.size)
+      .select("subj")
+  }
+
+  /** The gated registry stream shared by `enrichFromRegistry` and
+    * `enrichAll`, so the staged and fused enrichment cannot fork semantics:
+    * registry rows for the supported fields of incomplete subjects, at the
+    * registry's cap; structured payloads keep their obj_json when the
+    * registry table carries the column.
     */
   private[spark] def gatedRegistryRaw(
       cd: DataFrame,
@@ -520,19 +534,12 @@ object KgEngine {
       supportedFields: Seq[String],
       maxCertainty: Int
   ): DataFrame = {
-    val fieldList = supportedFields.map(x => x: Any)
-    val complete = cd
-      .where(F.col("pred").isin(fieldList: _*) &&
-             F.col("certainty") === Certainty.Certain)
-      .groupBy("subj").agg(F.countDistinct("pred").as("n_certain"))
-      .where(F.col("n_certain") === supportedFields.size)
-      .select("subj")
     val regJson =
       if (registry.columns.contains("obj_json")) F.col("obj_json")
       else F.lit("")
     registry
-      .where(F.col("pred").isin(fieldList: _*))
-      .join(complete, Seq("subj"), "left_anti")
+      .where(F.col("pred").isin(supportedFields.map(x => x: Any): _*))
+      .join(completeFor(cd, supportedFields)(supportedFields), Seq("subj"), "left_anti")
       .select(
         F.col("subj"), F.col("pred"), F.col("obj"), regJson.as("obj_json"),
         F.lit(maxCertainty).as("certainty"),
@@ -540,149 +547,141 @@ object KgEngine {
         F.lit(1).as("guesser_rank"), F.lit(0).as("seq"))
   }
 
-  /** A provider branch of the extend stage's archive dispatch
-    * (/root/reference/src/lib.rs:3555-3650): subjects route to a provider by
-    * their OWN Archive field; `projectField` names the payload key;
-    * `supportedFields` drive the per-provider `possible_fields_missing`
-    * gate; items enter the lattice at the provider's max certainty —
-    * `Certainty.Certain` for the ThirdPartyRepository providers
-    * (haskell.rs:216, rust.rs:512, php.rs:122), or the Archive datum's own
-    * certainty for SourceForge (lib.rs:3567-3576 passes `sf_certainty`).
+  /** A payload provider of the extend stage's archive dispatch
+    * (the reference's src/lib.rs:3555-3650) or external-directory dispatch
+    * (lib.rs:3652-3694). `source` is the payload table's routing value (the
+    * archive or directory name). Each payload runs through `parsers`, the
+    * RegistryParsers dialects in order. `supportedFields` drive the
+    * provider's gate. Items enter the lattice at `maxCertainty`, or at the
+    * routing Archive datum's own certainty when it is None (SourceForge:
+    * lib.rs:3567-3576 passes `sf_certainty`). An archive provider's payload
+    * key is the subject's `projectField`.
     */
-  final case class ArchiveProvider(
-      archive: String,
-      projectField: String,
-      parserKind: String,
+  final case class Provider(
+      source: String,
+      parsers: Seq[String],
       supportedFields: Seq[String],
-      certaintyFromArchive: Boolean)
+      maxCertainty: Option[Int],
+      projectField: String = "")
 
-  val archiveProviders: Seq[ArchiveProvider] = Seq(
-    ArchiveProvider("SourceForge", "SourceForge-Project", "sourceforge",
+  /** The archive dispatch's providers. The ThirdPartyRepository providers
+    * cap at Certain (haskell.rs:216, rust.rs:512, php.rs:122).
+    */
+  val archiveProviders: Seq[Provider] = Seq(
+    Provider("SourceForge", Seq("sourceforge"),
       Seq("Homepage", "Name", "Repository", "Bug-Database"),
-      certaintyFromArchive = true),                       // lib.rs:3556-3576
-    ArchiveProvider("Hackage", "Hackage-Package", "hackage",
+      None, "SourceForge-Project"),                        // lib.rs:3556-3576
+    Provider("Hackage", Seq("hackage"),
       Seq("Homepage", "Name", "Repository", "Maintainer", "Copyright",
         "License", "Bug-Database"),
-      certaintyFromArchive = false),                      // lib.rs:3578-3600
-    ArchiveProvider("crates.io", "Cargo-Crate", "crates",
+      Some(Certainty.Certain), "Hackage-Package"),          // lib.rs:3578-3600
+    Provider("crates.io", Seq("crates"),
       Seq("Homepage", "Name", "Repository", "Version", "Summary"),
-      certaintyFromArchive = false),                      // lib.rs:3602-3626
-    ArchiveProvider("Pecl", "Pecl-Package", "pecl",
+      Some(Certainty.Certain), "Cargo-Crate"),             // lib.rs:3602-3626
+    Provider("Pecl", Seq("pecl"),
       Seq("Homepage", "Repository", "Bug-Database"),
-      certaintyFromArchive = false))                      // lib.rs:3628-3650
+      Some(Certainty.Certain), "Pecl-Package"))            // lib.rs:3628-3650
 
-  /** Archive-dispatch registry enrichment — the composed form of the extend
-    * stage's provider branches: a payload side table keyed by
-    * `(archive, project)` (the natural shape of a crawled registry-API
-    * snapshot) routes each subject through `RegistryParsers` BY ITS OWN
-    * derived Archive / *-Project fields (e.g. the ones `extendSfArchive`
-    * derives), behind each provider's `possible_fields_missing` anti-join
-    * gate. Parsed datums enter the one lattice argmax exactly like the
-    * subject-keyed registry stream (rank 1, emission-order seq, existing
-    * data wins ties), so a payload can only fill gaps below the provider's
-    * certainty. SourceForge consults the subject's Name as the subproject
-    * filter, exactly like `SourceForge::extend_metadata` (lib.rs:2363-2372).
+  /** The external-directory dispatch's providers, in the reference's
+    * consultation order (lib.rs:3663-3692), which becomes `guesser_rank` so
+    * an earlier provider's value wins certainty ties, exactly like the
+    * reference's sequential insert-only-if-more-certain updates. Caps:
+    * Possible for Launchpad (lib.rs:3745-3746), AUR (arch.rs:189-195) and
+    * Gobo (gobo.rs:160-166), Confident for Repology (lib.rs:3768-3770).
+    * Gobo payloads are the Recipe and Resources/Description files
+    * concatenated; the two line dialects are disjoint, so one blob through
+    * both parsers reproduces `guess_from_gobo`'s datum concatenation
+    * (gobo.rs:73-133).
+    */
+  val externalDirectoryProviders: Seq[Provider] = Seq(
+    Provider("launchpad", Seq("launchpad"),
+      Seq("Homepage", "Repository", "Name", "Download"), Some(Certainty.Possible)),
+    Provider("aur", Seq("aur"),
+      Seq("Homepage", "Repository"), Some(Certainty.Possible)),
+    Provider("gobo", Seq("gobo-recipe", "gobo-description"),
+      Seq("Homepage", "Repository"), Some(Certainty.Possible)),
+    Provider("repology", Seq("repology"),
+      Seq("Homepage", "License", "Summary", "Download"), Some(Certainty.Confident)))
+
+  /** The consult pass of both dispatches: `keyed` subjects (subj, key,
+    * name, cap) minus the gate-complete ones, joined on `key` to the
+    * provider's rows of `payloads` (source, key, payload). Only consulted
+    * payloads are parsed, each once, through the provider's dialects (the
+    * SourceForge dialect filters by the subject's Name, like
+    * `SourceForge::extend_metadata`, lib.rs:2363-2372). Datums leave as raw
+    * rows at the row's cap (extend_from_external_guesser overrides each
+    * item's certainty, lib.rs:2314-2321), with `origin`, tie rank `rank`
+    * and emission-order seq. A null payload consults nothing, like a null
+    * page in `scrapedDatums`.
     *
-    * Plan shape: per provider, the keyed-subject side is the tiny
-    * Archive-field subset of `canon` (pruned scans of a stored table); the
-    * payload join shuffles on (archive, project) — proportional to the
-    * incomplete subjects of that provider, never the whole graph. Parsing
-    * runs post-join, so only consulted payloads are ever parsed.
+    * Plan shape: the payload join shuffles on the key, proportional to the
+    * incomplete subjects of that provider, never the whole graph.
+    */
+  private def consult(
+      keyed: DataFrame,
+      complete: DataFrame,
+      payloads: DataFrame,
+      p: Provider,
+      origin: String,
+      rank: Int
+  ): DataFrame = {
+    import keyed.sparkSession.implicits._
+    val parsers = p.parsers
+    keyed
+      .join(complete, Seq("subj"), "left_anti")
+      .join(payloads.where(F.col("source") === p.source)
+        .select(F.col("key"), F.col("payload")), Seq("key"))
+      .select(F.col("subj"), F.col("key"), F.col("name"), F.col("cap"), F.col("payload"))
+      .as[(String, String, String, Int, String)]
+      .flatMap { case (subj, key, name, cap, payload) =>
+        val parsed =
+          if (payload == null) Nil
+          else parsers.flatMap {
+            case "sourceforge" => graft.registry.RegistryParsers
+              .parseSfJson(payload, key, Option(name)).getOrElse(Nil)
+            case kind => graft.registry.RegistryParsers
+              .parse(kind, payload).getOrElse(Nil)
+          }
+        parsed.iterator.zipWithIndex.map { case (d, i) =>
+          val (obj, objJson) = objForms(d.value)
+          (subj, d.field, obj, objJson, cap, i)
+        }
+      }
+      .toDF("subj", "pred", "obj", "obj_json", "certainty", "seq")
+      .select(F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_json"),
+        F.col("certainty"), F.lit(origin).as("origin"),
+        F.lit(rank).as("guesser_rank"), F.col("seq"))
+  }
+
+  /** Archive-dispatch registry enrichment: a payload side table keyed by
+    * `(archive, project)` (the natural shape of a crawled registry-API
+    * snapshot) is consulted for each subject BY ITS OWN Archive and
+    * `projectField` datums (e.g. the ones `extendSfArchive` derives), so a
+    * subject fans out to exactly one provider. Datums enter the lattice at
+    * rank 1, like the subject-keyed registry stream. The keyed side is the
+    * tiny Archive-field subset of `canon` (pruned scans of a stored table).
     */
   def enrichFromArchive(
       canon: Dataset[CanonTriple],
       payloads: DataFrame              // (archive, project, payload)
   ): Dataset[CanonTriple] = {
-    val spark = canon.sparkSession
-    import spark.implicits._
     val cd = canon.toDF()
+    val complete = completeFor(cd, archiveProviders.flatMap(_.supportedFields).distinct)
+    val side = payloads.select(F.col("archive").as("source"),
+      F.col("project").as("key"), F.col("payload"))
     val names = cd.where(F.col("pred") === "Name")
       .select(F.col("subj"), F.col("obj").as("name"))
-    // ONE canon-wide pass feeds every provider's possible_fields_missing
-    // gate (lib.rs:2284-2297: consult only while some supported field is
-    // absent or below Certain): aggregate each subject's set of
-    // union-supported fields held at Certain once; each branch filters
-    // ABOVE the (subj) exchange, so the four gate subtrees canonicalize
-    // identically and ReuseExchange runs the canon scan + shuffle once
-    // (plan-asserted in ArchiveDispatchSpec).
-    val unionFields = archiveProviders.flatMap(_.supportedFields).distinct
-    val certainSets = cd
-      .where(F.col("pred").isin(unionFields.map(x => x: Any): _*) &&
-             F.col("certainty") === Certainty.Certain)
-      .groupBy("subj").agg(F.collect_set("pred").as("certain_preds"))
-    val raws: Seq[DataFrame] = archiveProviders.map { p =>
-      val arch = cd
-        .where(F.col("pred") === "Archive" && F.col("obj") === p.archive)
-        .select(F.col("subj"), F.col("certainty").as("arch_cert"))
-      val proj = cd.where(F.col("pred") === p.projectField)
-        .select(F.col("subj"), F.col("obj").as("project"))
-      val complete = certainSets
-        .where(F.size(F.array_intersect(F.col("certain_preds"),
-          F.lit(p.supportedFields.toArray))) === p.supportedFields.size)
-        .select("subj")
-      val keyed = arch.join(proj, Seq("subj"))
-        .join(complete, Seq("subj"), "left_anti")
+    merge(cd, archiveProviders.map { p =>
+      val keyed = cd
+        .where(F.col("pred") === "Archive" && F.col("obj") === p.source)
+        .select(F.col("subj"),
+          p.maxCertainty.fold(F.col("certainty"))(F.lit(_)).as("cap"))
+        .join(cd.where(F.col("pred") === p.projectField)
+          .select(F.col("subj"), F.col("obj").as("key")), Seq("subj"))
         .join(names, Seq("subj"), "left")
-      val prov = p // stable reference for the closure
-      keyed
-        .join(payloads.where(F.col("archive") === p.archive)
-          .select(F.col("project"), F.col("payload")), Seq("project"))
-        .select(F.col("subj"), F.col("project"), F.col("name"),
-          F.col("arch_cert"), F.col("payload"))
-        .as[(String, String, String, Int, String)]
-        .flatMap { case (subj, project, name, archCert, payload) =>
-          val parsed = prov.parserKind match {
-            case "sourceforge" => graft.registry.RegistryParsers
-              .parseSfJson(payload, project, Option(name)).getOrElse(Nil)
-            case kind => graft.registry.RegistryParsers
-              .parse(kind, payload).getOrElse(Nil)
-          }
-          // extend_from_external_guesser overrides each item's certainty
-          // with the provider cap (lib.rs:2314-2321)
-          val cert = if (prov.certaintyFromArchive) archCert else Certainty.Certain
-          parsed.iterator.zipWithIndex.map { case (d, i) =>
-            val (obj, objJson) = objForms(d.value)
-            (subj, d.field, obj, objJson, cert, i)
-          }
-        }
-        .toDF("subj", "pred", "obj", "obj_json", "certainty", "seq")
-        .select(F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_json"),
-          F.col("certainty"), F.lit("external-registry").as("origin"),
-          F.lit(1).as("guesser_rank"), F.col("seq"))
-    }
-    canonicalize(
-      raws.foldLeft(canonAsRaw(cd))(_.unionByName(_)).as[RawTriple])
-      .as[CanonTriple]
+      consult(keyed, complete(p.supportedFields), side, p, "external-registry", rank = 1)
+    })
   }
-
-  /** A provider of the extend stage's EXTERNAL-DIRECTORY dispatch
-    * (/root/reference/src/lib.rs:3652-3694): all four providers are keyed
-    * by the subject's DEBIAN source package name (the reference reads it
-    * straight from debian/control) and capped at the provider's maximum
-    * certainty — Possible for Launchpad (lib.rs:3745-3746), AUR
-    * (arch.rs:189-195) and Gobo (gobo.rs:160-166), Confident for Repology
-    * (lib.rs:3768-3770). A provider is consulted only when its cap can meet
-    * `minimum_certainty` (lib.rs:3749-3752, 3717-3720, 3772-3775).
-    */
-  final case class ExternalDirectoryProvider(
-      directory: String,
-      supportedFields: Seq[String],
-      maxCertainty: Int)
-
-  /** Reference consultation order (lib.rs:3663-3692) — encoded into
-    * `guesser_rank` so an earlier provider's value wins certainty ties in
-    * the lattice argmax, exactly like the reference's sequential
-    * insert-only-if-more-certain updates.
-    */
-  val externalDirectoryProviders: Seq[ExternalDirectoryProvider] = Seq(
-    ExternalDirectoryProvider("launchpad",
-      Seq("Homepage", "Repository", "Name", "Download"), Certainty.Possible),
-    ExternalDirectoryProvider("aur",
-      Seq("Homepage", "Repository"), Certainty.Possible),
-    ExternalDirectoryProvider("gobo",
-      Seq("Homepage", "Repository"), Certainty.Possible),
-    ExternalDirectoryProvider("repology",
-      Seq("Homepage", "License", "Summary", "Download"), Certainty.Confident))
 
   /** The debian/control Source package name — the routing key of the
     * external-directory dispatch (lib.rs:3655-3661: a relaxed parse of
@@ -693,105 +692,39 @@ object KgEngine {
       .flatMap(graft.extract.Parsers.deb822Get(_, "Source"))
       .headOption
 
-  /** External-directory enrichment — the composed form of the extend
-    * stage's `consult_external_directory` branch (lib.rs:3652-3694): each
-    * subject's Debian source-package name (from its OWN debian/control —
-    * `sources` is (subj, package), typically derived with
-    * `debianSourceName`) routes through Launchpad, AUR, GoboLinux, and
-    * Repology IN ORDER, each behind its `possible_fields_missing` anti-join
-    * gate and skipped entirely when its certainty cap cannot meet
-    * `minimumCertainty`. Parsed datums enter the one lattice argmax at the
-    * provider cap (extend_from_external_guesser overrides item certainty,
-    * lib.rs:2318-2320), with the provider's position as `guesser_rank`, so
-    * an earlier directory's value beats a later one at equal certainty and
-    * existing data (rank 0) beats both. Gobo payloads are the Recipe and
-    * Resources/Description files concatenated — the two line dialects are
-    * disjoint, so routing one blob through both parsers reproduces
-    * `guess_from_gobo`'s datum concatenation (gobo.rs:73-133).
-    *
-    * Unlike the archive dispatch (which fans a subject to exactly one
-    * provider), every debian-keyed subject consults every open directory;
-    * plan-wise each branch still joins only that provider's payload
-    * partition against the incomplete-subject subset, shuffling on
-    * `package` — never the whole graph.
-    *
-    * Both gates are data, not config: the reference runs this branch only
-    * under `net_access && consult_external_directory` (golden tests run it
-    * off), so `consult = false` returns the canon unchanged.
+  /** External-directory enrichment, the extend stage's
+    * `consult_external_directory` branch: each subject's Debian
+    * source-package name (from its OWN debian/control; `sources` is (subj,
+    * package), typically derived with `debianSourceName`) is consulted at
+    * Launchpad, AUR, GoboLinux and Repology in order, with the provider's
+    * position as `guesser_rank` (existing data, rank 0, beats them all).
+    * A provider whose cap cannot meet `minimumCertainty` is skipped
+    * entirely (lib.rs:3749-3752, 3717-3720, 3772-3775). Unlike the archive
+    * dispatch, every debian-keyed subject consults every open directory.
+    * The reference runs this branch only under `net_access &&
+    * consult_external_directory`; a caller that does not want it does not
+    * call it.
     */
   def enrichFromExternalDirectory(
       canon: Dataset[CanonTriple],
       sources: DataFrame,              // (subj, package)
       payloads: DataFrame,             // (directory, package, payload)
-      minimumCertainty: Int = Certainty.Possible,
-      consult: Boolean = true
+      minimumCertainty: Int = Certainty.Possible
   ): Dataset[CanonTriple] = {
-    if (!consult) return canon
-    val spark = canon.sparkSession
-    import spark.implicits._
     val cd = canon.toDF()
-    // ONE canon-wide pass feeds every provider's possible_fields_missing
-    // gate (lib.rs:2284-2297: consult only while some supported field is
-    // absent or below Certain): the per-subject set of union-supported
-    // fields held at Certain aggregates once, and each branch filters
-    // ABOVE the (subj) exchange — identical exchange subtrees, so Catalyst
-    // ReuseExchange runs the canon scan + shuffle once for all four
-    // directories instead of once per branch (plan-asserted). At 100 TB
-    // the gate is the only canon-wide work in this operator; everything
-    // else joins the debian-keyed subject subset.
-    val unionFields = externalDirectoryProviders.flatMap(_.supportedFields).distinct
-    val certainSets = cd
-      .where(F.col("pred").isin(unionFields.map(x => x: Any): _*) &&
-             F.col("certainty") === Certainty.Certain)
-      .groupBy("subj").agg(F.collect_set("pred").as("certain_preds"))
-    val raws: Seq[DataFrame] = externalDirectoryProviders.zipWithIndex
-      .filter { case (p, _) => p.maxCertainty >= minimumCertainty }
-      .map { case (p, idx) =>
-        val complete = certainSets
-          .where(F.size(F.array_intersect(F.col("certain_preds"),
-            F.lit(p.supportedFields.toArray))) === p.supportedFields.size)
-          .select("subj")
-        val keyed = sources.select(F.col("subj"), F.col("package"))
-          .join(complete, Seq("subj"), "left_anti")
-        val prov = p // stable reference for the closure
-        keyed
-          .join(payloads.where(F.col("directory") === p.directory)
-            .select(F.col("package"), F.col("payload")), Seq("package"))
-          .select(F.col("subj"), F.col("payload"))
-          .as[(String, String)]
-          .flatMap { case (subj, payload) =>
-            val parsed = prov.directory match {
-              case "gobo" =>
-                graft.registry.RegistryParsers
-                  .parse("gobo-recipe", payload).getOrElse(Nil) ++
-                graft.registry.RegistryParsers
-                  .parse("gobo-description", payload).getOrElse(Nil)
-              case kind => graft.registry.RegistryParsers
-                .parse(kind, payload).getOrElse(Nil)
-            }
-            parsed.iterator.zipWithIndex.map { case (d, i) =>
-              val (obj, objJson) = objForms(d.value)
-              (subj, d.field, obj, objJson, prov.maxCertainty, i)
-            }
-          }
-          .toDF("subj", "pred", "obj", "obj_json", "certainty", "seq")
-          .select(F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_json"),
-            F.col("certainty"), F.lit("external-directory").as("origin"),
-            F.lit(1 + idx).as("guesser_rank"), F.col("seq"))
-      }
-    canonicalize(
-      raws.foldLeft(canonAsRaw(cd))(_.unionByName(_)).as[RawTriple])
-      .as[CanonTriple]
+    val complete = completeFor(cd,
+      externalDirectoryProviders.flatMap(_.supportedFields).distinct)
+    val side = payloads.select(F.col("directory").as("source"),
+      F.col("package").as("key"), F.col("payload"))
+    merge(cd, externalDirectoryProviders.zipWithIndex.collect {
+      case (p @ Provider(_, _, _, Some(cap), _), idx) if cap >= minimumCertainty =>
+        val keyed = sources.select(F.col("subj"), F.col("package").as("key"),
+          F.lit(null).cast("string").as("name"), F.lit(cap).as("cap"))
+        consult(keyed, complete(p.supportedFields), side, p,
+          "external-directory", rank = 1 + idx)
+    })
   }
 
-  /** Homepage-scrape enrichment — extrapolation rule 14 in its crawl-scale
-    * form (/root/reference/src/homepage.rs:7-56): the reference fetches each
-    * subject's Homepage and harvests Repository / Bug-Database links from the
-    * page; offline the fetches arrive as a side table of already-crawled
-    * homepages (url, html). The join keys on the Homepage triple's object, so
-    * only subjects that HAVE a homepage consult the corpus; harvested datums
-    * enter the lattice at Possible and can only fill gaps.
-    */
   /** The scrape side shared by `enrichFromHomepages` and `enrichAll`: the
     * canonical Homepage triples join the fetched corpus (only matched pages
     * are ever parsed), and each page's datums are numbered in EMISSION order
@@ -821,19 +754,22 @@ object KgEngine {
       .toDF("subj", "pred", "obj", "obj_json", "seq")
   }
 
+  /** Homepage-scrape enrichment — extrapolation rule 14 in its crawl-scale
+    * form (the reference's src/homepage.rs:7-56): the reference fetches each
+    * subject's Homepage and harvests Repository / Bug-Database links from the
+    * page; offline the fetches arrive as a side table of already-crawled
+    * homepages (url, html). The join keys on the Homepage triple's object, so
+    * only subjects that HAVE a homepage consult the corpus; harvested datums
+    * enter the lattice at Possible and can only fill gaps.
+    */
   def enrichFromHomepages(
       canon: Dataset[CanonTriple],
       fetched: DataFrame               // (url, html) crawled homepage corpus
   ): Dataset[CanonTriple] = {
-    val spark = canon.sparkSession
-    import spark.implicits._
     val cd = canon.toDF()
     val homepages = cd.where(F.col("pred") === "Homepage")
       .select(F.col("subj"), F.col("obj").as("url"))
-    canonicalize(canonAsRaw(cd)
-        .unionByName(scrapeAsRaw(scrapedDatums(spark, homepages, fetched), rank = 1))
-        .as[RawTriple])
-      .as[CanonTriple]
+    merge(cd, Seq(scrapeAsRaw(scrapedDatums(canon.sparkSession, homepages, fetched), rank = 1)))
   }
 
   /** Scraped homepage datums as a raw stream: Possible certainty, the given
@@ -1309,8 +1245,20 @@ object KgEngine {
     pages.where(!bucketOf(subjCol(F.col("url")), buckets)
       .isin(completedBuckets.map(x => x: Any): _*))
 
+  /** Page lineage per subject bucket: (bucket, input_rows, emitted), where
+    * `emitted` counts the candidate pages, from a pruned url-only scan.
+    * KgJob writes it per bucket; summed over the buckets it is the whole
+    * input's lineage.
+    */
+  def lineage(pages: DataFrame, buckets: Int): DataFrame =
+    pages.select(F.col("url"))
+      .withColumn("bucket", bucketOf(subjCol(F.col("url")), buckets))
+      .groupBy("bucket")
+      .agg(F.count(F.lit(1)).as("input_rows"),
+        F.sum(candidateUrlCol(F.col("url")).cast("long")).as("emitted"))
+
   // ---------- Catalyst forms of splitSubject / isCandidate ----------
-  // The resume filter and KgJob's lineage pass run these per input row at
+  // The resume filter and `lineage` run these per input row at
   // crawl scale; a ScalaUDF there breaks whole-stage codegen and blocks
   // filter pushdown, so the url algebra is expressed as codegen'd string
   // expressions. Equivalence with the Scala functions is property-tested

@@ -136,22 +136,16 @@ object KgJob {
       write(e, "edges")
       write(KgEngine.nodesDf(e, carry = Seq("bucket")), "nodes")
 
-      // per-bucket lineage: input pages and candidate pages from a pruned
-      // url-only scan (pure Catalyst string expressions — KgEngine.subjCol /
-      // candidateUrlCol — no ScalaUDF, the whole pass stays inside
-      // whole-stage codegen), plus the per-subject error channel (provider
-      // errors + known-bad drops) aggregated from the cached stats markers —
-      // SURVEY §1.3's lineage(partition_id, input_rows, emitted,
-      // dropped_bad, errors), keyed by bucket
+      // per-bucket lineage: input and candidate pages (KgEngine.lineage),
+      // plus the per-subject error channel (provider errors + known-bad
+      // drops) aggregated from the cached stats markers — SURVEY §1.3's
+      // lineage(partition_id, input_rows, emitted, dropped_bad, errors),
+      // keyed by bucket
       val statsByBucket = all.where(F.col("pred") === KgEngine.StatsPred)
         .groupBy("bucket")
         .agg(F.sum(F.col("obj").cast("long")).as("errors"),
           F.sum(F.col("obj_json").cast("long")).as("dropped_bad"))
-      val lin = remaining.select(F.col("url"))
-        .withColumn("bucket", KgEngine.bucketOf(KgEngine.subjCol(F.col("url")), buckets))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).as("input_rows"),
-          F.sum(KgEngine.candidateUrlCol(F.col("url")).cast("long")).as("emitted"))
+      val lin = KgEngine.lineage(remaining, buckets)
         .join(statsByBucket, Seq("bucket"), "left")
         .select(F.col("bucket"), F.col("input_rows"), F.col("emitted"),
           F.coalesce(F.col("dropped_bad"), F.lit(0L)).as("dropped_bad"),

@@ -82,6 +82,28 @@ class ArchiveDispatchSpec extends AnyFunSuite with SparkSuite {
       t.obj == "https://bugs.php.net/widget"))
   }
 
+  test("a null payload consults nothing; the other archives still enrich") {
+    import spark.implicits._
+    // the Hackage (cabal) and Pecl (html) dialects throw on a null payload;
+    // a null row must skip, not fail the job
+    val canon = Seq(
+      triple("h", "Archive", "Hackage", Certainty.Likely),
+      triple("h", "Hackage-Package", "widget", Certainty.Likely),
+      triple("p", "Archive", "Pecl", Certainty.Likely),
+      triple("p", "Pecl-Package", "widget", Certainty.Likely),
+      triple("c", "Archive", "crates.io", Certainty.Likely),
+      triple("c", "Cargo-Crate", "widget", Certainty.Likely)).toDS()
+    val payloads = Seq(
+      ("Hackage", "widget", null: String),
+      ("Pecl", "widget", null: String),
+      ("crates.io", "widget", crateJson)).toDF("archive", "project", "payload")
+    val out = KgEngine.enrichFromArchive(canon, payloads).collect()
+    assert(out.filter(t => t.subj != "c").map(_.pred).toSet ==
+      Set("Archive", "Hackage-Package", "Pecl-Package"))
+    assert(out.exists(t => t.subj == "c" && t.pred == "Homepage" &&
+      t.obj == "https://widget.example.com/"))
+  }
+
   test("possible_fields_missing gate: fully-Certain subjects never consult payloads") {
     import spark.implicits._
     val canon = Seq(

@@ -110,9 +110,8 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       val plan = out.queryExecution.executedPlan
       // the full triple stream feeds exactly ONE lattice (max_by) aggregate
-      // exchange — the staged chain had three. (A second, cheap (subj,pred)
-      // exchange exists in the completeness gate's countDistinct partial,
-      // over a certainty-filtered two-column projection, not the stream.)
+      // exchange — the staged chain had three — and it is the only
+      // (subj,pred) exchange: the completeness gate aggregates per subject
       val maxByShuffles = plan.collect {
         case e: ShuffleExchangeExec
             if e.outputPartitioning.toString.contains("subj") &&
@@ -129,8 +128,9 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
             if e.outputPartitioning.toString.contains("subj") &&
                e.outputPartitioning.toString.contains("pred") => e
       }
-      assert(subjPredShuffles.size <= 2,
-        s"unexpected extra (subj,pred) exchanges (${subjPredShuffles.size})")
+      assert(subjPredShuffles.size == 1,
+        s"unexpected extra (subj,pred) exchanges (${subjPredShuffles.size}):\n" +
+          plan.toString.take(4000))
       // the candidate-url branch must SHARE the lattice union's shuffle
       // (ReuseExchange), not re-execute the union's upstream
       val reused = plan.collect {

@@ -68,13 +68,22 @@ class ExternalDirectorySpec extends AnyFunSuite with SparkSuite {
     assert(certain.toSet == Set(triple("s", "Version", "1.0", Certainty.Certain)))
   }
 
-  test("consult=false is the identity (the reference's gate is off in golden runs)") {
+  test("a null payload consults nothing; the other directories still enrich") {
     import spark.implicits._
-    val canon = Seq(triple("s", "Homepage", "https://keep/", Certainty.Possible)).toDS()
+    // aur and gobo's two line dialects throw on a null payload; a null row
+    // must skip, not fail the job
+    val canon = Seq(triple("s", "Version", "1.0", Certainty.Certain)).toDS()
     val sources = Seq(("s", "pkg5")).toDF("subj", "package")
-    val out = KgEngine.enrichFromExternalDirectory(
-      canon, sources, allPayloads(5), consult = false)
-    assert(out eq canon)
+    val payloads = Seq(
+      ("aur", "pkg5", null: String),
+      ("gobo", "pkg5", null: String),
+      ("repology", "pkg5", SynthRegistry.repologyDir(5))
+    ).toDF("directory", "package", "payload")
+    val out = KgEngine.enrichFromExternalDirectory(canon, sources, payloads)
+      .collect().map(t => t.pred -> ((t.obj, t.certainty))).toMap
+    assert(out("Homepage") == (("https://repology.example.org/h5", Certainty.Confident)))
+    assert(!out.contains("Repository"), s"a null payload yielded datums: $out")
+    assert(out("Version") == (("1.0", Certainty.Certain)))
   }
 
   test("possible_fields_missing gates per provider independently") {

@@ -81,9 +81,10 @@ class SparkSmokeSpec extends AnyFunSuite with SparkSuite {
   test("lineage accounts for every input page") {
     val pages = SynthPages.fromDocuments(docs.where("doc_id < 100"))
     val total = pages.count()
-    val rows = KgEngine.lineage(spark, pages).collect()
-    assert(rows.map(_.input_rows).sum == total)
-    assert(rows.map(_.emitted).sum == total) // both synth artifacts are candidates
+    val sums = KgEngine.lineage(pages, 8)
+      .agg(F.sum("input_rows"), F.sum("emitted")).first()
+    assert(sums.getLong(0) == total)
+    assert(sums.getLong(1) == total) // both synth artifacts are candidates
   }
 
   test("environment guesser seeds a Certain Repository") {

@@ -80,17 +80,13 @@ class SubjectExprSpec extends AnyFunSuite with SparkSuite {
     val resumePlan = KgEngine.resumeFilter(pages, Seq(0, 1), 8)
       .queryExecution.executedPlan.toString
     assert(!resumePlan.contains("ScalaUDF"), s"resume plan has a UDF:\n$resumePlan")
-    val lineageStyle = pages.select(F.col("url"))
-      .withColumn("bucket", KgEngine.bucketOf(KgEngine.subjCol(F.col("url")), 8))
-      .groupBy("bucket")
-      .agg(F.count(F.lit(1)).as("input_rows"),
-        F.sum(KgEngine.candidateUrlCol(F.col("url")).cast("long")).as("emitted"))
-    val linPlan = lineageStyle.queryExecution.executedPlan.toString
+    val lineage = KgEngine.lineage(pages, 8)
+    val linPlan = lineage.queryExecution.executedPlan.toString
     assert(!linPlan.contains("ScalaUDF"), s"lineage plan has a UDF:\n$linPlan")
     // and the counts must match the Scala-side truth
     val expected = pages.select("url").collect().map(_.getString(0))
       .count(u => KgEngine.splitSubject(u).exists(sr => KgEngine.isCandidate(sr._2)))
-    val got = lineageStyle.agg(F.sum("emitted")).first.getLong(0)
+    val got = lineage.agg(F.sum("emitted")).first.getLong(0)
     assert(got == expected)
   }
 }
