@@ -592,9 +592,7 @@ object SparkEntry {
     }),
     "kg_nodes" -> ((s, dir) => {
       val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
-      // nodesDf reads the edge view twice (subject + object sides) —
-      // materialize the extraction once behind it
-      KgEngine.nodes(canonOnce(s, pages))
+      KgEngine.nodes(KgEngine.extractCanonical(s, pages))
         .orderBy("id")
     }),
     "kg_raw_triples" -> ((s, dir) => {

@@ -588,23 +588,26 @@ object RegistryParsers {
 
   /** Dispatch by registry kind — the one entry point the Spark side binds.
     * `hackage` payloads are .cabal files and route through the existing
-    * cabal extractor (haskell.rs:157-176 fetches exactly that file).
+    * cabal extractor (haskell.rs:157-176 fetches exactly that file). A
+    * null payload is `Left` for every kind.
     */
-  def parse(kind: String, payload: String): Either[String, List[Datum]] = kind match {
-    case "pypi"      => parsePypi(payload)
-    case "npm"       => parseNpm(payload)
-    case "crates"    => parseCrates(payload)
-    case "cpan"      => parseCpan(payload)
-    case "rubygems"  => parseRubygem(payload)
-    case "pecl"      => Right(parsePeclPage(payload))
-    case "github"    => parseGithubRepo(payload)
-    case "aur"       => Right(parseAurPkgbuild(payload))
-    case "gobo-recipe"      => Right(parseGoboRecipe(payload))
-    case "gobo-description" => Right(parseGoboDescription(payload))
-    case "launchpad" => parseLaunchpadProject(payload)
-    case "repology"  => parseRepology(payload)
-    case "hackage"   => graft.extract.Extractors.cabal("hackage", payload)
-    case "go"        => Right(goMetadata(payload))
-    case other       => Left(s"unknown registry kind: $other")
-  }
+  def parse(kind: String, payload: String): Either[String, List[Datum]] =
+    if (payload == null) Left(s"$kind: null payload")
+    else kind match {
+      case "pypi"      => parsePypi(payload)
+      case "npm"       => parseNpm(payload)
+      case "crates"    => parseCrates(payload)
+      case "cpan"      => parseCpan(payload)
+      case "rubygems"  => parseRubygem(payload)
+      case "pecl"      => Right(parsePeclPage(payload))
+      case "github"    => parseGithubRepo(payload)
+      case "aur"       => Right(parseAurPkgbuild(payload))
+      case "gobo-recipe"      => Right(parseGoboRecipe(payload))
+      case "gobo-description" => Right(parseGoboDescription(payload))
+      case "launchpad" => parseLaunchpadProject(payload)
+      case "repology"  => parseRepology(payload)
+      case "hackage"   => graft.extract.Extractors.cabal("hackage", payload)
+      case "go"        => Right(goMetadata(payload))
+      case other       => Left(s"unknown registry kind: $other")
+    }
 }

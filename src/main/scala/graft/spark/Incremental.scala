@@ -36,6 +36,10 @@ import Model.CanonTriple
   * never appears in the log plus each logged subject's latest batch.
   * `compact` folds the logs back into fresh bucketed base tables at the
   * caller's cadence, amortizing the O(store) rewrite over many batches.
+  * `initStore` is the same pass over an empty store, so one grouped pass
+  * implements the duplicate-capture rule for both the base and the logs.
+  * Each write reads one `SparkRuntime.materialize` of its pass: an executor
+  * loss fails the call, and a re-run is lossless.
   *
   * The view is provably the full rebuild: current winners == the winners of
   * (all pages ever seen), extraction is per-subject pure, and untouched
@@ -43,24 +47,6 @@ import Model.CanonTriple
   * against the same DuckDB oracle as `kg_canonical`.
   */
 object Incremental {
-
-  /** The winning capture per (subj, relpath) of one batch — the relational
-    * twin of `KgEngine.dedupCaptures` (max_by over (warc_ts, md5(content));
-    * lexicographic struct order == the fold's ts-then-hash rule). Columnar
-    * end to end: candidates filter before the aggregate, page bodies hash
-    * map-side, and partial aggregation collapses recrawl floods before the
-    * exchange.
-    */
-  def captureWinners(spark: SparkSession, pages: DataFrame): DataFrame =
-    candidateCaptures(spark, pages)
-      .groupBy("subj", "relpath")
-      .agg(F.max_by(
-        F.struct(F.col("ts"), F.col("md5"), F.col("text")),
-        F.struct(F.col("ts"), F.col("md5"))).as("w"))
-      .select(
-        F.col("subj"), F.col("relpath"),
-        F.col("w.ts").as("ts"), F.col("w.md5").as("md5"),
-        F.col("w.text").as("text"))
 
   /** A page batch's candidate captures as (subj, relpath, ts, text, md5). */
   private def candidateCaptures(spark: SparkSession, pages: DataFrame): DataFrame = {
@@ -70,32 +56,25 @@ object Incremental {
       .withColumn("md5", F.md5(F.col("text")))
   }
 
-  /** Canonical triples from a winners table — `KgEngine.extractCanonical`
-    * with the duplicate-capture pick already done (winners hold exactly one
-    * row per (subj, relpath), so the kernel's pick is a straight fill).
-    * Identical output to extractCanonical over the originating pages
-    * (asserted on every golden fixture corpus in IncrementalSpec).
-    */
-  def extractFromCaptures(captures: DataFrame): Dataset[CanonTriple] = {
-    val spark = captures.sparkSession
-    import spark.implicits._
-    KgEngine.bySubject(captures.select("subj", "relpath", "ts", "text")
-      .as[(String, String, Long, String)])(KgEngine.summarizeSubject)
-  }
-
   /** Initialize the store pair from a first crawl batch and publish both
-    * tables subj-bucketed. Triples derive from the SAME winners table that
-    * is stored, so the pair cannot be inconsistent by construction.
+    * tables subj-bucketed. This is `appendDelta`'s batch pass over an empty
+    * store: with nothing stored, every key's batch winner is a changed
+    * capture and every subject re-extracts, so the pass emits the winning
+    * captures and the canonical triples of the whole batch. Both tables are
+    * written from one `SparkRuntime.materialize` of that pass (the captures
+    * without `changed`, the triples without tombstones), so the pair cannot
+    * be inconsistent by construction; an executor loss fails the call, and
+    * a re-run is lossless.
     */
   def initStore(
       spark: SparkSession, pages: DataFrame,
       capturesTable: String, triplesTable: String,
       path: String, buckets: Int = KgJob.DefaultBuckets): Unit = {
+    val (captures, triples) = materializedPass(spark, pages)
     BucketedStore.publishBySubj(
-      captureWinners(spark, pages), capturesTable, s"$path/captures", buckets)
-    val caps = BucketedStore.read(spark, capturesTable)
-    BucketedStore.publishBySubj(
-      extractFromCaptures(caps).toDF(), triplesTable, s"$path/triples", buckets)
+      captures.drop("changed"), capturesTable, s"$path/captures", buckets)
+    BucketedStore.publishBySubj(triples.where(F.col("pred") =!= TombstonePred),
+      triplesTable, s"$path/triples", buckets)
   }
 
   /** Marker predicate for a changed subject whose re-extraction produced no
@@ -104,11 +83,6 @@ object Incremental {
     * space-prefixed convention as `KgEngine.StatsPred`.
     */
   val TombstonePred: String = " tomb"
-
-  private def clogSchema = "subj string, relpath string, ts long, md5 string, " +
-    "text string, changed boolean"
-  private def tlogSchema = "subj string, pred string, obj string, " +
-    "obj_json string, certainty int, origin string"
 
   /** Create empty logs (one empty batch=0 directory each) so log reads never
     * face a missing path. TRUNCATES first: a per-batch overwrite only
@@ -122,12 +96,9 @@ object Incremental {
       val fs = hp.getFileSystem(conf)
       if (fs.exists(hp)) fs.delete(hp, true)
     }
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(clogSchema))
-      .write.mode("overwrite").parquet(s"$clogPath/batch=0")
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(tlogSchema))
-      .write.mode("overwrite").parquet(s"$tlogPath/batch=0")
+    import spark.implicits._
+    spark.emptyDataset[LoggedCapture].write.mode("overwrite").parquet(s"$clogPath/batch=0")
+    spark.emptyDataset[CanonTriple].write.mode("overwrite").parquet(s"$tlogPath/batch=0")
   }
 
   /** Read a log; `batch` materializes from the partition directories. */
@@ -179,7 +150,7 @@ object Incremental {
     * once). Per (subj, relpath):
     *   - the current winner is the max (ts, md5) of the stored rows (logged
     *     rows are monotone, so this is base ⊕ log), the batch winner the max
-    *     (ts, md5) of the incoming ones (`captureWinners`' rule);
+    *     (ts, md5) of the incoming ones;
     *   - a batch winner that orders above the current winner is a
     *     capture-log row, flagged `changed` when its md5 differs (ts
     *     refreshes are logged unflagged — future batches must see them);
@@ -205,12 +176,10 @@ object Incremental {
     // and lose the batch. Filtering to batch < N makes the retry recompute
     // the identical rows no matter what the failed attempt persisted.
     val clog = readLog(spark, clogPath).where(F.col("batch") < batch)
-    val pass = SparkRuntime.materialize(batchPass(spark, deltaPages,
-      BucketedStore.readUnbucketed(spark, capturesTable), clog).toDF())
-    pass.where(F.col("capture").isNotNull).select("capture.*")
-      .write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
-    pass.where(F.col("triple").isNotNull).select("triple.*")
-      .write.mode("overwrite").parquet(s"$tlogPath/batch=$batch")
+    val (captures, triples) = materializedPass(spark, deltaPages,
+      BucketedStore.readUnbucketed(spark, capturesTable), clog)
+    captures.write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
+    triples.write.mode("overwrite").parquet(s"$tlogPath/batch=$batch")
   }
 
   /** A capture of one of a batch's subjects: an incoming candidate of the
@@ -227,10 +196,11 @@ object Incremental {
   private[graft] final case class BatchRow(
       capture: Option[LoggedCapture], triple: Option[CanonTriple])
 
-  /** `appendDelta`'s grouped pass, unmaterialized. */
+  /** The grouped pass of `appendDelta` (over the `stored` base and log
+    * captures) and of `initStore` (over none), unmaterialized.
+    */
   private[graft] def batchPass(
-      spark: SparkSession, deltaPages: DataFrame,
-      baseCaps: DataFrame, clog: DataFrame): Dataset[BatchRow] = {
+      spark: SparkSession, deltaPages: DataFrame, stored: DataFrame*): Dataset[BatchRow] = {
     import spark.implicits._
     val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
     val incoming = candidateCaptures(spark, deltaPages)
@@ -238,15 +208,23 @@ object Incremental {
     // cost its own shuffle and job per batch; the broadcast holds one row
     // per candidate page instead of one per subject
     val subjs = F.broadcast(incoming.select("subj"))
-    def stored(caps: DataFrame): DataFrame = caps.select(cols: _*)
-      .join(subjs, Seq("subj"), "left_semi")
-      .withColumn("stored", F.lit(true))
-    incoming.select(cols: _*).withColumn("stored", F.lit(false))
-      .unionByName(stored(baseCaps))
-      .unionByName(stored(clog))
+    stored.map(_.select(cols: _*)
+        .join(subjs, Seq("subj"), "left_semi")
+        .withColumn("stored", F.lit(true)))
+      .foldLeft(incoming.select(cols: _*).withColumn("stored", F.lit(false)))(_ unionByName _)
       .as[BatchCapture]
       .groupByKey(_.subj)
       .flatMapGroups(batchRows)
+  }
+
+  /** One `SparkRuntime.materialize` of the batch pass, split into its
+    * capture-log rows and its triple-log rows.
+    */
+  private def materializedPass(
+      spark: SparkSession, pages: DataFrame, stored: DataFrame*): (DataFrame, DataFrame) = {
+    val pass = SparkRuntime.materialize(batchPass(spark, pages, stored: _*).toDF())
+    (pass.where(F.col("capture").isNotNull).select("capture.*"),
+      pass.where(F.col("triple").isNotNull).select("triple.*"))
   }
 
   /** max (ts, md5) order, the duplicate-capture rule. */

@@ -170,8 +170,10 @@ object KgEngine {
     * candidate captures (subj, relpath, warc_ts_millis, text), the
     * duplicate-capture pick, then `emit(subj, winning files)`. Every grouped
     * extraction is this pass with its own emit: `extractCanonical`,
-    * `extractCanonicalWithStats`, `extractAndRender`, `extractRaw` and
-    * `Incremental.extractFromCaptures`.
+    * `extractCanonicalWithStats`, `extractAndRender` and `extractRaw`. The
+    * store writes (`Incremental.initStore`, the batch pass over an empty
+    * store, and `Incremental.appendDelta`) group by subject in their own
+    * pass, which also emits the winning captures.
     */
   private[spark] def bySubject[T: Encoder](caps: Dataset[(String, String, Long, String)])(
       emit: (String, scala.collection.Map[String, String]) => Iterator[T]): Dataset[T] =
@@ -179,8 +181,8 @@ object KgEngine {
       .flatMapGroups((subj, it) => emit(subj, dedupCaptures(it)))
 
   /** One subject's canonical triples from its winning files (relpath →
-    * text): the emit of the canonical extractions and of the
-    * `Incremental.appendDelta` batch pass.
+    * text): the emit of the canonical extractions and of the `Incremental`
+    * batch pass (`initStore` and `appendDelta`).
     */
   private[spark] def summarizeSubject(
       subj: String, files: scala.collection.Map[String, String]): Iterator[CanonTriple] = {
@@ -387,16 +389,17 @@ object KgEngine {
 
   def edges(canon: Dataset[CanonTriple]): DataFrame = edgesDf(canon.toDF())
 
-  def nodesDf(e: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val subjects = e.select(
-      Seq(F.col("src").as("id"), F.lit("subject").as("kind")) ++ carry.map(F.col): _*)
-    val objects = e.select(
-      Seq(F.col("dst").as("id"), F.lit("url").as("kind")) ++ carry.map(F.col): _*)
-    subjects.unionByName(objects)
+  /** One (id, kind) row per node: each edge yields its subject and its url
+    * node from one two-element array, so the edge view is read once; a url
+    * that is also a subject keeps kind `subject` (the min).
+    */
+  def nodesDf(e: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    e.select(F.inline(F.array(
+        F.struct(F.col("src").as("id"), F.lit("subject").as("kind")),
+        F.struct(F.col("dst").as("id"), F.lit("url").as("kind")))) +: carry.map(F.col): _*)
       .groupBy((carry :+ "id").map(F.col): _*)
       .agg(F.min("kind").as("kind"))
       .select(Seq(F.col("id"), F.col("kind")) ++ carry.map(F.col): _*)
-  }
 
   def nodes(canon: Dataset[CanonTriple]): DataFrame = nodesDf(edges(canon))
 
@@ -611,8 +614,8 @@ object KgEngine {
     * `SourceForge::extend_metadata`, lib.rs:2363-2372). Datums leave as raw
     * rows at the row's cap (extend_from_external_guesser overrides each
     * item's certainty, lib.rs:2314-2321), with `origin`, tie rank `rank`
-    * and emission-order seq. A null payload consults nothing, like a null
-    * page in `scrapedDatums`.
+    * and emission-order seq. A null payload parses to `Left` in every
+    * dialect, so it consults nothing, like a null page in `scrapedDatums`.
     *
     * Plan shape: the payload join shuffles on the key, proportional to the
     * incomplete subjects of that provider, never the whole graph.
@@ -634,14 +637,12 @@ object KgEngine {
       .select(F.col("subj"), F.col("key"), F.col("name"), F.col("cap"), F.col("payload"))
       .as[(String, String, String, Int, String)]
       .flatMap { case (subj, key, name, cap, payload) =>
-        val parsed =
-          if (payload == null) Nil
-          else parsers.flatMap {
-            case "sourceforge" => graft.registry.RegistryParsers
-              .parseSfJson(payload, key, Option(name)).getOrElse(Nil)
-            case kind => graft.registry.RegistryParsers
-              .parse(kind, payload).getOrElse(Nil)
-          }
+        val parsed = parsers.flatMap {
+          case "sourceforge" => graft.registry.RegistryParsers
+            .parseSfJson(payload, key, Option(name)).getOrElse(Nil)
+          case kind => graft.registry.RegistryParsers
+            .parse(kind, payload).getOrElse(Nil)
+        }
         parsed.iterator.zipWithIndex.map { case (d, i) =>
           val (obj, objJson) = objForms(d.value)
           (subj, d.field, obj, objJson, cap, i)

@@ -252,15 +252,18 @@ object TrainingOps {
 
   // ---------- composed dedup pipeline (exact-first) ----------
 
-  /** Exact-first composition shared by `dedupPipeline` and
-    * `simhashDedupPipeline`: collapse exact duplicates (md5 groupBy, kept
-    * id = group minimum), run the near-dup operator over ONE representative
-    * per distinct content, then re-expand membership. Because every stage of
-    * both near-dup operators — MinHash signatures, SimHash bits, shingle
-    * sets — is a pure function of `text`, a pair of documents relates
-    * exactly as its representatives do, so the composed result EQUALS the
-    * naive all-docs pair semantics while candidate generation and
-    * verification touch only O(distinct²) pairs instead of O(docs²). This
+  /** MinHash+LSH near-dup with the exact-duplicate collapse composed in
+    * front — same output contract as `minhashDedupPairs` (a, b, jaccard),
+    * identical results, candidate volume bounded by distinct content.
+    *
+    * Collapse exact duplicates (md5 groupBy, kept id = group minimum), run
+    * `minhashDedupPairs` over ONE representative per distinct content, then
+    * re-expand membership. Because every stage of the near-dup operator —
+    * MinHash signatures, shingle sets — is a pure function of `text`, a pair
+    * of documents relates exactly as its representatives do, so the composed
+    * result EQUALS the naive all-docs pair semantics while candidate
+    * generation and verification touch only O(distinct²) pairs instead of
+    * O(docs²). This
     * is the fix for the duplicate-flood pathology: 10⁶ copies of one
     * boilerplate page share every LSH band and would emit ~5·10¹¹
     * intra-bucket candidates naively; here they collapse to one
@@ -268,16 +271,8 @@ object TrainingOps {
     * membership joins (linear in OUTPUT size, which is irreducible for a
     * pair-list contract — a production run would persist `membership` plus
     * the representative pairs and skip the expansion entirely).
-    *
-    * `selfScore` is the score an identical-content pair carries in the
-    * naive semantics (jaccard 1.0 / hamming distance 0).
     */
-  private def exactThenNear(
-      documents: DataFrame,
-      nearOnReps: DataFrame => DataFrame,
-      scoreCol: String,
-      selfScore: org.apache.spark.sql.Column
-  ): DataFrame = {
+  def dedupPipeline(documents: DataFrame, threshold: Double = 0.9): DataFrame = {
     val docs = documents.select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
     val members = docs.withColumn("h", F.md5(F.col("text")))
     // one aggregate produces both the membership map and the representative
@@ -291,8 +286,8 @@ object TrainingOps {
     val membership = SparkRuntime.materialize(members.select("doc_id", "h")
       .join(groups.select("h", "rep_id"), "h")
       .select("doc_id", "rep_id"))
-    val repPairs = nearOnReps(
-      groups.select(F.col("rep_id").as("doc_id"), F.col("text")))
+    val repPairs = minhashDedupPairs(
+      groups.select(F.col("rep_id").as("doc_id"), F.col("text")), threshold)
     // cross-group pairs: expand each representative pair over both groups'
     // members; least/greatest restores the a < b normal form
     val cross = repPairs
@@ -300,30 +295,15 @@ object TrainingOps {
       .join(membership.select(F.col("doc_id").as("db"), F.col("rep_id").as("b")), "b")
       .select(
         F.least("da", "db").as("a"), F.greatest("da", "db").as("b"),
-        F.col(scoreCol))
-    // intra-group pairs: identical content relates with the self score
+        F.col("jaccard"))
+    // intra-group pairs: identical content relates at jaccard 1.0
     val intra = membership.as("x").join(membership.as("y"),
         F.col("x.rep_id") === F.col("y.rep_id") &&
         F.col("x.doc_id") < F.col("y.doc_id"))
       .select(F.col("x.doc_id").as("a"), F.col("y.doc_id").as("b"),
-        selfScore.as(scoreCol))
+        F.lit(1.0).as("jaccard"))
     cross.unionByName(intra)
   }
-
-  /** MinHash+LSH near-dup with the exact-duplicate collapse composed in
-    * front — same output contract as `minhashDedupPairs` (a, b, jaccard),
-    * identical results, candidate volume bounded by distinct content.
-    */
-  def dedupPipeline(documents: DataFrame, threshold: Double = 0.9): DataFrame =
-    exactThenNear(documents, minhashDedupPairs(_, threshold),
-      "jaccard", F.lit(1.0))
-
-  /** SimHash near-dup with the exact-duplicate collapse composed in front —
-    * same output contract as `simhashPairs` (a, b, dist), identical results.
-    */
-  def simhashDedupPipeline(documents: DataFrame, maxDist: Int = 3): DataFrame =
-    exactThenNear(documents, simhashPairs(_, maxDist),
-      "dist", F.lit(0))
 
   // ---------- similarity search (embeddings) ----------
 

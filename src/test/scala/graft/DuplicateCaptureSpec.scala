@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{functions => F}
 import graft.pipeline.{Sinks, Summarize}
-import graft.spark.{Incremental, KgEngine, SynthPages}
+import graft.spark.{BucketedStore, Incremental, KgEngine, SynthPages}
 
 /** Duplicate page captures (recrawls inside one batch) must collapse
   * DETERMINISTICALLY: the newest warc_ts wins per (subj, relpath), ties
@@ -35,6 +35,7 @@ class DuplicateCaptureSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("both engine variants agree byte-identically on duplicated input, repeatedly") {
+    import spark.implicits._
     val live = SynthPages.fromDocuments(docs.where("doc_id < 48"))
     // the live captures are the winners: render each subject locally
     val clean = live.where("text IS NOT NULL").select("url", "text").collect()
@@ -56,9 +57,10 @@ class DuplicateCaptureSpec extends AnyFunSuite with SparkSuite {
       val withStats = KgEngine.splitStats(KgEngine.extractCanonicalWithStats(spark, pages))._1
         .collect().map(key).toSet
       assert(withStats == runs(0))
-      val fromCaptures = Incremental.extractFromCaptures(Incremental.captureWinners(spark, pages))
-        .collect().map(key).toSet
-      assert(fromCaptures == runs(0))
+      // and so does the store's batch pass
+      Incremental.initStore(spark, pages, "dc_caps", "dc_tri", "/tmp/graft_dup_spec", buckets = 8)
+      assert(BucketedStore.read(spark, "dc_tri").as[graft.spark.Model.CanonTriple]
+        .collect().map(key).toSet == runs(0))
       val rendered = KgEngine.extractAndRender(spark, pages, Sinks.toYaml).collect().toMap
       assert(rendered.keySet == clean.keySet)
       clean.foreach { case (subj, rows) =>

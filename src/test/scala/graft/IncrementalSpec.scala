@@ -71,18 +71,52 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
     assert(a.count() == b.count(), s"$hint (row count)")
   }
 
-  test("captureWinners + extractFromCaptures == extractCanonical under recrawl floods") {
+  /** The duplicate-capture rule stated independently of the engine: the
+    * max (ts, md5) capture per (subj, relpath), as (subj, relpath, ts, md5).
+    */
+  private def maxCaptures(pages: DataFrame): DataFrame = {
+    import spark.implicits._
+    pages.where(F.col("text").isNotNull)
+      .select(F.col("url"), F.unix_millis(F.col("warc_ts")), F.col("text"))
+      .as[(String, Long, String)]
+      .flatMap { case (url, ts, text) =>
+        KgEngine.splitSubject(url).filter(sr => KgEngine.isCandidate(sr._2))
+          .map { case (subj, relpath) => (subj, relpath, ts, text) }
+      }
+      .toDF("subj", "relpath", "ts", "text")
+      .withColumn("md5", F.md5(F.col("text")))
+      .groupBy("subj", "relpath")
+      .agg(F.max_by(F.struct("ts", "md5"), F.struct("ts", "md5")).as("w"))
+      .select(F.col("subj"), F.col("relpath"), F.col("w.ts").as("ts"), F.col("w.md5").as("md5"))
+  }
+
+  test("initStore == max (ts, md5) captures + extractCanonical under recrawl floods") {
     // three captures per page: live, week-older corrupted, exact duplicate —
-    // the kg_canonical_dup corpus shape
+    // the kg_canonical_dup corpus shape. The union delivers each stale
+    // capture between two live ones; sorting by warc_ts delivers it first
+    // or last, so a fold that keeps the first or the last capture instead
+    // of the max (ts, md5) one fails one of the orderings
     val flood = live
       .unionByName(corrupt(live, days = 7))
       .unionByName(live)
-    val viaWinners = Incremental.extractFromCaptures(
-      Incremental.captureWinners(spark, flood)).toDF()
-    assertSame(viaWinners, KgEngine.extractCanonical(spark, flood).toDF(),
-      "relational winners must reproduce the fold's duplicate-capture pick")
-    assertSame(viaWinners, KgEngine.extractCanonical(spark, live).toDF(),
-      "the newest capture must win per (subj, relpath)")
+    Seq("union" -> flood, "asc" -> flood.orderBy("warc_ts"),
+        "desc" -> flood.orderBy(F.desc("warc_ts"))).foreach { case (order, pages) =>
+      Incremental.initStore(spark, pages, s"fl_caps_$order", s"fl_tri_$order",
+        s"/tmp/graft_inc_spec/flood_$order", buckets = 8)
+      val caps = BucketedStore.read(spark, s"fl_caps_$order")
+      assert(caps.columns.toSeq == Seq("subj", "relpath", "ts", "md5", "text"), order)
+      val stored = caps.select("subj", "relpath", "ts", "md5")
+      val winners = maxCaptures(pages)
+      assert(stored.count() == winners.count() && stored.except(winners).isEmpty,
+        s"$order: the store must hold exactly the max (ts, md5) capture per key")
+      val tri = BucketedStore.read(spark, s"fl_tri_$order")
+      assert(tri.where(F.col("pred") === Incremental.TombstonePred).isEmpty,
+        s"$order: the base triples hold no tombstone")
+      assertSame(tri, KgEngine.extractCanonical(spark, pages).toDF(),
+        s"$order: the store's triples must be the one-shot extraction")
+      assertSame(tri, KgEngine.extractCanonical(spark, live).toDF(),
+        s"$order: the newest capture must win per (subj, relpath)")
+    }
   }
 
   test("only genuinely changed subjects re-extract; ts refreshes and stale recaptures do not") {
@@ -151,7 +185,7 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
     val cols = Seq("subj", "relpath", "ts", "md5").map(F.col)
     val logged = Incremental.readLog(spark, s"$root/clog")
       .where(F.col("batch") === 1).select(cols: _*)
-    val winners = Incremental.captureWinners(spark, batch).select(cols: _*)
+    val winners = maxCaptures(batch)
     assert(logged.count() == winners.count() && logged.except(winners).isEmpty,
       "the capture log must hold each key's max (ts, md5) row")
     assertSame(
@@ -197,10 +231,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
     val capView = Incremental.currentCaptures(
       BucketedStore.read(spark, "lg_caps"),
       Incremental.readLog(spark, s"$root/clog"))
-    val allWinners = Incremental.captureWinners(spark,
-      basePages.unionByName(batch1).unionByName(batch2))
-    assert(capView.select("subj", "relpath", "ts", "md5")
-      .except(allWinners.select("subj", "relpath", "ts", "md5")).isEmpty &&
+    val allWinners = maxCaptures(basePages.unionByName(batch1).unionByName(batch2))
+    assert(capView.select("subj", "relpath", "ts", "md5").except(allWinners).isEmpty &&
       capView.count() == allWinners.count(),
       "capture view must equal the one-shot winners")
 

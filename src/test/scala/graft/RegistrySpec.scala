@@ -258,6 +258,11 @@ class RegistrySpec extends AnyFunSuite {
     assert(RegistryParsers.parseCrates("""{"crate":{}}""").isLeft)
     assert(RegistryParsers.parseCpan("[1,2]").isLeft)
     assert(RegistryParsers.parse("nosuch", "{}").isLeft)
+    // a null payload row must not fail the job that parses it
+    for (kind <- Seq("pypi", "npm", "crates", "cpan", "rubygems", "pecl", "github",
+        "aur", "gobo-recipe", "gobo-description", "launchpad", "repology", "hackage", "go"))
+      assert(RegistryParsers.parse(kind, null).isLeft, kind)
+    assert(RegistryParsers.parseSfJson(null, "x", None).isLeft)
   }
 
   test("pypi: unknown project_urls types are ignored, known ones sorted by type") {
