@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
 
-import Model.CanonTriple
+import Model.{CanonTriple, Ranked}
 
 /** Incremental KG maintenance — the delta-crawl path a 100 TB deployment
   * actually runs. The reference is a per-project CLI that recomputes one
@@ -14,11 +14,12 @@ import Model.CanonTriple
   *
   * The store is a merge-on-read log over a subj-bucketed base
   * (BucketedStore): a table is the fold of its change log.
-  *   - base `captures(subj, relpath, ts, md5, text)` — the winning capture
-  *     per (subj, relpath) under the engine's duplicate-capture rule (max
-  *     (warc_ts, md5(content)); KgEngine.dedupCaptures). This IS the
-  *     extraction input: canonical triples are a pure per-subject function
-  *     of it, so it is the exact state needed for incremental equivalence.
+  *   - base `captures(subj, relpath, ts, md5, text)` — the winning
+  *     candidate capture (`KgEngine.candidateRows`) per (subj, relpath)
+  *     under the engine's duplicate-capture order (max (ts, md5);
+  *     `KgEngine.above`). This IS the extraction input: canonical triples
+  *     are a pure per-subject function of it, so it is the exact state
+  *     needed for incremental equivalence.
   *   - base `triples(subj, pred, obj, obj_json, certainty, origin)` — the
   *     canonical output for those captures.
   *   - the capture log and the triple log, one `batch=N` directory per
@@ -47,14 +48,6 @@ import Model.CanonTriple
   * against the same DuckDB oracle as `kg_canonical`.
   */
 object Incremental {
-
-  /** A page batch's candidate captures as (subj, relpath, ts, text, md5). */
-  private def candidateCaptures(spark: SparkSession, pages: DataFrame): DataFrame = {
-    import spark.implicits._
-    KgEngine.candidateRows(spark, pages)
-      .toDF("subj", "relpath", "ts", "text")
-      .withColumn("md5", F.md5(F.col("text")))
-  }
 
   /** Initialize the store pair from a first crawl batch and publish both
     * tables subj-bucketed. This is `appendDelta`'s batch pass over an empty
@@ -187,6 +180,7 @@ object Incremental {
     */
   private[graft] final case class BatchCapture(
       subj: String, relpath: String, ts: Long, md5: String, text: String, stored: Boolean)
+      extends Ranked
 
   /** A capture-log row: a batch winner that replaced its key's current winner. */
   private[graft] final case class LoggedCapture(
@@ -203,7 +197,7 @@ object Incremental {
       spark: SparkSession, deltaPages: DataFrame, stored: DataFrame*): Dataset[BatchRow] = {
     import spark.implicits._
     val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
-    val incoming = candidateCaptures(spark, deltaPages)
+    val incoming = KgEngine.candidateRows(deltaPages)
     // no distinct: a semi-join only probes the key, and an aggregate would
     // cost its own shuffle and job per batch; the broadcast holds one row
     // per candidate page instead of one per subject
@@ -211,7 +205,7 @@ object Incremental {
     stored.map(_.select(cols: _*)
         .join(subjs, Seq("subj"), "left_semi")
         .withColumn("stored", F.lit(true)))
-      .foldLeft(incoming.select(cols: _*).withColumn("stored", F.lit(false)))(_ unionByName _)
+      .foldLeft(incoming.withColumn("stored", F.lit(false)))(_ unionByName _)
       .as[BatchCapture]
       .groupByKey(_.subj)
       .flatMapGroups(batchRows)
@@ -227,10 +221,6 @@ object Incremental {
       pass.where(F.col("triple").isNotNull).select("triple.*"))
   }
 
-  /** max (ts, md5) order, the duplicate-capture rule. */
-  private def above(a: BatchCapture, b: BatchCapture): Boolean =
-    a.ts > b.ts || (a.ts == b.ts && a.md5 > b.md5)
-
   /** One subject's capture-log rows and, if any of them changed content,
     * its re-extracted triples plus a tombstone.
     */
@@ -239,11 +229,11 @@ object Incremental {
     val incoming = mutable.HashMap[String, BatchCapture]()
     caps.foreach { c =>
       val best = if (c.stored) current else incoming
-      if (best.get(c.relpath).forall(above(c, _))) best(c.relpath) = c
+      if (best.get(c.relpath).forall(KgEngine.above(c, _))) best(c.relpath) = c
     }
     val logged = incoming.values.toList.flatMap { w =>
       val cur = current.get(w.relpath)
-      if (cur.forall(above(w, _)))
+      if (cur.forall(KgEngine.above(w, _)))
         Some(LoggedCapture(subj, w.relpath, w.ts, w.md5, w.text, cur.forall(_.md5 != w.md5)))
       else None
     }
@@ -253,7 +243,8 @@ object Incremental {
       val files = current.map { case (r, c) => r -> c.text } ++
         logged.map(c => c.relpath -> c.text)
       val tombstone = CanonTriple(subj, TombstonePred, "", "", -1, "")
-      rows ++ (KgEngine.summarizeSubject(subj, files) ++ Iterator.single(tombstone))
+      val triples = KgEngine.summarizeSubject(subj, files).filter(_.pred != KgEngine.StatsPred)
+      rows ++ (triples ++ Iterator.single(tombstone))
         .map(t => BatchRow(None, Some(t)))
     }
   }

@@ -11,11 +11,13 @@ import Model._
   *
   * {{{
   * pages (url, warc_ts, html, text, lang)           -- 100 TB scan
-  *  └─ filter isCandidate(relpath)                  -- narrow; drops the bulk
-  *  └─ project (subj, relpath, text)                -- column pruning: html
-  *                                                      and non-candidate text
+  *  └─ filter candidateUrlCol(url)                  -- narrow Catalyst stage
+  *  └─ project (subj, relpath, ts, md5, text)       -- (candidateRows): drops
+  *                                                      the bulk; html and
+  *                                                      non-candidate text
   *                                                      never shuffle
   *  └─ bySubject: groupByKey(subj) . emit           -- SHUFFLE #1 (small):
+  *        max (ts, md5) capture per relpath →        -- the one typed step
   *        extract → certainty merge → extrapolation  -- fixpoint is per-key
   *        fixpoint → URL fixes                       -- local state, no driver
   *                                                      loop, no re-shuffles
@@ -30,8 +32,11 @@ import Model._
   */
 object KgEngine {
 
-  /** Mirrors find_guessers' candidate patterns (src/lib.rs:3083-3440): a page
-    * participates in extraction iff its relpath matches one of these.
+  /** The reference form of the candidate rule, mirroring find_guessers'
+    * candidate patterns (src/lib.rs:3083-3440): a page participates in
+    * extraction iff its relpath matches one of these. The engine runs the
+    * rule as `candidateUrlCol`; SubjectExprSpec checks that form against
+    * this one.
     */
   def isCandidate(relpath: String): Boolean = {
     if (relpath.isEmpty) return false
@@ -75,8 +80,10 @@ object KgEngine {
   private val securityNames: Set[String] =
     Set("SECURITY.md", ".github/SECURITY.md", "docs/SECURITY.md")
 
-  /** Splits a page url into (subj, relpath): subj = scheme://host/seg1/,
-    * relpath = the rest (the replay.invalid convention of FIXTURES.md §1).
+  /** The reference form of the subject split: a page url as (subj,
+    * relpath), subj = scheme://host/seg1/, relpath = the rest (the
+    * replay.invalid convention of FIXTURES.md §1). The engine runs it as
+    * `subjCol`; SubjectExprSpec checks that form against this one.
     */
   def splitSubject(url: String): Option[(String, String)] = {
     val schemeEnd = url.indexOf("://")
@@ -94,106 +101,84 @@ object KgEngine {
     t.substring(t.lastIndexOf('/') + 1)
   }
 
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.map("%02x".format(_)).mkString
-  }
-
-  /** Narrow pre-shuffle stage shared by the grouped paths: candidate pages
-    * as (subj, relpath, warc_ts_millis, text). Only candidates survive, so
-    * `html` and the non-candidate bulk never reach the exchange.
+  /** The candidate captures of `pages` as (subj, relpath, ts, md5, text):
+    * the narrow pre-shuffle stage of every grouped extraction and of the
+    * store writes, a Catalyst filter and projection. A page is a candidate
+    * when its url is (`candidateUrlCol`; a null url is not) and its text is
+    * not null. `ts` is the warc_ts in millis; a null warc_ts (real crawls
+    * have captures without one) is Long.MinValue, so it loses every
+    * duplicate-capture pick instead of failing the task. The text is made
+    * valid UTF-8 (a malformed sequence becomes U+FFFD) before `md5` hashes
+    * it, so the hash and every extractor read the same bytes. `html` and
+    * the non-candidate bulk never reach the exchange.
     */
-  private[spark] def candidateRows(spark: SparkSession, pages: DataFrame)
-      : Dataset[(String, String, Long, String)] = {
-    import spark.implicits._
-    // a null warc_ts (real crawls have captures with missing timestamps) must
-    // deterministically LOSE the duplicate-capture pick, not fail the task:
-    // coalesce to Long.MinValue before the non-nullable decode
-    pages
-      .select(F.col("url"),
-        F.coalesce(F.unix_millis(F.col("warc_ts")), F.lit(Long.MinValue)),
-        F.col("text"))
-      .as[(String, Long, String)]
-      .flatMap { case (url, ts, text) =>
-        if (text == null) None
-        else splitSubject(url).filter(sr => isCandidate(sr._2))
-          .map { case (s, r) => (s, r, ts, text) }
-      }
+  private[graft] def candidateRows(pages: DataFrame): DataFrame = {
+    val url = F.col("url")
+    val subj = subjCol(url)
+    val text = F.make_valid_utf8(F.col("text"))
+    pages.where(F.col("text").isNotNull && candidateUrlCol(url))
+      .select(subj.as("subj"), url.substr(F.length(subj) + 1, F.length(url)).as("relpath"),
+        F.coalesce(F.unix_millis(F.col("warc_ts")), F.lit(Long.MinValue)).as("ts"),
+        F.md5(text).as("md5"), text.as("text"))
   }
 
-  /** Mutable per-relpath best capture. A small class (not a tuple) so the
-    * timestamp stays an unboxed primitive field and the winner updates in
-    * place — the boxed (Long, String)-valued map variant measured ~12%
-    * extra reduce-stage CPU at 2.4M pages.
+  /** The duplicate-capture order: a real crawl recrawls pages, so one batch
+    * can hold several captures of one (subj, relpath), and the max (ts,
+    * md5) one wins — the newest capture, content-hash tie-broken — whatever
+    * order the shuffle delivers them in. The reference never faces this (it
+    * reads a checkout), so the rule is this engine's own. Every capture fold
+    * orders by it: `bySubject`, `extractCanonicalPreExtract` and the
+    * `Incremental` batch pass.
     */
-  private final class BestCapture(var ts: Long, var text: String) {
-    var md5: String = null // computed lazily, only on a timestamp collision
-    def md5OrCompute(): String = {
-      if (md5 == null) md5 = md5Hex(text)
-      md5
-    }
-  }
+  private[spark] def above(a: Ranked, b: Ranked): Boolean =
+    a.ts > b.ts || (a.ts == b.ts && a.md5 > b.md5)
 
-  /** Deterministic duplicate-capture pick: a real crawl recrawls pages, so
-    * one batch can hold several captures of the same (subj, relpath). The
-    * winner per relpath is the capture with max (warc_ts, md5(content)) — the
-    * newest capture, content-hash tie-broken — independent of shuffle
-    * iteration order. The reference never faces this (it reads a checkout),
-    * so the rule is this engine's own, applied identically in every variant.
-    * The hash is only computed on an actual timestamp collision.
-    */
-  private def dedupCaptures(it: Iterator[(String, String, Long, String)])
-      : scala.collection.Map[String, String] = {
-    // ONE incremental fold, never materializing the capture stream: task
-    // memory is O(distinct files), not O(captures) — a recrawl-heavy
-    // subject (one hot project recrawled 10^5×, the exact skew a real crawl
-    // has) streams through instead of inflating the group buffer. The
-    // no-duplicate common case costs one map fill, same as before the fold.
-    val best = new scala.collection.mutable.HashMap[String, BestCapture]()
-    it.foreach { case (_, relpath, t, text) =>
-      best.get(relpath) match {
-        case None => best(relpath) = new BestCapture(t, text)
-        case Some(b) =>
-          // max (warc_ts, md5(content)) wins, hashes only on a ts collision
-          if (t > b.ts) { b.ts = t; b.text = text; b.md5 = null }
-          else if (t == b.ts && text != b.text) {
-            val h = md5Hex(text)
-            if (h > b.md5OrCompute()) { b.text = text; b.md5 = h }
-          }
-      }
-    }
-    best.map { case (relpath, b) => (relpath, b.text) }
-  }
-
-  /** The per-subject extraction kernel: ONE groupByKey(subj) pass over
-    * candidate captures (subj, relpath, warc_ts_millis, text), the
-    * duplicate-capture pick, then `emit(subj, winning files)`. Every grouped
-    * extraction is this pass with its own emit: `extractCanonical`,
-    * `extractCanonicalWithStats`, `extractAndRender` and `extractRaw`. The
-    * store writes (`Incremental.initStore`, the batch pass over an empty
-    * store, and `Incremental.appendDelta`) group by subject in their own
+  /** The per-subject extraction kernel: ONE groupByKey(subj) pass over the
+    * candidate captures of `pages`, then `emit(subj, winning files)` with
+    * the winning capture's text per relpath. The winners come from one
+    * incremental fold, never materializing the capture stream: task memory
+    * is O(distinct files), not O(captures), so a recrawl-heavy subject (one
+    * hot project recrawled 10^5×, the skew a real crawl has) streams
+    * through instead of inflating the group buffer. Every grouped
+    * extraction is this pass with its own emit: `extractCanonical` and
+    * `extractCanonicalWithStats` (both `summarizeSubject`),
+    * `extractAndRender` and `extractRaw`. The
+    * store writes (`Incremental.initStore` and `Incremental.appendDelta`)
+    * group the same candidate captures with the stored ones in their own
     * pass, which also emits the winning captures.
     */
-  private[spark] def bySubject[T: Encoder](caps: Dataset[(String, String, Long, String)])(
+  private[spark] def bySubject[T: Encoder](pages: DataFrame)(
       emit: (String, scala.collection.Map[String, String]) => Iterator[T]): Dataset[T] =
-    caps.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups((subj, it) => emit(subj, dedupCaptures(it)))
+    candidateRows(pages).as(Encoders.product[Capture])
+      .groupByKey(_.subj)(Encoders.STRING)
+      .flatMapGroups { (subj, it) =>
+        val best = scala.collection.mutable.HashMap[String, Capture]()
+        it.foreach(c => if (best.get(c.relpath).forall(above(c, _))) best(c.relpath) = c)
+        emit(subj, best.map { case (relpath, c) => relpath -> c.text })
+      }
 
   /** One subject's canonical triples from its winning files (relpath →
-    * text): the emit of the canonical extractions and of the `Incremental`
-    * batch pass (`initStore` and `appendDelta`).
+    * text), plus one `StatsPred` row when its extraction produced provider
+    * errors or dropped known-bad datums: the one emit of the canonical
+    * extractions and of the `Incremental` batch pass.
     */
   private[spark] def summarizeSubject(
-      subj: String, files: scala.collection.Map[String, String]): Iterator[CanonTriple] = {
-    val (metadata, _) = Summarize.summarize(files, subjBasename(subj))
-    metadata.iterator.map(datumToTriple(subj))
+      subj: String, files: scala.collection.Map[String, String],
+      iterationLimit: Int = Summarize.DefaultIterationLimit): Iterator[CanonTriple] = {
+    val (metadata, errors, droppedBad) =
+      Summarize.summarizeWithStats(files, subjBasename(subj), iterationLimit = iterationLimit)
+    val triples = metadata.iterator.map(datumToTriple(subj))
+    if (errors.isEmpty && droppedBad == 0L) triples
+    else triples ++ Iterator.single(CanonTriple(
+      subj, StatsPred, errors.size.toString, droppedBad.toString, -1, ""))
   }
 
-  /** pages → canonical triples: the flagship KG construction job. */
+  /** pages → canonical triples: the flagship KG construction job, the
+    * `extractCanonicalWithStats` emit without its stats rows.
+    */
   def extractCanonical(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
-    bySubject(candidateRows(spark, pages))(summarizeSubject)
+    bySubject(pages)((subj, files) => summarizeSubject(subj, files).filter(_.pred != StatsPred))
   }
 
   /** Marker predicate for per-subject extraction-stats rows (same
@@ -219,15 +204,7 @@ object KgEngine {
       spark: SparkSession, pages: DataFrame,
       iterationLimit: Int = Summarize.DefaultIterationLimit): Dataset[CanonTriple] = {
     import spark.implicits._
-    bySubject(candidateRows(spark, pages)) { (subj, files) =>
-      val (metadata, errors, droppedBad) =
-        Summarize.summarizeWithStats(files, subjBasename(subj),
-          iterationLimit = iterationLimit)
-      val triples = metadata.iterator.map(datumToTriple(subj))
-      if (errors.isEmpty && droppedBad == 0L) triples
-      else triples ++ Iterator.single(CanonTriple(
-        subj, StatsPred, errors.size.toString, droppedBad.toString, -1, ""))
-    }
+    bySubject(pages)(summarizeSubject(_, _, iterationLimit))
   }
 
   /** Splits an `extractCanonicalWithStats` stream into the real triples and
@@ -256,7 +233,7 @@ object KgEngine {
       render: List[graft.core.Datum] => String
   ): Dataset[(String, String)] = {
     import spark.implicits._
-    bySubject(candidateRows(spark, pages)) { (subj, files) =>
+    bySubject(pages) { (subj, files) =>
       Iterator.single(subj -> render(Summarize.summarize(files, subjBasename(subj))._1))
     }
   }
@@ -266,8 +243,10 @@ object KgEngine {
     * bodies — at crawl scale this cuts exchange volume by the README/page
     * size ratio. Only debian artifacts (which need sibling context: watch
     * templating, source/format) ship raw content, and those are tiny.
-    * Semantically identical to `extractCanonical` (equivalence-tested on
-    * every reference fixture and the synthetic corpus).
+    * It reads the same candidate captures (`candidateRows`) and keeps the
+    * same winners (`above`), so it is semantically identical to
+    * `extractCanonical` (equivalence-tested on every reference fixture and
+    * the synthetic corpus).
     *
     * Tradeoff, measured: on the synthetic corpus (where the README-derived
     * Description datum carries the whole page text) the datum rows are as
@@ -278,48 +257,42 @@ object KgEngine {
     */
   def extractCanonicalPreExtract(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
-    candidateRows(spark, pages)
-      .flatMap { case (subj, relpath, ts, text) =>
-        // the duplicate-capture winner must match the grouped variant's
-        // (max warc_ts, md5 tie-break), so the content hash is computed
-        // here — post-shuffle only the extracted datums remain
-        val chash = md5Hex(text)
-        if (relpath.startsWith("debian/"))
-          Iterator.single(ExtractRow(subj, relpath, "x", text, ts, chash))
+    candidateRows(pages).as[Capture]
+      .flatMap { c =>
+        // each row carries its capture's (ts, md5): post-shuffle only the
+        // extracted datums remain, and the winner fold orders by them
+        def row(kind: String, payload: String) =
+          ExtractRow(c.subj, c.relpath, kind, payload, c.ts, c.md5)
+        if (c.relpath.startsWith("debian/")) Iterator.single(row("x", c.text))
         else {
-          val gs = Summarize.fileGuessers(relpath)
-          if (gs.isEmpty) Iterator.single(ExtractRow(subj, relpath, "m", "", ts, chash))
+          val gs = Summarize.fileGuessers(c.relpath)
+          if (gs.isEmpty) Iterator.single(row("m", ""))
           else gs.iterator.map { case (id, fn) =>
-            val datums = fn(text).getOrElse(Nil)
-            ExtractRow(subj, relpath, s"d:$id", datumsToJson(datums), ts, chash)
+            row(s"d:$id", datumsToJson(fn(c.text).getOrElse(Nil)))
           }
         }
       }
       .groupByKey(_.subj)
       .flatMapGroups { (subj, it) =>
         // incremental winner fold, never materializing the capture stream:
-        // per relpath keep the current winning capture key (max ts, then max
-        // content hash) and ONLY that capture's rows — a losing capture's
-        // rows are dropped as they stream past, so task memory is O(winner
-        // rows), not O(captures × guessers)
+        // per relpath keep ONLY the winning capture's rows (the buffer's
+        // head is that capture) — a losing capture's rows are dropped as
+        // they stream past, so task memory is O(winner rows), not
+        // O(captures × guessers)
         val winner = scala.collection.mutable.HashMap
-          .empty[String, (Long, String, scala.collection.mutable.ArrayBuffer[ExtractRow])]
+          .empty[String, scala.collection.mutable.ArrayBuffer[ExtractRow]]
         it.foreach { row =>
           winner.get(row.relpath) match {
-            case None =>
-              winner(row.relpath) =
-                (row.ts, row.chash, scala.collection.mutable.ArrayBuffer(row))
-            case Some((ts0, h0, buf)) =>
-              if (row.ts > ts0 || (row.ts == ts0 && row.chash > h0)) {
-                buf.clear(); buf += row
-                winner(row.relpath) = (row.ts, row.chash, buf)
-              } else if (row.ts == ts0 && row.chash == h0) buf += row
+            case None => winner(row.relpath) = scala.collection.mutable.ArrayBuffer(row)
+            case Some(buf) =>
+              if (above(row, buf.head)) { buf.clear(); buf += row }
+              else if (!above(buf.head, row)) buf += row
           }
         }
         val deferred = Map.newBuilder[String, String]
         val pre = Map.newBuilder[(String, String), List[graft.core.Datum]]
         val relpaths = Set.newBuilder[String]
-        winner.foreach { case (relpath, (_, _, buf)) =>
+        winner.foreach { case (relpath, buf) =>
           relpaths += relpath
           buf.foreach { row =>
             row.kind match {
@@ -342,7 +315,7 @@ object KgEngine {
     */
   def extractRaw(spark: SparkSession, pages: DataFrame): Dataset[RawTriple] = {
     import spark.implicits._
-    bySubject(candidateRows(spark, pages)) { (subj, files) =>
+    bySubject(pages) { (subj, files) =>
       Summarize.extractRaw(files, subjBasename(subj)).iterator.zipWithIndex.map { case (dt, i) =>
         val (obj, objJson) = objForms(dt.value)
         RawTriple(subj, dt.field, obj, objJson,
@@ -1259,11 +1232,12 @@ object KgEngine {
         F.sum(candidateUrlCol(F.col("url")).cast("long")).as("emitted"))
 
   // ---------- Catalyst forms of splitSubject / isCandidate ----------
-  // The resume filter and `lineage` run these per input row at
-  // crawl scale; a ScalaUDF there breaks whole-stage codegen and blocks
-  // filter pushdown, so the url algebra is expressed as codegen'd string
-  // expressions. Equivalence with the Scala functions is property-tested
-  // (SubjectExprSpec) over fixture relpaths and adversarial synthetic urls.
+  // The engine's url algebra: `candidateRows`, the resume filter and
+  // `lineage` run it per input row at crawl scale, where a ScalaUDF or a
+  // typed step breaks whole-stage codegen and blocks filter pushdown, so it
+  // is expressed as codegen'd string expressions. Equivalence with the
+  // Scala reference forms is property-tested (SubjectExprSpec) over fixture
+  // relpaths and adversarial synthetic urls.
 
   /** `splitSubject(url)._1` as an expression: the minimal prefix
     * scheme://host/seg1/ ("" when the url has no subject, matching None).
@@ -1271,43 +1245,30 @@ object KgEngine {
   def subjCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     F.regexp_extract(url, "(?s)^(.*?://[^/]*/[^/]*/)", 1)
 
-  /** `isCandidate(relpath)` as an expression. The multi-segment patterns
-    * tolerate trailing slashes exactly like the Scala `split('/')` (which
-    * drops trailing empty segments).
+  /** `isCandidate` as one regex over a whole relpath. The multi-segment
+    * patterns tolerate trailing slashes exactly like the Scala `split('/')`
+    * (which drops trailing empty segments); every other pattern is one
+    * top-level segment. A readme-like file's extension is the text after
+    * its last dot, so it is excluded iff its name ends in one of the three.
     */
-  def isCandidateCol(relpath: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val base = F.substring_index(relpath, "/", -1)
-    val lcb = F.lower(base)
-    val topLevel = !relpath.contains("/")
-    // extension after the LAST dot, "" when dotless or the dot leads
-    // (lastIndexOf('.') <= 0), matching the Scala ext computation
-    val ext = F.lower(F.regexp_extract(base, "^.+\\.([^.]*)$", 1))
-    val readmeLike =
-      (lcb.startsWith("readme") || lcb.startsWith("hacking") ||
-        lcb.startsWith("contributing")) &&
-      !base.endsWith("~") && !ext.isin("html", "pdf", "xml")
-    relpath.isin(staticNames.toSeq: _*) ||
-    relpath === "debian/source/format" ||
-    (relpath.startsWith("debian/patches/") && relpath.endsWith(".patch")) ||
-    relpath.isin(securityNames.toSeq: _*) ||
-    relpath.rlike("^[^/]*\\.egg-info/PKG-INFO/*$") ||
-    relpath.rlike("^[^/]*\\.dist-info/METADATA/*$") ||
-    relpath.rlike("^[^/]*/DESCRIPTION/*$") ||
-    (topLevel && (
-      base === "setup.py" ||
-      base.endsWith(".gemspec") || base.endsWith(".doap") ||
-      (base.endsWith(".xml") && base.startsWith("doap_XML_")) ||
-      base.endsWith(".metainfo.xml") || base.endsWith(".cabal") ||
-      base.endsWith(".nuspec") || base.endsWith(".opam") ||
-      readmeLike))
-  }
+  private val candidateRelpath: String =
+    ((staticNames ++ securityNames + "debian/source/format").toSeq.sorted
+      .map(java.util.regex.Pattern.quote) ++ Seq(
+      "debian/patches/.*\\.patch",
+      "[^/]*\\.egg-info/PKG-INFO/*",
+      "[^/]*\\.dist-info/METADATA/*",
+      "[^/]*/DESCRIPTION/*",
+      "setup\\.py",
+      "[^/]*\\.(?:gemspec|doap|metainfo\\.xml|cabal|nuspec|opam)",
+      "doap_XML_[^/]*\\.xml",
+      "(?iu:readme|hacking|contributing)(?![^/]*(?:~|\\.(?iu:html|pdf|xml))\\z)[^/]*"))
+      .mkString("(?:", "|", ")")
 
   /** `splitSubject(url).exists(sr => isCandidate(sr._2))` as an expression
-    * (the per-url candidate test over raw page urls).
+    * (the per-url candidate test over raw page urls): one regex match per
+    * url. The atomic group pins the subject to the first "://", as
+    * `subjCol` does; `\z`, unlike `$`, rejects a trailing line break.
     */
-  def candidateUrlCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val subj = subjCol(url)
-    val relpath = url.substr(F.length(subj) + 1, F.length(url))
-    subj =!= "" && isCandidateCol(relpath)
-  }
+  def candidateUrlCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    url.rlike(s"(?s)^(?>.*?://)[^/]*+/[^/]*+/$candidateRelpath\\z")
 }

@@ -30,19 +30,32 @@ object Model {
       origin: String
   )
 
+  /** A capture's place in the duplicate-capture order (`KgEngine.above`):
+    * its warc_ts in millis, then the md5 of its text.
+    */
+  trait Ranked {
+    def ts: Long
+    def md5: String
+  }
+
+  /** A candidate capture of one subject's file (`KgEngine.candidateRows`). */
+  final case class Capture(subj: String, relpath: String, ts: Long, md5: String, text: String)
+      extends Ranked
+
   /** Intermediate row between the narrow extract stage and the per-subject
     * reduce: either a bag of extracted datums (kind="d") or a deferred
     * artifact whose extraction needs sibling context (kind="x", payload =
-    * raw content; only tiny debian metadata files take this path).
+    * raw content; only tiny debian metadata files take this path). `ts` and
+    * `md5` are its capture's.
     */
   final case class ExtractRow(
       subj: String,
       relpath: String,
       kind: String,
       payload: String,
-      ts: Long,       // warc_ts millis: duplicate-capture pick (newest wins)
-      chash: String   // md5 of the capture's content: the ts tie-break
-  )
+      ts: Long,
+      md5: String
+  ) extends Ranked
 
   // ---------- Datum <-> JSON ----------
 

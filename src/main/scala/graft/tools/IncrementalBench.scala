@@ -36,7 +36,6 @@ object IncrementalBench {
       s"/graft_incbench_m$churnMod"
     val spark = SparkRuntime.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

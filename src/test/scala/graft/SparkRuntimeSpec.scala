@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.util.LongAccumulator
 import graft.spark.SparkRuntime
@@ -42,6 +44,43 @@ class SparkRuntimeSpec extends AnyFunSuite with SparkSuite {
     val acc = spark.sparkContext.longAccumulator("recomputed")
     assert(bothEndpoints(counted(acc)) == SumK)
     assert(acc.value == 2 * N)
+  }
+
+  test("materialize computes its input once for two consumers run as concurrent stages") {
+    // two aggregates of one materialized input, joined: AQE submits their
+    // two shuffle-map stages at once. Two partitions that take ~0.5 s each
+    // keep both stages' tasks running side by side on the 4 cores.
+    val acc = spark.sparkContext.longAccumulator("concurrent")
+    val tick = F.udf { (id: Long) => Thread.sleep(1); acc.add(1); id }.asNondeterministic()
+    val t = SparkRuntime.materialize(
+      spark.range(0, N, 1, 2).select(tick(F.col("id")).as("id"), (F.col("id") % 7).as("k")))
+    val rddId = t.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.head
+    // (submission, completion) of every stage that reads the materialized rdd
+    val readers = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val info = e.stageInfo
+        if (info.rddInfos.exists(_.id == rddId))
+          for (s <- info.submissionTime; c <- info.completionTime) readers.add((s, c))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val counts = t.groupBy("k").agg(F.count(F.lit(1)).as("n"))
+      val sums = t.groupBy("k").agg(F.sum("id").as("s"))
+      val rows = counts.join(sums, "k").collect()
+      assert(rows.map(_.getAs[Long]("n")).sum == N)
+      assert(rows.map(_.getAs[Long]("s")).sum == (0L until N).sum)
+      val deadline = System.nanoTime() + 10000000000L
+      while (readers.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val spans = readers.toArray(Array.empty[(Long, Long)]).toSeq
+    assert(spans.size >= 2, spans)
+    assert(spans.combinations(2).exists { case Seq((s1, c1), (s2, c2)) => s1 < c2 && s2 < c1 },
+      s"the two reading stages did not overlap: $spans")
+    // each row computed once: a second task of the same partition waits
+    // for the first one's block instead of computing it again
+    assert(acc.value == N)
   }
 
   test("materialize keeps the input's partitioning") {

@@ -5,11 +5,13 @@ import org.apache.spark.sql.{functions => F}
 import graft.spark.{KgEngine, SynthPages}
 
 /** The Catalyst expression forms of splitSubject / isCandidate
-  * (KgEngine.subjCol / candidateUrlCol) must agree with the Scala functions
-  * on every url — they feed the resume filter and KgJob's lineage counts, so
-  * a silent divergence would corrupt resume bucketing at crawl scale. This
-  * differential test sweeps the candidate-pattern space plus adversarial
-  * edges (trailing slashes, empty segments, missing schemes, case, '~').
+  * (KgEngine.subjCol / candidateUrlCol) must agree with the Scala reference
+  * functions on every url — they select every extraction's input
+  * (candidateRows) and feed the resume filter and KgJob's lineage counts, so
+  * a silent divergence would corrupt extraction and resume bucketing at
+  * crawl scale. This differential test sweeps the candidate-pattern space
+  * plus adversarial edges (trailing slashes, empty segments, missing
+  * schemes, '://' inside the path, case, '~').
   */
 class SubjectExprSpec extends AnyFunSuite with SparkSuite {
 
@@ -53,7 +55,19 @@ class SubjectExprSpec extends AnyFunSuite with SparkSuite {
       "https://replay.invalid", "https://replay.invalid/", "https://replay.invalid/p",
       "nohost", "http//x/y/z", "://host/p/README", "a/b://c/d/README.md",
       "https:///p/README", "https://h//README", "scheme://h/p/",
-      "https://h/p/READ ME", "https://h/p/x://y/")
+      "https://h/p/READ ME", "https://h/p/x://y/",
+      // '://' inside the path or the project segment
+      "https://h/p/a://b/README.md", "https://h/p://q/README.md", "https://h/p/README.md://",
+      "https://h/p/pkg/DESCRIPTION?u=http://x/", "http://h/p/debian/watch://",
+      "https://h/p/x://h2/p2/README.md", "https://h/p/a://b/c://d/setup.py",
+      // a trailing line break, and case in the readme rule's extension
+      "https://h/p/foo.egg-info/PKG-INFO\n", "https://h/p/setup.py\n", "https://h/p/README\n",
+      "https://h/p/README.HTML", "https://h/p/Contributing.Pdf", "https://h/p/hacking.XML~",
+      // trailing slashes
+      "https://h/p/README.md/", "https://h/p/Cargo.toml//", "https://h/p/pkg/DESCRIPTION//",
+      "https://h/p//", "https://h/p/debian/control/",
+      // no third '/'
+      "https://h", "https://h:8080", "https://h/README.md", "http:/h/p/README.md")
 
   test("subjCol and candidateUrlCol agree with the Scala url algebra on every vector") {
     import spark.implicits._
@@ -73,6 +87,28 @@ class SubjectExprSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("candidateRows keeps the reference's candidates row for row, with their warc_ts millis") {
+    import spark.implicits._
+    // one page per vector at its own warc_ts; a null warc_ts maps to
+    // Long.MinValue; a null text or a null url is no candidate
+    val cases: Seq[(String, Option[Long], Option[String])] =
+      urls.zipWithIndex.map { case (u, i) => (u, Some(1000L * i), Some("text")) } ++ Seq(
+        ("https://replay.invalid/projN/README.md", None, Some("text")),
+        ("https://replay.invalid/projT/README.md", Some(7L), None),
+        (null, Some(8L), Some("text")))
+    val pages = cases.toDF("url", "ms", "text")
+      .select(F.col("url"), F.timestamp_millis(F.col("ms")).as("warc_ts"),
+        F.col("text").cast("binary").as("html"), F.col("text"), F.lit("en").as("lang"))
+    val got = KgEngine.candidateRows(pages).select("subj", "relpath", "ts")
+      .as[(String, String, Long)].collect().toSeq.sorted
+    val expected = cases.collect { case (u, ms, Some(_)) if u != null =>
+      KgEngine.splitSubject(u).filter(sr => KgEngine.isCandidate(sr._2))
+        .map { case (subj, relpath) => (subj, relpath, ms.getOrElse(Long.MinValue)) }
+    }.flatten.sorted
+    assert(got == expected)
+    assert(got.contains(("https://replay.invalid/projN/", "README.md", Long.MinValue)))
+  }
+
   test("resume filter and lineage-style plans contain no ScalaUDF") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where("doc_id < 32")
@@ -83,6 +119,10 @@ class SubjectExprSpec extends AnyFunSuite with SparkSuite {
     val lineage = KgEngine.lineage(pages, 8)
     val linPlan = lineage.queryExecution.executedPlan.toString
     assert(!linPlan.contains("ScalaUDF"), s"lineage plan has a UDF:\n$linPlan")
+    // the extraction input is Catalyst end to end: no UDF, no typed step
+    val candPlan = KgEngine.candidateRows(pages).queryExecution.executedPlan.toString
+    assert(!candPlan.contains("ScalaUDF") && !candPlan.contains("DeserializeToObject"),
+      s"candidate plan has a UDF or a typed step:\n$candPlan")
     // and the counts must match the Scala-side truth
     val expected = pages.select("url").collect().map(_.getString(0))
       .count(u => KgEngine.splitSubject(u).exists(sr => KgEngine.isCandidate(sr._2)))
