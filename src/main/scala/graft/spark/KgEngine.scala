@@ -346,6 +346,28 @@ object KgEngine {
         F.col("best.origin").as("origin"))
   }
 
+  /** `canonicalize`'s (certainty, -guesser_rank, -seq) struct as a Scala
+    * order, for the argmaxes `enrichAll` takes inside its subject pass (a
+    * string-valued max_by plans as a SortAggregate, which whole-stage codegen
+    * cannot compile). An exact tie, where the aggregate keeps whichever row it
+    * met first, goes to the larger (obj, obj_json) in `sparkStringOrder`.
+    */
+  private[spark] val latticeOrder: Ordering[SourcedTriple] = (a, b) => {
+    var c = Integer.compare(a.certainty, b.certainty)
+    if (c == 0) c = Integer.compare(b.guesser_rank, a.guesser_rank)
+    if (c == 0) c = Integer.compare(b.seq, a.seq)
+    if (c == 0) c = sparkStringOrder.compare(a.obj, b.obj)
+    if (c == 0) c = sparkStringOrder.compare(a.obj_json, b.obj_json)
+    c
+  }
+
+  /** Spark's ascending string order: null first, then UTF-8 bytes unsigned. */
+  private[spark] val sparkStringOrder: Ordering[String] = (a, b) =>
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+
   /** Graph materialization: URL-typed objects become edges; subjects and URL
     * objects become nodes (SURVEY §1.3). The DataFrame forms take `carry`
     * columns (e.g. the job's bucket) so production jobs share ONE definition
@@ -451,11 +473,14 @@ object KgEngine {
   // ANTI-JOIN against the subjects complete for the source's fields
   // (`completeFor`), so the enrichment work stays proportional to the
   // incomplete subjects rather than the whole graph. The subject-keyed
-  // registry (`gatedRegistryRaw`) and the payload providers of the archive
-  // and external-directory dispatches (`consult`) all gate this way, and
-  // every staged operator ends in `merge`: one lattice argmax in which
-  // existing data of equal or higher certainty wins, so capped rows can
-  // only fill gaps.
+  // registry operator and the payload providers of the archive and
+  // external-directory dispatches (`consult`) all gate this way, and every
+  // staged operator ends in `merge`: one lattice argmax in which existing
+  // data of equal or higher certainty wins, so capped rows can only fill
+  // gaps. That argmax also makes the gate a pure pruning step for rows that
+  // are already parsed: a complete subject holds every supported field at
+  // Certain with rank 0, which beats any registry row (capped at most at
+  // Certain, rank 1), so `enrichAll` takes the registry ungated.
 
   /** Subject-keyed registry enrichment: registry rows for `supportedFields`
     * enter the lattice at `maxCertainty`, behind the completeness gate.
@@ -467,7 +492,8 @@ object KgEngine {
       maxCertainty: Int
   ): Dataset[CanonTriple] = {
     val cd = canon.toDF()
-    merge(cd, Seq(gatedRegistryRaw(cd, registry, supportedFields, maxCertainty)))
+    merge(cd, Seq(registryRaw(registry, supportedFields, maxCertainty)
+      .join(completeFor(cd, supportedFields)(supportedFields), Seq("subj"), "left_anti")))
   }
 
   /** The staged operators' common end: the canon as existing data (rank 0)
@@ -479,33 +505,39 @@ object KgEngine {
       .as[CanonTriple]
   }
 
-  /** The `possible_fields_missing` gate: ONE aggregate of each subject's set
-    * of `unionFields` held at Certain, and per field list the subjects that
-    * hold all of it at Certain. Each field list filters ABOVE the one (subj)
-    * exchange, so the gates of one dispatch canonicalize to identical
-    * exchange subtrees and ReuseExchange runs the canon scan and shuffle
-    * once for all of them (plan-asserted in ArchiveDispatchSpec and
-    * ExternalDirectorySpec).
+  /** The `possible_fields_missing` gate: ONE aggregate of each subject's
+    * `unionFields` held at Certain, as a fixed-width mask (bit i is
+    * `unionFields(i)`, a `bit_or` hash aggregate), and per field list the
+    * subjects whose mask holds all of it. Each field list filters ABOVE the
+    * one (subj) exchange, so the gates of one dispatch canonicalize to
+    * identical exchange subtrees and ReuseExchange runs the canon scan and
+    * shuffle once for all of them (plan-asserted in ArchiveDispatchSpec and
+    * ExternalDirectorySpec). A field outside `unionFields` is never
+    * complete.
     */
   private def completeFor(cd: DataFrame, unionFields: Seq[String]): Seq[String] => DataFrame = {
-    val certainSets = cd
+    require(unionFields.size < 64, s"at most 63 gate fields, got ${unionFields.size}")
+    val bit = F.call_function("shiftleft", F.lit(1L),
+      (F.array_position(F.lit(unionFields.toArray), F.col("pred")) - 1).cast("int"))
+    val certainMasks = cd
       .where(F.col("pred").isin(unionFields.map(x => x: Any): _*) &&
              F.col("certainty") === Certainty.Certain)
-      .groupBy("subj").agg(F.collect_set("pred").as("certain_preds"))
-    fields => certainSets
-      .where(F.size(F.array_intersect(F.col("certain_preds"),
-        F.lit(fields.toArray))) === fields.size)
-      .select("subj")
+      .groupBy("subj").agg(F.bit_or(bit).as("certain_mask"))
+    fields => {
+      val need = fields.map(f => unionFields.indexOf(f) match {
+        case -1 => Long.MinValue // bit 63: no field sets it
+        case i  => 1L << i
+      }).foldLeft(0L)(_ | _)
+      certainMasks.where((F.col("certain_mask").bitwiseAND(need)) === need).select("subj")
+    }
   }
 
-  /** The gated registry stream shared by `enrichFromRegistry` and
-    * `enrichAll`, so the staged and fused enrichment cannot fork semantics:
-    * registry rows for the supported fields of incomplete subjects, at the
-    * registry's cap; structured payloads keep their obj_json when the
-    * registry table carries the column.
+  /** The subject-keyed registry as a raw stream, shared by
+    * `enrichFromRegistry` and `enrichAll`: registry rows for the supported
+    * fields at the registry's cap (rank 1); structured payloads keep their
+    * obj_json when the registry table carries the column.
     */
-  private[spark] def gatedRegistryRaw(
-      cd: DataFrame,
+  private def registryRaw(
       registry: DataFrame,
       supportedFields: Seq[String],
       maxCertainty: Int
@@ -515,7 +547,6 @@ object KgEngine {
       else F.lit("")
     registry
       .where(F.col("pred").isin(supportedFields.map(x => x: Any): _*))
-      .join(completeFor(cd, supportedFields)(supportedFields), Seq("subj"), "left_anti")
       .select(
         F.col("subj"), F.col("pred"), F.col("obj"), regJson.as("obj_json"),
         F.lit(maxCertainty).as("certainty"),
@@ -700,33 +731,44 @@ object KgEngine {
   }
 
   /** The scrape side shared by `enrichFromHomepages` and `enrichAll`: the
-    * canonical Homepage triples join the fetched corpus (only matched pages
-    * are ever parsed), and each page's datums are numbered in EMISSION order
+    * (subj, url) homepages join the fetched corpus (only matched pages are
+    * ever parsed), and each page's datums are numbered in EMISSION order
     * (`seq`) — canonicalize negates seq, so at equal certainty the
     * first-in-document link wins, matching the reference's insert-first-wins
     * merge (a page with both a 'GitHub' and a 'repository' anchor must not
-    * be shuffle-order dependent).
+    * be shuffle-order dependent). `src` is the page's url.
     */
   private def scrapedDatums(
       spark: SparkSession,
       homepages: DataFrame,            // (subj, url)
       fetched: DataFrame
-  ): DataFrame = {
-    import spark.implicits._
+  ): DataFrame =
     homepages
       .join(fetched, Seq("url"))
-      .select(F.col("subj"), F.col("url"), F.col("html"))
-      .as[(String, String, String)]
-      .flatMap { case (subj, url, html) =>
-        if (html == null) Iterator.empty
-        else graft.extract.Homepage.guessFromPage(html, url)
-          .iterator.zipWithIndex.map { case (d, i) =>
-            val (obj, objJson) = objForms(d.value)
-            (subj, d.field, obj, objJson, i)
-          }
-      }
-      .toDF("subj", "pred", "obj", "obj_json", "seq")
-  }
+      .select(F.col("subj"), F.col("url").as("src"), F.posexplode(graft.functions.ScalaKernel
+        .column(spark, "homepage_datums", homepageDatums, HomepageDatumsType,
+          F.col("html"), F.col("url"))).as(Seq("seq", "d")))
+      .select(F.col("subj"), F.col("d.pred").as("pred"), F.col("d.obj").as("obj"),
+        F.col("d.obj_json").as("obj_json"), F.col("seq"), F.col("src"))
+
+  /** A fetched page's datums in document order: (html, url) → an array of
+    * (pred, obj, obj_json); a null page has none.
+    */
+  private val homepageDatums: Array[Any] => Any = args =>
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      if (args(0) == null) Array.empty[Any]
+      else graft.extract.Homepage.guessFromPage(args(0).toString, args(1).toString)
+        .iterator.map { d =>
+          val (obj, objJson) = objForms(d.value)
+          org.apache.spark.sql.catalyst.InternalRow(utf8(d.field), utf8(obj), utf8(objJson))
+        }.toArray[Any])
+
+  private val HomepageDatumsType = org.apache.spark.sql.types.ArrayType(
+    org.apache.spark.sql.types.StructType(Seq("pred", "obj", "obj_json").map(
+      org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType))),
+    containsNull = false)
+
+  private def utf8(x: String) = org.apache.spark.unsafe.types.UTF8String.fromString(x)
 
   /** Homepage-scrape enrichment — extrapolation rule 14 in its crawl-scale
     * form (the reference's src/homepage.rs:7-56): the reference fetches each
@@ -743,18 +785,19 @@ object KgEngine {
     val cd = canon.toDF()
     val homepages = cd.where(F.col("pred") === "Homepage")
       .select(F.col("subj"), F.col("obj").as("url"))
-    merge(cd, Seq(scrapeAsRaw(scrapedDatums(canon.sparkSession, homepages, fetched), rank = 1)))
+    merge(cd, Seq(scrapeAsRaw(scrapedDatums(canon.sparkSession, homepages, fetched), rank = 1)
+      .drop("src")))
   }
 
   /** Scraped homepage datums as a raw stream: Possible certainty, the given
-    * tie rank, document-order seq.
+    * tie rank, document-order seq, and the page's url as `src`.
     */
   private def scrapeAsRaw(scraped: DataFrame, rank: Int): DataFrame =
     scraped.select(
       F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_json"),
       F.lit(Certainty.Possible).as("certainty"),
       F.lit("homepage-scrape").as("origin"),
-      F.lit(rank).as("guesser_rank"), F.col("seq"))
+      F.lit(rank).as("guesser_rank"), F.col("seq"), F.col("src"))
 
   /** Post-enrichment extrapolation — the reference lifecycle runs the
     * extrapolation fixpoint AFTER external enrichment
@@ -839,41 +882,49 @@ object KgEngine {
   }
 
   /** The full enrichment lifecycle in the reference's order — extend
-    * (external registry + homepage scrape), extrapolate, check — with ONE
-    * full-table lattice aggregate: all raw datum streams union BEFORE
-    * `canonicalize`, instead of re-aggregating the whole triple table per
-    * stage (the staged `enrichFromRegistry → enrichFromHomepages →
-    * applyUrlProbes` chain shuffles the full table three times; at crawl
-    * scale that triples the heaviest exchange). Stage precedence at equal
-    * certainty is preserved through `guesser_rank` (existing 0 < registry 1 <
-    * scrape 2) — the same tie order the staged chain produces, so the fused
-    * form equals the staged chain with `extrapolatePost` before
-    * `applyUrlProbes`.
+    * (external registry + homepage scrape), extrapolate, check — in ONE
+    * subject pass over the raw datum streams: the existing canon (rank 0),
+    * the registry (rank 1, at most Certain) and the homepage scrape (rank 2)
+    * union and shuffle once on `subj`, and each subject group takes its
+    * lattice argmax per pred in Scala (`latticeOrder`, the order of
+    * `canonicalize`'s struct), then runs the extend tail and the checks. The staged
+    * `enrichFromRegistry → enrichFromHomepages → applyUrlProbes` chain
+    * shuffles the full table once per stage; stage precedence at equal
+    * certainty is the same `guesser_rank` tie order, so the fused form
+    * equals the staged chain with `extrapolatePost` before `applyUrlProbes`.
+    * No string-valued aggregate runs: a string max_by plans as a
+    * SortAggregate and a collect_set as an ObjectHashAggregate, neither of
+    * which whole-stage codegen compiles (plan-asserted in EnrichPlanSpec).
+    * The registry needs no completeness gate here: a subject that holds
+    * every supported field at Certain keeps it against any registry row in
+    * the same argmax, so the gate of `enrichFromRegistry` would only prune
+    * rows that cannot win.
     *
-    * The scrape side joins the POST-REGISTRY-MERGE canonical homepage per
-    * subject (existing rows vs gated registry rows through the same lattice
-    * tie rules, as a subj-only argmax on the tiny Homepage subset) — a
-    * homepage first learned from the registry in this batch is scraped in
-    * this SAME batch, exactly like the staged chain, without re-aggregating
-    * the full stream.
+    * The scrape source is the POST-REGISTRY-MERGE homepage, as in the staged
+    * chain: every non-scrape Homepage candidate (existing and registry
+    * rows) joins the fetched corpus, each scraped datum carries its
+    * page's url (`src`), and the group keeps only the scrape of its winning
+    * homepage (the `latticeOrder` argmax of its non-scrape Homepage rows).
+    * A homepage first learned from the registry in this batch is scraped in
+    * this SAME batch.
     *
-    * Probe verdicts never touch the driver: the collapsed probe/screenshot
-    * tables JOIN (on url) against the candidate-url set of each subject —
-    * its checked-field objs, the per-datum extrapolation closure of every
-    * url-typed obj (all url-producing extrapolation rules are single-source,
-    * so the union of per-datum closures covers every url the in-group
-    * fixpoint can derive; over-approximation only adds carriers that are
-    * never looked up), and the members of Likely Screenshots lists — and the
-    * matches ride the ONE subject exchange as marker rows consumed by the
-    * group pass. A probe fleet covering 10^9 urls stays distributed end to
-    * end; the per-subject carrier count is bounded by the subject's own url
-    * count. The candidate side re-reads `merged` (its lattice exchange is
-    * reused — only the final argmax re-runs over the checked-pred subset).
+    * Probe verdicts never touch the driver: the raw probe/collapsed
+    * screenshot tables JOIN (on url) against the candidate-url set of each
+    * subject — its checked-field objs, the per-datum extrapolation closure
+    * of every url-typed obj (all url-producing extrapolation rules are
+    * single-source, so the union of per-datum closures covers every url the
+    * in-group fixpoint can derive; over-approximation, including the urls
+    * of losing homepages' scrapes, only adds carriers that are never looked
+    * up), and the members of Likely Screenshots lists. The matches are
+    * carrier rows cogrouped with the subject's datums; duplicate probe rows
+    * of one url collapse in-group by `collapseProbes`' rule. A probe fleet
+    * covering 10^9 urls stays distributed end to end; the per-subject
+    * carrier count is bounded by the subject's own url count. The candidate
+    * side re-reads the raw union's exchange (ReuseExchange).
     *
-    * The `canon` input is referenced multiple times (existing stream,
-    * homepage side, completeness gate). In production that input is a STORED
-    * triple table (KgJob's output), so each reference is a pruned parquet
-    * scan; if you pass a live extraction pipeline instead, persist it first
+    * The `canon` input is referenced twice (existing stream and homepage
+    * side). In production that input is a STORED triple table (KgJob's
+    * output), so each reference is a pruned parquet scan; if you pass a live extraction pipeline instead, persist it first
     * or accept re-execution — the one full-width exchange guarantee is about
     * the enrichment itself, not the caller's upstream.
     */
@@ -886,53 +937,41 @@ object KgEngine {
       probes: DataFrame,               // (url, status, canonical_url)
       screenshotProbes: Option[DataFrame] = None
   ): Dataset[CanonTriple] = {
+    require(maxCertainty <= Certainty.Certain, s"registry cap $maxCertainty above Certain")
     val spark = canon.sparkSession
     import spark.implicits._
     val cd = canon.toDF()
-    val regRaw = gatedRegistryRaw(cd, registry, supportedFields, maxCertainty)
-    // same-batch scrape source: the homepage the staged chain would scrape
-    // is the post-registry-merge winner. Single-pred argmax → groupBy(subj)
-    // only, so the full-stream union exchange below stays the unique
-    // (subj, pred) lattice shuffle.
-    val hpRaw = canonAsRaw(cd).where(F.col("pred") === "Homepage")
+    val noSrc = F.lit(null).cast("string").as("src")
+    val existing = canonAsRaw(cd).select(F.col("*"), noSrc)
+    // ungated: the lattice already keeps a complete subject's registry rows
+    // from winning (see the extend-stage notes above `enrichFromRegistry`)
+    val regRaw = registryRaw(registry, supportedFields, maxCertainty).select(F.col("*"), noSrc)
+    val hpCandidates = existing.where(F.col("pred") === "Homepage")
       .unionByName(regRaw.where(F.col("pred") === "Homepage"))
-    val homepages = hpRaw.groupBy("subj")
-      .agg(F.max_by(F.col("obj"), F.struct(
-        F.col("certainty"),
-        F.negate(F.col("guesser_rank")),
-        F.negate(F.col("seq")))).as("url"))
-    val scrapeRaw = scrapeAsRaw(scrapedDatums(spark, homepages, fetched), rank = 2)
-    // the union feeds BOTH the lattice argmax and the candidate-url branch;
-    // an explicit repartition on the aggregate's own keys REPLACES the
-    // aggregate's shuffle (the requirement is already satisfied, so no
-    // extra exchange appears) and turns the union into shared map output —
-    // the candidate branch reads the reused exchange instead of re-running
-    // the union's upstream (registry gate, homepage argmax, scrape parse,
-    // and the caller's canon pipeline when it is not a stored table)
-    val rawAll = canonAsRaw(cd).unionByName(regRaw).unionByName(scrapeRaw)
-      .repartition(F.col("subj"), F.col("pred"))
-    val merged = canonicalize(rawAll.as[RawTriple]).as[CanonTriple]
-    // extrapolate + check FUSED into one subject-grouped pass over the merged
-    // table: the relational applyUrlProbes' browse-sync branch consumes its
-    // input twice (per-branch pruning then re-executes the canonicalize), so
-    // the checked path here runs the PURE Checks.applyProbes in-group — full
-    // reference parity (browse sync, Screenshots tri-state). Probe verdicts
-    // arrive as carrier rows (see Scaladoc); groups with nothing enriched
-    // and no carried verdict pass through as a plain iterator hand-off.
-    val probes1 = collapseProbes(probes)
+      .select(F.col("subj"), F.col("obj").as("url"))
+    val scrapeRaw = scrapeAsRaw(scrapedDatums(spark, hpCandidates, fetched), rank = 2)
+    // the union feeds BOTH the subject pass and the candidate-url branch;
+    // the explicit repartition on the pass's key IS the pass's shuffle (the
+    // requirement is already satisfied, so no extra exchange appears) and
+    // turns the union into shared map output — the candidate branch reads
+    // the reused exchange instead of re-running the union's upstream
+    // (registry rows, scrape parse, and the caller's canon pipeline when it
+    // is not a stored table)
+    val rawAll = existing.unionByName(regRaw).unionByName(scrapeRaw)
+      .repartition(F.col("subj"))
     val shots1 = screenshotProbes.map(collapseShots)
     val haveShots = screenshotProbes.isDefined
-    // candidate urls come from the PRE-aggregate raw stream: its values are
-    // a superset of the lattice winners', so the closure still covers every
-    // in-group lookup. Consuming FULL RawTriple rows (not a pruned
+    // consuming FULL rows (a struct of every column, not a pruned
     // projection) keeps this branch's exchange subtree canonically identical
-    // to the lattice branch's, so ReuseExchange shares the one shuffle —
-    // a narrower select here pushes a different projection below the
-    // exchange and silently doubles the union's upstream execution
-    val cands = rawAll.as[RawTriple]
-      .flatMap(r => probeCandidateUrls(r.subj, r.pred, r.obj, r.obj_json, r.certainty))
-      .toDF("subj", "url")
-    val pCarrier = cands.join(probes1, Seq("url"))
+    // to the subject pass's, so ReuseExchange shares the one shuffle — a
+    // narrower select here pushes a different projection below the exchange
+    // and silently doubles the union's upstream execution. The explode keeps
+    // the exchange's subj partitioning, so when the probe table broadcasts
+    // the carriers reach the subject pass without a shuffle of their own
+    val cands = rawAll.select(F.col("subj"), F.explode(graft.functions.ScalaKernel.column(
+        spark, "probe_candidate_urls", candidateUrls, CandidateUrlsType,
+        F.struct(SourcedColumns.map(F.col): _*))).as("url"))
+    val pCarrier = cands.join(probes.select("url", "status", "canonical_url"), Seq("url"))
       .select(F.col("subj"), F.lit(ProbeCarrierPred).as("pred"),
         F.col("url").as("obj"), F.col("canonical_url").as("obj_json"),
         F.lit(-1).as("certainty"), F.col("status").as("origin"))
@@ -940,61 +979,86 @@ object KgEngine {
       .select(F.col("subj"), F.lit(ShotCarrierPred).as("pred"),
         F.col("url").as("obj"), F.lit("").as("obj_json"),
         F.col("live").cast("int").as("certainty"), F.lit("").as("origin")))
-    val withCarriers = sCarrier
-      .foldLeft(merged.toDF().unionByName(pCarrier))(_.unionByName(_))
-      .as[CanonTriple]
+    val carriers = sCarrier.foldLeft(pCarrier)(_.unionByName(_))
     val origins = Set("external-registry", "homepage-scrape")
-    withCarriers.groupByKey(_.subj).flatMapGroups { (subj, it) =>
-      val all = it.toArray
-      val (carriers, rows) =
-        if (all.exists(r => r.pred.nonEmpty && r.pred.charAt(0) == CarrierMark))
-          all.partition(r => r.pred.nonEmpty && r.pred.charAt(0) == CarrierMark)
-        else (Array.empty[CanonTriple], all)
-      val enriched = rows.exists(r => origins.contains(r.origin))
-      // a Likely Screenshots list is re-verified whenever a screenshot fleet
-      // ran AT ALL — an entirely-unprobed list still demotes (tri-state)
-      val probed = carriers.nonEmpty ||
-        (haveShots && rows.exists(r =>
-          r.pred == "Screenshots" && r.certainty == Certainty.Likely))
-      if (!enriched && !probed) rows.iterator
-      else {
-        val pm: Map[String, (String, String)] = carriers.iterator
-          .filter(_.pred == ProbeCarrierPred)
-          .map(c => c.obj -> (c.origin, c.obj_json)).toMap
-        val sm: Map[String, Boolean] = carriers.iterator
-          .filter(_.pred == ShotCarrierPred)
-          .map(c => c.obj -> (c.certainty == 1)).toMap
-        val md =
-          if (enriched) extendTail(rows) // extend → extrapolate, shared defn
-          else scala.collection.mutable.ArrayBuffer.from(
-            rows.map(tripleToDatum).sortBy(_.field))
-        val checkedMd =
-          if (probed) {
-            val lookup: (String, String) => graft.pipeline.Checks.Outcome =
-              (_, url) => pm.get(url) match {
-                case Some(("valid", canonical)) =>
-                  graft.pipeline.Checks.Valid(canonical)
-                case Some(("invalid", _)) => graft.pipeline.Checks.Invalid
-                case _ => graft.pipeline.Checks.Unverifiable
-              }
-            if (haveShots)
-              graft.pipeline.Checks.applyProbes(md.toList, lookup, url => sm.get(url))
-            else
-              // no screenshot fleet ran: Screenshots lists stay untouched —
-              // treating "no fleet" as "all inconclusive" would empty every
-              // Likely list (matches applyUrlProbes with screenshotProbes
-              // = None)
-              graft.pipeline.Checks.applyProbesNoScreenshots(md.toList, lookup)
-          } else md.toList
-        checkedMd.sortBy(_.field).iterator.map(datumToTriple(subj))
+    // grouping by the COLUMN (not a groupByKey lambda) keeps the pass on
+    // rawAll's subj partitioning, which the carriers keep too unless their
+    // probe join shuffles on url
+    rawAll.groupBy("subj").as[String, SourcedTriple]
+      .cogroup(carriers.groupBy("subj").as[String, CanonTriple]) { (subj, rawIt, carrierIt) =>
+        val rows = latticeWinners(subj, rawIt.toArray)
+        val carried = carrierIt.toArray
+        val enriched = rows.exists(r => origins.contains(r.origin))
+        // a Likely Screenshots list is re-verified whenever a screenshot fleet
+        // ran AT ALL — an entirely-unprobed list still demotes (tri-state)
+        val probed = carried.nonEmpty ||
+          (haveShots && rows.exists(r =>
+            r.pred == "Screenshots" && r.certainty == Certainty.Likely))
+        if (!enriched && !probed) rows.iterator
+        else {
+          // one verdict per url: the largest (status, canonical), as in
+          // collapseProbes
+          val pm = scala.collection.mutable.HashMap.empty[String, (String, String)]
+          val verdictOrder = Ordering.Tuple2(sparkStringOrder, sparkStringOrder)
+          carried.foreach { c =>
+            if (c.pred == ProbeCarrierPred) {
+              val v = (c.origin, c.obj_json)
+              if (pm.get(c.obj).forall(verdictOrder.lt(_, v))) pm(c.obj) = v
+            }
+          }
+          val sm: Map[String, Boolean] = carried.iterator
+            .filter(_.pred == ShotCarrierPred)
+            .map(c => c.obj -> (c.certainty == 1)).toMap
+          val md =
+            if (enriched) extendTail(rows) // extend → extrapolate, shared defn
+            else scala.collection.mutable.ArrayBuffer.from(
+              rows.map(tripleToDatum).sortBy(_.field))
+          val checkedMd =
+            if (probed) {
+              val lookup: (String, String) => graft.pipeline.Checks.Outcome =
+                (_, url) => pm.get(url) match {
+                  case Some(("valid", canonical)) =>
+                    graft.pipeline.Checks.Valid(canonical)
+                  case Some(("invalid", _)) => graft.pipeline.Checks.Invalid
+                  case _ => graft.pipeline.Checks.Unverifiable
+                }
+              if (haveShots)
+                graft.pipeline.Checks.applyProbes(md.toList, lookup, url => sm.get(url))
+              else
+                // no screenshot fleet ran: Screenshots lists stay untouched —
+                // treating "no fleet" as "all inconclusive" would empty every
+                // Likely list (matches applyUrlProbes with screenshotProbes
+                // = None)
+                graft.pipeline.Checks.applyProbesNoScreenshots(md.toList, lookup)
+            } else md.toList
+          checkedMd.sortBy(_.field).iterator.map(datumToTriple(subj))
+        }
       }
-    }
   }
 
-  // carrier rows ride the subject exchange next to real triples; the
-  // leading-space prefix cannot collide with a real predicate (field names
-  // are drawn from the reference's fixed vocabulary, none space-prefixed)
-  private val CarrierMark: Char = '\u0000'
+  /** One subject's lattice winners, one row per pred, by `latticeOrder`. A
+    * scraped datum counts only when its page is the winning homepage: the
+    * `latticeOrder` argmax of the subject's non-scrape Homepage rows.
+    */
+  private def latticeWinners(subj: String, raws: Array[SourcedTriple]): Array[CanonTriple] = {
+    var home: SourcedTriple = null
+    raws.foreach { r =>
+      if (r.src == null && r.pred == "Homepage" && (home == null || latticeOrder.gt(r, home)))
+        home = r
+    }
+    val homeUrl = if (home == null) null else home.obj
+    val best = scala.collection.mutable.HashMap.empty[String, SourcedTriple]
+    raws.foreach { r =>
+      if ((r.src == null || r.src == homeUrl) && best.get(r.pred).forall(latticeOrder.lt(_, r)))
+        best(r.pred) = r
+    }
+    best.valuesIterator
+      .map(r => CanonTriple(subj, r.pred, r.obj, r.obj_json, r.certainty, r.origin))
+      .toArray
+  }
+
+  // carrier rows ride the subject pass's second cogroup side; their preds
+  // only tell a probe verdict from a screenshot verdict
   private[spark] val ProbeCarrierPred: String = "\u0000probe"
   private[spark] val ShotCarrierPred: String = "\u0000shot"
 
@@ -1004,20 +1068,19 @@ object KgEngine {
   private lazy val closureStartFields: Set[String] =
     checkedFields ++ graft.pipeline.Summarize.singletonRuleSourceFields
 
-  /** Every url the in-group check could look up for this row's subject: the
-    * obj itself (checked fields), the checked-field values reachable from
-    * this ONE datum through the single-source extrapolation rules (covers
-    * urls first derived by the in-group fixpoint — a BFS over the actual
-    * rule callbacks, far cheaper than running the full fixpoint machinery
-    * per row), and the members of a Likely Screenshots list.
+  /** Every url the in-group check could look up for a raw row of its
+    * subject: the obj itself (checked fields), the checked-field values
+    * reachable from this ONE datum through the single-source extrapolation
+    * rules (covers urls first derived by the in-group fixpoint — a BFS over
+    * the actual rule callbacks, far cheaper than running the full fixpoint
+    * machinery per row), and the members of a Likely Screenshots list.
     */
   private[spark] def probeCandidateUrls(
-      subj: String, pred: String, obj: String, objJson: String,
-      certainty: Int): Iterator[(String, String)] =
+      pred: String, obj: String, objJson: String, certainty: Int): Iterator[String] =
     if (pred == "Screenshots") {
       if (certainty != Certainty.Likely) Iterator.empty
       else valueFromForms(obj, objJson) match {
-        case graft.core.UStrings(us) => us.iterator.map(u => (subj, u))
+        case graft.core.UStrings(us) => us.iterator
         case _                       => Iterator.empty
       }
     } else if (closureStartFields.contains(pred)) {
@@ -1034,14 +1097,28 @@ object KgEngine {
       seen.iterator
         .collect { case (f, u) if checkedFields.contains(f) => u }
         .distinct
-        .map(u => (subj, u))
     } else Iterator.empty
+
+  /** `probeCandidateUrls` over a struct of a SourcedTriple's columns. */
+  private val candidateUrls: Array[Any] => Any = args => {
+    val r = args(0).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      probeCandidateUrls(str(1), str(2), str(3), r.getInt(4)).map(utf8).toArray[Any])
+  }
+
+  private val CandidateUrlsType =
+    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
+
+  private val SourcedColumns: Seq[String] = Encoders.product[SourcedTriple].schema.fieldNames.toSeq
 
   /** One row per url, deterministically: the lexicographically largest
     * (status, canonical) wins — 'valid' beats 'unverifiable' beats
     * 'invalid', so a url that ever probed valid stays valid. (A probe table
     * SHOULD be unique per url, but a retrying probe fleet can emit
     * conflicting rows; joining them raw would duplicate triples.)
+    * `applyUrlProbes` collapses through this aggregate; `enrichAll` applies
+    * the same rule to its carried verdicts in-group.
     */
   private[spark] def collapseProbes(probes: DataFrame): DataFrame =
     probes.groupBy("url")
@@ -1216,8 +1293,16 @@ object KgEngine {
       completedBuckets: Seq[Int],
       buckets: Int
   ): DataFrame =
-    pages.where(!bucketOf(subjCol(F.col("url")), buckets)
+    pages.where(!pageBucket(F.col("url"), buckets)
       .isin(completedBuckets.map(x => x: Any): _*))
+
+  /** A page's bucket: its subject's, and for a page without a subject (a
+    * null url, or a url with no project prefix) the bucket of "", so its
+    * lineage row lands in a real bucket under the manifest and a resumed run
+    * keeps or drops it with that bucket.
+    */
+  private def pageBucket(url: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
+    bucketOf(F.coalesce(subjCol(url), F.lit("")), buckets)
 
   /** Page lineage per subject bucket: (bucket, input_rows, emitted), where
     * `emitted` counts the candidate pages, from a pruned url-only scan.
@@ -1226,7 +1311,7 @@ object KgEngine {
     */
   def lineage(pages: DataFrame, buckets: Int): DataFrame =
     pages.select(F.col("url"))
-      .withColumn("bucket", bucketOf(subjCol(F.col("url")), buckets))
+      .withColumn("bucket", pageBucket(F.col("url"), buckets))
       .groupBy("bucket")
       .agg(F.count(F.lit(1)).as("input_rows"),
         F.sum(candidateUrlCol(F.col("url")).cast("long")).as("emitted"))

@@ -20,6 +20,23 @@ object Model {
       seq: Int              // emission index within the guesser
   )
 
+  /** A raw datum in `KgEngine.enrichAll`'s subject pass: the RawTriple
+    * columns plus `src`, the homepage url a scraped datum was read from
+    * (null for every other stream), so the pass keeps only the scrape of the
+    * subject's winning homepage.
+    */
+  final case class SourcedTriple(
+      subj: String,
+      pred: String,
+      obj: String,
+      obj_json: String,
+      certainty: Int,
+      origin: String,
+      guesser_rank: Int,
+      seq: Int,
+      src: String
+  )
+
   /** Canonicalized: exactly one row per (subj, pred). */
   final case class CanonTriple(
       subj: String,

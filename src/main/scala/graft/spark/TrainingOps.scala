@@ -86,31 +86,46 @@ object TrainingOps {
   /** MinHash+LSH candidate generation: word `ShingleN`-gram shingles →
     * `MinHashes` minhash values → `Bands` bands hashed to bucket keys. A
     * join on (band, key) yields candidate pairs without a cross product;
-    * verification computes true Jaccard on the candidates only.
+    * verification computes true Jaccard on the candidates only. The
+    * signature runs as a Catalyst expression (`bandKeys` in a
+    * `ScalaKernel`) and a posexplode, inside the scan's codegen stage.
     */
   def minhashBands(documents: DataFrame): Dataset[MinHashSig] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val perBand = MinHashes / Bands
-    documents.select(F.col("doc_id").cast("long"), F.col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val sig = Array.fill(MinHashes)(Long.MaxValue)
-        shingles(text).foreach { sh =>
-          var i = 0
-          while (i < MinHashes) {
-            val h = mix64(sh ^ (0x1234567890ABCDEFL * (i + 1)))
-            if (h < sig(i)) sig(i) = h
-            i += 1
-          }
-        }
-        (0 until Bands).iterator.map { b =>
-          var key = 0L
-          var i = 0
-          while (i < perBand) { key = mix64(key ^ sig(b * perBand + i)); i += 1 }
-          MinHashSig(id, b, key)
-        }
+    import documents.sparkSession.implicits._
+    bandSigs(documents).select("doc_id", "band", "key").as[MinHashSig]
+  }
+
+  /** `minhashBands` plus `keys`, the document's key in every band. */
+  private def bandSigs(documents: DataFrame): DataFrame =
+    documents.select(F.col("doc_id").cast("long").as("doc_id"),
+        graft.functions.ScalaKernel.column(documents.sparkSession, "minhash_band_keys",
+          bandKeys, org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.LongType, containsNull = false),
+          F.col("text")).as("keys"))
+      .select(F.col("*"), F.posexplode(F.col("keys")).as(Seq("band", "key")))
+
+  /** A text's `Bands` band keys, band b at index b. */
+  private val bandKeys: Array[Any] => Any = args => {
+    val sig = Array.fill(MinHashes)(Long.MaxValue)
+    shingles(if (args(0) == null) null else args(0).toString).foreach { sh =>
+      var i = 0
+      while (i < MinHashes) {
+        val h = mix64(sh ^ (0x1234567890ABCDEFL * (i + 1)))
+        if (h < sig(i)) sig(i) = h
+        i += 1
       }
+    }
+    val perBand = MinHashes / Bands
+    val keys = new Array[Long](Bands)
+    var b = 0
+    while (b < Bands) {
+      var key = 0L
+      var i = 0
+      while (i < perBand) { key = mix64(key ^ sig(b * perBand + i)); i += 1 }
+      keys(b) = key
+      b += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(keys)
   }
 
   /** The word-`ShingleN`-gram shingle set from a pre-split token-array
@@ -128,33 +143,45 @@ object TrainingOps {
         s"i -> concat_ws(' ', ${words.mkString(", ")}))"))
   }
 
-  /** LSH candidate pairs: the rows of `sigs` that share every `keys` value
-    * (a band, chunk or table bucket), as (a, b) with a < b on `id`, each
-    * pair once, plus `<c>_a` and `<c>_b` for every `carry` column. This is
-    * the one place bucket pairs are built, so a heavy bucket is split here
-    * or nowhere.
+  /** LSH candidate pairs: the rows of `sigs` (`id`, keys, slot, key) that
+    * share a bucket, i.e. a `key` in the same `slot` (a band, chunk or
+    * table), as (a, b) with a < b on `id`, plus `<c>_a` and `<c>_b` for every
+    * `carry` column. `keys` holds the row's key in every slot, so a pair
+    * that shares several buckets joins once, in the first slot it shares,
+    * and needs no distinct. This is the one place bucket pairs are built, so
+    * a heavy bucket is split here or nowhere.
     *
     * The shuffle-hash hint on the build side: without it the planner
     * broadcasts one side, whose plan shape differs from the streamed side,
     * and the signature pass executes once PER SIDE (profiled as 2× the
-    * operator's CPU). With both sides shuffled on `keys` the two exchange
-    * subtrees are canonically identical and AQE's runtime stage cache
-    * executes the signature pass ONCE — single execution with lineage
+    * operator's CPU). With both sides shuffled on (slot, key) the two
+    * exchange subtrees are canonically identical and AQE's runtime stage
+    * cache executes the signature pass ONCE — single execution with lineage
     * intact (no checkpoint, no storage residency), and the shuffled
     * self-join is the only shape that works at corpus scale anyway (a
     * signature table never broadcasts at 100 TB).
     */
   private def bucketPairs(
-      sigs: DataFrame, id: String, keys: Seq[String], carry: Seq[String] = Nil
+      sigs: DataFrame, id: String, slots: Int, carry: Seq[String] = Nil
   ): DataFrame = {
     def side(s: String, c: String) = F.col(s"$s.$c")
-    val sameBucket = keys.map(k => side("l", k) === side("r", k)).reduce(_ && _)
     sigs.as("l").join(sigs.as("r").hint("shuffle_hash"),
-        sameBucket && side("l", id) < side("r", id))
+        side("l", "slot") === side("r", "slot") && side("l", "key") === side("r", "key") &&
+        side("l", id) < side("r", id) &&
+        side("l", "slot") === firstShared(side("l", "keys"), side("r", "keys"), slots))
       .select(Seq(side("l", id).as("a"), side("r", id).as("b")) ++
         carry.flatMap(c => Seq(side("l", c).as(s"${c}_a"), side("r", c).as(s"${c}_b"))): _*)
-      .distinct()
   }
+
+  /** The first of `slots` positions at which the key arrays `l` and `r`
+    * agree (`slots` when none does).
+    */
+  private def firstShared(
+      l: org.apache.spark.sql.Column, r: org.apache.spark.sql.Column, slots: Int
+  ): org.apache.spark.sql.Column =
+    (0 until slots).foldRight(F.lit(slots)) { (i, later) =>
+      F.when(l(i) === r(i), i).otherwise(later)
+    }
 
   /** The LSH candidate set alone: doc pairs sharing at least one band
     * bucket, (a, b) with a < b. Split out of `minhashDedupPairs` so the
@@ -163,7 +190,7 @@ object TrainingOps {
     * composition bounds.
     */
   def minhashCandidatePairs(documents: DataFrame): DataFrame =
-    bucketPairs(minhashBands(documents).toDF(), "doc_id", Seq("band", "key"))
+    bucketPairs(bandSigs(documents).withColumnRenamed("band", "slot"), "doc_id", Bands)
 
   /** Candidate pairs from LSH buckets, verified with exact shingle-set
     * Jaccard ≥ `threshold` (w-shingling). Output: (a, b, jaccard), a < b.
@@ -172,26 +199,36 @@ object TrainingOps {
     * band) — that is the oracle-checkable operating point.
     */
   def minhashDedupPairs(documents: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val cand = minhashCandidatePairs(documents)
+    val docs = documents.select(F.col("doc_id").cast("long"), F.col("text"))
     // the shingle-set table verifies both endpoints of every candidate pair
     // (two joins with different column aliases — aliased consumers do not
     // share an exchange, measured): materialize it once instead of
     // recomputing the O(words) transform per side
-    val docs = SparkRuntime.materialize(documents
-      .select(F.col("doc_id").cast("long"), F.col("text"),
-        F.split(F.col("text"), " ").as("ws"))
-      .select(F.col("doc_id"),
-        F.array_distinct(shingleSet("text", "ws")).as("toks")))
+    verifiedPairs(minhashCandidatePairs(docs),
+      SparkRuntime.materialize(withShingles(docs).select("doc_id", "toks")), threshold)
+  }
+
+  /** `docs` plus `toks`, the distinct word-`ShingleN`-gram shingles of its
+    * `text`.
+    */
+  private def withShingles(docs: DataFrame): DataFrame =
+    docs.withColumn("ws", F.split(F.col("text"), " "))
+      .withColumn("toks", F.array_distinct(shingleSet("text", "ws")))
+      .drop("ws")
+
+  /** The candidate pairs `cand` (a, b) whose shingle sets, looked up in
+    * `toks` (doc_id, toks), have Jaccard ≥ `threshold`: (a, b, jaccard).
+    */
+  private def verifiedPairs(cand: DataFrame, toks: DataFrame, threshold: Double): DataFrame =
     cand
-      .join(docs.withColumnRenamed("doc_id", "a").withColumnRenamed("toks", "ta"), "a")
-      .join(docs.withColumnRenamed("doc_id", "b").withColumnRenamed("toks", "tb"), "b")
+      .join(toks.withColumnRenamed("doc_id", "a").withColumnRenamed("toks", "ta"), "a")
+      .join(toks.withColumnRenamed("doc_id", "b").withColumnRenamed("toks", "tb"), "b")
       .withColumn("inter", F.size(F.array_intersect(F.col("ta"), F.col("tb"))))
       .withColumn("uni", F.size(F.array_union(F.col("ta"), F.col("tb"))))
       .where(F.col("uni") > 0)
       .withColumn("jaccard", F.col("inter").cast("double") / F.col("uni"))
       .where(F.col("jaccard") >= threshold)
       .select("a", "b", "jaccard")
-  }
 
   /** First 8 md5 bytes of a word, big-endian — the per-word hash for
     * SimHash. md5 (rather than a JVM-private hash mix) keeps the signature
@@ -238,13 +275,11 @@ object TrainingOps {
     * 4 16-bit chunks (a pair within distance 3 shares at least one chunk).
     */
   def simhashPairs(documents: DataFrame, maxDist: Int = 3): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val sh = simhash(documents).as[(Long, Long)]
-    val chunked = sh.flatMap { case (id, h) =>
-      (0 until 4).iterator.map(c => (id, h, c, (h >>> (c * 16)) & 0xFFFFL))
-    }.toDF("doc_id", "simhash", "chunk", "key")
-    bucketPairs(chunked, "doc_id", Seq("chunk", "key"), carry = Seq("simhash"))
+    val chunked = simhash(documents)
+      .select(F.col("*"), F.array((0 until 4).map(c =>
+        F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(0xFFFFL)): _*).as("keys"))
+      .select(F.col("*"), F.posexplode(F.col("keys")).as(Seq("slot", "key")))
+    bucketPairs(chunked, "doc_id", 4, carry = Seq("simhash"))
       .withColumn("dist", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
       .where(F.col("dist") <= maxDist)
       .select("a", "b", "dist")
@@ -257,8 +292,8 @@ object TrainingOps {
     * identical results, candidate volume bounded by distinct content.
     *
     * Collapse exact duplicates (md5 groupBy, kept id = group minimum), run
-    * `minhashDedupPairs` over ONE representative per distinct content, then
-    * re-expand membership. Because every stage of the near-dup operator —
+    * `minhashDedupPairs`' candidate and verification steps over ONE
+    * representative per distinct content, then re-expand membership. Because every stage of the near-dup operator —
     * MinHash signatures, shingle sets — is a pure function of `text`, a pair
     * of documents relates exactly as its representatives do, so the composed
     * result EQUALS the naive all-docs pair semantics while candidate
@@ -276,33 +311,36 @@ object TrainingOps {
     val docs = documents.select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
     val members = docs.withColumn("h", F.md5(F.col("text")))
     // one aggregate produces both the membership map and the representative
-    // corpus (text is functionally determined by h, so min(text) IS the
-    // text). Both tables are materialized: groups feeds the near-dup
-    // operator AND the membership join, membership feeds three
-    // differently-aliased joins — without the barrier each consumer re-runs
-    // the md5 aggregate over the full corpus
-    val groups = SparkRuntime.materialize(members.groupBy("h")
-      .agg(F.min("doc_id").as("rep_id"), F.min("text").as("text")))
+    // corpus with its shingle sets. text is functionally determined by h, so
+    // it is a grouping key rather than a min(text) buffer: a string-buffered
+    // aggregate plans as a SortAggregate, outside whole-stage codegen, while
+    // this is a hash aggregate. Both tables are materialized: groups feeds
+    // the band signatures, both ends of the pair verification AND the
+    // membership join, membership feeds two differently-aliased joins —
+    // without the barrier each consumer re-runs the md5 aggregate over the
+    // full corpus
+    val groups = SparkRuntime.materialize(withShingles(members.groupBy("h", "text")
+      .agg(F.min("doc_id").as("rep_id"))))
     val membership = SparkRuntime.materialize(members.select("doc_id", "h")
       .join(groups.select("h", "rep_id"), "h")
       .select("doc_id", "rep_id"))
-    val repPairs = minhashDedupPairs(
-      groups.select(F.col("rep_id").as("doc_id"), F.col("text")), threshold)
-    // cross-group pairs: expand each representative pair over both groups'
-    // members; least/greatest restores the a < b normal form
-    val cross = repPairs
+    val reps = groups.select(F.col("rep_id").as("doc_id"), F.col("text"), F.col("toks"))
+    val repPairs = verifiedPairs(minhashCandidatePairs(reps), reps.select("doc_id", "toks"),
+      threshold)
+    // each group also pairs with itself at jaccard 1.0 (identical content),
+    // so expanding the representative pairs plus every (rep, rep) self pair
+    // over both groups' members yields the cross-group pairs and the
+    // intra-group pairs (da < db) in one pass; least/greatest restores the
+    // a < b normal form
+    repPairs
+      .unionByName(groups.select(F.col("rep_id").as("a"), F.col("rep_id").as("b"),
+        F.lit(1.0).as("jaccard")))
       .join(membership.select(F.col("doc_id").as("da"), F.col("rep_id").as("a")), "a")
       .join(membership.select(F.col("doc_id").as("db"), F.col("rep_id").as("b")), "b")
+      .where(F.col("a") =!= F.col("b") || F.col("da") < F.col("db"))
       .select(
         F.least("da", "db").as("a"), F.greatest("da", "db").as("b"),
         F.col("jaccard"))
-    // intra-group pairs: identical content relates at jaccard 1.0
-    val intra = membership.as("x").join(membership.as("y"),
-        F.col("x.rep_id") === F.col("y.rep_id") &&
-        F.col("x.doc_id") < F.col("y.doc_id"))
-      .select(F.col("x.doc_id").as("a"), F.col("y.doc_id").as("b"),
-        F.lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
   }
 
   // ---------- similarity search (embeddings) ----------
@@ -385,46 +423,34 @@ object TrainingOps {
       (h.toDouble / Long.MaxValue.toDouble).toFloat.toDouble
     }
 
-  /** Random-hyperplane LSH signatures: one (id, table, sig) row per vector
-    * and table, where bit p of `sig` is set when the vector lies on the
-    * positive side of the table's hyperplane p. The one signature pass of
-    * `annLsh` (corpus and query sides) and `dedupEmbedding`.
+  /** Random-hyperplane LSH signatures: one (vec_id, embedding, sigs, table,
+    * sig) row per vector of `vecs` (vec_id, embedding) and table, where bit p
+    * of `sig` is set when the vector lies on the positive side of the
+    * table's hyperplane p, and `sigs` holds every table's signature. A
+    * native expression (`graft.functions.HyperplaneSignatures`) and a
+    * posexplode, so the pass stays inside whole-stage codegen. The one
+    * signature pass of `annLsh` (corpus and query sides) and
+    * `dedupEmbedding`.
     */
-  private def hyperplaneSigs(vecs: Dataset[(Long, Array[Float])]): Dataset[(Long, Int, Int)] = {
-    import vecs.sparkSession.implicits._
-    val hp = hyperplanes(Tables, Planes, Dim)
-    vecs.flatMap { case (id, v) =>
-      (0 until Tables).iterator.map { t =>
-        var sig = 0
-        var p = 0
-        while (p < Planes) {
-          var dot = 0.0
-          var d = 0
-          // double multiply element-wise — reproducible by engines computing
-          // on DOUBLE lists (the relational oracle)
-          while (d < Dim) { dot += v(d).toDouble * hp(t)(p)(d); d += 1 }
-          if (dot > 0) sig |= (1 << p)
-          p += 1
-        }
-        (id, t, sig)
-      }
-    }
-  }
+  private def hyperplaneSigs(vecs: DataFrame): DataFrame =
+    vecs.select(F.col("vec_id"), F.col("embedding"), graft.functions.HyperplaneSignatures
+        .column(vecs.sparkSession, F.col("embedding"), lshPlanes).as("sigs"))
+      .select(F.col("*"), F.posexplode(F.col("sigs")).as(Seq("table", "sig")))
+
+  /** `annLsh`'s and `dedupEmbedding`'s hyperplanes, built once. */
+  private lazy val lshPlanes = hyperplanes(Tables, Planes, Dim)
 
   /** The top-`K` candidates of each query by exact cosine: `cand` holds
-    * (query_id, vec_id) pairs, each scored against the query vector (the
-    * `Queries` query vectors broadcast) and ranked within its query, ties
-    * to the lower vec_id. The scoring tail of `annLsh` and `annIvf`.
+    * (query_id, qembedding, vec_id, embedding), each pair scored and ranked
+    * within its query, ties to the lower vec_id. The scoring tail of `annLsh`
+    * and `annIvf`.
     */
-  private def topKByCosine(vecs: Dataset[(Long, Array[Float])], cand: DataFrame): DataFrame = {
+  private def topKByCosine(cand: DataFrame): DataFrame = {
     // native codegen'd expression, not a UDF — keeps the scoring inside the
     // whole-stage span and reads ArrayData in place
-    graft.functions.CosineSimilarity.register(vecs.sparkSession)
-    val qvecs = vecs.toDF("query_id", "qembedding").where(F.col("query_id") < Queries)
+    graft.functions.CosineSimilarity.register(cand.sparkSession)
     val w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     cand
-      .join(F.broadcast(qvecs), "query_id")
-      .join(vecs.toDF("vec_id", "embedding"), "vec_id")
       .withColumn("cosine", F.expr("cosine_sim(qembedding, embedding)"))
       .withColumn("rank", F.row_number().over(w))
       .where(F.col("rank") <= K)
@@ -433,22 +459,27 @@ object TrainingOps {
 
   /** LSH-bucketed ANN (the scale path): random-hyperplane signatures from a
     * deterministic seed bucket the corpus; candidates = same bucket in any
-    * of the `Tables` hash tables; top-k among candidates.
+    * of the `Tables` hash tables; top-k among candidates. Both signature
+    * passes carry their vectors, so the candidates are scored without a
+    * lookup join.
     */
   def annLsh(embeddings: DataFrame): DataFrame = {
-    val ds = vectors(embeddings)
-    val bucketed = hyperplaneSigs(ds).toDF("vec_id", "table", "sig")
+    val ds = vectors(embeddings).toDF()
+    val bucketed = hyperplaneSigs(ds)
     // query signatures from the FILTERED vectors (a column predicate, so
     // the scan pushes it down), not a filter of the corpus signature table:
     // the corpus pass then has a single consumer and runs once, and at
     // scale the query side reads `Queries` vectors instead of re-bucketing
     // the corpus (the same shape annIvf uses)
     val queries = hyperplaneSigs(ds.where(F.col("vec_id") < Queries))
-      .toDF("query_id", "table", "sig")
-    val cand = queries.join(bucketed, Seq("table", "sig"))
-      .where(F.col("query_id") =!= F.col("vec_id"))
-      .select("query_id", "vec_id").distinct()
-    topKByCosine(ds, cand)
+      .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qembedding"),
+        F.col("sigs").as("qsigs"), F.col("table"), F.col("sig"))
+    // a pair that shares buckets in several tables joins once, in the first
+    // table it shares, so the candidates need no distinct
+    topKByCosine(queries.join(bucketed, Seq("table", "sig"))
+      .where(F.col("query_id") =!= F.col("vec_id") &&
+        F.col("table") === firstShared(F.col("qsigs"), F.col("sigs"), Tables))
+      .select("query_id", "qembedding", "vec_id", "embedding"))
   }
 
   /** Deterministic IVF centroids — the same splitmix64 family as
@@ -544,7 +575,12 @@ object TrainingOps {
     val cand = F.broadcast(probed).join(assigned, Seq("cell"))
       .where(F.col("query_id") =!= F.col("vec_id"))
       .select("query_id", "vec_id")
-    topKByCosine(ds, cand)
+    // the `Queries` query vectors broadcast; the corpus vectors join back
+    val vecs = ds.toDF()
+    topKByCosine(cand
+      .join(F.broadcast(vecs.toDF("query_id", "qembedding").where(F.col("query_id") < Queries)),
+        "query_id")
+      .join(vecs, "vec_id"))
   }
 
   /** Embedding-cosine near-dup: candidate pairs share a hyperplane-LSH
@@ -555,8 +591,8 @@ object TrainingOps {
     */
   def dedupEmbedding(embeddings: DataFrame): DataFrame = {
     val ds = vectors(embeddings)
-    val cand = bucketPairs(hyperplaneSigs(ds).toDF("vec_id", "table", "sig"),
-      "vec_id", Seq("table", "sig"))
+    val cand = bucketPairs(hyperplaneSigs(ds.toDF()).select(F.col("vec_id"),
+      F.col("sigs").as("keys"), F.col("table").as("slot"), F.col("sig").as("key")), "vec_id", Tables)
     val vecs = ds.toDF()
     graft.functions.CosineSimilarity.register(embeddings.sparkSession)
     cand

@@ -1,12 +1,16 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.spark.SparkRuntime
 
 /** Dev profiling harness (not part of the driver contract): runs the
   * headline queries in the Bench session config (`SparkRuntime.builder`),
   * with a stage listener attributing wall/cpu/tasks per query, and
   * optionally dumps each query's `.explain("formatted")` to a plans
-  * directory.
+  * directory. Each run line's `classes` is the number of classes Spark's
+  * code generator compiled during the run (a cache miss each): a warm run
+  * above 0 recompiled classes the codegen cache had evicted.
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
@@ -73,6 +77,7 @@ object ProfileQueries {
       val walls = (0 until runs).map { i =>
         quiesce(); stages.clear()
         spark.sparkContext.setJobDescription(s"$name run$i")
+        val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val n = try {
           val df = qs(name)(spark, sfDir)
@@ -82,12 +87,13 @@ object ProfileQueries {
           System.err.println(s"[profile] $name: $e"); -1L }
         val wall = (System.nanoTime() - t0) / 1e9
         quiesce()
+        val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
         import scala.jdk.CollectionConverters._
         val snap = stages.asScala.toList
         val cpu = snap.map(_._3).sum / 1000.0
         val gc = snap.map(_._6).sum / 1000.0
         val tasks = snap.map(_._2).sum
-        println(f"[profile] $name%-22s run$i wall=$wall%6.3f s cpu=$cpu%7.2f s gc=$gc%5.2f s stages=${snap.size}%3d tasks=$tasks%5d rows=$n")
+        println(f"[profile] $name%-22s run$i wall=$wall%6.3f s cpu=$cpu%7.2f s gc=$gc%5.2f s stages=${snap.size}%3d tasks=$tasks%5d classes=$classes%4d rows=$n")
         if (sys.env.contains("PROFILE_STAGES"))
           snap.sortBy(_._1).foreach { case (id, nt, c, w, nm, g) =>
             println(f"[profile]   stage $id%4d tasks=$nt%4d cpu=${c / 1000.0}%7.2f wall=${w / 1000.0}%6.2f gc=${g / 1000.0}%5.2f  $nm")

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, MapPartitionsExec}
 import graft.spark.TrainingOps
 
 /** Retrieval-QUALITY gate for the bucketed ANN paths: the determinism
@@ -66,14 +66,15 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** The query-side predicate of `op` reaches the scan: of the scans under
-    * its `passes` mapPartitions passes, exactly one carries vec_id < 10.
+    * its `passes` per-vector passes (a typed mapPartitions or a generator),
+    * exactly one carries vec_id < 10.
     */
   private def assertQueryBoundPushed(op: DataFrame => DataFrame, passes: Int): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("annpush").toString
     try {
       clusteredCorpus().write.mode("overwrite").parquet(dir)
       val plan = op(spark.read.parquet(dir)).queryExecution.sparkPlan
-      val sigScans = plan.collect { case m: MapPartitionsExec =>
+      val sigScans = plan.collect { case m @ (_: MapPartitionsExec | _: GenerateExec) =>
         m.collect { case s: FileSourceScanExec => s }
       }.flatten
       assert(sigScans.size == passes, plan.treeString)
@@ -83,8 +84,9 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("annLsh pushes the query-side vec_id predicate into the scan") {
-    // the two signature passes (corpus and queries) each sit on their own
-    // scan; only the query side's may carry the vec_id bound
+    // the two signature passes (corpus and queries, each a generator over
+    // the signature expression) each sit on their own scan; only the query
+    // side's may carry the vec_id bound
     assertQueryBoundPushed(TrainingOps.annLsh(_), passes = 2)
   }
 

@@ -187,13 +187,17 @@ class ArchiveDispatchSpec extends AnyFunSuite with SparkSuite {
         .queryExecution.executedPlan
       import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
       import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-      // match only exchanges whose IMMEDIATE child is the partial
-      // collect_set aggregate (a string match on the whole subtree would
-      // also catch the outer lattice exchange, which nests the live gate)
+      // match only exchanges whose IMMEDIATE child (inside its codegen
+      // stage) is the partial bit_or mask aggregate (a string match on the
+      // whole subtree would also catch the outer lattice exchange, which
+      // nests the live gate)
       val gateExchanges = plan.collect {
-        case e: ShuffleExchangeExec if (e.child match {
+        case e: ShuffleExchangeExec if ((e.child match {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.child
+          case c => c
+        }) match {
           case a: BaseAggregateExec =>
-            a.aggregateExpressions.exists(_.toString.contains("collect_set"))
+            a.aggregateExpressions.exists(_.toString.contains("bit_or"))
           case _ => false
         }) => e
       }

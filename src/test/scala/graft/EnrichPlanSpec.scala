@@ -10,8 +10,9 @@ import graft.spark.{KgEngine, SynthPages}
   *     registry work stays proportional to the INCOMPLETE subjects);
   *   - applyUrlProbes must broadcast the compact probe table (no shuffle of
   *     the triples for a small side input);
-  *   - both must canonicalize through partial+final aggregation (max_by),
-  *     not a window-sort.
+  *   - the staged operators canonicalize through the max_by aggregate, not
+  *     a window-sort; enrichAll takes its argmaxes in its one subject pass,
+  *     with no aggregate outside whole-stage codegen.
   */
 class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
 
@@ -88,13 +89,14 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
     assert(out.head.certainty == 3) // Likely promoted to Certain
   }
 
-  test("enrichAll canonicalizes through exactly ONE (subj,pred) exchange") {
-    // the staged chain re-shuffled the full triple table once per stage
-    // (three (subj,pred) exchanges); enrichAll unions the raw streams first
-    // so the lattice argmax shuffles once, and the merged table has exactly
-    // ONE consumer (the in-group-gated extrapolation pass) so nothing
-    // re-executes it. AQE is disabled so the final plan is inspectable
-    // pre-execution.
+  test("enrichAll takes its argmaxes in ONE subject pass over ONE union exchange") {
+    // the staged chain re-shuffled the full triple table once per stage;
+    // enrichAll unions the raw streams and shuffles them ONCE, on subj, and
+    // the subject pass takes every argmax (homepage, per-pred lattice,
+    // probe verdicts) in Scala, so no string-buffered aggregate runs: a
+    // string max_by plans as a SortAggregate and a collect_set as an
+    // ObjectHashAggregate, neither of which whole-stage codegen compiles.
+    // AQE is disabled so the final plan is inspectable pre-execution.
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val registry = docs.select(
         F.concat(F.lit("https://replay.invalid/proj"), F.col("doc_id"), F.lit("/")).as("subj"),
@@ -107,38 +109,100 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
         F.lit("valid").as("status"),
         F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("canonical_url"))
       val out = KgEngine.enrichAll(canon, registry, Seq("Version"), 1, fetched, probes)
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.catalyst.expressions.Attribute
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+      import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
       val plan = out.queryExecution.executedPlan
-      // the full triple stream feeds exactly ONE lattice (max_by) aggregate
-      // exchange — the staged chain had three — and it is the only
-      // (subj,pred) exchange: the completeness gate aggregates per subject
-      val maxByShuffles = plan.collect {
+      // the full triple stream feeds exactly ONE exchange, keyed on subj
+      // alone
+      val unionFed = plan.collect {
         case e: ShuffleExchangeExec
-            if e.outputPartitioning.toString.contains("subj") &&
-               e.outputPartitioning.toString.contains("pred") &&
-               e.child.collect { case u if u.nodeName == "Union" => u }.nonEmpty => e
+            if e.child.collect { case u if u.nodeName == "Union" => u }.nonEmpty => e
       }
-      assert(maxByShuffles.size == 1,
-        s"expected exactly one union-fed (subj,pred) exchange, found ${maxByShuffles.size}:\n" +
+      assert(unionFed.size == 1,
+        s"expected exactly one union-fed exchange, found ${unionFed.size}:\n" +
           plan.toString.take(4000))
-      assert(plan.toString.contains("max_by"),
-        "the lattice argmax must be the max_by aggregate")
-      val subjPredShuffles = plan.collect {
-        case e: ShuffleExchangeExec
-            if e.outputPartitioning.toString.contains("subj") &&
-               e.outputPartitioning.toString.contains("pred") => e
-      }
-      assert(subjPredShuffles.size == 1,
-        s"unexpected extra (subj,pred) exchanges (${subjPredShuffles.size}):\n" +
-          plan.toString.take(4000))
-      // the candidate-url branch must SHARE the lattice union's shuffle
+      assert((unionFed.head.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "subj"
+        case _ => false
+      }), s"the union exchange must be keyed on subj alone: ${unionFed.head.outputPartitioning}")
+      // the candidate-url branch must SHARE the union's shuffle
       // (ReuseExchange), not re-execute the union's upstream
-      val reused = plan.collect {
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
-      }
-      assert(reused.nonEmpty,
+      assert(plan.collect { case r: ReusedExchangeExec => r }.nonEmpty,
         "candidate branch must reuse the union exchange (found no ReusedExchange)")
+      val uncompiled = plan.collect {
+        case a: SortAggregateExec => a
+        case a: ObjectHashAggregateExec => a
+      }
+      assert(uncompiled.isEmpty, s"non-codegen aggregates in enrichAll: ${uncompiled.map(_.nodeName)}")
+      // the fused pass shuffled 7 times when it ran the lattice max_by, the
+      // homepage max_by and the probe collapse as aggregates (this plan,
+      // extraction included); the one subject pass may not shuffle more
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size <= 7,
+        s"${shuffles.size} shuffles:\n" + plan.toString.take(4000))
     }
+  }
+
+  test("enrichAll collapses conflicting duplicate probe rows in-group, no row fan-out") {
+    import spark.implicits._
+    val canonRows = Seq(graft.spark.Model.CanonTriple(
+      "s1", "Homepage", "https://h.example.com/", "", 1, "")).toDS()
+    // the applyUrlProbes case through the fused pass: the raw probe rows
+    // ride to the subject as carriers, and 'valid' must still win once
+    val probes = Seq(
+      ("https://h.example.com/", "invalid", "https://h.example.com/"),
+      ("https://h.example.com/", "valid", "https://h2.example.com/"),
+      ("https://h.example.com/", "unverifiable", "https://h.example.com/")
+    ).toDF("url", "status", "canonical_url")
+    val registry = Seq.empty[(String, String, String)].toDF("subj", "pred", "obj")
+    val empty = Seq.empty[(String, String)].toDF("url", "html")
+    val out = KgEngine.enrichAll(canonRows, registry, Seq("Version"), 1, empty, probes).collect()
+    assert(out.length == 1)
+    assert(out.head.obj == "https://h2.example.com/")
+    assert(out.head.certainty == 3) // Likely promoted to Certain
+    assert(out.toSeq == KgEngine.applyUrlProbes(canonRows, probes).collect().toSeq)
+  }
+
+  test("only the winning homepage is scraped: a losing registry homepage adds nothing") {
+    import spark.implicits._
+    // the registry's Homepage passes the gate (Version is not Certain) but
+    // loses the lattice to the Certain canon homepage; both pages are in
+    // the fetched corpus, and only the winner's links may reach the output
+    val subj = "https://replay.invalid/projH/"
+    val canonRows = Seq(
+      graft.spark.Model.CanonTriple(subj, "Name", "projH", "", 3, "fixture"),
+      graft.spark.Model.CanonTriple(subj, "Homepage", "https://win.example.com/", "", 3, "fixture")
+    ).toDS()
+    val registry = Seq((subj, "Homepage", "https://lose.example.com/"))
+      .toDF("subj", "pred", "obj")
+    val fetched = Seq(
+      ("https://win.example.com/",
+        "<html><a href=\"https://github.com/win-org/win-repo\">GitHub</a></html>"),
+      ("https://lose.example.com/",
+        "<html><a href=\"https://github.com/lose-org/lose-repo\">GitHub</a>" +
+          "<a href=\"https://bugs.example.com/lose\">Bug tracker</a></html>"))
+      .toDF("url", "html")
+    val probes = Seq.empty[(String, String, String)].toDF("url", "status", "canonical_url")
+    val fused = KgEngine.enrichAll(canonRows, registry, Seq("Homepage", "Version"), 1,
+      fetched, probes).collect()
+    assert(fused.exists(t => t.pred == "Repository" &&
+      t.obj == "https://github.com/win-org/win-repo" && t.origin == "homepage-scrape"),
+      s"the winning homepage was not scraped: ${fused.toList}")
+    assert(!fused.exists(t => Option(t.obj).exists(_.contains("lose")) ||
+      Option(t.obj_json).exists(_.contains("lose"))),
+      s"the losing homepage's links reached the output: ${fused.toList}")
+    val staged = KgEngine.applyUrlProbes(
+      KgEngine.extrapolatePost(
+        KgEngine.enrichFromHomepages(
+          KgEngine.enrichFromRegistry(canonRows, registry, Seq("Homepage", "Version"), 1),
+          fetched),
+        Seq("external-registry", "homepage-scrape")),
+      probes).collect()
+    def k(ts: Array[graft.spark.Model.CanonTriple]) =
+      ts.map(t => (t.subj, t.pred, t.obj, t.obj_json, t.certainty)).sorted.toSeq
+    assert(k(fused) == k(staged))
   }
 
   test("enrichAll never materializes the probe tables on the driver") {

@@ -130,18 +130,28 @@ class HostileInputSpec extends AnyFunSuite with SparkSuite {
     }
     assert(store(withOrphan, "hn_orphan") == store(pages, "hn_clean"))
     // the job: the same triples; its lineage counts the orphan as an input
-    // row of the null bucket (bucketOf(null) is null), which emits nothing
+    // row of a real bucket (the bucket of ""), which emits nothing, so no
+    // lineage row lands in a default partition outside the manifest
     val out = freshDir("graft_hostile_job")
     val clean = freshDir("graft_hostile_job_clean")
     KgJob.run(spark, withOrphan, out, buckets = 4)
     KgJob.run(spark, pages, clean, buckets = 4)
     def tri(dir: String) = spark.read.parquet(s"$dir/triples").drop("bucket")
     assert(tri(out).except(tri(clean)).isEmpty && tri(clean).except(tri(out)).isEmpty)
+    assert(!new java.io.File(s"$out/lineage/bucket=__HIVE_DEFAULT_PARTITION__").exists())
     val lin = spark.read.parquet(s"$out/lineage")
-    val orphanBucket = lin.where(F.col("bucket").isNull).collect()
-    assert(orphanBucket.length == 1)
-    assert(orphanBucket.head.getAs[Long]("input_rows") == 1L)
-    assert(lin.where(F.col("bucket").isNotNull).collect().toSet ==
-      spark.read.parquet(s"$clean/lineage").collect().toSet)
+    assert(lin.where(F.col("bucket").isNull).isEmpty)
+    assert(lin.agg(F.sum("input_rows")).head.getLong(0) == withOrphan.count())
+    def perBucket(dir: String) = spark.read.parquet(s"$dir/lineage")
+      .collect().map(r => r.getAs[Int]("bucket") ->
+        (r.getAs[Long]("input_rows"), r.getAs[Long]("emitted"))).toMap
+    val orphanBucket = KgEngine.bucketOf(F.lit(""), 4)
+    val b0 = spark.range(1).select(orphanBucket).head.getInt(0)
+    val (withIt, without) = (perBucket(out), perBucket(clean))
+    assert(withIt.keySet == without.keySet + b0)
+    assert(withIt.forall { case (b, (in, emitted)) =>
+      val (in0, emitted0) = without.getOrElse(b, (0L, 0L))
+      emitted == emitted0 && in == in0 + (if (b == b0) 1 else 0)
+    }, s"$withIt vs $without")
   }
 }

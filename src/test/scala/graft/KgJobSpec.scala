@@ -129,6 +129,24 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     assert(triples == 8 * (11 + 11 + 11 + 10 + 10 + 9 + 6 + 10))
   }
 
+  test("a resumed job writes the same lineage as a one-shot job") {
+    import org.apache.spark.sql.{functions => F}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 64")
+    // pages without a subject: a null url and a url with no project prefix
+    val pages = SynthPages.fromDocuments(docs)
+      .unionByName(pagesOf(("https://replay.invalid/", "a site root")))
+      .unionByName(pagesOf(("x", "a page without a url")).withColumn("url", F.lit(null).cast("string")))
+    val once = freshDir("kgjob_lineage_once")
+    val resumed = freshDir("kgjob_lineage_resumed")
+    assert(KgJob.run(spark, pages, once, buckets = 4) == 4)
+    assert(KgJob.run(spark, pages, resumed, buckets = 4, maxBucketsPerRun = 2) == 2)
+    assert(KgJob.run(spark, pages, resumed, buckets = 4, maxBucketsPerRun = 2) == 2)
+    def lineage(dir: String) = spark.read.parquet(s"$dir/lineage").collect().map(_.toSeq).toSet
+    assert(lineage(resumed) == lineage(once))
+    assert(spark.read.parquet(s"$resumed/lineage").agg(F.sum("input_rows")).head.getLong(0) ==
+      pages.count())
+  }
+
   test("a re-run bucket whose input became empty drops its stale partitions") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 64")
     val pages = SynthPages.fromDocuments(docs)
