@@ -48,15 +48,14 @@ object SparkEntry {
     * multi-consumer operator (enrichment gates, graph views): the
     * operators' scaladoc contract is a STORED canon table whose re-reads
     * are pruned scans; composing them over a live pipeline re-executes the
-    * extraction once per consumer. The subj repartition keeps
-    * hashpartitioning(subj) on the materialized partitions so
-    * subject-keyed aggregates plan exchange-free.
+    * extraction once per consumer. Under AQE the materialized partitions
+    * keep no partitioning, so its subject-keyed consumers shuffle on `subj`
+    * themselves.
     */
   private def canonOnce(
       s: SparkSession, pages: DataFrame): org.apache.spark.sql.Dataset[graft.spark.Model.CanonTriple] = {
     import s.implicits._
-    SparkRuntime.materialize(
-      KgEngine.extractCanonical(s, pages).toDF().repartition(F.col("subj")))
+    SparkRuntime.materialize(KgEngine.extractCanonical(s, pages).toDF())
       .as[graft.spark.Model.CanonTriple]
   }
 

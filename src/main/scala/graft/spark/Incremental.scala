@@ -124,14 +124,23 @@ object Incremental {
     * subjects read from base untouched.
     */
   def currentTriples(baseTriples: DataFrame, tlog: DataFrame): DataFrame = {
+    // one latest-batch aggregate, broadcast once, serves both sides of the
+    // fold: both joins key it on `ls` alone and read `lb` (the coalesce
+    // keeps `batch = lb` out of the join keys), so the two build sides are
+    // one plan and the second reuses the first's exchange
     val latestBatch = tlog.groupBy(F.col("subj").as("ls")).agg(F.max("batch").as("lb"))
+    val cols = Seq("subj", "pred", "obj", "obj_json", "certainty", "origin").map(F.col)
     val latest = tlog
       .join(latestBatch,
-        F.col("subj") === F.col("ls") && F.col("batch") === F.col("lb"))
-      .select("subj", "pred", "obj", "obj_json", "certainty", "origin")
+        F.col("subj") === F.col("ls") && F.coalesce(F.col("batch") === F.col("lb"), F.lit(false)))
+      .select(cols: _*)
       .where(F.col("pred") =!= TombstonePred)
+    // a logged subject's lb is never null, so a base row without one is
+    // a row of an unlogged subject
     baseTriples
-      .join(tlog.select("subj").distinct(), Seq("subj"), "left_anti")
+      .join(latestBatch, F.col("subj") === F.col("ls"), "left_outer")
+      .where(F.col("lb").isNull)
+      .select(cols: _*)
       .unionByName(latest)
   }
 
@@ -206,8 +215,7 @@ object Incremental {
         .join(subjs, Seq("subj"), "left_semi")
         .withColumn("stored", F.lit(true)))
       .foldLeft(incoming.withColumn("stored", F.lit(false)))(_ unionByName _)
-      .as[BatchCapture]
-      .groupByKey(_.subj)
+      .groupBy("subj").as[String, BatchCapture]
       .flatMapGroups(batchRows)
   }
 

@@ -16,7 +16,7 @@ import Model._
   *                                                      the bulk; html and
   *                                                      non-candidate text
   *                                                      never shuffle
-  *  └─ bySubject: groupByKey(subj) . emit           -- SHUFFLE #1 (small):
+  *  └─ bySubject: groupBy(subj) . emit              -- SHUFFLE #1 (small):
   *        max (ts, md5) capture per relpath →        -- the one typed step
   *        extract → certainty merge → extrapolation  -- fixpoint is per-key
   *        fixpoint → URL fixes                       -- local state, no driver
@@ -133,8 +133,10 @@ object KgEngine {
   private[spark] def above(a: Ranked, b: Ranked): Boolean =
     a.ts > b.ts || (a.ts == b.ts && a.md5 > b.md5)
 
-  /** The per-subject extraction kernel: ONE groupByKey(subj) pass over the
-    * candidate captures of `pages`, then `emit(subj, winning files)` with
+  /** The per-subject extraction kernel: ONE pass grouped by the `subj`
+    * column over the candidate captures of `pages` (grouped by the column,
+    * not by a key function, so no key is appended to each row before the
+    * exchange), then `emit(subj, winning files)` with
     * the winning capture's text per relpath. The winners come from one
     * incremental fold, never materializing the capture stream: task memory
     * is O(distinct files), not O(captures), so a recrawl-heavy subject (one
@@ -149,8 +151,7 @@ object KgEngine {
     */
   private[spark] def bySubject[T: Encoder](pages: DataFrame)(
       emit: (String, scala.collection.Map[String, String]) => Iterator[T]): Dataset[T] =
-    candidateRows(pages).as(Encoders.product[Capture])
-      .groupByKey(_.subj)(Encoders.STRING)
+    candidateRows(pages).groupBy("subj").as(Encoders.STRING, Encoders.product[Capture])
       .flatMapGroups { (subj, it) =>
         val best = scala.collection.mutable.HashMap[String, Capture]()
         it.foreach(c => if (best.get(c.relpath).forall(above(c, _))) best(c.relpath) = c)
@@ -158,8 +159,7 @@ object KgEngine {
       }
 
   /** One subject's canonical triples from its winning files (relpath →
-    * text), plus one `StatsPred` row when its extraction produced provider
-    * errors or dropped known-bad datums: the one emit of the canonical
+    * text), then its `StatsPred` row: the one emit of the canonical
     * extractions and of the `Incremental` batch pass.
     */
   private[spark] def summarizeSubject(
@@ -167,10 +167,8 @@ object KgEngine {
       iterationLimit: Int = Summarize.DefaultIterationLimit): Iterator[CanonTriple] = {
     val (metadata, errors, droppedBad) =
       Summarize.summarizeWithStats(files, subjBasename(subj), iterationLimit = iterationLimit)
-    val triples = metadata.iterator.map(datumToTriple(subj))
-    if (errors.isEmpty && droppedBad == 0L) triples
-    else triples ++ Iterator.single(CanonTriple(
-      subj, StatsPred, errors.size.toString, droppedBad.toString, -1, ""))
+    metadata.iterator.map(datumToTriple(subj)) ++ Iterator.single(CanonTriple(subj, StatsPred,
+      errors.size.toString, droppedBad.toString, -1, metadata.size.toString))
   }
 
   /** pages → canonical triples: the flagship KG construction job, the
@@ -184,18 +182,19 @@ object KgEngine {
   /** Marker predicate for per-subject extraction-stats rows (same
     * leading-space convention as the probe carriers — cannot collide with a
     * real field name). obj = provider-error count, obj_json = known-bad drop
-    * count, both as decimal strings.
+    * count, origin = triple count, all as decimal strings.
     */
   val StatsPred: String = " stats"
 
   /** pages → canonical triples + per-subject extraction stats in the SAME
-    * single pass: subjects whose extraction produced provider errors (e.g.
-    * meson's offline introspection failure) or dropped known-bad datums emit
-    * one extra `StatsPred` marker row — the per-subject error channel the
-    * reference logs and drops (lib.rs:3905-3913), as data. Clean subjects
-    * emit nothing extra, so the common case costs nothing. Split the stream
-    * with `splitStats`; KgJob persists it once and feeds both the triples
-    * table and the lineage error columns. ALWAYS split before composing
+    * single pass: every subject emits one extra `StatsPred` marker row with
+    * its provider errors (e.g. meson's offline introspection failure), its
+    * dropped known-bad datums — the per-subject error channel the reference
+    * logs and drops (lib.rs:3905-3913), as data — and its triple count.
+    * Split the stream with `splitStats`; KgJob persists it once and feeds
+    * the triples, edges and nodes tables from its triples and the lineage
+    * and metrics tables from its stats rows, so no table needs a distinct
+    * count over subjects. ALWAYS split before composing
     * with the enrichment operators — the space-prefixed predicate space is
     * reserved for engine markers and enrichment treats such rows as its
     * own (they do not survive the fused check pass).
@@ -370,31 +369,34 @@ object KgEngine {
 
   /** Graph materialization: URL-typed objects become edges; subjects and URL
     * objects become nodes (SURVEY §1.3). The DataFrame forms take `carry`
-    * columns (e.g. the job's bucket) so production jobs share ONE definition
-    * of what an edge/node is — the predicate must never fork between the
-    * driver-verified queries and KgJob's tables.
+    * columns (e.g. the job's bucket), which lead their output, so production
+    * jobs share ONE definition of what an edge/node is — the predicate must
+    * never fork between the driver-verified queries and KgJob's tables.
     */
   def edgesDf(triples: DataFrame, carry: Seq[String] = Nil): DataFrame =
     triples
       .where(F.col("pred").isin(Fields.urlTyped.toSeq.map(x => x: Any): _*) &&
              F.col("obj").startsWith("http"))
-      .select(Seq(
+      .select(carry.map(F.col) ++ Seq(
         F.col("subj").as("src"), F.col("pred"),
-        F.col("obj").as("dst"), F.col("certainty")) ++ carry.map(F.col): _*)
+        F.col("obj").as("dst"), F.col("certainty")): _*)
 
   def edges(canon: Dataset[CanonTriple]): DataFrame = edgesDf(canon.toDF())
 
   /** One (id, kind) row per node: each edge yields its subject and its url
     * node from one two-element array, so the edge view is read once; a url
-    * that is also a subject keeps kind `subject` (the min).
+    * that is also a subject keeps kind `subject`. The aggregate takes the
+    * min of a boolean `url` flag, not of the kind string, so it runs as a
+    * hash aggregate over fixed-width buffers.
     */
   def nodesDf(e: DataFrame, carry: Seq[String] = Nil): DataFrame =
-    e.select(F.inline(F.array(
-        F.struct(F.col("src").as("id"), F.lit("subject").as("kind")),
-        F.struct(F.col("dst").as("id"), F.lit("url").as("kind")))) +: carry.map(F.col): _*)
+    e.select(carry.map(F.col) :+ F.inline(F.array(
+        F.struct(F.col("src").as("id"), F.lit(false).as("url")),
+        F.struct(F.col("dst").as("id"), F.lit(true).as("url")))): _*)
       .groupBy((carry :+ "id").map(F.col): _*)
-      .agg(F.min("kind").as("kind"))
-      .select(Seq(F.col("id"), F.col("kind")) ++ carry.map(F.col): _*)
+      .agg(F.min("url").as("url"))
+      .select(carry.map(F.col) ++ Seq(F.col("id"),
+        F.when(F.col("url"), "url").otherwise("subject").as("kind")): _*)
 
   def nodes(canon: Dataset[CanonTriple]): DataFrame = nodesDf(edges(canon))
 
@@ -1310,11 +1312,10 @@ object KgEngine {
     * input's lineage.
     */
   def lineage(pages: DataFrame, buckets: Int): DataFrame =
-    pages.select(F.col("url"))
-      .withColumn("bucket", pageBucket(F.col("url"), buckets))
+    pages.select(pageBucket(F.col("url"), buckets).as("bucket"),
+        candidateUrlCol(F.col("url")).as("candidate"))
       .groupBy("bucket")
-      .agg(F.count(F.lit(1)).as("input_rows"),
-        F.sum(candidateUrlCol(F.col("url")).cast("long")).as("emitted"))
+      .agg(F.count(F.lit(1)).as("input_rows"), F.count_if(F.col("candidate")).as("emitted"))
 
   // ---------- Catalyst forms of splitSubject / isCandidate ----------
   // The engine's url algebra: `candidateRows`, the resume filter and

@@ -1,6 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -59,6 +61,11 @@ object KgJob {
     }
   }
 
+  private val LineageCols =
+    Seq("input_rows", "emitted", "dropped_bad", "errors").map(StructField(_, LongType))
+  private val MetricsCols = Seq(StructField("n_triples", LongType),
+    StructField("n_subjects", LongType), StructField("max_certainty", IntegerType))
+
   /** Runs (or resumes) the KG construction job. Returns the number of
     * buckets processed in this invocation.
     *
@@ -81,6 +88,14 @@ object KgJob {
     * two buckets in one task). Size it at or above the core count.
     * The count is recorded in `_manifest/` on the first run; resuming with
     * a different count fails rather than mixing two subject hashes.
+    *
+    * The extraction is `persist`ed, not `SparkRuntime.materialize`d: under
+    * AQE a local checkpoint keeps neither the bucket partitioning nor the
+    * ordering of its input, so the nodes and totals aggregates over it
+    * would plan their own exchanges, while a computed in-memory relation
+    * keeps both. Lineage
+    * and metrics, at most one row per bucket, are combined on the driver
+    * from two collected per-bucket aggregates and written from those rows.
     *
     * Durability granularity is the INVOCATION: commit markers land after the
     * invocation's writes finish, so a mid-run crash redoes this invocation's
@@ -119,14 +134,15 @@ object KgJob {
         .partitionBy("bucket")
         .parquet(s"$outDir/$table")
 
-    // triples: the heavy pass — extracted once (with the per-subject error
-    // channel riding as marker rows), bucketed by subject hash and clustered
-    // by bucket, so every table writes one file per bucket and the per-bucket
-    // aggregates below need no further exchange
+    // the heavy pass, extracted once: each subject's triples plus its stats
+    // row (the per-subject error channel and triple count), bucketed by
+    // subject hash. Every table's rows lead with the bucket, so the five
+    // writes share the sort and partition code of one column layout, and
+    // the nodes aggregate below needs no further exchange.
     val all = KgEngine.extractCanonicalWithStats(spark, remaining, iterationLimit).toDF()
-      .withColumn("bucket", KgEngine.bucketOf(F.col("subj"), buckets))
+      .select(KgEngine.bucketOf(F.col("subj"), buckets).as("bucket"), F.col("*"))
       .repartition(buckets, F.col("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val canon = all.where(F.col("pred") =!= KgEngine.StatsPred)
     try {
       write(canon, "triples")
@@ -136,29 +152,38 @@ object KgJob {
       write(e, "edges")
       write(KgEngine.nodesDf(e, carry = Seq("bucket")), "nodes")
 
-      // per-bucket lineage: input and candidate pages (KgEngine.lineage),
-      // plus the per-subject error channel (provider errors + known-bad
-      // drops) aggregated from the cached stats markers — SURVEY §1.3's
-      // lineage(partition_id, input_rows, emitted, dropped_bad, errors),
-      // keyed by bucket
-      val statsByBucket = all.where(F.col("pred") === KgEngine.StatsPred)
-        .groupBy("bucket")
-        .agg(F.sum(F.col("obj").cast("long")).as("errors"),
-          F.sum(F.col("obj_json").cast("long")).as("dropped_bad"))
-      val lin = KgEngine.lineage(remaining, buckets)
-        .join(statsByBucket, Seq("bucket"), "left")
-        .select(F.col("bucket"), F.col("input_rows"), F.col("emitted"),
-          F.coalesce(F.col("dropped_bad"), F.lit(0L)).as("dropped_bad"),
-          F.coalesce(F.col("errors"), F.lit(0L)).as("errors"))
-      write(lin, "lineage")
-
-      // per-bucket output metrics from the cached triples (north rule:
-      // lineage + metrics rows per partition)
-      val met = canon.groupBy("bucket")
-        .agg(F.count(F.lit(1)).as("n_triples"),
-          F.countDistinct("subj").as("n_subjects"),
-          F.max("certainty").as("max_certainty"))
-      write(met, "metrics")
+      // lineage and metrics hold at most one row per bucket: two per-bucket
+      // aggregates are collected, the page lineage (`KgEngine.lineage`, the
+      // definition `kg_lineage` checks) and one conditional aggregate over
+      // the persisted rows (already partitioned by bucket, so no exchange),
+      // and their rows are combined on the driver and written. Lineage is
+      // SURVEY §1.3's lineage(partition_id, input_rows, emitted,
+      // dropped_bad, errors), keyed by bucket; metrics covers the buckets
+      // with triples.
+      val isStats = F.col("pred") === KgEngine.StatsPred
+      val totals = all.groupBy("bucket")
+        .agg(F.sum(F.when(isStats, F.col("obj").cast(LongType))).as("errors"),
+          F.sum(F.when(isStats, F.col("obj_json").cast(LongType))).as("dropped_bad"),
+          F.count_if(!isStats).as("n_triples"),
+          F.count_if(isStats && F.col("origin") =!= "0").as("n_subjects"),
+          F.max(F.when(!isStats, F.col("certainty"))).as("max_certainty"))
+        .collect().map(r => r.getAs[Int]("bucket") -> r).toMap
+      def total(b: Int, c: String): Long = totals.get(b).fold(0L)(_.getAs[Long](c))
+      val lineageRows = KgEngine.lineage(remaining, buckets).collect().toSeq.map { r =>
+        val b = r.getAs[Int]("bucket")
+        Row(b, r.getAs[Long]("input_rows"), r.getAs[Long]("emitted"),
+          total(b, "dropped_bad"), total(b, "errors"))
+      }
+      val metricsRows = totals.values.toSeq.filter(_.getAs[Long]("n_triples") > 0).map(r =>
+        Row(r.getAs[Int]("bucket"), r.getAs[Long]("n_triples"), r.getAs[Long]("n_subjects"),
+          r.getAs[Int]("max_certainty")))
+      // the bucket field as the persisted rows carry it, so every write's
+      // rows lead with the same column
+      def local(rows: Seq[Row], cols: Seq[StructField]): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          StructType(all.schema("bucket") +: cols))
+      write(local(lineageRows, LineageCols), "lineage")
+      write(local(metricsRows, MetricsCols), "metrics")
     } finally all.unpersist()
 
     // commit markers: a bucket is durable once all five tables landed

@@ -27,8 +27,10 @@ object SparkRuntime {
   /** `df` computed once for all of its consumers: a lazy local checkpoint.
     *   - The input runs once, at the first action that needs it, after AQE
     *     has planned it; every later consumer reads the stored blocks.
-    *   - Its output partitioning is kept, so a consumer keyed like the
-    *     input plans no exchange.
+    *   - Under AQE (the engine's setting) it keeps neither the input's
+    *     partitioning nor its ordering: a consumer keyed or sorted like the
+    *     input plans its own exchange or sort. A computed `persist` keeps
+    *     both.
     *   - The blocks are executor-local and the lineage is cut: an executor
     *     loss fails the job that reads them, and re-running the job is the
     *     recovery.

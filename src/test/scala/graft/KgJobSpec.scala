@@ -147,6 +147,83 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
       pages.count())
   }
 
+  test("the five tables equal their definitions, one-shot and resumed") {
+    import org.apache.spark.sql.{DataFrame, functions => F}
+    import graft.spark.KgEngine
+    val n = 8
+    def bucket(subj: String): Int =
+      spark.range(1).select(KgEngine.bucketOf(F.lit(subj), n)).head.getInt(0)
+    val errSubj = "https://replay.invalid/proj7/"
+    // a bucket holding only a subject whose extraction emits no triples (its
+    // one guess, the Name "unknown<i>" from its path, is known-bad, and its
+    // meson.build fails offline); the corpus's own pages of that bucket are
+    // left out
+    val taken = Set(bucket(""), bucket(errSubj))
+    val empty = Iterator.from(0).map(i => s"https://replay.invalid/unknown$i/")
+      .find(s => !taken(bucket(s))).get
+    val b = bucket(empty)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val pages = KgEngine.resumeFilter(SynthPages.fromDocuments(docs), Seq(b), n)
+      .unionByName(pagesOf(
+        // the error channel: an offline provider error and a known-bad drop,
+        // here and in the subject without triples
+        (errSubj + "meson.build", "project('x', 'c')\n"),
+        (errSubj + ".git/config",
+          "[remote \"upstream\"]\n\turl = https://anongit.kde.org/proj7.git\n"),
+        (empty + "meson.build", "project('x', 'c')\n"),
+        ("https://replay.invalid/", "a site root")))
+      .unionByName(pagesOf(("x", "a page without a url"))
+        .withColumn("url", F.lit(null).cast("string")))
+
+    // the tables by their definitions, written out here
+    val withStats = KgEngine.extractCanonicalWithStats(spark, pages).toDF()
+      .withColumn("bucket", KgEngine.bucketOf(F.col("subj"), n))
+    val isStats = F.col("pred") === KgEngine.StatsPred
+    val triples = withStats.where(!isStats)
+    val edges = triples
+      .where(F.col("pred").isin(graft.core.Fields.urlTyped.toSeq: _*) &&
+        F.col("obj").startsWith("http"))
+      .select(F.col("subj").as("src"), F.col("pred"), F.col("obj").as("dst"),
+        F.col("certainty"), F.col("bucket"))
+    val nodes = edges.select(F.col("src").as("id"), F.lit("subject").as("kind"), F.col("bucket"))
+      .unionByName(edges.select(F.col("dst").as("id"), F.lit("url").as("kind"), F.col("bucket")))
+      .groupBy("bucket", "id").agg(F.min("kind").as("kind"))
+    val stats = withStats.where(isStats).groupBy("bucket")
+      .agg(F.sum(F.col("obj").cast("long")).as("errors"),
+        F.sum(F.col("obj_json").cast("long")).as("dropped_bad"))
+    val lineage = KgEngine.lineage(pages, n).join(stats, Seq("bucket"), "left")
+      .select(F.col("bucket"), F.col("input_rows"), F.col("emitted"),
+        F.coalesce(F.col("dropped_bad"), F.lit(0L)).as("dropped_bad"),
+        F.coalesce(F.col("errors"), F.lit(0L)).as("errors"))
+    val metrics = triples.groupBy("bucket")
+      .agg(F.count(F.lit(1)).as("n_triples"), F.countDistinct("subj").as("n_subjects"),
+        F.max("certainty").as("max_certainty"))
+    val expected = Map("triples" -> triples, "edges" -> edges, "nodes" -> nodes,
+      "lineage" -> lineage, "metrics" -> metrics)
+
+    // the inputs cover what they should
+    assert(triples.where(F.col("subj") === empty).isEmpty)
+    assert(triples.where(F.col("bucket") === b).isEmpty)
+    assert(lineage.where(F.col("bucket") === b && F.col("emitted") === 1L).count() == 1)
+    assert(lineage.agg(F.sum("errors"), F.sum("dropped_bad")).head.toSeq == Seq(2L, 2L))
+    assert(lineage.agg(F.sum("input_rows")).head.getLong(0) == pages.count())
+
+    def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(F.col): _*).collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+    def check(out: String): Unit = for ((table, want) <- expected) {
+      val got = spark.read.parquet(s"$out/$table")
+      assert(got.columns.toSet == want.columns.toSet, table)
+      assert(rows(got, got.columns.toSeq) == rows(want, got.columns.toSeq), table)
+    }
+    val once = freshDir("kgjob_tables_once")
+    assert(KgJob.run(spark, pages, once, buckets = n) == n)
+    check(once)
+    val resumed = freshDir("kgjob_tables_resumed")
+    assert(Iterator.continually(KgJob.run(spark, pages, resumed, buckets = n, maxBucketsPerRun = 3))
+      .takeWhile(_ > 0).toList == List(3, 3, 2))
+    check(resumed)
+  }
+
   test("a re-run bucket whose input became empty drops its stale partitions") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 64")
     val pages = SynthPages.fromDocuments(docs)

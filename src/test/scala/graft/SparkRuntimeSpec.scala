@@ -3,16 +3,17 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.util.LongAccumulator
 import graft.spark.SparkRuntime
 
 /** The contract of `SparkRuntime`: `materialize` computes its input once
-  * for all consumers and keeps its partitioning; `builder` sets the Bench
-  * shuffle partitioning.
+  * for all consumers, and keeps its partitioning only with AQE off;
+  * `builder` sets the Bench shuffle partitioning.
   */
-class SparkRuntimeSpec extends AnyFunSuite with SparkSuite {
+class SparkRuntimeSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanHelper {
 
   private val N = 1000
 
@@ -84,12 +85,37 @@ class SparkRuntimeSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("materialize keeps the input's partitioning") {
-    // AQE off: the final plan is inspectable before execution
+    // AQE off; with AQE on it does not (the next test)
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val t = SparkRuntime.materialize(
         spark.range(N).select((F.col("id") % 7).as("k")).repartition(F.col("k")))
       val plan = t.groupBy("k").count().queryExecution.executedPlan
       assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+    }
+  }
+
+  test("under AQE, materialize keeps neither partitioning nor ordering; persist keeps both") {
+    // the engine's setting: AQE on
+    withConf("spark.sql.adaptive.enabled" -> "true") {
+      def input = spark.range(N).select((F.col("id") % 7).as("k"), F.col("id"))
+        .repartition(4, F.col("k")).sortWithinPartitions("k")
+      def exchanges(df: DataFrame) = collect(df.groupBy("k").count().queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      def sorts(df: DataFrame) = collect(df.sortWithinPartitions("k").queryExecution.executedPlan) {
+        case s: SortExec => s
+      }
+      // both computed before they are read, as KgJob's first write does
+      val checkpointed = SparkRuntime.materialize(input)
+      assert(checkpointed.count() == N)
+      assert(exchanges(checkpointed).nonEmpty)
+      assert(sorts(checkpointed).nonEmpty)
+      val persisted = input.persist()
+      try {
+        assert(persisted.count() == N)
+        assert(exchanges(persisted).isEmpty)
+        assert(sorts(persisted).isEmpty)
+      } finally persisted.unpersist()
     }
   }
 
