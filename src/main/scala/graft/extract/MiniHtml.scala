@@ -67,29 +67,45 @@ object MiniHtml {
     sb.toString
   }
 
-  private final class Builder(val tag: String, val attrs: Map[String, String]) {
+  /** An open element. It fills the parent's child slot it took on opening,
+    * so siblings keep document order.
+    */
+  private final class Builder(val tag: String, val attrs: Map[String, String], val parent: Builder) {
+    val depth: Int = if (parent == null) 0 else parent.depth + 1
     val children = scala.collection.mutable.ArrayBuffer.empty[HNode]
+    val slot: Int = if (parent == null) -1 else { parent.children += null; parent.children.length - 1 }
     def toElem: HElem = HElem(tag, attrs, children.toVector)
   }
 
+  /** The deepest element level (Blink's tree-builder cap): a deeper element
+    * attaches to the level above, so hostile nesting cannot overflow the
+    * recursive walks of the tree (`render`, `findAll`, Homepage, Readme).
+    */
+  private val MaxDepth = 512
+
   /** Parses an HTML document; returns the <body> element (auto-created). */
   def parse(html: String): HElem = {
-    val body = new Builder("body", Map.empty)
+    val body = new Builder("body", Map.empty, null)
     var stack = List(body)
+    // open elements per tag, so no open or close scans the stack for one
+    val open = scala.collection.mutable.HashMap.empty[String, Int].withDefaultValue(0)
 
     def top: Builder = stack.head
-    def push(b: Builder): Unit = stack = b :: stack
+    def push(tag: String, attrs: Map[String, String]): Unit = {
+      stack = new Builder(tag, attrs, if (top.depth < MaxDepth) top else top.parent) :: stack
+      open(tag) += 1
+    }
+    def pop(): Unit = {
+      val b = stack.head
+      stack = stack.tail
+      open(b.tag) -= 1
+      b.parent.children(b.slot) = b.toElem
+    }
     def popTo(tag: String): Unit = {
       // close elements up to and including `tag`, if open
-      val idx = stack.indexWhere(_.tag == tag)
-      if (idx >= 0 && idx < stack.length - 1) {
-        var n = idx + 1
-        while (n > 0) {
-          val b = stack.head
-          stack = stack.tail
-          stack.head.children.append(b.toElem)
-          n -= 1
-        }
+      if (open(tag) > 0) {
+        var n = stack.indexWhere(_.tag == tag) + 1
+        while (n > 0) { pop(); n -= 1 }
       }
     }
 
@@ -107,7 +123,7 @@ object MiniHtml {
             if (gt < 0) n else gt + 1
           }
           rawMode = None
-          popToRaw(rt)
+          popTo(rt)
         case None =>
           if (lt < 0) {
             if (i < n) top.children.append(HText(decodeEntities(html.substring(i))))
@@ -142,28 +158,24 @@ object MiniHtml {
                   if (tag.nonEmpty && tag != "html" && tag != "head" && tag != "body") {
                     if (tag == "p" || pClosers.contains(tag)) {
                       // close any open <p>
-                      if (stack.exists(_.tag == "p") &&
+                      if (open("p") > 0 &&
                           stack.takeWhile(_.tag != "p").forall(b =>
                             !Set("div", "section", "ul", "ol", "li",
                               "blockquote", "td", "th").contains(b.tag)))
                         popTo("p")
                       // <li> closes an open <li>
-                      if (tag == "li" && stack.exists(_.tag == "li") &&
+                      if (tag == "li" && open("li") > 0 &&
                           !stack.takeWhile(_.tag != "li").exists(b =>
                             b.tag == "ul" || b.tag == "ol"))
                         popTo("li")
                     }
                     if (voidTags.contains(tag) || selfClose) {
                       top.children.append(HElem(tag, attrs, Vector.empty))
-                    } else if (tag == "script" || tag == "style") {
-                      push(new Builder(tag, attrs))
-                      rawMode = Some(tag)
                     } else {
-                      push(new Builder(tag, attrs))
+                      push(tag, attrs)
+                      if (tag == "script" || tag == "style") rawMode = Some(tag)
                     }
-                  } else if (tag == "body" || tag == "html" || tag == "head") {
-                    // ignore wrapper tags; content lands in our body
-                  }
+                  } // wrapper tags are ignored: content lands in our body
                 }
               }
             }
@@ -171,14 +183,8 @@ object MiniHtml {
       }
     }
 
-    def popToRaw(tag: String): Unit = popTo(tag)
-
     // close all remaining
-    while (stack.length > 1) {
-      val b = stack.head
-      stack = stack.tail
-      stack.head.children.append(b.toElem)
-    }
+    while (stack.tail.nonEmpty) pop()
     body.toElem
   }
 

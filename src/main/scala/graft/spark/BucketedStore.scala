@@ -1,42 +1,26 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Subject-bucketed publication of the canonical triple table — the storage
-  * half of the co-located-join story.
-  *
-  * Every post-construction consumer of the canonical table keys by subject:
-  * the `possible_fields_missing` gates aggregate per subj, the archive /
-  * external-directory dispatches self-join the subject's Archive, project
-  * and Name subsets, incremental merges re-group on (subj, pred), and the
-  * check stage folds per subject. Stored as plain parquet each of those
-  * pays a full shuffle of the graph per run. Published through
-  * `bucketBy(n, "subj")` the scan itself reports
+/** Subject-bucketed publication of the canonical triple table, for
+  * consumers that key by subject: the `possible_fields_missing` gates
+  * aggregate per subj, the archive / external-directory dispatches self-join
+  * subject subsets, and the check stage folds per subject. Published through
+  * `bucketBy(n, "subj")` + `sortBy("subj")`, the scan reports
   * `HashPartitioning(subj, n)`, which satisfies ClusteredDistribution for
-  * any key list CONTAINING subj — so subj-keyed aggregates run single-stage
-  * and equi-joins between two tables bucketed at the same count (or the
-  * table's own subsets) need no exchange on either side. At 100 TB that
-  * converts the dominant per-enrichment-round cost from "shuffle the
-  * graph" to "read the graph".
+  * any key list CONTAINING subj, so those aggregates and equi-joins need no
+  * exchange (BucketedStoreSpec, `kg_canonical_stored`).
   *
-  * `sortBy("subj")` additionally orders rows inside each bucket file so
-  * sort-merge consumers sort runs, not partitions. Size `buckets` for the
-  * TARGET deployment: aim for bucket files in the 128 MB–1 GB range at the
-  * stored scale (a 100 TB canonical table wants tens of thousands of
-  * buckets, not `DefaultBuckets`) — too few buckets caps downstream
-  * parallelism because one task reads one bucket, AND (measured, see
-  * BASELINE.md round 6) a bucket count below
-  * `spark.sql.shuffle.partitions` silently disables the anchoring
-  * entirely: EnsureRequirements prefers the larger partitioning, so both
-  * join sides reshuffle and DisableUnnecessaryBucketedScan drops the
-  * bucketed scan. Keep buckets ≥ the session's shuffle partitioning.
+  * Size `buckets` for bucket files of 128 MB–1 GB at the stored scale, and
+  * at or above `spark.sql.shuffle.partitions`: below it (measured, see
+  * BASELINE.md round 6) EnsureRequirements reshuffles both join sides and
+  * DisableUnnecessaryBucketedScan drops the bucketed scan. The table is
+  * EXTERNAL: a fresh session re-registers it with `publishBySubj` or
+  * `CREATE TABLE ... USING parquet CLUSTERED BY` over the same path.
   *
-  * The table registers in the session catalog with an EXTERNAL path, so
-  * the parquet lives where the caller says (object store / HDFS in
-  * production) and a fresh session re-registers it by calling
-  * `publishBySubj` again or `CREATE TABLE ... USING parquet CLUSTERED BY`
-  * over the same path.
+  * It is not the incremental store's writer: that store's base is KgJob's
+  * `bucket=N` output (`Incremental`), whose consumers reshuffle or
+  * broadcast it. `read` is a catalog read, so it serves both.
   */
 object BucketedStore {
 
@@ -66,19 +50,6 @@ object BucketedStore {
       .saveAsTable(table)
   }
 
-  /** The bucketed scan — `outputPartitioning = HashPartitioning(subj, n)`
-    * as long as `spark.sql.sources.bucketing.enabled` stays at its default.
-    */
+  /** A catalog table; for a `publishBySubj` table, the bucketed scan. */
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** The same rows as a plain parquet scan of the table's directory, for a
-    * consumer that reshuffles them anyway: Spark keeps a bucketed scan (one
-    * task per bucket) below a union even when nothing above uses its
-    * partitioning.
-    */
-  def readUnbucketed(spark: SparkSession, table: String): DataFrame = {
-    val t = read(spark, table)
-    val dirs = t.inputFiles.map(f => new Path(f).getParent.toString).distinct
-    spark.read.schema(t.schema).parquet(dirs.toIndexedSeq: _*)
-  }
 }

@@ -2,9 +2,10 @@ package graft.spark
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession, functions => F}
 
-import Model.{CanonTriple, Ranked}
+import graft.pipeline.Summarize
+import Model.{CanonTriple, Capture, Ranked}
 
 /** Incremental KG maintenance — the delta-crawl path a 100 TB deployment
   * actually runs. The reference is a per-project CLI that recomputes one
@@ -12,8 +13,9 @@ import Model.{CanonTriple, Ranked}
   * recrawl re-delivers every page but only ~1% CHANGE, and re-extracting
   * the other 99% is the dominant (and avoidable) CPU cost.
   *
-  * The store is a merge-on-read log over a subj-bucketed base
-  * (BucketedStore): a table is the fold of its change log.
+  * The store is a merge-on-read log over a base that is `KgJob.run`'s
+  * output (`bucket=N` tables under its commit manifest, named in the
+  * catalog by `register`): a table is the fold of its change log.
   *   - base `captures(subj, relpath, ts, md5, text)` — the winning
   *     candidate capture (`KgEngine.candidateRows`) per (subj, relpath)
   *     under the engine's duplicate-capture order (max (ts, md5);
@@ -35,12 +37,9 @@ import Model.{CanonTriple, Ranked}
   * changed subjects; the base tables are read, never rewritten. The
   * current graph is a VIEW (`currentTriples`): base rows whose subject
   * never appears in the log plus each logged subject's latest batch.
-  * `compact` folds the logs back into fresh bucketed base tables at the
-  * caller's cadence, amortizing the O(store) rewrite over many batches.
-  * `initStore` is the same pass over an empty store, so one grouped pass
-  * implements the duplicate-capture rule for both the base and the logs.
-  * Each write reads one `SparkRuntime.materialize` of its pass: an executor
-  * loss fails the call, and a re-run is lossless.
+  * `compact` folds the logs into a fresh base at the caller's cadence.
+  * `initStore` is `KgJob.run`, whose pass is this one over an empty store,
+  * so one pass implements the duplicate-capture rule for base and logs.
   *
   * The view is provably the full rebuild: current winners == the winners of
   * (all pages ever seen), extraction is per-subject pure, and untouched
@@ -49,33 +48,31 @@ import Model.{CanonTriple, Ranked}
   */
 object Incremental {
 
-  /** Initialize the store pair from a first crawl batch and publish both
-    * tables subj-bucketed. This is `appendDelta`'s batch pass over an empty
-    * store: with nothing stored, every key's batch winner is a changed
-    * capture and every subject re-extracts, so the pass emits the winning
-    * captures and the canonical triples of the whole batch. Both tables are
-    * written from one `SparkRuntime.materialize` of that pass (the captures
-    * without `changed`, the triples without tombstones), so the pair cannot
-    * be inconsistent by construction; an executor loss fails the call, and
-    * a re-run is lossless.
+  /** Initialize the store from a first crawl: clear `path` (a bare run
+    * would resume an earlier store's buckets), `KgJob.run` into it, and
+    * `register` it. A re-run after a failure is lossless.
     */
   def initStore(
       spark: SparkSession, pages: DataFrame,
       capturesTable: String, triplesTable: String,
       path: String, buckets: Int = KgJob.DefaultBuckets): Unit = {
-    val (captures, triples) = materializedPass(spark, pages)
-    BucketedStore.publishBySubj(
-      captures.drop("changed"), capturesTable, s"$path/captures", buckets)
-    BucketedStore.publishBySubj(triples.where(F.col("pred") =!= TombstonePred),
-      triplesTable, s"$path/triples", buckets)
+    clear(spark, path)
+    KgJob.run(spark, pages, path, buckets)
+    register(spark, capturesTable, triplesTable, path)
   }
 
-  /** Marker predicate for a changed subject whose re-extraction produced no
-    * triples: without it the subject's latest batch would be invisible to
-    * `currentTriples` and its STALE base rows would resurrect. Same
-    * space-prefixed convention as `KgEngine.StatsPred`.
+  /** Names the store at `path`'s captures and triples tables in the session
+    * catalog, with the store's columns. The schemas are given: a store
+    * without rows has no parquet footer to infer them from.
     */
-  val TombstonePred: String = " tomb"
+  def register(
+      spark: SparkSession, capturesTable: String, triplesTable: String, path: String): Unit =
+    for ((table, dir, schema) <- Seq(
+        (capturesTable, "captures", Encoders.product[Capture].schema),
+        (triplesTable, "triples", Encoders.product[CanonTriple].schema)))
+      spark.read.schema(schema).parquet(s"$path/$dir")
+        .select(schema.fieldNames.toSeq.map(F.col): _*)
+        .createOrReplaceTempView(table)
 
   /** Create empty logs (one empty batch=0 directory each) so log reads never
     * face a missing path. TRUNCATES first: a per-batch overwrite only
@@ -83,15 +80,15 @@ object Incremental {
     * otherwise leave stale batch=N directories visible to the view.
     */
   def initLogs(spark: SparkSession, clogPath: String, tlogPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(clogPath, tlogPath).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      if (fs.exists(hp)) fs.delete(hp, true)
-    }
+    clear(spark, clogPath, tlogPath)
     import spark.implicits._
     spark.emptyDataset[LoggedCapture].write.mode("overwrite").parquet(s"$clogPath/batch=0")
     spark.emptyDataset[CanonTriple].write.mode("overwrite").parquet(s"$tlogPath/batch=0")
+  }
+
+  private def clear(spark: SparkSession, paths: String*): Unit = paths.foreach { p =>
+    val hp = new org.apache.hadoop.fs.Path(p)
+    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
   }
 
   /** Read a log; `batch` materializes from the partition directories. */
@@ -104,10 +101,8 @@ object Incremental {
     */
   private def latestLogCaptures(clog: DataFrame): DataFrame =
     clog.groupBy("subj", "relpath")
-      .agg(F.max_by(
-        F.struct(F.col("ts"), F.col("md5"), F.col("text")), F.col("batch")).as("w"))
-      .select(F.col("subj"), F.col("relpath"),
-        F.col("w.ts").as("ts"), F.col("w.md5").as("md5"), F.col("w.text").as("text"))
+      .agg(F.max_by(F.struct(F.col("ts"), F.col("md5"), F.col("text")), F.col("batch")).as("w"))
+      .select("subj", "relpath", "w.*")
 
   /** Current winning captures = base ⊕ log. The base side is a pure scan:
     * the log's key set broadcasts into an anti-join above it.
@@ -121,7 +116,8 @@ object Incremental {
   /** Current canonical triples = base ⊕ log. A subject appearing in the
     * triple log is served ONLY by its latest batch (a re-extraction replaces
     * the subject's whole row set — predicates may disappear); all other
-    * subjects read from base untouched.
+    * subjects read from base untouched. A logged subject's `StatsPred` row
+    * is its tombstone: a re-extraction to nothing still shadows its base.
     */
   def currentTriples(baseTriples: DataFrame, tlog: DataFrame): DataFrame = {
     // one latest-batch aggregate, broadcast once, serves both sides of the
@@ -134,7 +130,7 @@ object Incremental {
       .join(latestBatch,
         F.col("subj") === F.col("ls") && F.coalesce(F.col("batch") === F.col("lb"), F.lit(false)))
       .select(cols: _*)
-      .where(F.col("pred") =!= TombstonePred)
+      .where(F.col("pred") =!= KgEngine.StatsPred)
     // a logged subject's lb is never null, so a base row without one is
     // a row of an unlogged subject
     baseTriples
@@ -157,13 +153,12 @@ object Incremental {
     *     capture-log row, flagged `changed` when its md5 differs (ts
     *     refreshes are logged unflagged — future batches must see them);
     *   - a subject with any changed row re-extracts from its merged winners
-    *     into the triple log, plus a tombstone row so an extraction that
-    *     yields nothing still shadows the subject's base rows.
+    *     into the triple log, its `StatsPred` row a tombstone that shadows
+    *     the subject's base rows even when the extraction yields nothing.
     *
     * Both logs are written from one `SparkRuntime.materialize` of the pass;
     * re-running a failed batch with the same id is lossless. Base tables are
-    * only read, the captures as a plain scan (`readUnbucketed`: the pass
-    * reshuffles them anyway). The batch id must exceed all previous ones
+    * only read. The batch id must exceed all previous ones
     * (the caller's crawl counter); a re-run overwrites its own directories
     * and nothing else.
     */
@@ -178,10 +173,12 @@ object Incremental {
     // and lose the batch. Filtering to batch < N makes the retry recompute
     // the identical rows no matter what the failed attempt persisted.
     val clog = readLog(spark, clogPath).where(F.col("batch") < batch)
-    val (captures, triples) = materializedPass(spark, deltaPages,
-      BucketedStore.readUnbucketed(spark, capturesTable), clog)
-    captures.write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
-    triples.write.mode("overwrite").parquet(s"$tlogPath/batch=$batch")
+    val pass = SparkRuntime.materialize(
+      batchPass(spark, deltaPages, Seq(BucketedStore.read(spark, capturesTable), clog)).toDF())
+    pass.where(F.col("capture").isNotNull).select("capture.*")
+      .write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
+    pass.where(F.col("triple").isNotNull).select("triple.*")
+      .write.mode("overwrite").parquet(s"$tlogPath/batch=$batch")
   }
 
   /** A capture of one of a batch's subjects: an incoming candidate of the
@@ -200,10 +197,11 @@ object Incremental {
       capture: Option[LoggedCapture], triple: Option[CanonTriple])
 
   /** The grouped pass of `appendDelta` (over the `stored` base and log
-    * captures) and of `initStore` (over none), unmaterialized.
+    * captures) and of `KgJob.run` (over none), unmaterialized.
     */
   private[graft] def batchPass(
-      spark: SparkSession, deltaPages: DataFrame, stored: DataFrame*): Dataset[BatchRow] = {
+      spark: SparkSession, deltaPages: DataFrame, stored: Seq[DataFrame] = Nil,
+      iterationLimit: Int = Summarize.DefaultIterationLimit): Dataset[BatchRow] = {
     import spark.implicits._
     val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
     val incoming = KgEngine.candidateRows(deltaPages)
@@ -216,23 +214,14 @@ object Incremental {
         .withColumn("stored", F.lit(true)))
       .foldLeft(incoming.withColumn("stored", F.lit(false)))(_ unionByName _)
       .groupBy("subj").as[String, BatchCapture]
-      .flatMapGroups(batchRows)
-  }
-
-  /** One `SparkRuntime.materialize` of the batch pass, split into its
-    * capture-log rows and its triple-log rows.
-    */
-  private def materializedPass(
-      spark: SparkSession, pages: DataFrame, stored: DataFrame*): (DataFrame, DataFrame) = {
-    val pass = SparkRuntime.materialize(batchPass(spark, pages, stored: _*).toDF())
-    (pass.where(F.col("capture").isNotNull).select("capture.*"),
-      pass.where(F.col("triple").isNotNull).select("triple.*"))
+      .flatMapGroups(batchRows(iterationLimit))
   }
 
   /** One subject's capture-log rows and, if any of them changed content,
-    * its re-extracted triples plus a tombstone.
+    * its re-extracted triples and `StatsPred` row.
     */
-  private def batchRows(subj: String, caps: Iterator[BatchCapture]): Iterator[BatchRow] = {
+  private def batchRows(iterationLimit: Int)(
+      subj: String, caps: Iterator[BatchCapture]): Iterator[BatchRow] = {
     val current = mutable.HashMap[String, BatchCapture]()
     val incoming = mutable.HashMap[String, BatchCapture]()
     caps.foreach { c =>
@@ -250,9 +239,7 @@ object Incremental {
     else {
       val files = current.map { case (r, c) => r -> c.text } ++
         logged.map(c => c.relpath -> c.text)
-      val tombstone = CanonTriple(subj, TombstonePred, "", "", -1, "")
-      val triples = KgEngine.summarizeSubject(subj, files).filter(_.pred != KgEngine.StatsPred)
-      rows ++ (triples ++ Iterator.single(tombstone))
+      rows ++ KgEngine.summarizeSubject(subj, files, iterationLimit)
         .map(t => BatchRow(None, Some(t)))
     }
   }
@@ -260,7 +247,8 @@ object Incremental {
   /** Per-batch maintenance lineage from the logs alone (no base scan):
     * (batch, replaced_captures, changed_captures, changed_subjects,
     * appended_triples) — the observability row a production batch reports
-    * next to KgJob's bucket lineage. Tombstones don't count as triples;
+    * next to KgJob's bucket lineage. A changed subject is one tombstone
+    * (`StatsPred`) row, which doesn't count as a triple;
     * batch 0 (the empty init marker) is excluded.
     */
   def batchStats(clog: DataFrame, tlog: DataFrame): DataFrame = {
@@ -268,13 +256,14 @@ object Incremental {
       F.count(F.lit(1)).as("replaced_captures"),
       F.count_if(F.col("changed")).as("changed_captures"))
     val tris = tlog.where(F.col("batch") > 0).groupBy("batch").agg(
-      F.count_if(F.col("pred") === TombstonePred).as("changed_subjects"),
-      F.count_if(F.col("pred") =!= TombstonePred).as("appended_triples"))
+      F.count_if(F.col("pred") === KgEngine.StatsPred).as("changed_subjects"),
+      F.count_if(F.col("pred") =!= KgEngine.StatsPred).as("appended_triples"))
     caps.join(tris, Seq("batch"), "full_outer").na.fill(0)
   }
 
-  /** Fold the logs into fresh bucketed base tables (published under the
-    * given names) and re-initialize the logs — the amortized O(store) pass.
+  /** Fold the logs into a fresh store at `outPath` (KgJob's per-bucket
+    * tables and manifest), registered under the given names — the amortized
+    * O(store) pass.
     */
   def compact(
       spark: SparkSession,
@@ -282,13 +271,13 @@ object Incremental {
       clogPath: String, tlogPath: String,
       outCapturesTable: String, outTriplesTable: String, outPath: String,
       buckets: Int = KgJob.DefaultBuckets): Unit = {
-    val caps = currentCaptures(BucketedStore.read(spark, capturesTable),
-      readLog(spark, clogPath))
-    BucketedStore.publishBySubj(caps, outCapturesTable,
-      s"$outPath/captures", buckets)
-    val tri = currentTriples(BucketedStore.read(spark, triplesTable),
-      readLog(spark, tlogPath))
-    BucketedStore.publishBySubj(tri, outTriplesTable, s"$outPath/triples", buckets)
+    clear(spark, outPath)
+    KgJob.publish(spark, outPath, buckets,
+      "captures" -> currentCaptures(BucketedStore.read(spark, capturesTable),
+        readLog(spark, clogPath)),
+      "triples" -> currentTriples(BucketedStore.read(spark, triplesTable),
+        readLog(spark, tlogPath)))
+    register(spark, outCapturesTable, outTriplesTable, outPath)
     initLogs(spark, s"$outPath/clog", s"$outPath/tlog")
   }
 }

@@ -144,10 +144,8 @@ object KgEngine {
     * through instead of inflating the group buffer. Every grouped
     * extraction is this pass with its own emit: `extractCanonical` and
     * `extractCanonicalWithStats` (both `summarizeSubject`),
-    * `extractAndRender` and `extractRaw`. The
-    * store writes (`Incremental.initStore` and `Incremental.appendDelta`)
-    * group the same candidate captures with the stored ones in their own
-    * pass, which also emits the winning captures.
+    * `extractAndRender` and `extractRaw`. The store writes' pass
+    * (`Incremental.batchPass`) also groups the stored captures.
     */
   private[spark] def bySubject[T: Encoder](pages: DataFrame)(
       emit: (String, scala.collection.Map[String, String]) => Iterator[T]): Dataset[T] =
@@ -182,7 +180,8 @@ object KgEngine {
   /** Marker predicate for per-subject extraction-stats rows (same
     * leading-space convention as the probe carriers — cannot collide with a
     * real field name). obj = provider-error count, obj_json = known-bad drop
-    * count, origin = triple count, all as decimal strings.
+    * count, origin = triple count, all as decimal strings. In the
+    * incremental triple log it is a re-extracted subject's tombstone.
     */
   val StatsPred: String = " stats"
 
@@ -191,19 +190,14 @@ object KgEngine {
     * its provider errors (e.g. meson's offline introspection failure), its
     * dropped known-bad datums — the per-subject error channel the reference
     * logs and drops (lib.rs:3905-3913), as data — and its triple count.
-    * Split the stream with `splitStats`; KgJob persists it once and feeds
-    * the triples, edges and nodes tables from its triples and the lineage
-    * and metrics tables from its stats rows, so no table needs a distinct
-    * count over subjects. ALWAYS split before composing
-    * with the enrichment operators — the space-prefixed predicate space is
-    * reserved for engine markers and enrichment treats such rows as its
-    * own (they do not survive the fused check pass).
+    * ALWAYS split it (`splitStats`) before composing with the enrichment
+    * operators — the space-prefixed predicate space is reserved for engine
+    * markers and enrichment treats such rows as its own (they do not
+    * survive the fused check pass).
     */
-  def extractCanonicalWithStats(
-      spark: SparkSession, pages: DataFrame,
-      iterationLimit: Int = Summarize.DefaultIterationLimit): Dataset[CanonTriple] = {
+  def extractCanonicalWithStats(spark: SparkSession, pages: DataFrame): Dataset[CanonTriple] = {
     import spark.implicits._
-    bySubject(pages)(summarizeSubject(_, _, iterationLimit))
+    bySubject(pages)(summarizeSubject(_, _))
   }
 
   /** Splits an `extractCanonicalWithStats` stream into the real triples and

@@ -6,19 +6,22 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The full production-shaped job: pages → triples / nodes / edges / lineage
-  * tables, written in ONE input pass as bucket-partitioned parquet with a
-  * commit manifest so a restarted run resumes without re-emitting committed
-  * partitions (north rule).
+/** The full production-shaped job: pages → triples / captures / nodes /
+  * edges / lineage / metrics tables, written in ONE input pass as
+  * bucket-partitioned parquet with a commit manifest so a restarted run
+  * resumes without re-emitting committed partitions (north rule). The
+  * output is the incremental store's base (`Incremental`).
   *
-  * Layout under `outDir`:
-  *   triples/bucket=N/…parquet     nodes/…  edges/…  lineage/…
+  * Layout under `outDir` (every table partitioned like triples):
+  *   triples/bucket=N/…parquet     captures/…  nodes/…  edges/…  lineage/…
   *   _manifest/bucket_N            (one marker file per committed bucket)
   *   _manifest/buckets             (the bucket count, written by the first run)
   */
 object KgJob {
 
   val DefaultBuckets = 16
+
+  private val Tables = Seq("triples", "captures", "edges", "nodes", "lineage", "metrics")
 
   /** Manifest I/O goes through the Hadoop FileSystem API, not java.nio: on a
     * real cluster the commit markers must live on the JOB's filesystem
@@ -61,6 +64,46 @@ object KgJob {
     }
   }
 
+  /** `outDir`'s uncommitted buckets, after recording or checking its count. */
+  private def uncommitted(f: FileSystem, outDir: String, buckets: Int): Seq[Int] = {
+    f.mkdirs(manifestDir(outDir))
+    checkBucketCount(f, outDir, buckets)
+    val done = committedBuckets(outDir, f.getConf).toSet
+    (0 until buckets).filterNot(done)
+  }
+
+  /** Appends `df`, whose rows lead with their `bucket`, as
+    * `outDir/table/bucket=N`: only into uncommitted buckets, whose
+    * directories are deleted first (a dynamic partition overwrite's staging
+    * move took 1.7× the CPU on 32 one-file buckets, 4 local cores).
+    */
+  private def write(df: DataFrame, outDir: String, table: String): Unit =
+    df.write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$outDir/$table")
+
+  /** A write's task count: a task per bucket, at most one per core, since
+    * a write task's fixed cost (it deserializes the Hadoop configuration)
+    * outweighs a small bucket's rows. A task writes each bucket as one file.
+    */
+  private def writeTasks(spark: SparkSession, buckets: Int): Int =
+    math.min(buckets, spark.sparkContext.defaultParallelism)
+
+  /** Commit markers: a bucket is durable once all of its tables landed. */
+  private def commit(f: FileSystem, outDir: String, todo: Seq[Int]): Unit =
+    todo.foreach(b => f.create(new Path(manifestDir(outDir), s"bucket_$b"), true).close())
+
+  /** Writes `tables` (rows with a `subj`) into an empty `outDir` per bucket
+    * and commits all `buckets`: `Incremental.compact`'s output.
+    */
+  private[spark] def publish(
+      spark: SparkSession, outDir: String, buckets: Int, tables: (String, DataFrame)*): Unit = {
+    val f = fs(outDir, spark.sparkContext.hadoopConfiguration)
+    val todo = uncommitted(f, outDir, buckets)
+    for ((table, df) <- tables)
+      write(df.select(KgEngine.bucketOf(F.col("subj"), buckets).as("bucket"), F.col("*"))
+        .repartition(writeTasks(spark, buckets), F.col("bucket")), outDir, table)
+    commit(f, outDir, todo)
+  }
+
   private val LineageCols =
     Seq("input_rows", "emitted", "dropped_bad", "errors").map(StructField(_, LongType))
   private val MetricsCols = Seq(StructField("n_triples", LongType),
@@ -71,25 +114,26 @@ object KgJob {
     *
     * ONE pass over the input regardless of bucket count: completed buckets
     * are filtered out up front, the bucket column is derived from each
-    * triple's subject after extraction, and all five tables land via
-    * `partitionBy("bucket")` with dynamic partition overwrite (only the
-    * re-run buckets' directories are replaced — committed buckets are never
-    * touched, so a resume never re-emits). Lineage and metrics follow the
-    * same per-bucket protocol, so a resumed run cannot duplicate their rows.
+    * row's subject after extraction, and all six tables land via
+    * `partitionBy("bucket")` in the re-run buckets only (committed buckets
+    * are never touched, so a resume never re-emits, lineage and metrics
+    * included).
+    *
+    * The pass is `Incremental.batchPass` over an empty store: it emits each
+    * subject's winning captures and its triples plus its `StatsPred` row
+    * (the per-subject error channel, for lineage and metrics only).
     *
     * Before the first write, every todo bucket's `bucket=N` directory is
-    * deleted in all five tables: todo buckets are uncommitted by definition,
+    * deleted in all six tables: todo buckets are uncommitted by definition,
     * so a partition a crashed attempt left behind cannot survive even when
     * this run emits no rows for it in some table.
     *
-    * `buckets` also sets the sink's write parallelism: the extracted
-    * triples are hash-partitioned by bucket into `buckets` tasks, so each
-    * table writes each bucket from one task as one file (the hash may put
-    * two buckets in one task). Size it at or above the core count.
-    * The count is recorded in `_manifest/` on the first run; resuming with
-    * a different count fails rather than mixing two subject hashes.
+    * The pass's rows are hash-partitioned by bucket (`writeTasks`), so each
+    * table writes each bucket as one file. The count is recorded in
+    * `_manifest/` on the first run; resuming with a different count fails
+    * rather than mixing two subject hashes.
     *
-    * The extraction is `persist`ed, not `SparkRuntime.materialize`d: under
+    * The pass is `persist`ed, not `SparkRuntime.materialize`d: under
     * AQE a local checkpoint keeps neither the bucket partitioning nor the
     * ordering of its input, so the nodes and totals aggregates over it
     * would plan their own exchanges, while a computed in-memory relation
@@ -99,9 +143,9 @@ object KgJob {
     *
     * Durability granularity is the INVOCATION: commit markers land after the
     * invocation's writes finish, so a mid-run crash redoes this invocation's
-    * buckets (task-level atomicity comes from the file committer; dynamic
-    * overwrite makes the redo idempotent). To bound that loss window on very
-    * long runs, cap `maxBucketsPerRun` and loop — each invocation still
+    * buckets (task-level atomicity comes from the file committer; the
+    * up-front delete makes the redo idempotent). To bound that loss window
+    * on very long runs, cap `maxBucketsPerRun` and loop — each invocation still
     * scans the input once, over only the still-uncommitted subjects.
     */
   def run(
@@ -112,12 +156,8 @@ object KgJob {
       maxBucketsPerRun: Int = Int.MaxValue,
       iterationLimit: Int = graft.pipeline.Summarize.DefaultIterationLimit
   ): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = fs(outDir, conf)
-    f.mkdirs(manifestDir(outDir))
-    checkBucketCount(f, outDir, buckets)
-    val done = committedBuckets(outDir, conf).toSet
-    val todo = (0 until buckets).filterNot(done).take(maxBucketsPerRun)
+    val f = fs(outDir, spark.sparkContext.hadoopConfiguration)
+    val todo = uncommitted(f, outDir, buckets).take(maxBucketsPerRun)
     if (todo.isEmpty) return 0
 
     val remaining =
@@ -125,32 +165,30 @@ object KgJob {
       else KgEngine.resumeFilter(pages, ((0 until buckets).toSet -- todo).toSeq, buckets)
 
     // todo buckets are uncommitted: clear what a crashed attempt left of them
-    for (table <- Seq("triples", "edges", "nodes", "lineage", "metrics"); b <- todo)
+    for (table <- Tables; b <- todo)
       f.delete(new Path(s"$outDir/$table/bucket=$b"), true)
 
-    def write(df: DataFrame, table: String): Unit =
-      df.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(s"$outDir/$table")
-
-    // the heavy pass, extracted once: each subject's triples plus its stats
-    // row (the per-subject error channel and triple count), bucketed by
-    // subject hash. Every table's rows lead with the bucket, so the five
-    // writes share the sort and partition code of one column layout, and
-    // the nodes aggregate below needs no further exchange.
-    val all = KgEngine.extractCanonicalWithStats(spark, remaining, iterationLimit).toDF()
-      .select(KgEngine.bucketOf(F.col("subj"), buckets).as("bucket"), F.col("*"))
-      .repartition(buckets, F.col("bucket"))
+    // the heavy pass, extracted once and bucketed by subject hash. Every
+    // table's rows lead with the bucket, so the writes share the sort and
+    // partition code of one column layout, and the aggregates below need no
+    // further exchange.
+    val all = Incremental.batchPass(spark, remaining, iterationLimit = iterationLimit).toDF()
+      .select(KgEngine.bucketOf(F.coalesce(F.col("capture.subj"), F.col("triple.subj")), buckets)
+        .as("bucket"), F.col("*"))
+      .repartition(writeTasks(spark, buckets), F.col("bucket"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val canon = all.where(F.col("pred") =!= KgEngine.StatsPred)
+    val rows = all.where(F.col("triple").isNotNull).select(F.col("bucket"), F.col("triple.*"))
+    val canon = rows.where(F.col("pred") =!= KgEngine.StatsPred)
     try {
-      write(canon, "triples")
+      write(canon, outDir, "triples")
+      write(all.where(F.col("capture").isNotNull)
+        .select(F.col("bucket") +: Seq("subj", "relpath", "ts", "md5", "text")
+          .map(c => F.col(s"capture.$c")): _*), outDir, "captures")
       // edges/nodes derive from the cached triples, not a fresh input scan —
       // through the ONE engine definition of edge/node (KgEngine)
       val e = KgEngine.edgesDf(canon, carry = Seq("bucket"))
-      write(e, "edges")
-      write(KgEngine.nodesDf(e, carry = Seq("bucket")), "nodes")
+      write(e, outDir, "edges")
+      write(KgEngine.nodesDf(e, carry = Seq("bucket")), outDir, "nodes")
 
       // lineage and metrics hold at most one row per bucket: two per-bucket
       // aggregates are collected, the page lineage (`KgEngine.lineage`, the
@@ -161,7 +199,7 @@ object KgJob {
       // dropped_bad, errors), keyed by bucket; metrics covers the buckets
       // with triples.
       val isStats = F.col("pred") === KgEngine.StatsPred
-      val totals = all.groupBy("bucket")
+      val totals = rows.groupBy("bucket")
         .agg(F.sum(F.when(isStats, F.col("obj").cast(LongType))).as("errors"),
           F.sum(F.when(isStats, F.col("obj_json").cast(LongType))).as("dropped_bad"),
           F.count_if(!isStats).as("n_triples"),
@@ -182,13 +220,11 @@ object KgJob {
       def local(rows: Seq[Row], cols: Seq[StructField]): DataFrame =
         spark.createDataFrame(java.util.Arrays.asList(rows: _*),
           StructType(all.schema("bucket") +: cols))
-      write(local(lineageRows, LineageCols), "lineage")
-      write(local(metricsRows, MetricsCols), "metrics")
+      write(local(lineageRows, LineageCols), outDir, "lineage")
+      write(local(metricsRows, MetricsCols), outDir, "metrics")
     } finally all.unpersist()
 
-    // commit markers: a bucket is durable once all five tables landed
-    todo.foreach(b =>
-      f.create(new Path(manifestDir(outDir), s"bucket_$b"), true).close())
+    commit(f, outDir, todo)
     todo.size
   }
 

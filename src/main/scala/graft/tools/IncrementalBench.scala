@@ -6,9 +6,9 @@ import graft.spark.{Incremental, SparkRuntime, SynthPages}
 /** Measures the incremental-maintenance advantage: after a recrawl in which
   * only ~1% of subjects changed content, compare
   *
-  *   full_rebuild      — what the non-incremental pipeline does: extract the
-  *                       entire new crawl and publish a fresh store pair
-  *                       (Incremental.initStore over the full recrawl);
+  *   full_rebuild      — what the non-incremental pipeline does: KgJob.run
+  *                       over the entire new crawl into a fresh store (its
+  *                       six tables, through Incremental.initStore);
   *   log_full_recrawl  — append the SAME full recrawl to the existing
   *                       store's logs (appendDelta): every page and the
   *                       whole capture table shuffle once into the batch
@@ -21,10 +21,9 @@ import graft.spark.{Incremental, SparkRuntime, SynthPages}
   * (same family as ScalingBench); churn = subjects with
   * doc_id % SPARK_GRAFT_CHURN_MOD == 0 (default 100 → 1%). The store's
   * bucket count is the session's shuffle partitioning (8 × cores, 256 at the
-  * default 32), the layout subj-keyed store consumers need (see
-  * BucketedStore); the log legs read the base captures as a plain scan, so
-  * for them the count only sets the store's file count. Emits one JSON
-  * line; wall numbers need a quiet window like every bench on this VM.
+  * default 32); it sets the store's file count (one file per bucket and
+  * table). Emits one JSON line; wall numbers need a quiet window like every
+  * bench on this VM.
   */
 object IncrementalBench {
   def main(args: Array[String]): Unit = {

@@ -107,18 +107,4 @@ class BucketedStoreSpec extends AnyFunSuite with SparkSuite {
       assert(out.count() == canon.count())
     }
   }
-
-  test("readUnbucketed is the same rows as a plain scan, and reads an empty table") {
-    val stored = published("canon_plain")
-    val plain = BucketedStore.readUnbucketed(spark, "canon_plain")
-    val scans = plain.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    assert(scans.size == 1 && !scans.head.bucketedScan,
-      s"readUnbucketed must not scan per bucket:\n${plain.queryExecution.executedPlan}")
-    assert(plain.count() == stored.count() && plain.except(stored).isEmpty)
-    BucketedStore.publishBySubj(canon.where(F.lit(false)), "canon_empty",
-      "/tmp/graft_bucketed_spec/canon_empty", 8)
-    assert(BucketedStore.readUnbucketed(spark, "canon_empty").isEmpty)
-  }
 }

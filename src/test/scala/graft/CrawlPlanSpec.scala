@@ -29,7 +29,7 @@ class CrawlPlanSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanHe
     assert(!hasAppendColumns(KgEngine.extractCanonical(spark, pages).toDF()))
     assert(!hasAppendColumns(KgEngine.extractCanonicalWithStats(spark, pages).toDF()))
     val stored = KgEngine.candidateRows(pages)
-    assert(!hasAppendColumns(Incremental.batchPass(spark, pages, stored).toDF()))
+    assert(!hasAppendColumns(Incremental.batchPass(spark, pages, Seq(stored)).toDF()))
   }
 
   test("nodesDf aggregates without a SortAggregate") {
@@ -75,12 +75,14 @@ class CrawlPlanSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanHe
     spark.listenerManager.register(listener)
     try {
       KgJob.run(spark, pages, out, buckets = 8)
-      // the listener hears of each query asynchronously; the triples, edges
-      // and nodes writes and the lineage/metrics totals read the extraction
+      // the listener hears of each query asynchronously; the triples,
+      // captures, edges and nodes writes and the lineage/metrics totals read
+      // the extraction
       val deadline = System.nanoTime() + 10000000000L
-      while (cached.size < 4 && System.nanoTime() < deadline) Thread.sleep(50)
+      while (cached.size < 5 && System.nanoTime() < deadline) Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
-    assert(cached.size >= 4, cached.mkString("\n"))
+    assert(cached.size >= 5, cached.mkString("\n"))
+    assert(cached.exists(_.toString.contains("/captures")), cached.mkString("\n"))
     for (p <- cached) {
       val above = collect(p) {
         case e: ShuffleExchangeExec

@@ -111,6 +111,32 @@ class HostileInputSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("deeply nested HTML gives the same datums as shallow HTML on a 1 MB stack") {
+    import graft.extract.{Homepage, Readme}
+    def page(depth: Int) = "<div>" * depth +
+      "<p>A tool that converts things.</p>" +
+      "<a href=\"https://github.com/o/tool\">GitHub</a>" +
+      "<a href=\"/issues\">Bug tracker</a>" + "</div>" * depth
+    // called directly on a thread with the default 1 MB stack, not in a
+    // Spark task: a StackOverflowError is fatal to Spark and would end the
+    // whole test JVM
+    def datums(html: String): (List[graft.core.Datum], (Option[String], List[graft.core.Datum])) = {
+      @volatile var out: Either[Throwable, (List[graft.core.Datum],
+        (Option[String], List[graft.core.Datum]))] = null
+      val t = new Thread(null, () => out =
+        try Right((Homepage.guessFromPage(html, "https://tool.example.org/"),
+          Readme.descriptionFromReadmeHtml(html)))
+        catch { case e: Throwable => Left(e) }, "deep", 1L << 20)
+      t.start()
+      t.join()
+      out.fold(e => fail(s"${e.getClass.getName} at ${html.length} chars", e), identity)
+    }
+    val shallow = datums(page(3))
+    assert(shallow._1.map(_.field) == List("Repository", "Bug-Database"), shallow)
+    assert(shallow._2._1.exists(_.contains("converts things")), shallow)
+    assert(datums(page(20000)) == shallow)
+  }
+
   test("a page without a url is dropped; every path extracts the rest as without it") {
     import spark.implicits._
     val pages = SynthPages.fromDocuments(

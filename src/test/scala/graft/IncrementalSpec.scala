@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import graft.spark.{BucketedStore, Incremental, KgEngine, SynthPages}
+import graft.spark.{BucketedStore, Incremental, KgEngine, KgJob, SynthPages}
 
 /** Incremental KG maintenance: append a delta crawl to the merge-on-read
   * logs over the subj-bucketed capture/triple store, re-extracting ONLY
@@ -110,12 +110,55 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
       assert(stored.count() == winners.count() && stored.except(winners).isEmpty,
         s"$order: the store must hold exactly the max (ts, md5) capture per key")
       val tri = BucketedStore.read(spark, s"fl_tri_$order")
-      assert(tri.where(F.col("pred") === Incremental.TombstonePred).isEmpty,
-        s"$order: the base triples hold no tombstone")
+      assert(tri.where(F.col("pred") === KgEngine.StatsPred).isEmpty,
+        s"$order: the base triples hold no stats row (tombstone)")
       assertSame(tri, KgEngine.extractCanonical(spark, pages).toDF(),
         s"$order: the store's triples must be the one-shot extraction")
       assertSame(tri, KgEngine.extractCanonical(spark, live).toDF(),
         s"$order: the newest capture must win per (subj, relpath)")
+    }
+  }
+
+  test("KgJob.run's output is the base store: a recrawl batch over it == the full rebuild") {
+    val root = "/tmp/graft_inc_spec/job"
+    KgJob.run(spark, basePages, s"$root/store", buckets = 8)
+    Incremental.register(spark, "job_caps", "job_tri", s"$root/store")
+    Incremental.initLogs(spark, s"$root/clog", s"$root/tlog")
+    Incremental.appendDelta(spark, deltaPages, "job_caps", s"$root/clog", s"$root/tlog", batch = 1)
+    assertSame(
+      Incremental.currentTriples(BucketedStore.read(spark, "job_tri"),
+        Incremental.readLog(spark, s"$root/tlog")),
+      KgEngine.extractCanonical(spark, basePages.unionByName(deltaPages)).toDF(),
+      "the view over KgJob's output must equal the full rebuild over base ∪ batch")
+  }
+
+  test("initStore at a used path holds the second crawl only, whatever its bucket count") {
+    // a bare KgJob.run would resume the first store's committed buckets (or
+    // reject the new count); initStore clears the path first
+    val root = "/tmp/graft_inc_spec/reinit"
+    val second = live.where(docMod(3) === 0)
+    Incremental.initStore(spark, basePages, "ri_caps", "ri_tri", root, buckets = 8)
+    Incremental.initStore(spark, second, "ri_caps", "ri_tri", root, buckets = 4)
+    assertSame(BucketedStore.read(spark, "ri_tri"), KgEngine.extractCanonical(spark, second).toDF(),
+      "the store's triples must be the second crawl's")
+    val caps = BucketedStore.read(spark, "ri_caps").select("subj", "relpath", "ts", "md5")
+    val winners = maxCaptures(second)
+    assert(caps.count() == winners.count() && caps.except(winners).isEmpty,
+      "the store's captures must be the second crawl's")
+    assert(KgJob.committedBuckets(root) == (0 until 4))
+  }
+
+  test("initStore over no pages registers empty tables with the store's columns") {
+    import org.apache.spark.sql.Encoders
+    import graft.spark.Model.{CanonTriple, Capture}
+    Incremental.initStore(spark, live.limit(0), "em_caps", "em_tri",
+      "/tmp/graft_inc_spec/empty", buckets = 4)
+    def fields(df: DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    for ((table, schema) <- Seq("em_caps" -> Encoders.product[Capture].schema,
+        "em_tri" -> Encoders.product[CanonTriple].schema)) {
+      val df = BucketedStore.read(spark, table)
+      assert(df.isEmpty, table)
+      assert(fields(df) == schema.fields.toSeq.map(f => f.name -> f.dataType), table)
     }
   }
 
@@ -356,15 +399,16 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
       ("https://replay.invalid/projA/", "Name", "projA", "", 3, "m"),
       ("https://replay.invalid/projB/", "Name", "projB", "", 3, "m"))
       .toDF("subj", "pred", "obj", "obj_json", "certainty", "origin")
-    // projA re-extracted to NOTHING in batch 1 → only its tombstone is logged
+    // projA re-extracted to NOTHING in batch 1 → only its stats row, the
+    // tombstone, is logged
     val tlog = Seq(
-      ("https://replay.invalid/projA/", Incremental.TombstonePred, "", "", -1, "", 1))
+      ("https://replay.invalid/projA/", KgEngine.StatsPred, "0", "0", -1, "0", 1))
       .toDF("subj", "pred", "obj", "obj_json", "certainty", "origin", "batch")
     val view = Incremental.currentTriples(baseTri, tlog)
     assert(view.collect().map(_.getString(0)).toSet ==
       Set("https://replay.invalid/projB/"),
       "projA must be shadowed by its tombstone, projB untouched")
-    assert(view.where(F.col("pred") === Incremental.TombstonePred).isEmpty,
+    assert(view.where(F.col("pred") === KgEngine.StatsPred).isEmpty,
       "tombstones never surface in the view")
   }
 
@@ -392,9 +436,9 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
     // batch's subjects' rows of it: every exchange above the scan sits above
     // a broadcast left-semi join on subj (the hint holds with broadcast off)
     withStablePlans {
-      val plan = Incremental.batchPass(spark, deltaPages,
-        BucketedStore.readUnbucketed(spark, "lg2_caps"),
-        Incremental.readLog(spark, s"$root/clog").where(F.col("batch") < 2))
+      val plan = Incremental.batchPass(spark, deltaPages, Seq(
+        BucketedStore.read(spark, "lg2_caps"),
+        Incremental.readLog(spark, s"$root/clog").where(F.col("batch") < 2)))
         .queryExecution.executedPlan
       assert(baseScans(plan, "log2/captures").size == 1,
         s"the batch pass must scan the base captures once:\n$plan")

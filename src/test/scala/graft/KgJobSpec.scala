@@ -14,7 +14,7 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     d.toString
   }
 
-  private val Tables = Seq("triples", "edges", "nodes", "lineage", "metrics")
+  private val Tables = Seq("triples", "captures", "edges", "nodes", "lineage", "metrics")
 
   /** Page rows (url, text) in the crawl schema, captured at SynthPages.FixedTs. */
   private def pagesOf(rows: (String, String)*): org.apache.spark.sql.DataFrame = {
@@ -147,9 +147,10 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
       pages.count())
   }
 
-  test("the five tables equal their definitions, one-shot and resumed") {
+  test("the six tables equal their definitions, one-shot and resumed") {
     import org.apache.spark.sql.{DataFrame, functions => F}
     import graft.spark.KgEngine
+    import spark.implicits._
     val n = 8
     def bucket(subj: String): Int =
       spark.range(1).select(KgEngine.bucketOf(F.lit(subj), n)).head.getInt(0)
@@ -198,12 +199,28 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     val metrics = triples.groupBy("bucket")
       .agg(F.count(F.lit(1)).as("n_triples"), F.countDistinct("subj").as("n_subjects"),
         F.max("certainty").as("max_certainty"))
-    val expected = Map("triples" -> triples, "edges" -> edges, "nodes" -> nodes,
-      "lineage" -> lineage, "metrics" -> metrics)
+    // the duplicate-capture rule: the max (ts, md5) candidate capture per
+    // (subj, relpath), through the Scala url algebra
+    val captures = pages.where(F.col("text").isNotNull)
+      .select(F.col("url"), F.unix_millis(F.col("warc_ts")), F.col("text"))
+      .as[(String, Long, String)]
+      .flatMap { case (url, ts, text) =>
+        Option(url).flatMap(KgEngine.splitSubject).filter(sr => KgEngine.isCandidate(sr._2))
+          .map { case (subj, relpath) => (subj, relpath, ts, text) }
+      }
+      .toDF("subj", "relpath", "ts", "text")
+      .withColumn("md5", F.md5(F.col("text")))
+      .groupBy("subj", "relpath")
+      .agg(F.max_by(F.struct("ts", "md5", "text"), F.struct("ts", "md5")).as("w"))
+      .select(F.col("subj"), F.col("relpath"), F.col("w.ts").as("ts"), F.col("w.md5").as("md5"),
+        F.col("w.text").as("text"), KgEngine.bucketOf(F.col("subj"), n).as("bucket"))
+    val expected = Map("triples" -> triples, "captures" -> captures, "edges" -> edges,
+      "nodes" -> nodes, "lineage" -> lineage, "metrics" -> metrics)
 
     // the inputs cover what they should
     assert(triples.where(F.col("subj") === empty).isEmpty)
     assert(triples.where(F.col("bucket") === b).isEmpty)
+    assert(captures.where(F.col("subj") === empty).count() == 1)
     assert(lineage.where(F.col("bucket") === b && F.col("emitted") === 1L).count() == 1)
     assert(lineage.agg(F.sum("errors"), F.sum("dropped_bad")).head.toSeq == Seq(2L, 2L))
     assert(lineage.agg(F.sum("input_rows")).head.getLong(0) == pages.count())
