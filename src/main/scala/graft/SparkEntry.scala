@@ -9,6 +9,13 @@ import graft.spark.{BucketedStore, KgEngine, KgJob, SparkRuntime, SynthPages, Tr
   * SQL. Column names are aligned between the Spark plan and the oracle;
   * sums of 2-decimal DOUBLE columns are emitted as BIGINT centi-units
   * (order-independent AND hash-encoding-stable in the driver compare).
+  *
+  * A query result is a multiset: the driver hashes sorted values,
+  * `tools/check_oracles.py` sorts both sides and perfbench digests rows
+  * order-independently. A result sort is then a range exchange, its
+  * sampling job and a sort stage of dead work: the `fullEnrich` and ANN
+  * bodies end without one, and sort only where a `limit` or a rank needs
+  * it (the ANN rank is a window inside the operator).
   */
 object SparkEntry {
 
@@ -111,20 +118,24 @@ object SparkEntry {
   }
 
   /** The parsed pypi registry of the enrichment queries as (subj, pred,
-    * obj): every subject's registry payload claims Version 9.9.9.
+    * obj, obj_json): every subject's registry payload claims Version 9.9.9.
+    * The parse is a `ScalaKernel` exploded inside the scan's codegen stage,
+    * not a typed flatMap (a deserializer, a map stage and a serializer).
     */
-  private def pypiRegistry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
-      .flatMap { id =>
-        val subj = "https://replay.invalid/proj" + id + "/"
-        graft.registry.RegistryParsers
-          .parsePypi(graft.spark.SynthRegistry.pypi(id, "9.9.9"))
-          .getOrElse(Nil)
-          .map(d => (subj, d.field, graft.spark.Model.objForms(d.value)._1))
-      }
-      .toDF("subj", "pred", "obj")
-  }
+  private[graft] def pypiRegistry(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(F.concat(F.lit("https://replay.invalid/proj"), F.col("doc_id").cast("long"),
+          F.lit("/")).as("subj"),
+        F.explode(graft.functions.ScalaKernel.column(s, "pypi_registry_datums", pypiDatums,
+          KgEngine.DatumsType, F.col("doc_id").cast("long"))).as("d"))
+      .select(F.col("subj"), F.col("d.pred").as("pred"), F.col("d.obj").as("obj"),
+        F.col("d.obj_json").as("obj_json"))
+
+  /** A doc_id's parsed pypi payload. */
+  private val pypiDatums: Array[Any] => Any = args => KgEngine.datumArray(
+    graft.registry.RegistryParsers
+      .parsePypi(graft.spark.SynthRegistry.pypi(args(0).asInstanceOf[Long], "9.9.9"))
+      .getOrElse(Nil))
 
   /** The crawled homepage corpus (url, html): one page per doc at
     * https://proj<id>.example.com/, linking a GitHub repository.
@@ -426,11 +437,11 @@ object SparkEntry {
 
     // ---------- similarity search ----------
     "ann_brute" -> ((s, dir) =>
-      TrainingOps.annBruteForce(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
+      TrainingOps.annBruteForce(t(s, dir, "embeddings"))),
     "ann_lsh" -> ((s, dir) =>
-      TrainingOps.annLsh(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
+      TrainingOps.annLsh(t(s, dir, "embeddings"))),
     "ann_ivf" -> ((s, dir) =>
-      TrainingOps.annIvf(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
+      TrainingOps.annIvf(t(s, dir, "embeddings"))),
     "ann_ivf_trained" -> ((s, dir) => {
       // the full IVF lifecycle: two Lloyd's iterations train the coarse
       // quantizer (means rounded to 6 decimals so both engines' float
@@ -438,7 +449,7 @@ object SparkEntry {
       // the oracle unrolls the same two assignment/mean steps in SQL
       val emb = t(s, dir, "embeddings")
       val trained = TrainingOps.trainIvfCentroids(emb)
-      TrainingOps.annIvf(emb, cents = trained).orderBy("query_id", "rank")
+      TrainingOps.annIvf(emb, cents = trained)
     }),
     "dedup_embedding" -> ((s, dir) => {
       // embedding-cosine near-dup over the doubled corpus: LSH-bucketed
@@ -815,7 +826,6 @@ object SparkEntry {
       fullEnrich(s, dir)
         .where(F.col("pred").isin("Version", "Repository", "Homepage"))
         .select("subj", "pred", "obj", "certainty")
-        .orderBy("subj", "pred")
     }),
     "kg_enrich_extrapolate" -> ((s, dir) => {
       // post-enrichment extrapolation (reference lifecycle: extend THEN
@@ -827,7 +837,6 @@ object SparkEntry {
       fullEnrich(s, dir)
         .where(F.col("pred").isin("Repository-Browse", "Bug-Database", "Bug-Submit"))
         .select("subj", "pred", "obj", "certainty")
-        .orderBy("subj", "pred")
     }),
     "kg_enrich_author" -> ((s, dir) => {
       // structured registry payloads through the distributed path: pypi
@@ -837,20 +846,7 @@ object SparkEntry {
       // person WITH its structured JSON form intact
       val pages = SynthPages.fromDocuments(t(s, dir, "documents"))
       val canon = canonOnce(s, pages)
-      import s.implicits._
-      val registry = t(s, dir, "documents").select(F.col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          val subj = "https://replay.invalid/proj" + id + "/"
-          graft.registry.RegistryParsers
-            .parsePypi(graft.spark.SynthRegistry.pypi(id, "9.9.9"))
-            .getOrElse(Nil)
-            .map { d =>
-              val (obj, objJson) = graft.spark.Model.objForms(d.value)
-              (subj, d.field, obj, objJson)
-            }
-        }
-        .toDF("subj", "pred", "obj", "obj_json")
-      KgEngine.enrichFromRegistry(canon, registry,
+      KgEngine.enrichFromRegistry(canon, pypiRegistry(s, dir),
           supportedFields = Seq("Author"), maxCertainty = 1)
         .toDF()
         .where(F.col("pred") === "Author")

@@ -742,7 +742,7 @@ object KgEngine {
     homepages
       .join(fetched, Seq("url"))
       .select(F.col("subj"), F.col("url").as("src"), F.posexplode(graft.functions.ScalaKernel
-        .column(spark, "homepage_datums", homepageDatums, HomepageDatumsType,
+        .column(spark, "homepage_datums", homepageDatums, DatumsType,
           F.col("html"), F.col("url"))).as(Seq("seq", "d")))
       .select(F.col("subj"), F.col("d.pred").as("pred"), F.col("d.obj").as("obj"),
         F.col("d.obj_json").as("obj_json"), F.col("seq"), F.col("src"))
@@ -751,15 +751,18 @@ object KgEngine {
     * (pred, obj, obj_json); a null page has none.
     */
   private val homepageDatums: Array[Any] => Any = args =>
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      if (args(0) == null) Array.empty[Any]
-      else graft.extract.Homepage.guessFromPage(args(0).toString, args(1).toString)
-        .iterator.map { d =>
-          val (obj, objJson) = objForms(d.value)
-          org.apache.spark.sql.catalyst.InternalRow(utf8(d.field), utf8(obj), utf8(objJson))
-        }.toArray[Any])
+    datumArray(if (args(0) == null) Nil
+      else graft.extract.Homepage.guessFromPage(args(0).toString, args(1).toString))
 
-  private val HomepageDatumsType = org.apache.spark.sql.types.ArrayType(
+  /** `ds` as a `DatumsType` kernel value, in order. */
+  private[graft] def datumArray(ds: Seq[Datum]): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(ds.iterator.map { d =>
+      val (obj, objJson) = objForms(d.value)
+      org.apache.spark.sql.catalyst.InternalRow(utf8(d.field), utf8(obj), utf8(objJson))
+    }.toArray[Any])
+
+  /** An array of datums as (pred, obj, obj_json) structs. */
+  private[graft] val DatumsType = org.apache.spark.sql.types.ArrayType(
     org.apache.spark.sql.types.StructType(Seq("pred", "obj", "obj_json").map(
       org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType))),
     containsNull = false)
@@ -942,8 +945,12 @@ object KgEngine {
     // ungated: the lattice already keeps a complete subject's registry rows
     // from winning (see the extend-stage notes above `enrichFromRegistry`)
     val regRaw = registryRaw(registry, supportedFields, maxCertainty).select(F.col("*"), noSrc)
-    val hpCandidates = existing.where(F.col("pred") === "Homepage")
-      .unionByName(regRaw.where(F.col("pred") === "Homepage"))
+    // the registry branch only when the registry can emit a Homepage: an
+    // always-empty branch still plans a second registry-parse stage
+    val existingHp = existing.where(F.col("pred") === "Homepage")
+    val hpCandidates = (if (supportedFields.contains("Homepage"))
+        existingHp.unionByName(regRaw.where(F.col("pred") === "Homepage"))
+      else existingHp)
       .select(F.col("subj"), F.col("obj").as("url"))
     val scrapeRaw = scrapeAsRaw(scrapedDatums(spark, hpCandidates, fetched), rank = 2)
     // the union feeds BOTH the subject pass and the candidate-url branch;

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.execution.{CodegenSupport, WholeStageCodegenExec}
 
 /** Deterministic Common-Crawl-style pages synthesized from the driver's
   * `documents` table (BASELINE.json input_hint). Each document becomes one
@@ -41,7 +42,7 @@ object SynthPages {
       F.col("text"),
       F.col("lang"))
     val base =
-      if (base0.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism) base0
+      if (numPartitions(base0) >= spark.sparkContext.defaultParallelism) base0
       else base0.repartition(par)
 
     val id = F.col("doc_id")
@@ -140,6 +141,17 @@ object SynthPages {
         F.col("f.content").cast("binary").as("html"),
         F.col("f.content").as("text"),
         F.col("lang"))
+  }
+
+  /** The partition count of `df`'s physical plan, read without executing
+    * it: a whole-stage codegen stage runs over its input RDDs' partitions,
+    * so their count needs no generated class (`df.rdd` would compile the
+    * stage, plus a deserializer, on the driver).
+    */
+  private[graft] def numPartitions(df: DataFrame): Int = df.queryExecution.executedPlan match {
+    case w: WholeStageCodegenExec =>
+      w.child.asInstanceOf[CodegenSupport].inputRDDs().head.getNumPartitions
+    case p => p.execute().getNumPartitions
   }
 
   /** Deterministically replicates the documents table `factor`× with fresh

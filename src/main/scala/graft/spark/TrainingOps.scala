@@ -217,18 +217,25 @@ object TrainingOps {
       .drop("ws")
 
   /** The candidate pairs `cand` (a, b) whose shingle sets, looked up in
-    * `toks` (doc_id, toks), have Jaccard ≥ `threshold`: (a, b, jaccard).
+    * `toks` (doc_id, toks, carry...), have Jaccard ≥ `threshold`: (a, b,
+    * jaccard), plus `<c>_a` and `<c>_b` for every `carry` column.
     */
-  private def verifiedPairs(cand: DataFrame, toks: DataFrame, threshold: Double): DataFrame =
+  private def verifiedPairs(
+      cand: DataFrame, toks: DataFrame, threshold: Double, carry: Seq[String] = Nil
+  ): DataFrame = {
+    def end(e: String) = toks.select(Seq(F.col("doc_id").as(e), F.col("toks").as(s"t$e")) ++
+      carry.map(c => F.col(c).as(s"${c}_$e")): _*)
     cand
-      .join(toks.withColumnRenamed("doc_id", "a").withColumnRenamed("toks", "ta"), "a")
-      .join(toks.withColumnRenamed("doc_id", "b").withColumnRenamed("toks", "tb"), "b")
+      .join(end("a"), "a")
+      .join(end("b"), "b")
       .withColumn("inter", F.size(F.array_intersect(F.col("ta"), F.col("tb"))))
       .withColumn("uni", F.size(F.array_union(F.col("ta"), F.col("tb"))))
       .where(F.col("uni") > 0)
       .withColumn("jaccard", F.col("inter").cast("double") / F.col("uni"))
       .where(F.col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
+      .select((Seq("a", "b", "jaccard") ++ carry.flatMap(c => Seq(s"${c}_a", s"${c}_b")))
+        .map(F.col): _*)
+  }
 
   /** First 8 md5 bytes of a word, big-endian — the per-word hash for
     * SimHash. md5 (rather than a JVM-private hash mix) keeps the signature
@@ -293,54 +300,47 @@ object TrainingOps {
     *
     * Collapse exact duplicates (md5 groupBy, kept id = group minimum), run
     * `minhashDedupPairs`' candidate and verification steps over ONE
-    * representative per distinct content, then re-expand membership. Because every stage of the near-dup operator —
-    * MinHash signatures, shingle sets — is a pure function of `text`, a pair
-    * of documents relates exactly as its representatives do, so the composed
-    * result EQUALS the naive all-docs pair semantics while candidate
-    * generation and verification touch only O(distinct²) pairs instead of
-    * O(docs²). This
-    * is the fix for the duplicate-flood pathology: 10⁶ copies of one
-    * boilerplate page share every LSH band and would emit ~5·10¹¹
-    * intra-bucket candidates naively; here they collapse to one
-    * representative before banding, and reappear only in the final
-    * membership joins (linear in OUTPUT size, which is irreducible for a
-    * pair-list contract — a production run would persist `membership` plus
-    * the representative pairs and skip the expansion entirely).
+    * representative per distinct content, then expand each verified group
+    * pair over both groups' members. Because every stage of the near-dup
+    * operator — MinHash signatures, shingle sets — is a pure function of
+    * `text`, a pair of documents relates exactly as its representatives do,
+    * so the composed result EQUALS the naive all-docs pair semantics while
+    * candidate generation and verification touch only O(distinct²) pairs
+    * instead of O(docs²). This is the fix for the duplicate-flood pathology:
+    * 10⁶ copies of one boilerplate page share every LSH band and would emit
+    * ~5·10¹¹ intra-bucket candidates naively; here they collapse to one
+    * representative before banding, and reappear only in the final member
+    * joins (linear in OUTPUT size, which is irreducible for a pair-list
+    * contract — a production run would persist the groups plus the
+    * representative pairs and skip the expansion entirely).
     */
   def dedupPipeline(documents: DataFrame, threshold: Double = 0.9): DataFrame = {
     val docs = documents.select(F.col("doc_id").cast("long").as("doc_id"), F.col("text"))
     val members = docs.withColumn("h", F.md5(F.col("text")))
-    // one aggregate produces both the membership map and the representative
-    // corpus with its shingle sets. text is functionally determined by h, so
-    // it is a grouping key rather than a min(text) buffer: a string-buffered
-    // aggregate plans as a SortAggregate, outside whole-stage codegen, while
-    // this is a hash aggregate. Both tables are materialized: groups feeds
-    // the band signatures, both ends of the pair verification AND the
-    // membership join, membership feeds two differently-aliased joins —
-    // without the barrier each consumer re-runs the md5 aggregate over the
-    // full corpus
+    // one aggregate produces the representative corpus with its shingle
+    // sets. text is functionally determined by h, so it is a grouping key
+    // rather than a min(text) buffer: a string-buffered aggregate plans as a
+    // SortAggregate, outside whole-stage codegen, while this is a hash
+    // aggregate. groups is materialized: it feeds the band signatures, both
+    // ends of the pair verification and the self pairs — without the
+    // barrier each consumer re-runs the md5 aggregate over the full corpus
     val groups = SparkRuntime.materialize(withShingles(members.groupBy("h", "text")
       .agg(F.min("doc_id").as("rep_id"))))
-    val membership = SparkRuntime.materialize(members.select("doc_id", "h")
-      .join(groups.select("h", "rep_id"), "h")
-      .select("doc_id", "rep_id"))
-    val reps = groups.select(F.col("rep_id").as("doc_id"), F.col("text"), F.col("toks"))
-    val repPairs = verifiedPairs(minhashCandidatePairs(reps), reps.select("doc_id", "toks"),
-      threshold)
+    val reps = groups.select(F.col("rep_id").as("doc_id"), F.col("text"), F.col("toks"),
+      F.col("h"))
     // each group also pairs with itself at jaccard 1.0 (identical content),
-    // so expanding the representative pairs plus every (rep, rep) self pair
-    // over both groups' members yields the cross-group pairs and the
-    // intra-group pairs (da < db) in one pass; least/greatest restores the
-    // a < b normal form
-    repPairs
-      .unionByName(groups.select(F.col("rep_id").as("a"), F.col("rep_id").as("b"),
+    // so expanding the verified group pairs plus every (h, h) self pair over
+    // both groups' members yields the cross-group pairs and the intra-group
+    // pairs (da < db) in one pass; least/greatest restores the a < b normal
+    // form. Both member joins read the member table itself, keyed on h
+    verifiedPairs(minhashCandidatePairs(reps), reps, threshold, carry = Seq("h"))
+      .select(F.col("h_a"), F.col("h_b"), F.col("jaccard"))
+      .unionByName(groups.select(F.col("h").as("h_a"), F.col("h").as("h_b"),
         F.lit(1.0).as("jaccard")))
-      .join(membership.select(F.col("doc_id").as("da"), F.col("rep_id").as("a")), "a")
-      .join(membership.select(F.col("doc_id").as("db"), F.col("rep_id").as("b")), "b")
-      .where(F.col("a") =!= F.col("b") || F.col("da") < F.col("db"))
-      .select(
-        F.least("da", "db").as("a"), F.greatest("da", "db").as("b"),
-        F.col("jaccard"))
+      .join(members.select(F.col("doc_id").as("da"), F.col("h").as("h_a")), "h_a")
+      .join(members.select(F.col("doc_id").as("db"), F.col("h").as("h_b")), "h_b")
+      .where(F.col("h_a") =!= F.col("h_b") || F.col("da") < F.col("db"))
+      .select(F.least("da", "db").as("a"), F.greatest("da", "db").as("b"), F.col("jaccard"))
   }
 
   // ---------- similarity search (embeddings) ----------

@@ -90,6 +90,23 @@ class AnnRecallSpec extends AnyFunSuite with SparkSuite {
     assertQueryBoundPushed(TrainingOps.annLsh(_), passes = 2)
   }
 
+  test("ann_lsh plans no result sort") {
+    // the rank is the operator's window; the result is a multiset, so a
+    // final orderBy would be a range exchange and a sort of dead work
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("ann_lsh_plan").toString
+    clusteredCorpus().write.parquet(s"$dir/embeddings.parquet")
+    val plan = SparkEntry.queries("ann_lsh")(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(plan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.isEmpty, s"result sort in ann_lsh:\n$plan")
+  }
+
   test("annIvf pushes the query-side vec_id predicate into the scan") {
     // the probe pass is the one mapPartitions (cell assignment is a map)
     assertQueryBoundPushed(TrainingOps.annIvf(_), passes = 1)

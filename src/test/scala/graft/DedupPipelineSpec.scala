@@ -47,6 +47,28 @@ class DedupPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(naive.filter(p => p._2 == 3L).forall(p => p._3 > 0.9 && p._3 < 1.0))
   }
 
+  test("dedupPipeline expands groups whose member ids are not adjacent") {
+    // a 3-member group (ids 9, 2, 14) and a 2-member near-duplicate group
+    // (ids 11, 0) interleaved with singletons: every intra-group pair, every
+    // cross-group pair of the two near-duplicate groups, each once, a < b
+    val s = spark
+    val words = (0 until 100).map(i => s"w$i")
+    val base = words.mkString(" ")
+    val edited = words.updated(50, "CHANGED").mkString(" ")
+    val docs = s.createDataFrame(Seq(
+      (9L, base), (5L, "a lone singleton line"), (2L, base), (11L, edited),
+      (7L, (0 until 60).map(i => s"z$i").mkString(" ")), (14L, base), (0L, edited)
+    )).toDF("doc_id", "text")
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val naive = collect(TrainingOps.minhashDedupPairs(docs, threshold = 0.9))
+    val composed = collect(TrainingOps.dedupPipeline(docs, threshold = 0.9))
+    assert(composed == naive)
+    assert(naive.map(p => (p._1, p._2)).toSet == Set(
+      (2L, 9L), (2L, 14L), (9L, 14L), (0L, 11L),
+      (0L, 2L), (0L, 9L), (0L, 14L), (2L, 11L), (9L, 11L), (11L, 14L)))
+  }
+
   test("a 10k-copy duplicate flood collapses before banding: candidates stay O(distinct²)") {
     val s = spark
     import s.implicits._

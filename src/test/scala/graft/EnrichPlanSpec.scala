@@ -355,6 +355,63 @@ class EnrichPlanSpec extends AnyFunSuite with SparkSuite {
     assert(k(fused) == k(staged))
   }
 
+  test("enrichAll reads a registry that cannot emit Homepage in one branch") {
+    // the scrape candidates take the registry's Homepage rows only when
+    // supportedFields holds Homepage; otherwise that branch is empty but
+    // would still plan a second scan and parse of the registry. Each pred
+    // is a field of a generated struct, as in a parsed registry payload,
+    // so the optimizer cannot prove the Homepage branch empty on its own
+    val registry = spark.range(64).select(
+        F.concat(F.lit("https://replay.invalid/proj"), F.col("id"), F.lit("/")).as("subj"),
+        F.explode(F.array(Seq("Version", "Homepage").map(p => F.struct(F.lit(p).as("pred"),
+          F.concat(F.lit("https://proj"), F.col("id"), F.lit(".example.com/")).as("obj"))): _*))
+          .as("d"))
+      .select(F.col("subj"), F.col("d.pred").as("pred"), F.col("d.obj").as("obj"))
+    // a non-empty corpus: an empty one would prune the whole scrape side
+    val fetched = docs.select(
+      F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),
+      F.lit("<html><a href=\"https://github.com/o/r\">GitHub</a></html>").as("html"))
+    val probes = docs.limit(0).select(F.lit("").as("url"), F.lit("").as("status"),
+      F.lit("").as("canonical_url"))
+    import org.apache.spark.sql.execution.RangeExec
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      def reads(fields: Seq[String]) = KgEngine.enrichAll(canon, registry, fields, 1,
+        fetched, probes).queryExecution.executedPlan.collect { case r: RangeExec => r }.size
+      assert(reads(Seq("Version")) == 1)
+      assert(reads(Seq("Version", "Homepage")) == 2)
+    }
+  }
+
+  test("kg_full_enrich plans no result sort and parses the pypi registry in one kernel") {
+    // the query result is a multiset, so a final orderBy is a range
+    // exchange, its sampling job and a sort of dead work; the registry
+    // parse is a generator over a ScalaKernel, not a typed flatMap
+    val dir = java.nio.file.Files.createTempDirectory("kg_full_enrich_plan").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    // AQE off: the plan is final before execution, with the candidate
+    // branch's copy of the union exchange already a ReusedExchange
+    val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("kg_full_enrich")(spark, dir).queryExecution.executedPlan
+    }
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val ranged = plan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranged.isEmpty, s"result sort in kg_full_enrich:\n$plan")
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec, MapPartitionsExec}
+    val registry = SparkEntry.pypiRegistry(spark, dir).queryExecution.executedPlan
+    val typed = registry.collect {
+      case d: DeserializeToObjectExec => d
+      case m: MapPartitionsExec => m
+    }
+    assert(typed.isEmpty, s"typed registry parse:\n$registry")
+    val parses = plan.collect {
+      case g: GenerateExec if g.generator.toString.contains("pypi_registry_datums") => g
+    }
+    assert(parses.size == 1, s"kg_full_enrich must parse the registry once:\n$plan")
+  }
+
   test("browse sync derivation is a native expression, not a ScalaUDF") {
     val probes = docs.select(
       F.concat(F.lit("https://proj"), F.col("doc_id"), F.lit(".example.com/")).as("url"),

@@ -20,8 +20,13 @@ A marker without `op=` names a part of the op of the marker before it, so
 a call can be split further. Compiles outside any marker are counted under
 op `-`, part `-`. `--list` adds one line per distinct source of each part:
 its generated class, the thread kinds that compiled it, and a short hash.
+`--ms` adds each part's Janino milliseconds, summed over its compiles, and
+with `--list` each source's mean milliseconds per compile: the time of the
+`Code generated in N ms` record (INFO, same logger) that follows the source
+on the same thread. Sources are not equal: a large whole-stage class can
+cost 15 times a sort stage's.
 
-Usage: python3 tools/codegen_set.py <log> [--op N] [--list]
+Usage: python3 tools/codegen_set.py <log> [--op N] [--list] [--ms]
 """
 import argparse
 import hashlib
@@ -32,6 +37,7 @@ from collections import defaultdict
 HEADER = re.compile(r"^\[(?P<thread>.+?)\] (?P<logger>[\w$.]+): (?P<msg>.*)$")
 MARK = re.compile(r"^@@PART (?P<part>\S+)(?: op=(?P<op>\S+))?")
 PREFIX = re.compile(r"^/\* \d+ \*/ ?")
+GENERATED = re.compile(r"^Code generated in (?P<ms>[\d.]+) ms")
 
 
 def records(lines):
@@ -55,10 +61,12 @@ def thread_kind(thread):
 
 
 def parse(lines):
-    """{(op, part): [(thread kind, source)]}, one item per compile."""
+    """{(op, part): [[thread kind, source, ms]]}, one item per compile; ms is
+    None until the compile's `Code generated` record is seen."""
     out = defaultdict(list)
     where = ("-", "-")
     last_op = "-"
+    pending = {}  # thread -> its last compile still waiting for its time
     for thread, logger, msg, body in records(lines):
         if logger == "probe" or msg.startswith("@@"):
             m = MARK.match(msg)
@@ -68,16 +76,29 @@ def parse(lines):
             elif msg.startswith("@@END"):
                 where = ("-", "-")
             continue
+        if logger != "CodeGenerator":
+            continue
+        g = GENERATED.match(msg)
+        if g:
+            if thread in pending:
+                pending.pop(thread)[2] = float(g["ms"])
+            continue
         src = [l for l in body if l.startswith("/* ")]
-        if logger != "CodeGenerator" or msg.strip() or not src:
+        if msg.strip() or not src:
             continue
         source = "\n".join(PREFIX.sub("", l) for l in src)
-        out[where].append((thread_kind(thread), source))
+        item = [thread_kind(thread), source, None]
+        out[where].append(item)
+        pending[thread] = item
     return out
 
 
 def counts(items):
-    return (len({s for _, s in items}), len(set(items)), len(items))
+    return (len({s for _, s, _ in items}), len({(k, s) for k, s, _ in items}), len(items))
+
+
+def ms_sum(items):
+    return sum(m for _, _, m in items if m is not None)
 
 
 CLASS = re.compile(r"\b(?:final )?class (\w+)")
@@ -100,28 +121,39 @@ def main():
     ap.add_argument("--op", help="print only this op")
     ap.add_argument("--list", action="store_true",
                     help="list each part's distinct sources")
+    ap.add_argument("--ms", action="store_true",
+                    help="add Janino milliseconds per part and per source")
     args = ap.parse_args()
     with open(args.log, errors="replace") as f:
         data = parse(f)
     ops = defaultdict(list)
     for (op, part), items in data.items():
         ops[op].append((part, items))
-    print(f"{'op':>4} {'part':<28} {'sources':>7} {'entries':>7} {'compiles':>8}")
+    ms_head = f" {'ms':>9}" if args.ms else ""
+    print(f"{'op':>4} {'part':<28} {'sources':>7} {'entries':>7} {'compiles':>8}{ms_head}")
+
+    def ms_col(items):
+        return f" {ms_sum(items):9.1f}" if args.ms else ""
     for op in sorted(ops, key=op_key):
         if args.op is not None and op != args.op:
             continue
         union = []
         for part, items in ops[op]:
             union += items
-            print(f"{op:>4} {part:<28} {'%7d %7d %8d' % counts(items)}")
+            print(f"{op:>4} {part:<28} {'%7d %7d %8d' % counts(items)}{ms_col(items)}")
             if args.list:
                 kinds = defaultdict(set)
-                for kind, source in items:
+                times = defaultdict(list)
+                for kind, source, ms in items:
                     kinds[source].add(kind)
+                    if ms is not None:
+                        times[source].append(ms)
                 for source, ks in kinds.items():
-                    print(f"{'':>6}{describe(source)} {'+'.join(sorted(ks))}")
+                    t = times[source]
+                    mean = f" {sum(t) / len(t):.1f} ms" if args.ms and t else ""
+                    print(f"{'':>6}{describe(source)} {'+'.join(sorted(ks))}{mean}")
         if op != "-":
-            print(f"{op:>4} {'(op)':<28} {'%7d %7d %8d' % counts(union)}")
+            print(f"{op:>4} {'(op)':<28} {'%7d %7d %8d' % counts(union)}{ms_col(union)}")
     return 0
 
 
