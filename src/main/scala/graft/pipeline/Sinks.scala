@@ -8,7 +8,7 @@ import graft.core._
   *   - codemeta JSON (schema.org SoftwareSourceCode,
   *     /root/reference/src/bin/autocodemeta.rs:9-160)
   *   - DOAP RDF/XML (/root/reference/src/bin/autodoap.rs:24-200)
-  * Production tables (triples/nodes/edges/lineage) are written as parquet by
+  * Production tables (triples/nodes/edges) are written as parquet by
   * the Spark layer; these renderers serve the per-subject API surface.
   */
 object Sinks {

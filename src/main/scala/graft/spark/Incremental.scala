@@ -3,6 +3,7 @@ package graft.spark
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession, functions => F}
+import org.apache.spark.sql.types.IntegerType
 
 import graft.pipeline.Summarize
 import Model.{CanonTriple, Capture, Ranked}
@@ -171,10 +172,20 @@ object Incremental {
     // directories behind, and a retry that read its own half-written rows
     // would see the delta as already-current, overwrite batch=N as empty,
     // and lose the batch. Filtering to batch < N makes the retry recompute
-    // the identical rows no matter what the failed attempt persisted.
-    val clog = readLog(spark, clogPath).where(F.col("batch") < batch)
+    // the identical rows no matter what the failed attempt persisted. Batch
+    // 0 is empty, so a log without an earlier batch (the first batch after
+    // `initLogs`) is not read.
+    val logged = {
+      val p = new org.apache.hadoop.fs.Path(clogPath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+        .map(_.getPath.getName).collect { case s"batch=$n" => n.toInt }
+        .exists(n => n > 0 && n < batch)
+    }
+    val clog =
+      if (!logged) Nil
+      else Seq(spark.read.schema(LogSchema).parquet(clogPath).where(F.col("batch") < batch))
     val pass = SparkRuntime.materialize(
-      batchPass(spark, deltaPages, Seq(BucketedStore.read(spark, capturesTable), clog)).toDF())
+      batchPass(spark, deltaPages, BucketedStore.read(spark, capturesTable) +: clog).toDF())
     pass.where(F.col("capture").isNotNull).select("capture.*")
       .write.mode("overwrite").parquet(s"$clogPath/batch=$batch")
     pass.where(F.col("triple").isNotNull).select("triple.*")
@@ -192,6 +203,9 @@ object Incremental {
   private[graft] final case class LoggedCapture(
       subj: String, relpath: String, ts: Long, md5: String, text: String, changed: Boolean)
 
+  /** The capture log's columns: given, the read infers no schema (a job). */
+  private val LogSchema = Encoders.product[LoggedCapture].schema.add("batch", IntegerType)
+
   /** One output row of the batch pass: a capture-log row or a triple-log row. */
   private[graft] final case class BatchRow(
       capture: Option[LoggedCapture], triple: Option[CanonTriple])
@@ -204,7 +218,10 @@ object Incremental {
       iterationLimit: Int = Summarize.DefaultIterationLimit): Dataset[BatchRow] = {
     import spark.implicits._
     val cols = Seq("subj", "relpath", "ts", "md5", "text").map(F.col)
-    val incoming = KgEngine.candidateRows(deltaPages)
+    val candidates = KgEngine.candidateRows(deltaPages).withColumn("stored", F.lit(false))
+    // the subject set is read off the rows the union groups, so the delta is
+    // scanned and matched once per batch: the broadcast's job computes them
+    val incoming = if (stored.isEmpty) candidates else SparkRuntime.materialize(candidates)
     // no distinct: a semi-join only probes the key, and an aggregate would
     // cost its own shuffle and job per batch; the broadcast holds one row
     // per candidate page instead of one per subject
@@ -212,7 +229,7 @@ object Incremental {
     stored.map(_.select(cols: _*)
         .join(subjs, Seq("subj"), "left_semi")
         .withColumn("stored", F.lit(true)))
-      .foldLeft(incoming.withColumn("stored", F.lit(false)))(_ unionByName _)
+      .foldLeft(incoming)(_ unionByName _)
       .groupBy("subj").as[String, BatchCapture]
       .flatMapGroups(batchRows(iterationLimit))
   }

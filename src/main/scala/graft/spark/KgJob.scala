@@ -1,5 +1,7 @@
 package graft.spark
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -7,21 +9,24 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The full production-shaped job: pages → triples / captures / nodes /
-  * edges / lineage / metrics tables, written in ONE input pass as
-  * bucket-partitioned parquet with a commit manifest so a restarted run
-  * resumes without re-emitting committed partitions (north rule). The
-  * output is the incremental store's base (`Incremental`).
+  * edges tables, written in ONE input pass as bucket-partitioned parquet
+  * with a commit manifest so a restarted run resumes without re-emitting
+  * committed partitions (north rule). Each bucket's commit marker carries
+  * its lineage and metrics counts (`lineage`, `metrics`). The output is the
+  * incremental store's base (`Incremental`).
   *
   * Layout under `outDir` (every table partitioned like triples):
-  *   triples/bucket=N/…parquet     captures/…  nodes/…  edges/…  lineage/…
-  *   _manifest/bucket_N            (one marker file per committed bucket)
+  *   triples/bucket=N/…parquet     captures/…  nodes/…  edges/…
+  *   _manifest/bucket_N            (one marker per committed bucket: its
+  *                                  lineage and metrics counts, `name=value`
+  *                                  lines)
   *   _manifest/buckets             (the bucket count, written by the first run)
   */
 object KgJob {
 
   val DefaultBuckets = 16
 
-  private val Tables = Seq("triples", "captures", "edges", "nodes", "lineage", "metrics")
+  private val Tables = Seq("triples", "captures", "edges", "nodes")
 
   /** Manifest I/O goes through the Hadoop FileSystem API, not java.nio: on a
     * real cluster the commit markers must live on the JOB's filesystem
@@ -87,9 +92,26 @@ object KgJob {
   private def writeTasks(spark: SparkSession, buckets: Int): Int =
     math.min(buckets, spark.sparkContext.defaultParallelism)
 
-  /** Commit markers: a bucket is durable once all of its tables landed. */
-  private def commit(f: FileSystem, outDir: String, todo: Seq[Int]): Unit =
-    todo.foreach(b => f.create(new Path(manifestDir(outDir), s"bucket_$b"), true).close())
+  private def marker(outDir: String, b: Int): Path = new Path(manifestDir(outDir), s"bucket_$b")
+
+  /** The hidden name a marker is written under before it is renamed into
+    * place; `committedBuckets` does not count it.
+    */
+  private[graft] def tempMarker(outDir: String, b: Int): Path =
+    new Path(manifestDir(outDir), s".bucket_$b.tmp")
+
+  /** Commits bucket `b` once all of its tables landed: its marker, whose
+    * lines are the bucket's `counts` as `name=value`, is written under the
+    * hidden temp name and renamed, so a marker is either absent or complete.
+    */
+  private def commit(f: FileSystem, outDir: String, b: Int, counts: Seq[(String, Any)]): Unit = {
+    val tmp = tempMarker(outDir, b)
+    val out = f.create(tmp, true)
+    try out.write(counts.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
+    finally out.close()
+    if (!f.rename(tmp, marker(outDir, b)))
+      throw new java.io.IOException(s"cannot commit bucket $b of $outDir")
+  }
 
   /** Writes `tables` (rows with a `subj`) into an empty `outDir` per bucket
     * and commits all `buckets`: `Incremental.compact`'s output.
@@ -101,7 +123,7 @@ object KgJob {
     for ((table, df) <- tables)
       write(df.select(KgEngine.bucketOf(F.col("subj"), buckets).as("bucket"), F.col("*"))
         .repartition(writeTasks(spark, buckets), F.col("bucket")), outDir, table)
-    commit(f, outDir, todo)
+    todo.foreach(commit(f, outDir, _, Nil))
   }
 
   private val LineageCols =
@@ -109,22 +131,51 @@ object KgJob {
   private val MetricsCols = Seq(StructField("n_triples", LongType),
     StructField("n_subjects", LongType), StructField("max_certainty", IntegerType))
 
+  /** SURVEY §1.3's lineage(partition_id, input_rows, emitted, dropped_bad,
+    * errors) of `outDir`'s committed buckets, the partition id being the
+    * `bucket` column: a row per bucket with at least one input page.
+    */
+  def lineage(spark: SparkSession, outDir: String): DataFrame = counts(spark, outDir, LineageCols)
+
+  /** (n_triples, n_subjects, max_certainty, bucket) of `outDir`'s committed
+    * buckets: a row per bucket with at least one triple.
+    */
+  def metrics(spark: SparkSession, outDir: String): DataFrame = counts(spark, outDir, MetricsCols)
+
+  /** The `cols` counts of each committed bucket whose marker holds them all,
+    * then the bucket, read on the driver from the markers.
+    */
+  private def counts(spark: SparkSession, outDir: String, cols: Seq[StructField]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = fs(outDir, conf)
+    val rows = committedBuckets(outDir, conf).flatMap { b =>
+      val in = f.open(marker(outDir, b))
+      val kv = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+        finally in.close()
+      if (!cols.forall(c => kv.contains(c.name))) None
+      else Some(Row.fromSeq(cols.map[Any](c =>
+        if (c.dataType == IntegerType) kv(c.name).toInt else kv(c.name).toLong) :+ b))
+    }
+    spark.createDataFrame(rows.asJava, StructType(cols :+ StructField("bucket", IntegerType)))
+  }
+
   /** Runs (or resumes) the KG construction job. Returns the number of
     * buckets processed in this invocation.
     *
     * ONE pass over the input regardless of bucket count: completed buckets
     * are filtered out up front, the bucket column is derived from each
-    * row's subject after extraction, and all six tables land via
+    * row's subject after extraction, and the four tables land via
     * `partitionBy("bucket")` in the re-run buckets only (committed buckets
-    * are never touched, so a resume never re-emits, lineage and metrics
-    * included).
+    * are never touched, so a resume never re-emits, and their markers keep
+    * their lineage and metrics counts).
     *
     * The pass is `Incremental.batchPass` over an empty store: it emits each
     * subject's winning captures and its triples plus its `StatsPred` row
     * (the per-subject error channel, for lineage and metrics only).
     *
     * Before the first write, every todo bucket's `bucket=N` directory is
-    * deleted in all six tables: todo buckets are uncommitted by definition,
+    * deleted in all four tables: todo buckets are uncommitted by definition,
     * so a partition a crashed attempt left behind cannot survive even when
     * this run emits no rows for it in some table.
     *
@@ -137,9 +188,9 @@ object KgJob {
     * AQE a local checkpoint keeps neither the bucket partitioning nor the
     * ordering of its input, so the nodes and totals aggregates over it
     * would plan their own exchanges, while a computed in-memory relation
-    * keeps both. Lineage
-    * and metrics, at most one row per bucket, are combined on the driver
-    * from two collected per-bucket aggregates and written from those rows.
+    * keeps both. Lineage and metrics, at most one row per bucket, are
+    * combined on the driver from two collected per-bucket aggregates and
+    * written into the buckets' commit markers.
     *
     * Durability granularity is the INVOCATION: commit markers land after the
     * invocation's writes finish, so a mid-run crash redoes this invocation's
@@ -171,19 +222,24 @@ object KgJob {
     // the heavy pass, extracted once and bucketed by subject hash. Every
     // table's rows lead with the bucket, so the writes share the sort and
     // partition code of one column layout, and the aggregates below need no
-    // further exchange.
-    val all = Incremental.batchPass(spark, remaining, iterationLimit = iterationLimit).toDF()
+    // further exchange. A pass row persists as one struct beside its
+    // bucket: every read below then scans the same two columns (a struct's
+    // fields are not pruned), and its filters, on the struct's fields, are
+    // not in-memory batch filters, so the reads share one columnar iterator
+    // and one batch predicate.
+    val pass = Incremental.batchPass(spark, remaining, iterationLimit = iterationLimit).toDF()
+    val all = pass
       .select(KgEngine.bucketOf(F.coalesce(F.col("capture.subj"), F.col("triple.subj")), buckets)
-        .as("bucket"), F.col("*"))
+        .as("bucket"), F.struct(pass.columns.toSeq.map(F.col): _*).as("row"))
       .repartition(writeTasks(spark, buckets), F.col("bucket"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = all.where(F.col("triple").isNotNull).select(F.col("bucket"), F.col("triple.*"))
+    def read(kind: String): DataFrame =
+      all.where(F.col(s"row.$kind").isNotNull).select(F.col("bucket"), F.col(s"row.$kind.*"))
+    val rows = read("triple")
     val canon = rows.where(F.col("pred") =!= KgEngine.StatsPred)
-    try {
+    val counts: Int => Seq[(String, Any)] = try {
       write(canon, outDir, "triples")
-      write(all.where(F.col("capture").isNotNull)
-        .select(F.col("bucket") +: Seq("subj", "relpath", "ts", "md5", "text")
-          .map(c => F.col(s"capture.$c")): _*), outDir, "captures")
+      write(read("capture").drop("changed"), outDir, "captures")
       // edges/nodes derive from the cached triples, not a fresh input scan —
       // through the ONE engine definition of edge/node (KgEngine)
       val e = KgEngine.edgesDf(canon, carry = Seq("bucket"))
@@ -191,40 +247,34 @@ object KgJob {
       write(KgEngine.nodesDf(e, carry = Seq("bucket")), outDir, "nodes")
 
       // lineage and metrics hold at most one row per bucket: two per-bucket
-      // aggregates are collected, the page lineage (`KgEngine.lineage`, the
-      // definition `kg_lineage` checks) and one conditional aggregate over
-      // the persisted rows (already partitioned by bucket, so no exchange),
-      // and their rows are combined on the driver and written. Lineage is
-      // SURVEY §1.3's lineage(partition_id, input_rows, emitted,
-      // dropped_bad, errors), keyed by bucket; metrics covers the buckets
-      // with triples.
+      // aggregates, the page lineage (`KgEngine.lineage`, the definition
+      // `kg_lineage` checks) and one conditional aggregate over the
+      // persisted rows (already partitioned by bucket, so no exchange), are
+      // collected as one union, and each bucket's row of each goes into its
+      // commit marker. Metrics covers the buckets with triples.
       val isStats = F.col("pred") === KgEngine.StatsPred
-      val totals = rows.groupBy("bucket")
+      val (pageRows, totalRows) = rows.groupBy("bucket")
         .agg(F.sum(F.when(isStats, F.col("obj").cast(LongType))).as("errors"),
           F.sum(F.when(isStats, F.col("obj_json").cast(LongType))).as("dropped_bad"),
           F.count_if(!isStats).as("n_triples"),
           F.count_if(isStats && F.col("origin") =!= "0").as("n_subjects"),
           F.max(F.when(!isStats, F.col("certainty"))).as("max_certainty"))
-        .collect().map(r => r.getAs[Int]("bucket") -> r).toMap
+        .unionByName(KgEngine.lineage(remaining, buckets), allowMissingColumns = true)
+        .collect().partition(r => !r.isNullAt(r.fieldIndex("input_rows")))
+      val totals = totalRows.map(r => r.getAs[Int]("bucket") -> r).toMap
       def total(b: Int, c: String): Long = totals.get(b).fold(0L)(_.getAs[Long](c))
-      val lineageRows = KgEngine.lineage(remaining, buckets).collect().toSeq.map { r =>
+      val lineage = pageRows.map { r =>
         val b = r.getAs[Int]("bucket")
-        Row(b, r.getAs[Long]("input_rows"), r.getAs[Long]("emitted"),
-          total(b, "dropped_bad"), total(b, "errors"))
+        b -> Seq("input_rows" -> r.getAs[Long]("input_rows"), "emitted" -> r.getAs[Long]("emitted"),
+          "dropped_bad" -> total(b, "dropped_bad"), "errors" -> total(b, "errors"))
+      }.toMap
+      val metrics = totals.collect { case (b, r) if r.getAs[Long]("n_triples") > 0 =>
+        b -> MetricsCols.map(c => c.name -> r.getAs[Any](c.name))
       }
-      val metricsRows = totals.values.toSeq.filter(_.getAs[Long]("n_triples") > 0).map(r =>
-        Row(r.getAs[Int]("bucket"), r.getAs[Long]("n_triples"), r.getAs[Long]("n_subjects"),
-          r.getAs[Int]("max_certainty")))
-      // the bucket field as the persisted rows carry it, so every write's
-      // rows lead with the same column
-      def local(rows: Seq[Row], cols: Seq[StructField]): DataFrame =
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          StructType(all.schema("bucket") +: cols))
-      write(local(lineageRows, LineageCols), outDir, "lineage")
-      write(local(metricsRows, MetricsCols), outDir, "metrics")
+      b => lineage.getOrElse(b, Nil) ++ metrics.getOrElse(b, Nil)
     } finally all.unpersist()
 
-    commit(f, outDir, todo)
+    todo.foreach(b => commit(f, outDir, b, counts(b)))
     todo.size
   }
 

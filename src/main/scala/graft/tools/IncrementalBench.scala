@@ -8,7 +8,7 @@ import graft.spark.{Incremental, SparkRuntime, SynthPages}
   *
   *   full_rebuild      — what the non-incremental pipeline does: KgJob.run
   *                       over the entire new crawl into a fresh store (its
-  *                       six tables, through Incremental.initStore);
+  *                       four tables, through Incremental.initStore);
   *   log_full_recrawl  — append the SAME full recrawl to the existing
   *                       store's logs (appendDelta): every page and the
   *                       whole capture table shuffle once into the batch

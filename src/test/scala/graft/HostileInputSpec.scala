@@ -157,18 +157,18 @@ class HostileInputSpec extends AnyFunSuite with SparkSuite {
     assert(store(withOrphan, "hn_orphan") == store(pages, "hn_clean"))
     // the job: the same triples; its lineage counts the orphan as an input
     // row of a real bucket (the bucket of ""), which emits nothing, so no
-    // lineage row lands in a default partition outside the manifest
+    // lineage row lands in a bucket outside the manifest
     val out = freshDir("graft_hostile_job")
     val clean = freshDir("graft_hostile_job_clean")
     KgJob.run(spark, withOrphan, out, buckets = 4)
     KgJob.run(spark, pages, clean, buckets = 4)
     def tri(dir: String) = spark.read.parquet(s"$dir/triples").drop("bucket")
     assert(tri(out).except(tri(clean)).isEmpty && tri(clean).except(tri(out)).isEmpty)
-    assert(!new java.io.File(s"$out/lineage/bucket=__HIVE_DEFAULT_PARTITION__").exists())
-    val lin = spark.read.parquet(s"$out/lineage")
+    val lin = KgJob.lineage(spark, out)
     assert(lin.where(F.col("bucket").isNull).isEmpty)
+    assert(lin.collect().map(_.getAs[Int]("bucket")).toSet.subsetOf(KgJob.committedBuckets(out).toSet))
     assert(lin.agg(F.sum("input_rows")).head.getLong(0) == withOrphan.count())
-    def perBucket(dir: String) = spark.read.parquet(s"$dir/lineage")
+    def perBucket(dir: String) = KgJob.lineage(spark, dir)
       .collect().map(r => r.getAs[Int]("bucket") ->
         (r.getAs[Long]("input_rows"), r.getAs[Long]("emitted"))).toMap
     val orphanBucket = KgEngine.bucketOf(F.lit(""), 4)

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.spark.{KgJob, KgStreaming, SynthPages}
 
-/** End-to-end job semantics: bucket-manifest resume and streamed page
-  * ingestion.
+/** End-to-end job semantics: bucket-manifest resume, the lineage and
+  * metrics counts the commit markers carry, and streamed page ingestion.
   */
 class KgJobSpec extends AnyFunSuite with SparkSuite {
 
@@ -14,7 +14,7 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     d.toString
   }
 
-  private val Tables = Seq("triples", "captures", "edges", "nodes", "lineage", "metrics")
+  private val Tables = Seq("triples", "captures", "edges", "nodes")
 
   /** Page rows (url, text) in the crawl schema, captured at SynthPages.FixedTs. */
   private def pagesOf(rows: (String, String)*): org.apache.spark.sql.DataFrame = {
@@ -59,11 +59,11 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     assert(triples2 == expectedTriples) // overwrite per bucket → no duplicates
     // resume must not duplicate lineage either (per-bucket lineage protocol):
     // every input page accounted for exactly once
-    val lineage = spark.read.parquet(s"$out/lineage")
+    val lineage = KgJob.lineage(spark, out)
       .agg(org.apache.spark.sql.functions.sum("input_rows")).first.getLong(0)
     assert(lineage == pages.count())
     // per-bucket metrics reconcile with the triples table
-    val metrics = spark.read.parquet(s"$out/metrics")
+    val metrics = KgJob.metrics(spark, out)
       .agg(org.apache.spark.sql.functions.sum("n_triples")).first.getLong(0)
     assert(metrics == expectedTriples)
     // stats markers never leak into the triples table
@@ -83,7 +83,7 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
        "[remote \"upstream\"]\n\turl = https://anongit.kde.org/proj7.git\n"))
     val out = freshDir("kgjob_errs")
     KgJob.run(spark, base.unionByName(extra), out, buckets = 4)
-    val lin = spark.read.parquet(s"$out/lineage")
+    val lin = KgJob.lineage(spark, out)
     assert(lin.columns.toSet ==
       Set("bucket", "input_rows", "emitted", "dropped_bad", "errors"))
     val row = lin.agg(F.sum("errors"), F.sum("dropped_bad")).first
@@ -105,11 +105,11 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
        """{"name": "cyclic", "homepage": "https://github.com/o/cyclic"}"""))
     val clean = freshDir("kgjob_xlim_ok")
     KgJob.run(spark, pages, clean, buckets = 2)
-    assert(spark.read.parquet(s"$clean/lineage")
+    assert(KgJob.lineage(spark, clean)
       .agg(F.sum("errors")).first.getLong(0) == 0L)
     val capped = freshDir("kgjob_xlim")
     KgJob.run(spark, pages, capped, buckets = 2, iterationLimit = 1)
-    assert(spark.read.parquet(s"$capped/lineage")
+    assert(KgJob.lineage(spark, capped)
       .agg(F.sum("errors")).first.getLong(0) == 1L)
     // mutate-then-Err: iteration 1's derivations are kept in the triples
     assert(spark.read.parquet(s"$capped/triples")
@@ -141,14 +141,45 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
     assert(KgJob.run(spark, pages, once, buckets = 4) == 4)
     assert(KgJob.run(spark, pages, resumed, buckets = 4, maxBucketsPerRun = 2) == 2)
     assert(KgJob.run(spark, pages, resumed, buckets = 4, maxBucketsPerRun = 2) == 2)
-    def lineage(dir: String) = spark.read.parquet(s"$dir/lineage").collect().map(_.toSeq).toSet
+    def lineage(dir: String) = KgJob.lineage(spark, dir).collect().map(_.toSeq).toSet
     assert(lineage(resumed) == lineage(once))
-    assert(spark.read.parquet(s"$resumed/lineage").agg(F.sum("input_rows")).head.getLong(0) ==
+    assert(KgJob.lineage(spark, resumed).agg(F.sum("input_rows")).head.getLong(0) ==
       pages.count())
   }
 
-  test("the six tables equal their definitions, one-shot and resumed") {
+  test("a crash between data writes and commit markers resumes losslessly") {
+    import org.apache.hadoop.fs.Path
+    val pages = SynthPages.fromDocuments(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where("doc_id < 64"))
+      .unionByName(pagesOf(("https://replay.invalid/proj7/meson.build", "project('x', 'c')\n")))
+    val once = freshDir("kgjob_crash_once")
+    val crashed = freshDir("kgjob_crash")
+    KgJob.run(spark, pages, once, buckets = 8)
+    KgJob.run(spark, pages, crashed, buckets = 8)
+    // the crash: every table of every bucket landed, but bucket 3's marker
+    // was never written and bucket 5's stopped at its hidden temp name
+    val fs = new Path(crashed).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = (b: Int) => new Path(KgJob.manifestDir(crashed), s"bucket_$b")
+    assert(fs.delete(marker(3), false))
+    assert(fs.rename(marker(5), KgJob.tempMarker(crashed, 5)))
+    assert(KgJob.committedBuckets(crashed) == Seq(0, 1, 2, 4, 6, 7))
+    for (read <- Seq(KgJob.lineage _, KgJob.metrics _))
+      assert(read(spark, crashed).where("bucket IN (3, 5)").isEmpty)
+
+    assert(KgJob.run(spark, pages, crashed, buckets = 8) == 2)
+    assert(KgJob.committedBuckets(crashed) == (0 until 8))
+    assert(!fs.exists(KgJob.tempMarker(crashed, 5)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString)
+    for (table <- Tables)
+      assert(rows(spark.read.parquet(s"$crashed/$table")) == rows(spark.read.parquet(s"$once/$table")),
+        table)
+    for (read <- Seq(KgJob.lineage _, KgJob.metrics _))
+      assert(rows(read(spark, crashed)) == rows(read(spark, once)))
+  }
+
+  test("tables and readers equal their definitions, one-shot and resumed") {
     import org.apache.spark.sql.{DataFrame, functions => F}
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     import graft.spark.KgEngine
     import spark.implicits._
     val n = 8
@@ -227,8 +258,21 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
 
     def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
       df.select(cols.map(F.col): _*).collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+    // the readers' schemas are the ones the lineage and metrics parquet
+    // tables had: the counts, then the bucket, every field nullable
+    def schema(fields: (String, String)*) = StructType(fields.map { case (n, t) =>
+      StructField(n, DataType.fromDDL(t)) })
+    val readers = Map(
+      "lineage" -> (KgJob.lineage _, schema("input_rows" -> "bigint", "emitted" -> "bigint",
+        "dropped_bad" -> "bigint", "errors" -> "bigint", "bucket" -> "int")),
+      "metrics" -> (KgJob.metrics _, schema("n_triples" -> "bigint", "n_subjects" -> "bigint",
+        "max_certainty" -> "int", "bucket" -> "int")))
     def check(out: String): Unit = for ((table, want) <- expected) {
-      val got = spark.read.parquet(s"$out/$table")
+      val got = readers.get(table).fold(spark.read.parquet(s"$out/$table")) { case (read, s) =>
+        val df = read(spark, out)
+        assert(df.schema == s, table)
+        df
+      }
       assert(got.columns.toSet == want.columns.toSet, table)
       assert(rows(got, got.columns.toSeq) == rows(want, got.columns.toSeq), table)
     }
@@ -311,7 +355,7 @@ class KgJobSpec extends AnyFunSuite with SparkSuite {
       Seq("https://replay.invalid/plain/"))
     val n = triples.count()
     assert(n > 0)
-    val met = spark.read.parquet(s"$out/metrics").where(F.col("bucket") === b).collect()
+    val met = KgJob.metrics(spark, out).where(F.col("bucket") === b).collect()
     assert(met.length == 1)
     assert(met.head.getAs[Long]("n_triples") == n && met.head.getAs[Long]("n_subjects") == 1L)
   }

@@ -21,6 +21,27 @@ trait SparkSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The generated-code working set of one warm `call`: (classes compiled,
+    * codegen cache entries). `call` runs once to warm, Spark's class cache
+    * (`CodeGenerator`'s private `cache`, reached by reflection) is emptied,
+    * and `call` runs again, so every class it uses compiles once: one entry
+    * per (class loader, source), the driver and the executor task threads
+    * having different loaders.
+    */
+  protected def codegenWorkingSet(call: => Unit): (Long, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    call
+    val get = CodeGenerator.getClass.getDeclaredMethod("cache")
+    get.setAccessible(true)
+    val cache = get.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    call
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled,
+      cache.getClass.getMethod("size").invoke(cache).asInstanceOf[Long])
+  }
 }
 
 object SparkSuite {
